@@ -523,96 +523,32 @@ object SparkEntry {
     QualityPipeline(PagesSynth.pages(spark, 500, 8))
   }
 
+  /** Largest band bucket the near-dup join keeps (see the ordering
+    * contract below); the capped member list holds one more id, so a
+    * kept band's list is provably complete. */
+  private final val MaxBand = 64
+
   /** The MinHash/LSH near-dup pipeline shared by `dedup_minhash_pairs`
     * and `dedup_clusters`: band join (empty docs emit no bands) →
     * band-bucket size cap → exact shingle-Jaccard ≥ 0.8 confirmation over
     * candidates only. Columns: id_a, id_b, n_inter, n_union.
     *
-    * Ordering contract: the bucket cap (64) bounds the quadratic band
-    * join and assumes EXACT dedup ran first (the standard pipeline order
-    * — `dedup_exact` is that stage), so a bucket larger than the cap is
-    * pathological boilerplate, not a legitimate duplicate cluster. At the
-    * verify/bench scales the largest legitimate bucket is 50 (sf0.1
-    * same-variant planted docs), under the cap. */
-  /** The dedup_minhash_pairs body, public with the scale lever exposed:
-    * `persistBands = true` caches the exploded band rows
-    * (MEMORY_AND_DISK) across their three consumers — the 100 TB
-    * configuration, where re-reading the source scan dominates; at
-    * verify scale the recompute is cheaper (measured: an eager
-    * localCheckpoint made the query 3-4x slower), so the driver query
-    * keeps the default. Both paths produce identical pairs (OpsSpec
-    * equality gate). The caller owns the cache lifetime
-    * (`unpersistDedupBands()` when done). */
-  def dedupMinhashPairs(s: SparkSession, dir: String,
-                        persistBands: Boolean = false): DataFrame =
-    minhashConfirmedPairs(s, dir, persistBands)
-
-  private val persistedBands =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  def unpersistDedupBands(): Unit = {
-    val it = persistedBands.values.iterator()
-    while (it.hasNext) {
-      // tolerate entries whose owning session has already been stopped —
-      // cleanup must never throw on a dead SparkContext
-      try it.next().unpersist()
-      catch { case _: IllegalStateException | _: NullPointerException => }
-    }
-    persistedBands.clear()
-  }
-
-  private def minhashConfirmedPairs(s: SparkSession, dir: String,
-                                    persistBands: Boolean = false): DataFrame = {
+    * Ordering contract: the bucket cap ([[MaxBand]]) bounds the
+    * quadratic band join and assumes EXACT dedup ran first (the standard
+    * pipeline order — `dedup_exact` is that stage), so a bucket larger
+    * than the cap is pathological boilerplate, not a legitimate
+    * duplicate cluster. At the verify/bench scales the largest legitimate
+    * bucket is 50 (sf0.1 same-variant planted docs), under the cap. */
+  private def minhashConfirmedPairs(s: SparkSession, dir: String): DataFrame = {
     // banding is ~100-200 us/row (shingles + 128 MinHashes): a lower
     // amortization threshold than the default kernel class
     val d = docsPar(s, dir, minRowsPerCore = 64L).withColumn("t",
       expr(nearDupSql(nearDupVariants(numDocs(s, dir)))))
     // Since the single-pass candidate generation below, the band keys
     // have exactly ONE consumer (the count+capped-list aggregation), so
-    // the banding kernel is evaluated once per run. `persistBands` — the
-    // 100 TB lever from round 5, when the plan had 2-4 consumers — is
-    // kept API- and result-compatible (pair-equality gated in OpsSpec)
-    // but now buys nothing structural: it trades one in-memory
-    // materialization for re-reading the scan, which only pays if a
-    // caller composes this frame into a plan with additional consumers.
-    // (Historically measured: an eager localCheckpoint here was 3-4x
-    // SLOWER at verify scale — RDD-block round-trip and lost whole-stage
-    // codegen dominate — which is why the lever is opt-in persist, not
-    // checkpoint.)
-    val bandRowsRaw = d.select(col("doc_id"),
+    // the banding kernel is evaluated once per run.
+    val bandRows = d.select(col("doc_id"),
       explode(lsh_bands(col("t"))).as("band"))
-    val bandRows =
-      if (!persistBands) bandRowsRaw
-      // key includes the OWNING SESSION (round-5 advice): two live
-      // sessions alternately persisting the same dir would otherwise
-      // displace and unpersist each other's cache every call
-      else {
-        // sweep dead-session entries first: session-scoped keys would
-        // otherwise retain one stopped-session DataFrame per session for
-        // the JVM lifetime (round-6 review finding)
-        val it = persistedBands.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getValue.sparkSession.sparkContext.isStopped) it.remove()
-        }
-        persistedBands.compute(
-        dir + "@" + java.lang.System.identityHashCode(s), (_, cached) =>
-        // cache is per (dir, OWNING SESSION): a DataFrame persisted under
-        // a since-stopped SparkContext must be replaced, not returned —
-        // acting on it would throw "SparkContext has been shut down"
-        if (cached != null &&
-            (cached.sparkSession eq s) &&
-            !cached.sparkSession.sparkContext.isStopped) cached
-        else {
-          // a displaced entry whose context is STILL LIVE (another
-          // session on the same context) must release its blocks now —
-          // replacing the map entry would orphan them unreleasably
-          if (cached != null && !cached.sparkSession.sparkContext.isStopped)
-            try cached.unpersist()
-            catch { case _: IllegalStateException | _: NullPointerException => }
-          bandRowsRaw.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        })
-      }
     // Candidate generation, single-pass (round 6, second pass): ONE
     // aggregation computes both the EXACT bucket size and the capped
     // member list via [[graft.expr.BoundedIds]]. History: round 5's
@@ -622,21 +558,22 @@ object SparkEntry {
     // collect_list — plan preserved in plans/r06/dedup_minhash_pairs_mid
     // .txt); this shape cuts it to ONE evaluation and ONE shuffle:
     //   1. `count(*)` stays a native partial-aggregated count — the
-    //      2 <= bn <= 64 gate is decided on the exact count, unchanged
+    //      2 <= bn <= MaxBand gate is decided on the exact count
     //      (a singleton band cannot form a pair; a hot band is dropped);
-    //   2. the member list is capped AT THE AGGREGATE (65 > 64): a kept
-    //      band (bn <= 64) provably never trims — its list is complete —
-    //      while a hot band costs at most 65 longs per partial buffer
-    //      and per map task on the wire, the same skew bound the
-    //      two-pass shape bought with its pre-filter;
+    //   2. the member list is capped AT THE AGGREGATE (MaxBand + 1): a
+    //      kept band (bn <= MaxBand) provably never trims — its list is
+    //      complete — while a hot band costs at most MaxBand + 1 longs
+    //      per partial buffer and per map task on the wire, the same skew
+    //      bound the two-pass shape bought with its pre-filter;
     //   3. within-band pairs come from the same bounded in-list cross
     //      (two Generates over <= 64-element lists).
     // Same candidate pair set, same confirmed output (OpsSpec pair gates
     // incl. the 1000-identical-doc skew test + driver oracle at four
     // scale points).
     val cand = bandRows.groupBy("band")
-      .agg(count(lit(1)).as("bn"), bounded_ids(col("doc_id"), 65).as("ids"))
-      .filter(col("bn") <= 64 && col("bn") >= 2)
+      .agg(count(lit(1)).as("bn"),
+        bounded_ids(col("doc_id"), MaxBand + 1).as("ids"))
+      .filter(col("bn") <= MaxBand && col("bn") >= 2)
       .select(explode(col("ids")).as("id_a"), col("ids"))
       .select(col("id_a"), explode(col("ids")).as("id_b"))
       .filter(col("id_a") < col("id_b"))

@@ -40,7 +40,9 @@ object GraftFunctions {
     // aggregate: the analyzer wraps a bare AggregateFunction from the
     // registry in an AggregateExpression (same path as the built-ins)
     "graft_bounded_ids" -> { es =>
-      BoundedIds(es(0), es(1).eval() match {
+      // a non-foldable cap (a column) has no value to eval: reject it
+      // with the same error as a non-integer literal
+      BoundedIds(es(0), (if (es(1).foldable) es(1).eval() else es(1)) match {
         case i: Int => i
         case l: Long => l.toInt
         case other => throw new IllegalArgumentException(

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Resumable batch execution with per-partition progress manifests and
@@ -23,10 +23,11 @@ import org.apache.spark.sql.functions._
   * kill can never leave a manifest without its data).
   *
   * Resume: list completed manifests, process only the missing partitions.
-  * Metrics: one JSON manifest per (run, partition) with row counters from
-  * `Dataset.observe` per stage (langid / perplexity / heuristics / scrub)
-  * plus wall time — the O4 commit-log analog, queryable as a table via
-  * [[metricsTable]].
+  * Metrics: one JSON manifest per (run, partition) with row counters per
+  * stage (langid / perplexity / heuristics / scrub), collected by a Spark
+  * `Observation` on the partition's own write job (no re-read of the
+  * output), plus wall time — the O4 commit-log analog, queryable as a
+  * table via [[metricsTable]].
   */
 object CheckpointedRun {
 
@@ -240,21 +241,17 @@ object CheckpointedRun {
         val part = staged.filter(col("_bucket") === k).drop("_bucket")
         val out = transform(part)
         val outPath = Paths.get(root, s"run=$runId", s"partition=$k").toString
-        out.write.mode("overwrite").parquet(outPath)
-
-        // per-stage metrics from the committed output (one cheap scan of
-        // the partition's own parquet — no recompute of the pipeline).
-        // Schema-tolerant + null-safe: (a) sum() over an EMPTY partition
-        // (every row filtered, or fewer rows than partitions) returns
-        // NULL and a bare getLong would NPE AFTER the data committed but
-        // BEFORE the manifest — resume would then re-crash on the same
-        // partition forever; (b) a non-pipeline transform lacks the
-        // quality columns — its metrics degrade to zero instead of
-        // failing the run post-write
-        val written = spark.read.parquet(outPath)
-        val cols = written.columns.toSet
+        // per-stage counters observed on the write itself: one Spark job
+        // per partition, no re-read of the output. Schema-tolerant +
+        // null-safe: (a) sum() over an EMPTY partition (every row
+        // filtered, or fewer rows than partitions) is NULL, and a
+        // manifest must still record 0; (b) a non-pipeline transform
+        // lacks the quality columns — its counters are zero instead of
+        // failing the run
+        val cols = out.columns.toSet
         def m0(c: Column): Column = coalesce(c, lit(0L))
-        val m = written.agg(
+        val obs = Observation()
+        out.observe(obs,
           count(lit(1)).as("rows"),
           (if (cols("keep"))
             m0(sum(when(col("keep"), 1L).otherwise(0L)))
@@ -272,8 +269,10 @@ object CheckpointedRun {
           (if (cols("rule_lineage"))
             m0(sum(size(filter(col("rule_lineage"), r => r("fired")))
               .cast("long")))
-          else lit(0L)).as("heuristics_n_fired")).collect()(0)
-        val rows = m.getLong(0)
+          else lit(0L)).as("heuristics_n_fired"))
+          .write.mode("overwrite").parquet(outPath)
+        val m = obs.get.view.mapValues(_.asInstanceOf[Long]).toMap
+        val rows = m("rows")
         val wall = (System.nanoTime() - t0) / 1e9
         val (stageNanos, _) =
           graft.core.StageTimers.delta(st0, graft.core.StageTimers.snapshot())
@@ -281,13 +280,14 @@ object CheckpointedRun {
 
         val manifest =
           s"""{"run_id":"$runId","partition":$k,"rows":$rows,
-             |"n_keep":${m.getLong(1)},
-             |"stages":{"scrub":{"n_redacted":${m.getLong(2)},
+             |"n_keep":${m("n_keep")},
+             |"stages":{"scrub":{"n_redacted":${m("scrub_n_redacted")},
              |"cpu_sec":${sn("pii_scrub")}},
-             |"langid":{"n_low_conf":${m.getLong(3)},"cpu_sec":${sn("langid")}},
-             |"perplexity":{"n_high":${m.getLong(4)},
+             |"langid":{"n_low_conf":${m("langid_n_low_conf")},
+             |"cpu_sec":${sn("langid")}},
+             |"perplexity":{"n_high":${m("perplexity_n_high")},
              |"cpu_sec":${sn("perplexity")}},
-             |"heuristics":{"n_fired":${m.getLong(5)},
+             |"heuristics":{"n_fired":${m("heuristics_n_fired")},
              |"cpu_sec":${sn("heuristics")}},
              |"tokenize":{"cpu_sec":${sn("tokenize")}}},
              |"wall_sec":$wall}""".stripMargin.replace("\n", "")

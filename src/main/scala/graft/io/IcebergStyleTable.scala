@@ -4,11 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Iceberg-style table layout without the Iceberg runtime jar
   * (SURVEY §7.4 — no Iceberg artifact exists in /opt/spark/jars or the
@@ -38,7 +35,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * now-unreferenced generations (single-snapshot retention; a time-travel
   * deployment would keep generations for every retained snapshot).
   *
-  * Row counts come from `Dataset.observe` on the write itself — no
+  * Row counts come from a Spark `Observation` on the write itself — no
   * second scan of just-written data per commit.
   */
 object IcebergStyleTable {
@@ -182,31 +179,17 @@ object IcebergStyleTable {
   private def q(s: String): String = "\"" + s.replace("\\", "\\\\")
     .replace("\"", "\\\"") + "\""
 
-  /** Write `df` with an observed row count (one scan, no re-read). */
-  private def writeCounted(df: DataFrame, version: Int,
-                           partitionCols: Seq[String], dest: String): Long = {
-    val spark = df.sparkSession
-    val obsName = s"graft_commit_${version}_${System.nanoTime()}"
-    @volatile var rows = -1L
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        qe.observedMetrics.get(obsName).foreach(r => rows = r.getLong(0))
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      df.observe(obsName, count(lit(1)).as("rows"))
-        .write.mode("overwrite")
-        .partitionBy(partitionCols: _*)
-        .parquet(dest)
-      Shim.awaitListenerBus(spark)
-    } finally spark.listenerManager.unregister(listener)
-    // safety net (observe delivery is asynchronous by contract): fall back
-    // to a footer-level count of the new generation only
-    if (rows < 0) rows = spark.read.parquet(dest).count()
-    rows
+  /** Write `df`, counting its rows on the write job itself (no re-read).
+    * `get` blocks until Spark delivers the metrics; a write that produced
+    * none throws here, inside the caller's claim. */
+  private def writeCounted(df: DataFrame, partitionCols: Seq[String],
+                           dest: String): Long = {
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("rows"))
+      .write.mode("overwrite")
+      .partitionBy(partitionCols: _*)
+      .parquet(dest)
+    obs.get("rows").asInstanceOf[Long]
   }
 
   private def commitMetadata(root: String, version: Int, files: Seq[String],
@@ -253,7 +236,7 @@ object IcebergStyleTable {
       (partitionCols.map(col) :+
         pmod(xxhash64(col(saltCol)), lit(saltBuckets))): _*)
     val dest = dataDir(root).resolve(genName(version)).toString
-    val rowCount = writeCounted(salted, version, partitionCols, dest)
+    val rowCount = writeCounted(salted, partitionCols, dest)
 
     // schema metadata is written BEFORE the hint flip — once a reader can
     // see version N, every metadata file of N already exists
@@ -321,7 +304,7 @@ object IcebergStyleTable {
       .repartition((partitionCols.map(col) :+ salt): _*)
       .sortWithinPartitions(partitionCols.map(col): _*)
     val dest = dataDir(root).resolve(genName(version)).toString
-    val rowCount = writeCounted(compacted, version, partitionCols, dest)
+    val rowCount = writeCounted(compacted, partitionCols, dest)
 
     val added = listGenFiles(root, version)
     commitMetadata(root, version, files = added, added = added,

@@ -1,10 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Distributed connected components by alternating large-star /
   * small-star (Kiveris et al. 2014, "Connected Components in MapReduce
@@ -28,27 +25,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object ConnectedComponents {
 
   /** Eagerly materialize `df` while collecting `metrics` from the same
-    * job (observe + listener-bus drain — no second action). */
-  private def checkpointObserved(df: DataFrame,
-                                 metrics: Seq[Column]): (DataFrame, Row) = {
-    val spark = df.sparkSession
-    val name = s"graft_cc_${System.nanoTime()}"
-    @volatile var row: Row = null
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        qe.observedMetrics.get(name).foreach(r => row = r)
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val out = df.observe(name, metrics.head, metrics.tail: _*)
-        .localCheckpoint(true)
-      Shim.awaitListenerBus(spark)
-      require(row != null, "observe metrics not delivered for CC phase")
-      (out, row)
-    } finally spark.listenerManager.unregister(listener)
+    * job (an `Observation` on the checkpoint — no second action). */
+  private def checkpointObserved(
+      df: DataFrame, metrics: Seq[Column]): (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val out = df.observe(obs, metrics.head, metrics.tail: _*)
+      .localCheckpoint(true)
+    (out, obs.get)
   }
 
   /** Order-independent edge-set signature: count + decimal hash-sum
@@ -124,16 +107,16 @@ object ConnectedComponents {
       // ONE composed job per iteration (round 6): large-star feeds
       // small-star lazily — materializing the large-star intermediate
       // bought nothing (it was consumed exactly once) and cost a full
-      // extra action + checkpoint + listener drain per iteration, which
-      // at the driver is half the loop's latency. Identical math and
+      // extra action + checkpoint per iteration, which at the driver is
+      // half the loop's latency. Identical math and
       // identical convergence sequence: the signature is observed on the
       // same small-star output as before.
       val (e2, sig) = checkpointObserved(smallStar(largeStar(e)), signature)
       // e2 is materialized: the previous edge set is dead — release its
       // blocks now (orig is still needed by the verification join below)
       if (e ne orig) releaseCheckpoint(e)
-      val cnt = sig.getLong(0)
-      val h = sig.getDecimal(1)
+      val cnt = sig("cnt").asInstanceOf[Long]
+      val h = sig("hsum").asInstanceOf[java.math.BigDecimal]
       converged = cnt == prevCnt &&
         ((h == null && prevH == null) || (h != null && h.compareTo(prevH) == 0))
       prevCnt = cnt

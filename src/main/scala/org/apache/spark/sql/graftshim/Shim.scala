@@ -19,10 +19,11 @@ object Shim {
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Drain the listener bus so `QueryExecutionListener.onSuccess` (which
-    * delivers `Dataset.observe` metrics asynchronously) has fired before
-    * the caller reads them. `listenerBus` is `private[spark]`; this shim
-    * package sits under `org.apache.spark` for exactly this bridge. */
+  /** Drain the listener bus so every event posted so far has reached its
+    * listeners before the caller reads what they recorded (a
+    * `SparkListener` counting jobs, say). `listenerBus` is
+    * `private[spark]`; this shim package sits under `org.apache.spark`
+    * for exactly this bridge. */
   def awaitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 

@@ -128,23 +128,39 @@ class ExprSpec extends AnyFunSuite {
       "graft_bounded_ids(doc_id, 65) ids FROM bids_t GROUP BY band")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](2).length).toMap
     assert(sq(1L) == 2 && sq(2L) == 64 && sq(3L) == 65)
+    // the cap must be a constant: a column cap is rejected with the
+    // intended error, not an internal "cannot evaluate" failure
+    val e = intercept[IllegalArgumentException] {
+      spark.sql("SELECT band, graft_bounded_ids(doc_id, band) ids " +
+        "FROM bids_t GROUP BY band").collect()
+    }
+    assert(e.getMessage.contains("cap must be an integer literal"),
+      e.getMessage)
   }
 
   test("graft_absmax == array_max(transform(abs)) — differential incl. " +
     "empty/null/edge values") {
     val rnd = new scala.util.Random(42)
-    val arrays: Seq[Option[Seq[Double]]] =
+    val dense: Seq[Option[Seq[Double]]] =
       Seq(None, Some(Seq.empty[Double]), Some(Seq(0.0)), Some(Seq(-0.0)),
         Some(Seq(-1.5, 1.5)), Some(Seq(Double.MinPositiveValue, -1e308)),
         Some(Seq(Double.NegativeInfinity, 3.0))) ++
         Seq.fill(50)(Some(Seq.fill(1 + rnd.nextInt(200))(
           (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(20) - 10))))
+    // null elements are skipped; no non-null element gives null
+    val withNulls: Seq[Option[Seq[Option[Double]]]] =
+      Seq(Some(Seq(None)), Some(Seq(None, None)),
+        Some(Seq(None, Some(-2.5), None)), Some(Seq(Some(-0.0), None)),
+        Some(Seq(None, Some(Double.NaN), Some(-7.0))))
+    val arrays = dense.map(_.map(_.map(Option(_)))) ++ withNulls
     val df = arrays.zipWithIndex
       .map { case (a, i) => (i.toLong, a) }.toDF("id", "emb")
-    val out = df.select(col("id"),
+    // the local relation is folded by the interpreted path; the
+    // repartitioned frame runs the generated code
+    val out = Seq(df, df.repartition(2)).flatMap(_.select(col("id"),
       graft.expr.GraftFunctions.absmax(col("emb")).as("k"),
       array_max(transform(col("emb"), x => abs(x))).as("h"))
-      .collect()
+      .collect())
     out.foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2), s"null mismatch at ${r.get(0)}")
       if (!r.isNullAt(1))

@@ -2,7 +2,10 @@ package graft.spark
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{CheckpointedRun, IcebergStyleTable}
@@ -125,6 +128,87 @@ class IcebergIoSpec extends AnyFunSuite {
       runId, numPartitions = 8)
     assert(rerun.forall(_.skipped))
     assert(!Files.exists(staged))
+  }
+
+  /** (partition -> rows, n_keep, and the four stage counters) as recorded
+    * in the run's manifests. */
+  private def manifestCounters(root: String, runId: String) =
+    CheckpointedRun.metricsTable(spark, root, runId).select(
+      col("partition"), col("rows"), col("n_keep"),
+      col("stages.scrub.n_redacted"), col("stages.langid.n_low_conf"),
+      col("stages.perplexity.n_high"), col("stages.heuristics.n_fired"))
+      .collect().map(r => r.getLong(0).toInt -> (1 to 6).map(r.getLong))
+      .toMap
+
+  test("partition manifests: counters equal a direct count over each " +
+      "partition's output, empty partitions included") {
+    val root = tmpDir("counters")
+    // 6 docs over 8 logical partitions: at least two are empty
+    val res = CheckpointedRun.run(spark, PagesSynth.pages(spark, 6, 2),
+      "url", (df: DataFrame) => QualityPipeline(df), root, "c1",
+      numPartitions = 8)
+    assert(res.count(_.rows == 0L) >= 2)
+    val got = manifestCounters(root, "c1")
+    assert(got.keySet == (0 until 8).toSet)
+    got.foreach { case (k, counters) =>
+      val rows = spark.read.parquet(s"$root/run=c1/partition=$k").collect()
+        .toSeq
+      def nonNull(r: Row, c: String) = !r.isNullAt(r.fieldIndex(c))
+      def n(p: Row => Boolean): Long = rows.count(p).toLong
+      val want = Seq(
+        rows.size.toLong,
+        n(r => nonNull(r, "keep") && r.getAs[Boolean]("keep")),
+        rows.filter(nonNull(_, "n_redacted"))
+          .map(_.getAs[Number]("n_redacted").longValue).sum,
+        n(r => nonNull(r, "lang_conf") &&
+          r.getAs[Double]("lang_conf") < PagesSynth.LangConfMin),
+        n(r => nonNull(r, "perplexity") &&
+          r.getAs[Double]("perplexity") > PagesSynth.PerplexityMax),
+        rows.filter(nonNull(_, "rule_lineage"))
+          .map(_.getAs[Seq[Row]]("rule_lineage").count(rule =>
+            !rule.isNullAt(rule.fieldIndex("fired")) &&
+              rule.getAs[Boolean]("fired")).toLong).sum)
+      assert(counters == want, s"partition $k")
+    }
+    assert(got.values.map(_.head).sum == 6L)
+  }
+
+  test("partition manifests: a non-pipeline transform records its rows " +
+      "and zero quality counters") {
+    val root = tmpDir("identity")
+    CheckpointedRun.run(spark, PagesSynth.pages(spark, 40, 2), "url",
+      (df: DataFrame) => df, root, "i1", numPartitions = 4)
+    val got = manifestCounters(root, "i1")
+    assert(got.size == 4)
+    assert(got.values.map(_.head).sum == 40L)
+    assert(got.values.forall(_.tail.forall(_ == 0L)), got)
+  }
+
+  test("checkpointed run: exactly one Spark job per fresh partition — the " +
+      "counters come from the write itself, not a re-read") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // jobs seen when the first partition starts (staging excluded)
+    @volatile var atFirst = -1
+    val transform = (df: DataFrame) => {
+      if (atFirst < 0) {
+        Shim.awaitListenerBus(spark)
+        atFirst = jobs.get()
+      }
+      QualityPipeline(df)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val res = CheckpointedRun.run(spark, PagesSynth.pages(spark, 200, 4),
+        "url", transform, tmpDir("jobs"), "j1", numPartitions = 4)
+      Shim.awaitListenerBus(spark)
+      assert(res.count(!_.skipped) == 4)
+      assert(atFirst >= 0 && jobs.get() - atFirst == 4,
+        s"${jobs.get() - atFirst} jobs for 4 fresh partitions")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("concurrent committers: the second writer of the same version fails " +

@@ -318,22 +318,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("LSH persist lever: dedupMinhashPairs(persistBands = true) " +
-      "produces exactly the default path's pairs (the 100 TB cache " +
-      "lever cannot change results)") {
-    val base = SparkEntry.dedupMinhashPairs(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSet
-    val persisted = try {
-      SparkEntry.dedupMinhashPairs(spark, dir, persistBands = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSet
-    } finally SparkEntry.unpersistDedupBands()
-    assert(base == persisted,
-      s"persist path diverged: ${persisted.diff(base)} / ${base.diff(persisted)}")
-    assert(base.nonEmpty)
-  }
-
   test("rpc boundary: one client per task, batched, retried, row-isolated") {
     import spark.implicits._
     RpcProbe.reset()
