@@ -19,6 +19,7 @@ object MakePages {
       .appName(s"graft-make-pages-$n")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
+    graft.io.LocalFs.install(spark)
     graft.model.PagesSynth.pages(spark, n, splits, validated = false)
       .write.mode("overwrite").parquet(out)
     println(s"""{"pages":$n,"out":"$out"}""")

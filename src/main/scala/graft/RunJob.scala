@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.io.{CheckpointedRun, IcebergStyleTable}
+import graft.io.{CheckpointedRun, IcebergStyleTable, LocalFs}
 import graft.pipeline.QualityPipeline
 
 /** The production face of the engine — the composed spark-submit entry the
@@ -101,10 +101,13 @@ object RunJob {
       "_committed.json")
 
   /** The whole job; `failAfter` is the kill-injection test hook
-    * (CheckpointedRun's — aborts after N fresh partitions). */
+    * (CheckpointedRun's — aborts after N fresh partitions). Installs
+    * [[LocalFs]] on `spark`, so the session keeps writing `file://`
+    * through it afterwards. */
   def execute(spark: SparkSession, args: JobArgs,
               failAfter: Int = Int.MaxValue): JobResult = {
     graft.expr.GraftFunctions.register(spark)
+    LocalFs.install(spark)
     // input may be an Iceberg-style table root (the north rule's input
     // shape — resolved through its snapshot manifest, so an in-flight
     // commit on the source table is invisible) or a plain parquet dir

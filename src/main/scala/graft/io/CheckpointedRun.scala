@@ -85,10 +85,9 @@ object CheckpointedRun {
     // a run's partition scheme is part of its identity: resuming the same
     // runId with a different numPartitions would silently skip buckets
     // (staged copy AND completion manifests are keyed by the old scheme)
-    val partsFile = progressDir(root, runId).resolve("_num_partitions")
+    val partsFile = numPartitionsFile(root, runId)
     if (Files.exists(partsFile)) {
-      val prev = new String(Files.readAllBytes(partsFile),
-        StandardCharsets.UTF_8).trim.toInt
+      val prev = recordedPartitions(root, runId)
       require(prev == numPartitions,
         s"run $runId was started with numPartitions=$prev; " +
           s"resume must use the same value (got $numPartitions)")
@@ -319,9 +318,21 @@ object CheckpointedRun {
     }
   }
 
-  /** Read the final output of a (possibly resumed) run. */
+  private def numPartitionsFile(root: String, runId: String) =
+    progressDir(root, runId).resolve("_num_partitions")
+
+  private def recordedPartitions(root: String, runId: String): Int =
+    new String(Files.readAllBytes(numPartitionsFile(root, runId)),
+      StandardCharsets.UTF_8).trim.toInt
+
+  /** Read the final output of a (possibly resumed) run: its
+    * `partition=<k>` directories by name, for every k below the run's
+    * recorded partition count. A `partition=*` glob would have Spark's
+    * FileStreamSink probe the literal glob path for a `_spark_metadata`
+    * log and log the resulting FileNotFoundException at WARN. */
   def output(spark: SparkSession, root: String, runId: String): DataFrame =
-    spark.read.parquet(Paths.get(root, s"run=$runId").toString + "/partition=*")
+    spark.read.parquet((0 until recordedPartitions(root, runId)).map(k =>
+      Paths.get(root, s"run=$runId", s"partition=$k").toString): _*)
 
   /** The metrics manifests as a queryable DataFrame (metrics table, O4).
     * Only `partition=<k>.json` manifests qualify — the progress dir also

@@ -1,0 +1,53 @@
+package graft.io
+
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
+
+/** The `file://` FileSystem of the engine's sessions: Hadoop's checksummed
+  * `LocalFileSystem` (same `.crc` sidecars, same layout, same permission
+  * bits) over a raw filesystem that sets permissions in-process.
+  *
+  * Without libhadoop's NativeIO, the stock `RawLocalFileSystem`
+  * forks a `chmod` child process in `setPermission`, which Hadoop calls for
+  * every data file, every `.crc` sidecar and every new directory a write
+  * creates. On a parquet write of a few hundred files those process spawns
+  * are most of the write task's wall time.
+  */
+class LocalFs extends LocalFileSystem(new LocalFs.RawFs)
+
+object LocalFs {
+
+  /** Sets the rwx bits through `java.nio`. A mode with the sticky bit (the
+    * one special bit an `FsPermission` carries) goes to the stock path:
+    * `java.nio` cannot set it. */
+  class RawFs extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      val mode = permission.toShort
+      if ((mode & ~0x1ff) != 0) super.setPermission(p, permission)
+      else {
+        // PosixFilePermission is declared owner-read first: ordinal i is
+        // mode bit 0400 >> i
+        val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+        PosixFilePermission.values.foreach { b =>
+          if ((mode & (0x100 >> b.ordinal)) != 0) perms.add(b)
+        }
+        Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
+      }
+    }
+  }
+
+  /** Route `spark`'s `file://` reads and writes through [[LocalFs]]. The
+    * keys are session runtime conf, which Spark copies into every Hadoop
+    * conf it builds for this session (query planning and tasks alike), so
+    * other sessions keep the stock class. The cache bypass is required: the
+    * JVM's FileSystem cache keys on scheme and user, not on conf, and has
+    * already handed out a stock `file://` instance. */
+  def install(spark: SparkSession): Unit = {
+    spark.conf.set("fs.file.impl", classOf[LocalFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+  }
+}

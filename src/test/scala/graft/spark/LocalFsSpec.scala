@@ -1,0 +1,150 @@
+package graft.spark
+
+import java.io.RandomAccessFile
+import java.net.URI
+import java.nio.file.{Files, Path => JPath}
+import scala.annotation.nowarn
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{ChecksumException, FSDataInputStream, FileSystem,
+  Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.SessionHadoopConf
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.io.LocalFs
+
+/** The fork-free `file://` FileSystem: installed per session, used by the
+  * executor-side writer, and indistinguishable from Hadoop's stock
+  * `LocalFileSystem` in permissions and checksums. */
+class LocalFsSpec extends AnyFunSuite {
+
+  private lazy val spark = TestSpark.spark
+
+  private def tmpDir(prefix: String): JPath = Files.createTempDirectory(prefix)
+
+  private def fileSystemOf(s: SparkSession, dir: JPath): FileSystem =
+    new Path(dir.toUri).getFileSystem(SessionHadoopConf(s))
+
+  /** Full st_mode bits, sticky/setuid/setgid included. */
+  private def mode(p: JPath): Int =
+    Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+
+  private def walk(root: JPath): Seq[JPath] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala.toSeq finally s.close()
+  }
+
+  /** Every entry under `root` by relative path, the write's random UUIDs
+    * masked, with its mode bits. */
+  private def modes(root: JPath): Seq[(String, Int)] =
+    walk(root).map { p =>
+      (root.relativize(p).toString
+        .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}",
+          "<uuid>"), mode(p))
+    }.sorted
+
+  private def octal(s: String): Int = Integer.parseInt(s, 8)
+
+  private def write(s: SparkSession, out: JPath): Unit =
+    s.range(0, 400, 1, 4).withColumn("k", col("id") % 3)
+      .write.mode("overwrite").partitionBy("k").parquet(out.toString)
+
+  test("install is session-scoped: a new session resolves the stock class") {
+    val dir = tmpDir("localfs_scope")
+    // the stock class is whatever the context's own conf resolves (with
+    // Hive on the classpath, Hive's LocalFileSystem proxy)
+    val stock = new Path(dir.toUri)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration).getClass
+    assert(stock != classOf[LocalFs])
+    assert(fileSystemOf(spark, dir).getClass == classOf[LocalFs])
+    assert(fileSystemOf(spark.newSession(), dir).getClass == stock)
+  }
+
+  test("a partitioned DataFrame write goes through LocalFs in the tasks") {
+    // Hadoop's local filesystem counts bytes, not write ops; the counter
+    // is per FileSystem class, so only LocalFs's raw filesystem moves it
+    @nowarn("cat=deprecation")
+    def bytesWritten(cls: Class[_ <: FileSystem]): Long =
+      FileSystem.getStatistics("file", cls).getBytesWritten
+    val ours0 = bytesWritten(classOf[LocalFs.RawFs])
+    val stock0 = bytesWritten(classOf[RawLocalFileSystem])
+    write(spark, tmpDir("localfs_stats").resolve("t"))
+    assert(bytesWritten(classOf[LocalFs.RawFs]) > ours0)
+    assert(bytesWritten(classOf[RawLocalFileSystem]) == stock0)
+  }
+
+  test("file and directory permissions equal the stock FileSystem's") {
+    Seq("022", "027", "077").foreach { umask =>
+      val ours = spark.newSession()
+      LocalFs.install(ours)
+      // the stock side bypasses the FileSystem cache too: the cached
+      // instance was built before this session and ignores its umask
+      val stock = spark.newSession()
+      stock.conf.set("fs.file.impl.disable.cache", "true")
+      Seq(ours, stock).foreach(_.conf.set("fs.permissions.umask-mode", umask))
+      val (a, b) = (tmpDir("localfs_ours").resolve("t"),
+        tmpDir("localfs_stock").resolve("t"))
+      write(ours, a)
+      write(stock, b)
+      val (ma, mb) = (modes(a), modes(b))
+      assert(ma.exists(_._1.endsWith(".parquet")))
+      assert(ma == mb, s"umask $umask")
+      if (umask == "022")
+        assert(ma.filter(_._1.endsWith(".parquet")).forall(_._2 == octal("644")),
+          "data files are rw-r--r--")
+    }
+  }
+
+  test(".crc sidecars are written and a flipped data byte fails the read") {
+    val out = tmpDir("localfs_crc").resolve("t")
+    write(spark, out)
+    val data = walk(out).filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(data.nonEmpty)
+    data.foreach { p =>
+      assert(Files.exists(p.resolveSibling(s".${p.getFileName}.crc")), p)
+    }
+    val raf = new RandomAccessFile(data.head.toFile, "rw")
+    try { raf.seek(4); val b = raf.read(); raf.seek(4); raf.write(b ^ 0xff) }
+    finally raf.close()
+    // LocalFileSystem would move the corrupt file to a `bad_files` dir at
+    // the highest writable ancestor on its device; keep it in place
+    val fs = new LocalFs {
+      override def reportChecksumFailure(p: Path, in: FSDataInputStream,
+          inPos: Long, sums: FSDataInputStream, sumsPos: Long): Boolean = false
+    }
+    fs.initialize(URI.create("file:///"), SessionHadoopConf(spark))
+    val in = fs.open(new Path(data.head.toUri))
+    try intercept[ChecksumException](in.readAllBytes())
+    finally in.close()
+  }
+
+  test("special mode bits are applied exactly as the stock path applies " +
+      "them") {
+    val conf = SessionHadoopConf(spark)
+    def raw(fs: RawLocalFileSystem) = {
+      fs.initialize(URI.create("file:///"), conf); fs
+    }
+    val (ours, stock) = (raw(new LocalFs.RawFs), raw(new RawLocalFileSystem))
+    val root = tmpDir("localfs_modes")
+    // FsPermission carries the sticky bit but drops setuid and setgid, so
+    // 06755 reaches both paths as 0755
+    Seq("1755", "0755", "6755", "1777", "0640", "0700").map(octal)
+      .zipWithIndex.foreach { case (bits, i) =>
+        val perm = new FsPermission(bits.toShort)
+        Seq(true, false).foreach { isDir =>
+          val Seq(a, b) = Seq("ours", "stock").map { side =>
+            val p = root.resolve(s"$side-$i-$isDir")
+            if (isDir) Files.createDirectory(p) else Files.createFile(p)
+            p
+          }
+          ours.setPermission(new Path(a.toUri), perm)
+          stock.setPermission(new Path(b.toUri), perm)
+          assert(mode(a) == mode(b),
+            f"mode $bits%o on ${if (isDir) "dir" else "file"}")
+        }
+    }
+  }
+}

@@ -1,7 +1,13 @@
 package graft.spark
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,6 +69,45 @@ class RunJobSpec extends AnyFunSuite {
       RunJob.workRoot(args), "job1")
     assert(metrics.count() == 6)
     assert(metrics.agg(sum("rows")).head().getLong(0) == 300)
+  }
+
+  test("a successful run logs no stack trace at WARN or above, and its " +
+      "output has no partition column") {
+    val events = new ConcurrentLinkedQueue[LogEvent]()
+    val capture = new AbstractAppender("runjob-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootLogger = ctx.getConfiguration.getRootLogger
+    val level = rootLogger.getLevel
+    val args = RunJob.JobArgs(writeInput(120), tmpDir("runjob_out"), "job_l",
+      partitions = 4, saltBuckets = 4, shufflePartitions = 4)
+    capture.start()
+    rootLogger.addAppender(capture, Level.WARN, null)
+    rootLogger.setLevel(Level.WARN)
+    ctx.updateLoggers()
+    try {
+      // the capture must see a WARN with a throwable when one is logged
+      LogManager.getLogger(getClass).warn("capture probe",
+        new RuntimeException("probe"))
+      assert(RunJob.execute(spark, args).committedThisRun)
+    } finally {
+      rootLogger.removeAppender(capture.getName)
+      rootLogger.setLevel(level)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val (probe, run) = events.asScala.toSeq
+      .partition(_.getMessage.getFormattedMessage == "capture probe")
+    assert(probe.size == 1 && probe.head.getThrown != null)
+    val traces = run.filter(e =>
+      e.getLevel.isMoreSpecificThan(Level.WARN) && e.getThrown != null)
+    assert(traces.isEmpty, traces.map(e =>
+      s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}: " +
+        e.getThrown).mkString("\n"))
+    assert(!CheckpointedRun.output(spark, RunJob.workRoot(args), "job_l")
+      .columns.contains("partition"))
   }
 
   test("input may be an Iceberg-style table root: rows resolved through " +

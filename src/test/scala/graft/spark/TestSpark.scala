@@ -3,7 +3,8 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark suites (build.sbt forks a single
-  * test JVM). */
+  * test JVM). It writes `file://` through the production [[graft.io.LocalFs]]
+  * whatever the suite order. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -15,6 +16,7 @@ object TestSpark {
       .withExtensions(new graft.expr.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    graft.io.LocalFs.install(s)
     s
   }
 }
