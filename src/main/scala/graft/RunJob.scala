@@ -70,18 +70,23 @@ object RunJob {
       require(i + 1 < argv.length, s"$flag requires a value")
       argv(i + 1)
     }
+    def positive(flag: String): Int = {
+      val n = value(flag).toInt
+      require(n >= 1, s"$flag must be at least 1 (got $n)")
+      n
+    }
     while (i < argv.length) {
       argv(i) match {
         case "--input" => a = a.copy(input = value("--input")); i += 2
         case "--output" => a = a.copy(output = value("--output")); i += 2
         case "--run-id" => a = a.copy(runId = value("--run-id")); i += 2
         case "--partitions" =>
-          a = a.copy(partitions = value("--partitions").toInt); i += 2
+          a = a.copy(partitions = positive("--partitions")); i += 2
         case "--salt-buckets" =>
-          a = a.copy(saltBuckets = value("--salt-buckets").toInt); i += 2
+          a = a.copy(saltBuckets = positive("--salt-buckets")); i += 2
         case "--shuffle-partitions" =>
           a = a.copy(shufflePartitions =
-            value("--shuffle-partitions").toInt); i += 2
+            positive("--shuffle-partitions")); i += 2
         case "--prebucketed" =>
           a = a.copy(prebucketed = Some(value("--prebucketed"))); i += 2
         case "--compact" => a = a.copy(compact = true); i += 1

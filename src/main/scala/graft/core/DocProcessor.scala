@@ -34,7 +34,11 @@ object DocProcessor {
     RuleResult("lang_conf_min", conf < Heuristics.LangConfMin, conf,
       Heuristics.LangConfMin))
 
-  def process(text: String): DocResult =
+  def process(text: String): DocResult = process(text, null)
+
+  /** [[process]], charging the stage times to `scope` (may be null) as
+    * well as to the JVM-wide [[StageTimers]]. */
+  def process(text: String, scope: StageTimers.Scope): DocResult =
     try {
       val t0 = System.nanoTime()
       val (full, wordArr, startArr) = Tokenizer.tokenizeArrays(text)
@@ -60,12 +64,7 @@ object DocProcessor {
       val rules = Heuristics.evaluateWith(text, words, lang) ++
         pipelineRules(ppl, conf)
       val t5 = System.nanoTime()
-      StageTimers.add("tokenize", t1 - t0)
-      StageTimers.add("pii_scrub", t2 - t1)
-      StageTimers.add("langid", t3 - t2)
-      StageTimers.add("perplexity", t4 - t3)
-      StageTimers.add("heuristics", t5 - t4)
-      StageTimers.addDoc()
+      StageTimers.record(scope, t0, t1, t2, t3, t4, t5)
       DocResult(full, scrubbed, matches,
         nRedacted, lang, conf, ppl, rules,
         keep = !rules.exists(_.fired), error = None)

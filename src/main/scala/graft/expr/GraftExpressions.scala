@@ -1,5 +1,6 @@
 package graft.expr
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -130,8 +131,21 @@ object Kernels {
       labeled.count(_.detectedAs.isDefined))
   }
 
+  /** Spark local property naming the [[StageTimers]] scope that a job's
+    * [[pageProcess]] calls are also charged to. */
+  final val StageScopeProperty = "graft.stage.scope"
+
+  /** The scope named by the running task's job, or null outside a task,
+    * without the property, or where the scope was not opened (an
+    * executor JVM on a cluster). */
+  private def stageScope(): StageTimers.Scope = {
+    val tc = TaskContext.get()
+    if (tc == null) null
+    else StageTimers.scope(tc.getLocalProperty(StageScopeProperty))
+  }
+
   def pageProcess(v: UTF8String): InternalRow = {
-    val r = DocProcessor.process(v.toString)
+    val r = DocProcessor.process(v.toString, stageScope())
     InternalRow(
       UTF8String.fromString(r.fullText),
       UTF8String.fromString(r.scrubbedText),

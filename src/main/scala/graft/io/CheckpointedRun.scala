@@ -2,10 +2,16 @@ package graft.io
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.atomic.AtomicReference
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.StageTimers
+import graft.expr.Kernels
 
 /** Resumable batch execution with per-partition progress manifests and
   * per-stage metrics (SURVEY §7.6; BASELINE.json: "checkpoints
@@ -33,7 +39,7 @@ object CheckpointedRun {
 
   final case class PartitionResult(partition: Int, rows: Long, skipped: Boolean)
 
-  /** Files per staged bucket directory (bounded total: P x this). */
+  /** Most files per staged bucket directory (bounded total: P x this). */
   final val StagedSubsplits = 8
 
   private def progressDir(root: String, runId: String) =
@@ -65,7 +71,19 @@ object CheckpointedRun {
     * single-directory scan). The previous formulation filtered the raw
     * source per partition = P full scans, a non-starter at 100 TB.
     * Resume reuses the staged copy (it is keyed by run id and committed
-    * via Spark's _SUCCESS marker before any partition starts).
+    * via Spark's _SUCCESS marker before any partition starts). Each
+    * bucket is staged as one file per scan split it fills
+    * (`spark.sql.files.maxPartitionBytes`), at most [[StagedSubsplits]],
+    * so a small bucket is one file and one read task.
+    *
+    * Partitions run side by side: `transform` is called on the calling
+    * thread for every partition to run, in order, and then the partition
+    * writes (each followed by its manifest) run on a pool of
+    * min(partitions to run, `defaultParallelism`) threads. If one fails,
+    * the partitions not yet started are skipped, the running ones are
+    * waited for, and its error is rethrown as is; no partition job
+    * outlives the call. `failAfter = k` runs the first k fresh
+    * partitions, waits for them, then throws.
     *
     * Zero-copy mode: when the input ALREADY lives in the staged layout —
     * a `_bucket=<k>` Hive-partitioned parquet keyed by the same
@@ -79,6 +97,10 @@ object CheckpointedRun {
           numPartitions: Int = 8,
           failAfter: Int = Int.MaxValue,
           prebucketed: Option[String] = None): Seq[PartitionResult] = {
+    // checked before `_num_partitions` is recorded: a bad value must not
+    // become part of the run's identity
+    require(numPartitions >= 1,
+      s"numPartitions must be at least 1 (got $numPartitions)")
     Files.createDirectories(progressDir(root, runId))
     val done = completedPartitions(root, runId)
 
@@ -150,9 +172,7 @@ object CheckpointedRun {
         // P <= 64; beyond that a deterministic evenly-strided 64-dir
         // subset is (a wrong key/P corrupts essentially every bucket, so
         // 64 dirs catch a global mismatch with certainty and a partial
-        // mis-keying with high probability). The limit-32 reads run a few
-        // at a time on the scheduler instead of P sequential driver
-        // round-trips.
+        // mis-keying with high probability).
         // CEIL stride: floor + take(64) would check only the FIRST 64
         // dirs for 64 < P < 128, never sampling the upper buckets — a
         // layout mis-keyed only in its tail would pass
@@ -160,46 +180,39 @@ object CheckpointedRun {
         val sampled = bucketDirs.indices.collect {
           case idx if idx % math.max(1, step) == 0 => bucketDirs(idx)
         }.take(64)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, math.max(1, sampled.size)))
-        try {
-          val futures = sampled.map { case (k, dir) =>
-            pool.submit(new java.util.concurrent.Callable[(Long, Long)] {
-              override def call(): (Long, Long) = {
-                // a legitimately row-less bucket dir (empty, or only a
-                // _SUCCESS marker) has nothing to verify — tolerate the
-                // schema-inference failure for EXACTLY that case. Any
-                // other layout (nested partition dirs, oddly-suffixed
-                // files) still goes through the real read, so a
-                // mis-keyed prebucketed input cannot dodge verification
-                // by its file naming.
-                val bad =
-                  try spark.read.parquet(dir)
-                    .select(col(keyCol)).limit(32)
-                    .filter(pmod(xxhash64(col(keyCol)), lit(numPartitions))
-                      .cast("long") =!= k)
-                    .count()
-                  catch {
-                    // error-condition match first (version-stable);
-                    // message substring kept as a fallback for builds
-                    // predating the condition name
-                    case e: org.apache.spark.sql.AnalysisException
-                        if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-                          (e.getMessage != null &&
-                            e.getMessage.contains("Unable to infer schema")) =>
-                      0L
-                  }
-                (k, bad)
-              }
-            })
-          }
-          futures.map(_.get()).foreach { case (k, bad) =>
-            require(bad == 0,
-              s"prebucketed input at $path is not bucketed by " +
-                s"pmod(xxhash64($keyCol), $numPartitions): $bad sampled " +
-                s"row(s) in _bucket=$k land outside their directory")
-          }
-        } finally pool.shutdown()
+        // the limit-32 reads run a few at a time on the scheduler instead
+        // of P sequential driver round-trips
+        val checks = sampled.map { case (k, dir) => () =>
+          // a legitimately row-less bucket dir (empty, or only a _SUCCESS
+          // marker) has nothing to verify — tolerate the schema-inference
+          // failure for EXACTLY that case. Any other layout (nested
+          // partition dirs, oddly-suffixed files) still goes through the
+          // real read, so a mis-keyed prebucketed input cannot dodge
+          // verification by its file naming.
+          val bad =
+            try spark.read.parquet(dir)
+              .select(col(keyCol)).limit(32)
+              .filter(pmod(xxhash64(col(keyCol)), lit(numPartitions))
+                .cast("long") =!= k)
+              .count()
+            catch {
+              // error-condition match first (version-stable); message
+              // substring kept as a fallback for builds predating the
+              // condition name
+              case e: org.apache.spark.sql.AnalysisException
+                  if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
+                    (e.getMessage != null &&
+                      e.getMessage.contains("Unable to infer schema")) =>
+                0L
+            }
+          (k, bad)
+        }
+        inPool(8, checks).foreach { case (k, bad) =>
+          require(bad == 0,
+            s"prebucketed input at $path is not bucketed by " +
+              s"pmod(xxhash64($keyCol), $numPartitions): $bad sampled " +
+              s"row(s) in _bucket=$k land outside their directory")
+        }
         spark.read.parquet(path)
       case None =>
         val stagedPath = Paths.get(root, "_staged", s"run=$runId").toString
@@ -210,16 +223,17 @@ object CheckpointedRun {
           // tasks x P files, which at production scale (10^5 input
           // splits x 4096 buckets) is a catastrophic file-count
           // explosion for any metadata layer. One shuffle keyed by
-          // (_bucket, subsplit) bounds output to ~StagedSubsplits files
-          // per bucket: the subsplit (an independent hash of the same
-          // key) keeps each bucket readable with intra-bucket
-          // parallelism even before row-group splitting kicks in.
+          // (_bucket, subsplit) bounds output to `subsplits` files per
+          // bucket: the subsplit (an independent hash of the same key)
+          // keeps a large bucket readable with intra-bucket parallelism
+          // even before row-group splitting kicks in.
+          val subsplits = stagedSubsplits(spark, input, numPartitions)
           input
             .withColumn("_bucket",
               pmod(xxhash64(col(keyCol)), lit(numPartitions)))
             .withColumn("_subsplit",
-              pmod(xxhash64(col(keyCol), lit(0x5eed)), lit(StagedSubsplits)))
-            .repartition(numPartitions * StagedSubsplits,
+              pmod(xxhash64(col(keyCol), lit(0x5eed)), lit(subsplits)))
+            .repartition(numPartitions * subsplits,
               col("_bucket"), col("_subsplit"))
             .drop("_subsplit")
             .write.mode("overwrite").partitionBy("_bucket").parquet(stagedPath)
@@ -227,77 +241,26 @@ object CheckpointedRun {
         spark.read.parquet(stagedPath)
     }
 
-    var fresh = 0
-    val results = (0 until numPartitions).map { k =>
-      if (done.contains(k)) PartitionResult(k, -1, skipped = true)
-      else {
-        if (fresh >= failAfter)
-          throw new RuntimeException(s"injected failure before partition $k")
-        fresh += 1
-        val st0 = graft.core.StageTimers.snapshot()
-        val t0 = System.nanoTime()
-        // filter on the Hive partition column prunes to one directory
-        val part = staged.filter(col("_bucket") === k).drop("_bucket")
-        val out = transform(part)
-        val outPath = Paths.get(root, s"run=$runId", s"partition=$k").toString
-        // per-stage counters observed on the write itself: one Spark job
-        // per partition, no re-read of the output. Schema-tolerant +
-        // null-safe: (a) sum() over an EMPTY partition (every row
-        // filtered, or fewer rows than partitions) is NULL, and a
-        // manifest must still record 0; (b) a non-pipeline transform
-        // lacks the quality columns — its counters are zero instead of
-        // failing the run
-        val cols = out.columns.toSet
-        def m0(c: Column): Column = coalesce(c, lit(0L))
-        val obs = Observation()
-        out.observe(obs,
-          count(lit(1)).as("rows"),
-          (if (cols("keep"))
-            m0(sum(when(col("keep"), 1L).otherwise(0L)))
-          else lit(0L)).as("n_keep"),
-          (if (cols("n_redacted")) m0(sum(col("n_redacted").cast("long")))
-          else lit(0L)).as("scrub_n_redacted"),
-          (if (cols("lang_conf"))
-            m0(sum(when(col("lang_conf") <
-              lit(graft.model.PagesSynth.LangConfMin), 1L).otherwise(0L)))
-          else lit(0L)).as("langid_n_low_conf"),
-          (if (cols("perplexity"))
-            m0(sum(when(col("perplexity") >
-              lit(graft.model.PagesSynth.PerplexityMax), 1L).otherwise(0L)))
-          else lit(0L)).as("perplexity_n_high"),
-          (if (cols("rule_lineage"))
-            m0(sum(size(filter(col("rule_lineage"), r => r("fired")))
-              .cast("long")))
-          else lit(0L)).as("heuristics_n_fired"))
-          .write.mode("overwrite").parquet(outPath)
-        val m = obs.get.view.mapValues(_.asInstanceOf[Long]).toMap
-        val rows = m("rows")
-        val wall = (System.nanoTime() - t0) / 1e9
-        val (stageNanos, _) =
-          graft.core.StageTimers.delta(st0, graft.core.StageTimers.snapshot())
-        def sn(st: String): Double = stageNanos.getOrElse(st, 0L) / 1e9
-
-        val manifest =
-          s"""{"run_id":"$runId","partition":$k,"rows":$rows,
-             |"n_keep":${m("n_keep")},
-             |"stages":{"scrub":{"n_redacted":${m("scrub_n_redacted")},
-             |"cpu_sec":${sn("pii_scrub")}},
-             |"langid":{"n_low_conf":${m("langid_n_low_conf")},
-             |"cpu_sec":${sn("langid")}},
-             |"perplexity":{"n_high":${m("perplexity_n_high")},
-             |"cpu_sec":${sn("perplexity")}},
-             |"heuristics":{"n_fired":${m("heuristics_n_fired")},
-             |"cpu_sec":${sn("heuristics")}},
-             |"tokenize":{"cpu_sec":${sn("tokenize")}}},
-             |"wall_sec":$wall}""".stripMargin.replace("\n", "")
-        // write-then-rename: manifest appears only after data committed
-        val tmp = progressDir(root, runId).resolve(s"partition=$k.tmp")
-        Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, progressDir(root, runId).resolve(s"partition=$k.json"),
-          StandardCopyOption.ATOMIC_MOVE)
-        PartitionResult(k, rows, skipped = false)
-      }
+    // the fresh partitions this call computes; `failAfter` stops the rest
+    val fresh = (0 until numPartitions).filterNot(done)
+    val toRun = fresh.take(failAfter)
+    // transform on the calling thread, in partition order, before any
+    // partition job starts: `transform` need not be thread-safe
+    val writes = toRun.map { k =>
+      // filter on the Hive partition column prunes to one directory
+      val part = staged.filter(col("_bucket") === k).drop("_bucket")
+      val obs = Observation()
+      val out = observed(transform(part), obs)
+      () => writePartition(spark, out, obs, root, runId, k)
     }
+    val written = inPool(
+      math.min(toRun.size, spark.sparkContext.defaultParallelism), writes)
+    if (fresh.size > toRun.size)
+      throw new RuntimeException(
+        s"injected failure before partition ${fresh(toRun.size)}")
+    val byPartition = written.map(r => r.partition -> r).toMap
+    val results = (0 until numPartitions).map(k =>
+      byPartition.getOrElse(k, PartitionResult(k, -1, skipped = true)))
     // every partition is complete: reclaim the staged input copy —
     // leaving it would permanently double storage for every finished run
     // (at the 100 TB design point, a 100 TB orphan per run id). Only the
@@ -308,6 +271,126 @@ object CheckpointedRun {
     if (prebucketed.isEmpty) reclaimStaged(root, runId)
     results
   }
+
+  /** Files per staged bucket: as many scan splits as an average bucket
+    * of `input` fills, clamped to [1, [[StagedSubsplits]]]. A bucket that
+    * fits one split becomes one file and one read task. The arithmetic
+    * stays in BigInt until clamped: an input with no size estimate (an
+    * RDD-backed frame reports Long.MaxValue) gets the maximum. */
+  private def stagedSubsplits(spark: SparkSession, input: DataFrame,
+                              numPartitions: Int): Int = {
+    val splitBytes = BigInt(JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes")))
+    val bucketBytes = input.queryExecution.optimizedPlan.stats.sizeInBytes /
+      numPartitions
+    ((bucketBytes + splitBytes - 1) / splitBytes)
+      .max(1).min(StagedSubsplits).toInt
+  }
+
+  /** `out` with the manifest's per-stage counters attached as `obs`:
+    * one Spark job per partition, no re-read of the output.
+    * Schema-tolerant + null-safe: (a) sum() over an EMPTY partition
+    * (every row filtered, or fewer rows than partitions) is NULL, and a
+    * manifest must still record 0; (b) a non-pipeline transform lacks the
+    * quality columns — its counters are zero instead of failing the run */
+  private def observed(out: DataFrame, obs: Observation): DataFrame = {
+    val cols = out.columns.toSet
+    def m0(c: Column): Column = coalesce(c, lit(0L))
+    out.observe(obs,
+      count(lit(1)).as("rows"),
+      (if (cols("keep"))
+        m0(sum(when(col("keep"), 1L).otherwise(0L)))
+      else lit(0L)).as("n_keep"),
+      (if (cols("n_redacted")) m0(sum(col("n_redacted").cast("long")))
+      else lit(0L)).as("scrub_n_redacted"),
+      (if (cols("lang_conf"))
+        m0(sum(when(col("lang_conf") <
+          lit(graft.model.PagesSynth.LangConfMin), 1L).otherwise(0L)))
+      else lit(0L)).as("langid_n_low_conf"),
+      (if (cols("perplexity"))
+        m0(sum(when(col("perplexity") >
+          lit(graft.model.PagesSynth.PerplexityMax), 1L).otherwise(0L)))
+      else lit(0L)).as("perplexity_n_high"),
+      (if (cols("rule_lineage"))
+        m0(sum(size(filter(col("rule_lineage"), r => r("fired")))
+          .cast("long")))
+      else lit(0L)).as("heuristics_n_fired"))
+  }
+
+  /** Write partition `k` (a pool thread's job), then its manifest. The
+    * kernel's stage times are charged to a [[StageTimers]] scope named by
+    * a local property the write job inherits, so partitions running side
+    * by side do not count each other's time. */
+  private def writePartition(spark: SparkSession, out: DataFrame,
+                             obs: Observation, root: String, runId: String,
+                             k: Int): PartitionResult = {
+    val t0 = System.nanoTime()
+    val outPath = Paths.get(root, s"run=$runId", s"partition=$k").toString
+    val sc = spark.sparkContext
+    val scope = java.util.UUID.randomUUID().toString
+    StageTimers.openScope(scope)
+    sc.setLocalProperty(Kernels.StageScopeProperty, scope)
+    val stageNanos =
+      try {
+        out.write.mode("overwrite").parquet(outPath)
+        StageTimers.closeScope(scope)
+      } catch {
+        case e: Throwable => StageTimers.closeScope(scope); throw e
+      } finally sc.setLocalProperty(Kernels.StageScopeProperty, null)
+    val m = obs.get.view.mapValues(_.asInstanceOf[Long]).toMap
+    val rows = m("rows")
+    val wall = (System.nanoTime() - t0) / 1e9
+    def sn(st: String): Double = stageNanos(st) / 1e9
+
+    val manifest =
+      s"""{"run_id":"$runId","partition":$k,"rows":$rows,
+         |"n_keep":${m("n_keep")},
+         |"stages":{"scrub":{"n_redacted":${m("scrub_n_redacted")},
+         |"cpu_sec":${sn("pii_scrub")}},
+         |"langid":{"n_low_conf":${m("langid_n_low_conf")},
+         |"cpu_sec":${sn("langid")}},
+         |"perplexity":{"n_high":${m("perplexity_n_high")},
+         |"cpu_sec":${sn("perplexity")}},
+         |"heuristics":{"n_fired":${m("heuristics_n_fired")},
+         |"cpu_sec":${sn("heuristics")}},
+         |"tokenize":{"cpu_sec":${sn("tokenize")}}},
+         |"wall_sec":$wall}""".stripMargin.replace("\n", "")
+    // write-then-rename: manifest appears only after data committed
+    val tmp = progressDir(root, runId).resolve(s"partition=$k.tmp")
+    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, progressDir(root, runId).resolve(s"partition=$k.json"),
+      StandardCopyOption.ATOMIC_MOVE)
+    PartitionResult(k, rows, skipped = false)
+  }
+
+  /** Run `tasks` on at most `threads` pool threads; results come back in
+    * task order. After a task fails, the tasks not yet started are
+    * skipped; the call returns only once every started task has
+    * finished, and then rethrows the first failure itself. */
+  private def inPool[A](threads: Int, tasks: Seq[() => A]): Seq[A] =
+    if (tasks.isEmpty) Seq.empty
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(threads, tasks.size))
+      val failure = new AtomicReference[Throwable]()
+      try {
+        val futures = tasks.map { task =>
+          pool.submit(new Callable[Option[A]] {
+            override def call(): Option[A] =
+              if (failure.get != null) None
+              else
+                try Some(task())
+                catch {
+                  case e: Throwable => failure.compareAndSet(null, e); throw e
+                }
+          })
+        }
+        val results = futures.map { f =>
+          try f.get() catch { case _: ExecutionException => None }
+        }
+        Option(failure.get).foreach(e => throw e)
+        results.flatten
+      } finally pool.shutdown()
+    }
 
   private def reclaimStaged(root: String, runId: String): Unit = {
     val stagedPath = Paths.get(root, "_staged", s"run=$runId")

@@ -1,8 +1,10 @@
 package graft.spark
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
@@ -209,6 +211,165 @@ class IcebergIoSpec extends AnyFunSuite {
       assert(atFirst >= 0 && jobs.get() - atFirst == 4,
         s"${jobs.get() - atFirst} jobs for 4 fresh partitions")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** `n` synthetic pages written as parquet and read back: an input
+    * whose scan runs no kernel and has a size estimate. */
+  private def parquetPages(n: Long): DataFrame = {
+    val in = tmpDir("pages_in")
+    PagesSynth.pages(spark, n, 4).write.mode("overwrite").parquet(in)
+    spark.read.parquet(in)
+  }
+
+  test("checkpointed run: partition jobs overlap, and each manifest's " +
+      "cpu_sec is that partition's own share of the kernel time") {
+    val input = parquetPages(400)
+    val starts = new ConcurrentHashMap[Int, java.lang.Long]()
+    val ends = new ConcurrentHashMap[Int, java.lang.Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(e.jobId, e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ends.put(e.jobId, e.time)
+    }
+    // jobs started before the first transform call are the staging copy
+    @volatile var stagingJobs: Option[Set[Int]] = None
+    val transform = (df: DataFrame) => {
+      if (stagingJobs.isEmpty) {
+        Shim.awaitListenerBus(spark)
+        stagingJobs = Some(starts.keySet.asScala.toSet)
+      }
+      QualityPipeline(df)
+    }
+    val root = tmpDir("overlap")
+    spark.sparkContext.addSparkListener(listener)
+    val st0 = graft.core.StageTimers.snapshot()
+    try {
+      CheckpointedRun.run(spark, input, "url", transform, root, "o1",
+        numPartitions = 4)
+      Shim.awaitListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val (global, _) = graft.core.StageTimers.delta(st0,
+      graft.core.StageTimers.snapshot())
+
+    val jobs = starts.keySet.asScala.toSeq.filterNot(stagingJobs.get)
+      .map(j => (starts.get(j).longValue, ends.get(j).longValue))
+    assert(jobs.size == 4, jobs)
+    jobs.foreach { case (s0, e0) =>
+      assert(jobs.count { case (s1, e1) => s0 < e1 && s1 < e0 } > 1,
+        s"job [$s0, $e0] overlaps no other partition job: $jobs")
+    }
+
+    val stageCols = Seq("tokenize" -> "tokenize", "pii_scrub" -> "scrub",
+      "langid" -> "langid", "perplexity" -> "perplexity",
+      "heuristics" -> "heuristics")
+    val manifests = CheckpointedRun.metricsTable(spark, root, "o1")
+      .select(col("rows") +: stageCols.map { case (_, m) =>
+        col(s"stages.$m.cpu_sec") }: _*).collect()
+    assert(manifests.length == 4)
+    manifests.filter(_.getLong(0) > 0).foreach { r =>
+      assert((1 to stageCols.size).forall(r.getDouble(_) > 0.0), r)
+    }
+    assert(manifests.map(_.getLong(0)).sum == 400L)
+    stageCols.zipWithIndex.foreach { case ((stage, _), i) =>
+      val parts = manifests.map(_.getDouble(i + 1)).sum
+      assert(math.abs(parts - global(stage) / 1e9) < 1e-6,
+        s"$stage: partitions sum to $parts s, global delta " +
+          s"${global(stage) / 1e9} s")
+    }
+  }
+
+  test("checkpointed run: a failing partition's own error is rethrown, " +
+      "no job outlives the run, and a rerun computes only the missing " +
+      "partitions") {
+    val input = parquetPages(200)
+    val bucket = pmod(xxhash64(col("url")), lit(8))
+    val badK = 0
+    val badUrl = input.filter(bucket === badK).select(min("url")).head()
+      .getString(0)
+    // the other partitions are slowed down, so some are still running
+    // when the bad one fails
+    val slow = udf((u: String) => { Thread.sleep(5); u })
+    val failing = (df: DataFrame) => QualityPipeline(df)
+      .withColumn("url",
+        when(col("url") === badUrl, raise_error(lit("planted failure")))
+          .when(bucket === badK, col("url"))
+          .otherwise(slow(col("url"))))
+    val root = tmpDir("fail")
+    val e = intercept[Exception] {
+      CheckpointedRun.run(spark, input, "url", failing, root, "f1",
+        numPartitions = 8)
+    }
+    Shim.awaitListenerBus(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted failure")),
+      e)
+    val done = CheckpointedRun.completedPartitions(root, "f1")
+    assert(!done.contains(badK), s"partition $badK failed but has a manifest")
+
+    val res = CheckpointedRun.run(spark, input, "url",
+      (df: DataFrame) => QualityPipeline(df), root, "f1", numPartitions = 8)
+    assert(res.filterNot(_.skipped).map(_.partition).toSet ==
+      (0 until 8).toSet -- done)
+    assert(CheckpointedRun.output(spark, root, "f1").count() == 200L)
+  }
+
+  test("staging layout: a small parquet input stages one file per bucket; " +
+      "an input with no size estimate stages up to StagedSubsplits; both " +
+      "give the same output") {
+    val parquetIn = parquetPages(300)
+    val rddIn = spark.createDataFrame(parquetIn.rdd, parquetIn.schema)
+    assert(rddIn.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      BigInt(Long.MaxValue))
+    /** Data files per `_bucket=<k>` directory of a run stopped right
+      * after staging, then the completed run's output. */
+    def stage(input: DataFrame, runId: String): (Seq[Int], DataFrame) = {
+      val root = tmpDir("staging")
+      val e = intercept[RuntimeException] {
+        CheckpointedRun.run(spark, input, "url",
+          (df: DataFrame) => QualityPipeline(df), root, runId,
+          numPartitions = 4, failAfter = 0)
+      }
+      assert(e.getMessage == "injected failure before partition 0")
+      val files = (0 until 4).map { k =>
+        val dir = Paths.get(root, "_staged", s"run=$runId", s"_bucket=$k")
+        val s = Files.list(dir)
+        try s.iterator().asScala.map(_.getFileName.toString)
+          .count(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        finally s.close()
+      }
+      CheckpointedRun.run(spark, input, "url",
+        (df: DataFrame) => QualityPipeline(df), root, runId,
+        numPartitions = 4)
+      (files, CheckpointedRun.output(spark, root, runId)
+        .select("url", "scrubbed_text", "keep", "perplexity"))
+    }
+    val (small, a) = stage(parquetIn, "s1")
+    assert(small == Seq(1, 1, 1, 1), small)
+    val (unsized, b) = stage(rddIn, "s2")
+    assert(unsized.forall(n => n >= 1 && n <= CheckpointedRun.StagedSubsplits)
+      && unsized.exists(_ > 1), unsized)
+    assert(a.count() == 300L)
+    assert(a.exceptAll(b).count() == 0L && b.exceptAll(a).count() == 0L)
+  }
+
+  test("checkpointed run: numPartitions below 1 is rejected before it is " +
+      "recorded, so the run id stays usable") {
+    val root = tmpDir("badparts")
+    val input = PagesSynth.pages(spark, 20, 2)
+    Seq(0, -3).foreach { p =>
+      intercept[IllegalArgumentException] {
+        CheckpointedRun.run(spark, input, "url", (df: DataFrame) => df,
+          root, "b1", numPartitions = p)
+      }
+      assert(!Files.exists(
+        Paths.get(root, "_progress", "run=b1", "_num_partitions")))
+    }
+    val res = CheckpointedRun.run(spark, input, "url", (df: DataFrame) => df,
+      root, "b1", numPartitions = 2)
+    assert(res.map(_.rows).sum == 20L)
   }
 
   test("concurrent committers: the second writer of the same version fails " +

@@ -45,6 +45,16 @@ class RunJobSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       RunJob.parseArgs(Array("--bogus", "x"))
     }
+    // a count below 1 is rejected up front, naming its flag
+    Seq("--partitions" -> "0", "--partitions" -> "-3",
+        "--salt-buckets" -> "0", "--shuffle-partitions" -> "0").foreach {
+      case (flag, v) =>
+        val e = intercept[IllegalArgumentException] {
+          RunJob.parseArgs(Array("--input", "/i", "--output", "/o",
+            "--run-id", "r1", flag, v))
+        }
+        assert(e.getMessage.contains(flag), e.getMessage)
+    }
   }
 
   test("full job: pipeline output lands in the table exactly once, with " +
