@@ -1,11 +1,9 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-import graft.io.{CheckpointedRun, IcebergStyleTable, LocalFs}
+import graft.io.{CheckpointedRun, IcebergStyleTable, LocalFs, RootFs}
 import graft.pipeline.QualityPipeline
 
 /** The production face of the engine — the composed spark-submit entry the
@@ -32,11 +30,12 @@ import graft.pipeline.QualityPipeline
   *      `part_date` with a url-salted shuffle (S5/S6, skew §2.11).
   *
   * The final commit is guarded by a `_committed.json` marker inside the
-  * run's progress dir: a job killed between table commit and exit (or
-  * re-submitted after success) resumes to a no-op instead of appending a
-  * duplicate snapshot. Killed BEFORE the commit, the rerun skips all
-  * completed partitions and performs just the commit — so the table holds
-  * the run's rows exactly once under any kill/retry schedule.
+  * run's progress dir, published by write-then-rename: a job killed
+  * between table commit and exit (or re-submitted after success) resumes
+  * to a no-op instead of appending a duplicate snapshot. Killed BEFORE
+  * the commit, the rerun skips all completed partitions and performs just
+  * the commit — so the table holds the run's rows exactly once under any
+  * kill/retry schedule.
   *
   * Job identity is the explicit `--run-id` (O2 — no wall clock), and the
   * partition count is part of that identity (CheckpointedRun refuses a
@@ -102,8 +101,10 @@ object RunJob {
   def workRoot(args: JobArgs): String = s"${args.output}/work"
   def tableRoot(args: JobArgs): String = s"${args.output}/table"
   private def commitMarker(args: JobArgs) =
-    Paths.get(workRoot(args), "_progress", s"run=${args.runId}",
-      "_committed.json")
+    new Path(s"${workRoot(args)}/_progress/run=${args.runId}/_committed.json")
+
+  private def markerJson(args: JobArgs, version: Int, rows: Long): String =
+    s"""{"run_id":"${args.runId}","snapshot_version":$version,"rows":$rows}"""
 
   /** The whole job; `failAfter` is the kill-injection test hook
     * (CheckpointedRun's — aborts after N fresh partitions). Installs
@@ -117,8 +118,7 @@ object RunJob {
     // shape — resolved through its snapshot manifest, so an in-flight
     // commit on the source table is invisible) or a plain parquet dir
     val pages =
-      if (Files.exists(
-          Paths.get(args.input, "metadata", "version-hint.text")))
+      if (IcebergStyleTable.currentVersion(args.input) > 0)
         IcebergStyleTable.read(spark, args.input)
       else spark.read.parquet(args.input)
 
@@ -132,35 +132,32 @@ object RunJob {
     // alone had a crash window — a kill between hint flip and marker
     // write would make the rerun append a duplicate snapshot). The
     // marker remains as a fast path and a metrics record.
+    val io = RootFs(spark, workRoot(args))
     val marker = commitMarker(args)
+    val markerText = io.readOpt(marker)
     val recorded = IcebergStyleTable
       .findSnapshotWithMeta(tableRoot(args), "run_id", args.runId)
-    if (Files.exists(marker) || recorded.isDefined) {
+    if (markerText.isDefined || recorded.isDefined) {
       // already committed by a previous attempt — resume is a no-op;
       // report this run's contributed rows from its snapshot record. The
       // version must be ATTRIBUTABLE to this run: the snapshot's stamped
       // run_id, or the version recorded in this run's own marker. Falling
       // back to currentVersion would attribute a LATER run's snapshot
       // (and its added_rows) to this run if other runs committed since.
-      val markerVersion: Option[Int] =
-        if (Files.exists(marker)) {
-          val txt = new String(Files.readAllBytes(marker),
-            StandardCharsets.UTF_8)
-          """"snapshot_version"\s*:\s*(\d+)""".r
-            .findFirstMatchIn(txt).map(_.group(1).toInt)
-        } else None
+      val markerVersion = markerText.flatMap(
+        """"snapshot_version"\s*:\s*(\d+)""".r.findFirstMatchIn(_))
+        .map(_.group(1).toInt)
       val v = recorded.orElse(markerVersion)
-      if (!Files.exists(marker) && v.isDefined) // heal lost marker
-        Files.write(marker,
-          s"""{"run_id":"${args.runId}","snapshot_version":${v.get},"rows":${IcebergStyleTable.snapshotAddedRows(tableRoot(args), v.get)}}"""
-            .getBytes(StandardCharsets.UTF_8))
       // unattributable (marker unparseable AND no stamped snapshot —
       // cannot happen through this code's own write order, which stamps
       // the snapshot first): report rows as 0 rather than guessing
+      val rows = v.map(IcebergStyleTable.snapshotAddedRows(tableRoot(args), _))
+        .getOrElse(0L)
+      // heal a lost or unparseable marker
+      if (markerVersion.isEmpty && v.isDefined)
+        io.publish(marker, markerJson(args, v.get, rows))
       JobResult(results, IcebergStyleTable.currentVersion(tableRoot(args)),
-        v.map(IcebergStyleTable.snapshotAddedRows(tableRoot(args), _))
-          .getOrElse(0L),
-        committedThisRun = false)
+        rows, committedThisRun = false)
     } else {
       val out = CheckpointedRun.output(spark, workRoot(args), args.runId)
       val snap = IcebergStyleTable.append(out, tableRoot(args),
@@ -168,9 +165,7 @@ object RunJob {
         saltBuckets = args.saltBuckets,
         shufflePartitions = args.shufflePartitions,
         extraMeta = Map("run_id" -> args.runId))
-      Files.write(marker,
-        s"""{"run_id":"${args.runId}","snapshot_version":${snap.version},"rows":${snap.rowCount}}"""
-          .getBytes(StandardCharsets.UTF_8))
+      io.publish(marker, markerJson(args, snap.version, snap.rowCount))
       // optional out-of-band small-file compaction: a new snapshot with
       // an atomic flip — readers never see a partial rewrite. Runs AFTER
       // the commit record: a kill during compaction leaves the appended

@@ -1,10 +1,17 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopStreams
+import org.apache.parquet.io.InputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.GraftFunctions
 import graft.expr.GraftFunctions._
+import graft.io.RootFs
 import graft.model.PagesSynth
 import graft.pipeline.QualityPipeline
 
@@ -36,36 +43,39 @@ object SparkEntry {
     * count) cannot feed the session's cores. A real warehouse table has
     * thousands of row groups and takes the no-exchange path; the
     * repartition width is the session's defaultParallelism, never a
-    * constant. */
+    * constant.
+    *
+    * The signature lives in the cached VALUE (not the key): a table
+    * regenerated in place replaces its entry instead of adding one. */
   private val footerStatsCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, (Int, Long))]()
-  /** (rowGroups, rows) from the footers, cached per table signature;
-    * (MaxValue, 0) when unreadable — "assume splittable, unknown rows",
-    * which disables the repartition (never worse than the old plan). */
-  private def parquetFooterStats(dir: String, table: String): (Int, Long) = {
-    val sig = tableSig(dir, table)
+  /** (rowGroups, rows) from the footers, read through the session's
+    * FileSystem and cached per table signature `sig`. Throws when the
+    * footers are unreadable; Spark's own scan of the table reads the same
+    * footers through the same FileSystem. */
+  private def parquetFooterStats(io: RootFs, dir: String, table: String,
+                                 sig: String): (Int, Long) =
     footerStatsCache.compute(s"$dir/$table", (_, cached) =>
       if (cached != null && cached._1 == sig) cached
-      else (sig, try {
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val f = new java.io.File(s"$dir/$table.parquet")
-        val files: Seq[java.io.File] =
-          if (f.isDirectory)
-            f.listFiles().filter(x => x.isFile && x.getName.endsWith(".parquet"))
-              .toSeq
-          else Seq(f)
-        var groups = 0
-        var rows = 0L
-        files.foreach { pf =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(pf.getAbsolutePath), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try { groups += r.getRowGroups.size; rows += r.getRecordCount }
-          finally r.close()
+      else {
+        val p = tablePath(dir, table)
+        val st = io.fs.getFileStatus(p)
+        val files =
+          if (st.isDirectory) io.list(p)
+            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+          else Seq(st)
+        val stats = files.map { f =>
+          val r = ParquetFileReader.open(new InputFile {
+            def getLength: Long = f.getLen
+            def newStream() = HadoopStreams.wrap(io.fs.open(f.getPath))
+          })
+          try (r.getRowGroups.size, r.getRecordCount) finally r.close()
         }
-        (groups, rows)
-      } catch { case _: Throwable => (Int.MaxValue, 0L) }))._2
-  }
+        (sig, (stats.map(_._1).sum, stats.map(_._2).sum))
+      })._2
+
+  private def tablePath(dir: String, table: String) =
+    new Path(s"$dir/$table.parquet")
 
   /** Repartition-after-read pays off only when the single-task kernel
     * time it parallelizes exceeds the exchange's fixed cost, so the
@@ -81,7 +91,12 @@ object SparkEntry {
                            minRowsPerCore: Long): DataFrame = {
     val df = withFns(s).read.parquet(s"$dir/$table.parquet")
     val cores = s.sparkContext.defaultParallelism
-    val (groups, rows) = parquetFooterStats(dir, table)
+    val io = RootFs(s, dir)
+    // unreadable footers: assume splittable, with unknown rows, which
+    // disables the repartition (never worse than the old plan)
+    val (groups, rows) =
+      try parquetFooterStats(io, dir, table, tableSig(io, dir, table))
+      catch { case NonFatal(_) => (Int.MaxValue, 0L) }
     if (groups < cores && rows >= cores * minRowsPerCore)
       df.repartition(cores)
     else df
@@ -159,27 +174,11 @@ object SparkEntry {
     * counts / codebooks derived from it, or the scale-derived constants
     * (nearDupVariants, ivfAutoK) silently desynchronize from what a
     * freshly-started oracle computes. */
-  private def tableSig(dir: String, table: String): String = {
-    val p = java.nio.file.Paths.get(dir, s"$table.parquet")
-    try s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}:${java.nio.file.Files.size(p)}"
-    catch { case _: java.io.IOException => "absent" }
-  }
-
-  // sig lives in the VALUE (not the key): a superseded signature is
-  // replaced in place, so repeated in-place regenerations stay one
-  // entry per dir instead of growing the map (and the codebook cache,
-  // whose entries are k x dim doubles) unboundedly
-  private val embRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-  private def embeddingRows(s: SparkSession, dir: String,
-                            sig: String): Long =
-    embRowsCache.compute(dir, (_, cached) =>
-      if (cached != null && cached._1 == sig) cached
-      else (sig, parquetFooterStats(dir, "embeddings") match {
-        // rows == 0 means the footers were unreadable — fall back
-        case (_, r) if r > 0 => r
-        case _ => s.read.parquet(s"$dir/embeddings.parquet").count()
-      }))._2
+  private def tableSig(io: RootFs, dir: String, table: String): String =
+    try {
+      val st = io.fs.getFileStatus(tablePath(dir, table))
+      s"${st.getModificationTime}:${st.getLen}"
+    } catch { case _: java.io.IOException => "absent" }
 
   private val ivfCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Int), (String, Seq[Seq[Double]])]()
@@ -189,8 +188,11 @@ object SparkEntry {
     // count and the codebook cache — two independent snapshots would
     // let an in-place regeneration race a stale-k codebook in under the
     // new table's signature
-    val sig = tableSig(dir, "embeddings")
-    val kEff = if (k == 0) ivfAutoK(embeddingRows(s, dir, sig)) else k
+    val io = RootFs(s, dir)
+    val sig = tableSig(io, dir, "embeddings")
+    val kEff =
+      if (k == 0) ivfAutoK(parquetFooterStats(io, dir, "embeddings", sig)._2)
+      else k
     // evict this dir's stale-signature entries first (round-5 advice):
     // an in-place regeneration that changes the row count changes the
     // auto-kEff, and the sig-in-value replacement alone would strand the
@@ -325,20 +327,12 @@ object SparkEntry {
     "case when doc_id % 11 < 2 then 'duplicate cluster ' || (doc_id % 3) " +
       "else text end"
 
-  /** Documents-table row count, memoized per dir — sizes the scale-aware
-    * plantings below (and is what a real deployment reads from table
-    * metadata). */
-  private val docRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  /** Documents-table row count from the footers, memoized per table
+    * signature — sizes the scale-aware plantings below (and is what a
+    * real deployment reads from table metadata). */
   def numDocs(s: SparkSession, dir: String): Long = {
-    val sig = tableSig(dir, "documents")
-    docRowsCache.compute(dir, (_, cached) =>
-      if (cached != null && cached._1 == sig) cached
-      else (sig, parquetFooterStats(dir, "documents") match {
-        // rows == 0 means the footers were unreadable — fall back
-        case (_, r) if r > 0 => r
-        case _ => s.read.parquet(s"$dir/documents.parquet").count()
-      }))._2
+    val io = RootFs(s, dir)
+    parquetFooterStats(io, dir, "documents", tableSig(io, dir, "documents"))._2
   }
 
   /** Near-dup variant count, SCALE-AWARE: every 25th doc becomes a shared

@@ -1,11 +1,9 @@
 package graft.io
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 import java.util.concurrent.atomic.AtomicReference
-import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -43,21 +41,19 @@ object CheckpointedRun {
   final val StagedSubsplits = 8
 
   private def progressDir(root: String, runId: String) =
-    Paths.get(root, "_progress", s"run=$runId")
+    new Path(s"$root/_progress/run=$runId")
 
-  def completedPartitions(root: String, runId: String): Set[Int] = {
-    val d = progressDir(root, runId)
-    if (!Files.exists(d)) Set.empty
-    else {
-      val s = Files.list(d)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .collect { case n if n.startsWith("partition=") &&
-            n.endsWith(".json") =>
-          n.stripPrefix("partition=").stripSuffix(".json").toInt }
-        .toSet
-      finally s.close()
-    }
-  }
+  def completedPartitions(root: String, runId: String): Set[Int] =
+    manifests(RootFs(root), root, runId).keySet
+
+  /** The run's partition manifests by partition. */
+  private def manifests(io: RootFs, root: String,
+                        runId: String): Map[Int, Path] =
+    io.list(progressDir(root, runId)).map(_.getPath)
+      .collect { case p if p.getName.startsWith("partition=") &&
+          p.getName.endsWith(".json") =>
+        p.getName.stripPrefix("partition=").stripSuffix(".json").toInt -> p }
+      .toMap
 
   /** Run `transform` over `input` split into `numPartitions` logical
     * partitions by `keyCol`; completed partitions are skipped on resume.
@@ -101,21 +97,19 @@ object CheckpointedRun {
     // become part of the run's identity
     require(numPartitions >= 1,
       s"numPartitions must be at least 1 (got $numPartitions)")
-    Files.createDirectories(progressDir(root, runId))
-    val done = completedPartitions(root, runId)
+    val io = RootFs(spark, root)
+    val done = manifests(io, root, runId).keySet
 
     // a run's partition scheme is part of its identity: resuming the same
     // runId with a different numPartitions would silently skip buckets
     // (staged copy AND completion manifests are keyed by the old scheme)
-    val partsFile = numPartitionsFile(root, runId)
-    if (Files.exists(partsFile)) {
-      val prev = recordedPartitions(root, runId)
-      require(prev == numPartitions,
-        s"run $runId was started with numPartitions=$prev; " +
-          s"resume must use the same value (got $numPartitions)")
-    } else {
-      Files.write(partsFile,
-        numPartitions.toString.getBytes(StandardCharsets.UTF_8))
+    io.readOpt(numPartitionsFile(root, runId)).map(_.trim.toInt) match {
+      case Some(prev) =>
+        require(prev == numPartitions,
+          s"run $runId was started with numPartitions=$prev; " +
+            s"resume must use the same value (got $numPartitions)")
+      case None =>
+        io.write(numPartitionsFile(root, runId), numPartitions.toString)
     }
 
     // fully-completed rerun: skip staging entirely — the staged copy is
@@ -126,7 +120,7 @@ object CheckpointedRun {
     // path would ever see again (the rerun returns here before reaching
     // the post-loop cleanup).
     if (done.size >= numPartitions) {
-      if (prebucketed.isEmpty) reclaimStaged(root, runId)
+      if (prebucketed.isEmpty) io.delete(stagedDir(root, runId))
       return (0 until numPartitions)
         .map(k => PartitionResult(k, -1, skipped = true))
     }
@@ -137,16 +131,13 @@ object CheckpointedRun {
         // part of the run's identity, so a wrong-P / wrong-key input must
         // fail loudly here, not silently route rows to the wrong resume
         // partitions
-        val dirStream = Files.list(Paths.get(path))
-        val maxBucket =
-          try dirStream.iterator().asScala
-            .map(_.getFileName.toString)
-            .collect { case s if s.startsWith("_bucket=") =>
-              s.stripPrefix("_bucket=").toInt }
-            .maxOption.getOrElse(-1)
-          finally dirStream.close()
-        require(maxBucket >= 0,
+        val bucketDirs = RootFs(spark, path).list(new Path(path)).map(_.getPath)
+          .collect { case p if p.getName.startsWith("_bucket=") =>
+            (p.getName.stripPrefix("_bucket=").toLong, p.toString) }
+          .sortBy(_._1)
+        require(bucketDirs.nonEmpty,
           s"prebucketed input at $path has no _bucket=<k> directories")
+        val maxBucket = bucketDirs.last._1
         require(maxBucket < numPartitions,
           s"prebucketed input at $path has _bucket=$maxBucket >= " +
             s"numPartitions=$numPartitions — bucket scheme mismatch")
@@ -160,14 +151,6 @@ object CheckpointedRun {
         // one limit-32 read per directory (first row group only),
         // independent of input size; a full-scan check would defeat
         // zero-copy.
-        val ds2 = Files.list(Paths.get(path))
-        val bucketDirs =
-          try ds2.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("_bucket="))
-            .map(p => (p.getFileName.toString.stripPrefix("_bucket=").toLong,
-              p.toString))
-            .toSeq.sortBy(_._1)
-          finally ds2.close()
         // bounded work at production P: every directory is checked when
         // P <= 64; beyond that a deterministic evenly-strided 64-dir
         // subset is (a wrong key/P corrupts essentially every bucket, so
@@ -215,8 +198,8 @@ object CheckpointedRun {
         }
         spark.read.parquet(path)
       case None =>
-        val stagedPath = Paths.get(root, "_staged", s"run=$runId").toString
-        if (!Files.exists(Paths.get(stagedPath, "_SUCCESS"))) {
+        val stagedPath = stagedDir(root, runId).toString
+        if (!io.fs.exists(new Path(stagedPath, "_SUCCESS"))) {
           // Repartition ON THE BUCKET KEY before the partitioned write.
           // The direct form (withColumn + partitionBy, no shuffle) has
           // every input task write into up to P bucket directories —
@@ -251,7 +234,7 @@ object CheckpointedRun {
       val part = staged.filter(col("_bucket") === k).drop("_bucket")
       val obs = Observation()
       val out = observed(transform(part), obs)
-      () => writePartition(spark, out, obs, root, runId, k)
+      () => writePartition(spark, io, out, obs, root, runId, k)
     }
     val written = inPool(
       math.min(toRun.size, spark.sparkContext.defaultParallelism), writes)
@@ -268,7 +251,7 @@ object CheckpointedRun {
     // caller. A rerun after this cleanup takes the all-skipped early
     // return above (which retries this reclamation, healing a kill that
     // landed mid-deletion) and never re-reads the staged path.
-    if (prebucketed.isEmpty) reclaimStaged(root, runId)
+    if (prebucketed.isEmpty) io.delete(stagedDir(root, runId))
     results
   }
 
@@ -321,11 +304,11 @@ object CheckpointedRun {
     * kernel's stage times are charged to a [[StageTimers]] scope named by
     * a local property the write job inherits, so partitions running side
     * by side do not count each other's time. */
-  private def writePartition(spark: SparkSession, out: DataFrame,
+  private def writePartition(spark: SparkSession, io: RootFs, out: DataFrame,
                              obs: Observation, root: String, runId: String,
                              k: Int): PartitionResult = {
     val t0 = System.nanoTime()
-    val outPath = Paths.get(root, s"run=$runId", s"partition=$k").toString
+    val outPath = partitionDir(root, runId, k)
     val sc = spark.sparkContext
     val scope = java.util.UUID.randomUUID().toString
     StageTimers.openScope(scope)
@@ -356,10 +339,8 @@ object CheckpointedRun {
          |"tokenize":{"cpu_sec":${sn("tokenize")}}},
          |"wall_sec":$wall}""".stripMargin.replace("\n", "")
     // write-then-rename: manifest appears only after data committed
-    val tmp = progressDir(root, runId).resolve(s"partition=$k.tmp")
-    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, progressDir(root, runId).resolve(s"partition=$k.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+    io.publish(new Path(progressDir(root, runId), s"partition=$k.json"),
+      manifest)
     PartitionResult(k, rows, skipped = false)
   }
 
@@ -392,46 +373,31 @@ object CheckpointedRun {
       } finally pool.shutdown()
     }
 
-  private def reclaimStaged(root: String, runId: String): Unit = {
-    val stagedPath = Paths.get(root, "_staged", s"run=$runId")
-    if (Files.exists(stagedPath)) {
-      val s = Files.walk(stagedPath)
-      val all = try s.iterator().asScala.toSeq finally s.close()
-      all.reverse.foreach(Files.deleteIfExists(_))
-    }
-  }
+  private def stagedDir(root: String, runId: String) =
+    new Path(s"$root/_staged/run=$runId")
+
+  private def partitionDir(root: String, runId: String, k: Int): String =
+    s"$root/run=$runId/partition=$k"
 
   private def numPartitionsFile(root: String, runId: String) =
-    progressDir(root, runId).resolve("_num_partitions")
-
-  private def recordedPartitions(root: String, runId: String): Int =
-    new String(Files.readAllBytes(numPartitionsFile(root, runId)),
-      StandardCharsets.UTF_8).trim.toInt
+    new Path(progressDir(root, runId), "_num_partitions")
 
   /** Read the final output of a (possibly resumed) run: its
     * `partition=<k>` directories by name, for every k below the run's
     * recorded partition count. A `partition=*` glob would have Spark's
     * FileStreamSink probe the literal glob path for a `_spark_metadata`
     * log and log the resulting FileNotFoundException at WARN. */
-  def output(spark: SparkSession, root: String, runId: String): DataFrame =
-    spark.read.parquet((0 until recordedPartitions(root, runId)).map(k =>
-      Paths.get(root, s"run=$runId", s"partition=$k").toString): _*)
+  def output(spark: SparkSession, root: String, runId: String): DataFrame = {
+    val parts = RootFs(spark, root).read(numPartitionsFile(root, runId))
+      .trim.toInt
+    spark.read.parquet((0 until parts).map(partitionDir(root, runId, _)): _*)
+  }
 
   /** The metrics manifests as a queryable DataFrame (metrics table, O4).
     * Only `partition=<k>.json` manifests qualify — the progress dir also
     * holds RunJob's `_committed.json` commit marker, whose different
     * schema would union in a spurious mostly-null row. */
-  def metricsTable(spark: SparkSession, root: String, runId: String): DataFrame = {
-    val d = progressDir(root, runId)
-    val s = Files.list(d)
-    val files =
-      try s.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("partition=") && n.endsWith(".json")
-        }
-        .map(_.toString).toSeq
-      finally s.close()
-    spark.read.json(files: _*)
-  }
+  def metricsTable(spark: SparkSession, root: String, runId: String): DataFrame =
+    spark.read.json(manifests(RootFs(spark, root), root, runId)
+      .values.map(_.toString).toSeq: _*)
 }

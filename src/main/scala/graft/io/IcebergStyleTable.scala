@@ -1,9 +1,8 @@
 package graft.io
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.io.IOException
 
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,13 +36,20 @@ import org.apache.spark.sql.functions._
   *
   * Row counts come from a Spark `Observation` on the write itself — no
   * second scan of just-written data per commit.
+  *
+  * All files go through the root's Hadoop FileSystem ([[RootFs]]). The
+  * protocol needs an exclusive create and a rename that replaces the
+  * hint atomically: `file://` has both; HDFS has the first and refuses
+  * the replace loudly; object stores have neither (unsupported).
   */
 object IcebergStyleTable {
 
   final case class Snapshot(version: Int, files: Seq[String], rowCount: Long)
 
-  private def metaDir(root: String): Path = Paths.get(root, "metadata")
-  private def dataDir(root: String): Path = Paths.get(root, "data")
+  private def metaDir(root: String): Path = new Path(s"$root/metadata")
+  private def meta(root: String, name: String): Path =
+    new Path(metaDir(root), name)
+  private def dataDir(root: String): Path = new Path(s"$root/data")
   private def genName(version: Int): String = s"g$version"
 
   /** A claim not followed by its committed snapshot within this lease is
@@ -61,8 +67,9 @@ object IcebergStyleTable {
     * writers that both read currentVersion = N-1 would otherwise write the
     * same generation dir (mode overwrite) and the last hint flip would
     * silently discard the other's commit — the compare-and-swap here makes
-    * the loser fail loudly instead. `Files.createFile` is atomic on POSIX
-    * (O_CREAT|O_EXCL); on a real object store this maps to a conditional
+    * the loser fail loudly instead. The claim is an exclusive create:
+    * O_CREAT|O_EXCL on `file://` ([[LocalFs]]), the namenode's
+    * create-if-absent on HDFS; an object store would need a conditional
     * PUT / metastore CAS.
     *
     * Stale-claim recovery: if the existing claim's version was never
@@ -83,15 +90,12 @@ object IcebergStyleTable {
     * plausible commit (a metastore with fencing tokens removes it
     * entirely; this layer documents the trade, it cannot hide it).
     * Returns the claim nonce. */
-  private def claimVersion(root: String, version: Int): String = {
-    val claim = metaDir(root).resolve(s"claim-$version")
+  private def claimVersion(io: RootFs, root: String, version: Int): String = {
+    val claim = meta(root, s"claim-$version")
     val nonce = s"${java.util.UUID.randomUUID()}"
     def tryCreate(): Boolean =
-      try {
-        Files.write(claim, nonce.getBytes(StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      try { io.write(claim, nonce, overwrite = false); true }
+      catch { case _: FileAlreadyExistsException => false }
     def fail(): Nothing =
       throw new java.util.ConcurrentModificationException(
         s"snapshot version $version at $root is already claimed by " +
@@ -103,18 +107,16 @@ object IcebergStyleTable {
       // snap-N.json — treating that as committed would make the stale
       // claim unreclaimable and wedge the table on exactly the crash the
       // lease exists to recover from.
-      val committed = currentVersion(root) >= version
+      val committed = currentVersion(io, root) >= version
       val ageMs =
         try System.currentTimeMillis() -
-          Files.getLastModifiedTime(claim).toMillis
-        catch { case _: java.io.IOException => 0L }
+          io.fs.getFileStatus(claim).getModificationTime
+        catch { case _: IOException => 0L }
       if (!committed && ageMs > ClaimLeaseMillis) {
-        val tomb = metaDir(root)
-          .resolve(s"claim-$version.stale-${System.nanoTime()}")
+        val tomb = meta(root, s"claim-$version.stale-${System.nanoTime()}")
         val won =
-          try { Files.move(claim, tomb,
-            StandardCopyOption.ATOMIC_MOVE); true }
-          catch { case _: java.io.IOException => false }
+          try { io.rename(claim, tomb); true }
+          catch { case _: IOException => false }
         if (!(won && tryCreate())) fail()
       } else fail()
     }
@@ -133,47 +135,44 @@ object IcebergStyleTable {
     * it — a fencing metastore CAS closes it outright; on plain files this
     * is the honest limit. A SUCCESSFUL commit keeps the claim file: the
     * hint has advanced past it, and it doubles as a committer record. */
-  private def withClaim[A](root: String, version: Int)(body: => A): A = {
-    val nonce = claimVersion(root, version)
+  private def withClaim[A](io: RootFs, root: String, version: Int)(
+      body: => A): A = {
+    val nonce = claimVersion(io, root, version)
     try body
     catch {
       case t: Throwable =>
-        val claim = metaDir(root).resolve(s"claim-$version")
+        val claim = meta(root, s"claim-$version")
         val owned =
-          try new String(Files.readAllBytes(claim),
-            StandardCharsets.UTF_8) == nonce
-          catch { case _: java.io.IOException => false }
-        if (owned) Files.deleteIfExists(claim)
+          try io.read(claim) == nonce catch { case _: IOException => false }
+        if (owned) io.delete(claim)
         throw t
     }
   }
 
-  def currentVersion(root: String): Int = {
-    val hint = metaDir(root).resolve("version-hint.text")
-    if (Files.exists(hint))
-      new String(Files.readAllBytes(hint), StandardCharsets.UTF_8).trim.toInt
-    else 0
-  }
+  def currentVersion(root: String): Int = currentVersion(RootFs(root), root)
+
+  private def currentVersion(io: RootFs, root: String): Int =
+    io.readOpt(meta(root, "version-hint.text")).map(_.trim.toInt).getOrElse(0)
 
   /** Live data files (relative to data/) of snapshot `version`. */
-  def manifest(root: String, version: Int): Seq[String] = {
-    val p = metaDir(root).resolve(s"manifest-$version.text")
-    if (version <= 0 || !Files.exists(p)) Seq.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq
-      .filter(_.nonEmpty)
-  }
+  def manifest(root: String, version: Int): Seq[String] =
+    manifest(RootFs(root), root, version)
 
-  private def listGenFiles(root: String, version: Int): Seq[String] = {
-    val g = dataDir(root).resolve(genName(version))
-    if (!Files.exists(g)) Seq.empty
-    else {
-      val s = Files.walk(g)
-      try s.iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-        .map(p => dataDir(root).relativize(p).toString)
-        .toSeq.sorted
-      finally s.close()
-    }
+  private def manifest(io: RootFs, root: String, version: Int): Seq[String] =
+    if (version <= 0) Seq.empty
+    else io.readOpt(meta(root, s"manifest-$version.text")).toSeq
+      .flatMap(_.linesIterator.filter(_.nonEmpty))
+
+  /** The parquet files of generation `version`, as data-relative paths
+    * (`g<n>/<col>=<v>/part-*.parquet`, Hive escapes kept as on disk). */
+  private def listGenFiles(io: RootFs, root: String,
+                           version: Int): Seq[String] = {
+    val base = io.fs.makeQualified(dataDir(root)).toUri.getPath + "/"
+    io.list(new Path(dataDir(root), genName(version)), recursive = true)
+      .map(_.getPath.toUri.getPath)
+      .filter(_.endsWith(".parquet"))
+      .map(_.stripPrefix(base))
+      .sorted
   }
 
   private def q(s: String): String = "\"" + s.replace("\\", "\\\\")
@@ -192,24 +191,19 @@ object IcebergStyleTable {
     obs.get("rows").asInstanceOf[Long]
   }
 
-  private def commitMetadata(root: String, version: Int, files: Seq[String],
-                             added: Seq[String], rowCount: Long,
-                             partitionCols: Seq[String],
+  private def commitMetadata(io: RootFs, root: String, version: Int,
+                             files: Seq[String], added: Seq[String],
+                             rowCount: Long, partitionCols: Seq[String],
                              extra: String): Unit = {
-    Files.write(metaDir(root).resolve(s"manifest-$version.text"),
-      files.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    io.write(meta(root, s"manifest-$version.text"), files.mkString("\n"))
     val snapJson =
       s"""{"version":$version,$extra"added_files":[${added.map(q).mkString(",")}],
          |"added_rows":$rowCount,
          |"partition_spec":[${partitionCols.map(q).mkString(",")}]}"""
         .stripMargin.replace("\n", "")
-    Files.write(metaDir(root).resolve(s"snap-$version.json"),
-      snapJson.getBytes(StandardCharsets.UTF_8))
+    io.write(meta(root, s"snap-$version.json"), snapJson)
     // atomic last step: readers flip to the new snapshot only here
-    val tmp = metaDir(root).resolve("version-hint.tmp")
-    Files.write(tmp, version.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, metaDir(root).resolve("version-hint.text"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    io.publish(meta(root, "version-hint.text"), version.toString)
   }
 
   /** Append `df` as a new snapshot, salting the shuffle on skewed keys.
@@ -228,14 +222,14 @@ object IcebergStyleTable {
              saltCol: String, saltBuckets: Int = 16,
              shufflePartitions: Int = 32,
              extraMeta: Map[String, String] = Map.empty): Snapshot = {
-    Files.createDirectories(metaDir(root))
-    val version = currentVersion(root) + 1
-    withClaim(root, version) {
+    val io = RootFs(df.sparkSession, root)
+    val version = currentVersion(io, root) + 1
+    withClaim(io, root, version) {
 
     val salted = df.repartition(shufflePartitions,
       (partitionCols.map(col) :+
         pmod(xxhash64(col(saltCol)), lit(saltBuckets))): _*)
-    val dest = dataDir(root).resolve(genName(version)).toString
+    val dest = new Path(dataDir(root), genName(version)).toString
     val rowCount = writeCounted(salted, partitionCols, dest)
 
     // schema metadata is written BEFORE the hint flip — once a reader can
@@ -245,13 +239,12 @@ object IcebergStyleTable {
       s"""{"format-version":$version,"schema":$schemaJson,
          |"partition_spec":[${partitionCols.map(q).mkString(",")}],
          |"current_snapshot":$version}""".stripMargin.replace("\n", "")
-    Files.write(metaDir(root).resolve(s"v$version.metadata.json"),
-      metaJson.getBytes(StandardCharsets.UTF_8))
+    io.write(meta(root, s"v$version.metadata.json"), metaJson)
 
-    val added = listGenFiles(root, version)
+    val added = listGenFiles(io, root, version)
     val extra = extraMeta.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}:${q(v)}," }.mkString
-    commitMetadata(root, version, manifest(root, version - 1) ++ added,
+    commitMetadata(io, root, version, manifest(io, root, version - 1) ++ added,
       added, rowCount, partitionCols, extra = extra)
 
     Snapshot(version, added, rowCount)
@@ -263,15 +256,18 @@ object IcebergStyleTable {
     * Partition-pruning capable: each generation is scanned with its own
     * basePath, so Hive partition columns are recovered and filters on
     * them prune directories for free. */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val v = currentVersion(root)
-    val files = manifest(root, v)
+  def read(spark: SparkSession, root: String): DataFrame =
+    read(spark, RootFs(spark, root), root)
+
+  private def read(spark: SparkSession, io: RootFs, root: String): DataFrame = {
+    val v = currentVersion(io, root)
+    val files = manifest(io, root, v)
     require(files.nonEmpty, s"no committed snapshot at $root (version=$v)")
     files.groupBy(f => f.takeWhile(_ != '/')).toSeq.sortBy(_._1)
       .map { case (gen, fs) =>
         spark.read
-          .option("basePath", dataDir(root).resolve(gen).toString)
-          .parquet(fs.map(f => dataDir(root).resolve(f).toString): _*)
+          .option("basePath", new Path(dataDir(root), gen).toString)
+          .parquet(fs.map(f => new Path(dataDir(root), f).toString): _*)
       }.reduce(_ unionByName _)
   }
 
@@ -292,10 +288,11 @@ object IcebergStyleTable {
     * does). */
   def compact(spark: SparkSession, root: String, partitionCols: Seq[String],
               saltBuckets: Int = 1): Snapshot = {
-    val current = read(spark, root)
-    val version = currentVersion(root) + 1
-    withClaim(root, version) {
-    val liveGens = manifest(root, version - 1)
+    val io = RootFs(spark, root)
+    val current = read(spark, io, root)
+    val version = currentVersion(io, root) + 1
+    withClaim(io, root, version) {
+    val liveGens = manifest(io, root, version - 1)
       .map(f => f.takeWhile(_ != '/')).distinct
 
     val salt = pmod(xxhash64(current.columns.map(col): _*),
@@ -303,27 +300,19 @@ object IcebergStyleTable {
     val compacted = current
       .repartition((partitionCols.map(col) :+ salt): _*)
       .sortWithinPartitions(partitionCols.map(col): _*)
-    val dest = dataDir(root).resolve(genName(version)).toString
+    val dest = new Path(dataDir(root), genName(version)).toString
     val rowCount = writeCounted(compacted, partitionCols, dest)
 
-    val added = listGenFiles(root, version)
-    commitMetadata(root, version, files = added, added = added,
+    val added = listGenFiles(io, root, version)
+    commitMetadata(io, root, version, files = added, added = added,
       rowCount = rowCount, partitionCols = partitionCols,
       extra = "\"compaction\":true,")
 
     // retire unreferenced generations (readers of older snapshots are not
     // supported under single-snapshot retention — documented above)
-    liveGens.foreach(g => deleteRecursively(dataDir(root).resolve(g)))
+    liveGens.foreach(g => io.delete(new Path(dataDir(root), g)))
 
     Snapshot(version, added, rowCount)
-    }
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      val all = try s.iterator().asScala.toSeq finally s.close()
-      all.reverse.foreach(Files.deleteIfExists(_))
     }
   }
 
@@ -340,36 +329,28 @@ object IcebergStyleTable {
     * retry and silently lose the run's data. */
   def findSnapshotWithMeta(root: String, key: String,
                            value: String): Option[Int] = {
+    val io = RootFs(root)
     val needle = s"${q(key)}:${q(value)}"
-    val committed = currentVersion(root)
-    snapshots(root).filter(_ <= committed).find { v =>
-      try new String(Files.readAllBytes(
-        metaDir(root).resolve(s"snap-$v.json")), StandardCharsets.UTF_8)
-        .contains(needle)
-      catch { case _: java.io.IOException => false }
+    val committed = currentVersion(io, root)
+    snapshots(io, root).filter(_ <= committed).find { v =>
+      try io.read(meta(root, s"snap-$v.json")).contains(needle)
+      catch { case _: IOException => false }
     }
   }
 
   /** `added_rows` recorded in snapshot `version`'s JSON (0 if absent). */
   def snapshotAddedRows(root: String, version: Int): Long =
     try {
-      val s = new String(Files.readAllBytes(
-        metaDir(root).resolve(s"snap-$version.json")), StandardCharsets.UTF_8)
+      val s = RootFs(root).read(meta(root, s"snap-$version.json"))
       "\"added_rows\":(\\d+)".r.findFirstMatchIn(s)
         .map(_.group(1).toLong).getOrElse(0L)
-    } catch { case _: java.io.IOException => 0L }
+    } catch { case _: IOException => 0L }
 
-  def snapshots(root: String): Seq[Int] = {
-    val m = metaDir(root)
-    if (!Files.exists(m)) Seq.empty
-    else {
-      val s = Files.list(m)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.startsWith("snap-") =>
-          n.stripPrefix("snap-").stripSuffix(".json").toInt }
-        .toSeq.sorted
-      finally s.close()
-    }
-  }
+  def snapshots(root: String): Seq[Int] = snapshots(RootFs(root), root)
+
+  private def snapshots(io: RootFs, root: String): Seq[Int] =
+    io.list(metaDir(root)).map(_.getPath.getName)
+      .collect { case n if n.startsWith("snap-") =>
+        n.stripPrefix("snap-").stripSuffix(".json").toInt }
+      .sorted
 }

@@ -1,15 +1,19 @@
 package graft.io
 
+import java.io.IOException
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException,
+  LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
 
 /** The `file://` FileSystem of the engine's sessions: Hadoop's checksummed
   * `LocalFileSystem` (same `.crc` sidecars, same layout, same permission
-  * bits) over a raw filesystem that sets permissions in-process.
+  * bits) over a raw filesystem that sets permissions in-process, creates
+  * exclusively, and renames without a copy fallback.
   *
   * Without libhadoop's NativeIO, the stock `RawLocalFileSystem`
   * forks a `chmod` child process in `setPermission`, which Hadoop calls for
@@ -21,10 +25,12 @@ class LocalFs extends LocalFileSystem(new LocalFs.RawFs)
 
 object LocalFs {
 
-  /** Sets the rwx bits through `java.nio`. A mode with the sticky bit (the
-    * one special bit an `FsPermission` carries) goes to the stock path:
-    * `java.nio` cannot set it. */
+  /** The raw `file://` FileSystem [[LocalFs]] checksums over. */
   class RawFs extends RawLocalFileSystem {
+
+    /** Sets the rwx bits through `java.nio`. A mode with the sticky bit
+      * (the one special bit an `FsPermission` carries) goes to the stock
+      * path: `java.nio` cannot set it. */
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val mode = permission.toShort
       if ((mode & ~0x1ff) != 0) super.setPermission(p, permission)
@@ -38,16 +44,45 @@ object LocalFs {
         Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
       }
     }
+
+    /** `overwrite = false` is an exclusive create: the name is claimed
+      * with O_CREAT|O_EXCL before the stream opens. The stock class checks
+      * `exists` and then opens, two steps a second creator can interleave.
+      * (The checksummed [[LocalFs]] reaches the raw filesystem through the
+      * `create` that takes a permission, which keeps the stock check.) */
+    override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                        replication: Short, blockSize: Long,
+                        progress: Progressable): FSDataOutputStream = {
+      if (!overwrite) {
+        val parent = f.getParent
+        if (parent != null && !mkdirs(parent))
+          throw new IOException(s"Mkdirs failed to create $parent")
+        try Files.createFile(pathToFile(f).toPath)
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            throw new FileAlreadyExistsException(s"File already exists: $f")
+        }
+      }
+      super.create(f, true, bufferSize, replication, blockSize, progress)
+    }
+
+    /** One rename(2), or false. The stock class falls back to a
+      * copy-and-delete when `File.renameTo` fails, which is not atomic. */
+    override def rename(src: Path, dst: Path): Boolean =
+      pathToFile(src).renameTo(pathToFile(dst))
   }
+
+  /** The keys that route a conf's `file://` through [[LocalFs]], here
+    * and in [[RootFs]]. The cache bypass is required: the JVM's
+    * FileSystem cache keys on scheme and user, not on conf, and has
+    * already handed out a stock `file://` instance. */
+  private[io] val Keys = Seq("fs.file.impl" -> classOf[LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   /** Route `spark`'s `file://` reads and writes through [[LocalFs]]. The
     * keys are session runtime conf, which Spark copies into every Hadoop
     * conf it builds for this session (query planning and tasks alike), so
-    * other sessions keep the stock class. The cache bypass is required: the
-    * JVM's FileSystem cache keys on scheme and user, not on conf, and has
-    * already handed out a stock `file://` instance. */
-  def install(spark: SparkSession): Unit = {
-    spark.conf.set("fs.file.impl", classOf[LocalFs].getName)
-    spark.conf.set("fs.file.impl.disable.cache", "true")
-  }
+    * other sessions keep the stock class. */
+  def install(spark: SparkSession): Unit =
+    Keys.foreach { case (k, v) => spark.conf.set(k, v) }
 }

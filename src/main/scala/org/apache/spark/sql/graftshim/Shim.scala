@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -7,11 +8,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal bridge into `private[sql]` surface of Spark 4.x.
   *
   * Spark 4 wraps `Column` around ColumnNode; building a `Column` from a
-  * Catalyst `Expression`, and reaching the session FunctionRegistry, are
-  * `private[sql]`. This shim lives inside the `org.apache.spark.sql`
-  * package purely to re-export those two capabilities — the standard
-  * pattern for Spark-native extension libraries. No Spark behavior is
-  * modified.
+  * Catalyst `Expression`, reaching the session FunctionRegistry, and the
+  * session's Hadoop conf are `private[sql]`. This shim lives inside the
+  * `org.apache.spark.sql` package purely to re-export those capabilities
+  * — the standard pattern for Spark-native extension libraries. No Spark
+  * behavior is modified.
   */
 object Shim {
 
@@ -36,4 +37,13 @@ object Shim {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
   }
+}
+
+/** The Hadoop conf Spark builds for a session's reads and writes: the
+  * context's conf overlaid with the session's runtime conf, a fresh copy
+  * per call. */
+object SessionHadoopConf {
+  def apply(spark: SparkSession): Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
 }

@@ -54,6 +54,67 @@ class IcebergIoSpec extends AnyFunSuite {
     assert(IcebergStyleTable.read(spark, root).count() > 300)
   }
 
+  test("layout and encoding: partition values with a space, ':', '%' and " +
+      "'=' round-trip; the manifest lists data/g<n> as it is on disk; " +
+      "metadata and progress files carry no .crc sidecar") {
+    import spark.implicits._
+    val root = tmpDir("encoding")
+    val tags = Seq("a b", "c:d", "e%f", "g=h", "plain")
+    val df = (0 until 40).map(i => (s"https://h$i.example/p", tags(i % 5)))
+      .toDF("url", "tag")
+    val snap = IcebergStyleTable.append(df, root, Seq("tag"), "url", 2, 2)
+    val data = Paths.get(root, "data")
+    val walk = Files.walk(data.resolve("g1"))
+    val onDisk =
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
+        .map(p => data.relativize(p).toString).toSeq.sorted
+      finally walk.close()
+    // Spark writes Hive-escaped directory names: ':' as %3A, '%' as %25
+    assert(onDisk.exists(_.contains("tag=c%3Ad/")), onDisk)
+    assert(onDisk.exists(_.contains("tag=a b/")), onDisk)
+    assert(IcebergStyleTable.manifest(root, 1) == onDisk)
+    assert(snap.files == onDisk)
+    val back = IcebergStyleTable.read(spark, root)
+    assert(back.count() == 40)
+    assert(back.select("tag").distinct().as[String].collect().toSet ==
+      tags.toSet)
+
+    val work = tmpDir("encoding_work")
+    CheckpointedRun.run(spark, df, "url", (d: DataFrame) => d, work, "e1",
+      numPartitions = 2)
+    Seq(Paths.get(root, "metadata"),
+        Paths.get(work, "_progress", "run=e1")).foreach { dir =>
+      val names = Files.list(dir)
+      val all = try names.iterator().asScala.map(_.getFileName.toString)
+        .toSeq finally names.close()
+      assert(all.exists(_.endsWith(".json")), all)
+      assert(!all.exists(_.endsWith(".crc")), s"$dir: $all")
+    }
+  }
+
+  test("the version hint flips atomically: a reader polling currentVersion " +
+      "through 10 appends sees only committed versions, never going back") {
+    val root = tmpDir("hintflip")
+    val df = spark.range(0, 20).selectExpr("concat('u', id) AS url", "id")
+    IcebergStyleTable.append(df, root, Nil, "url", 2, 2)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    @volatile var stop = false
+    val reader = new Thread(() =>
+      try while (!stop) seen += IcebergStyleTable.currentVersion(root)
+      catch { case t: Throwable => failure.set(t) })
+    reader.start()
+    try (2 to 10).foreach(_ =>
+      IcebergStyleTable.append(df, root, Nil, "url", 2, 2))
+    finally { stop = true; reader.join() }
+    assert(failure.get == null, String.valueOf(failure.get))
+    assert(seen.nonEmpty && seen.head >= 1 && seen.last <= 10)
+    assert(seen.zip(seen.drop(1)).forall { case (a, b) => a <= b })
+    assert(seen.distinct.size > 1, "the reader overlapped no flip")
+    assert(IcebergStyleTable.currentVersion(root) == 10)
+  }
+
   test("partition pruning reaches the scan (PushedFilters/partition dirs)") {
     val root = tmpDir("prune")
     val df = QualityPipeline(PagesSynth.pages(spark, 300, 4))

@@ -2,19 +2,20 @@ package graft.spark
 
 import java.io.RandomAccessFile
 import java.net.URI
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.{Files, Paths, Path => JPath}
+import java.util.concurrent.{Callable, CyclicBarrier, Executors}
 import scala.annotation.nowarn
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{ChecksumException, FSDataInputStream, FileSystem,
-  Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumException, FSDataInputStream,
+  FileAlreadyExistsException, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.SessionHadoopConf
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.LocalFs
+import graft.io.{LocalFs, RootFs}
 
 /** The fork-free `file://` FileSystem: installed per session, used by the
   * executor-side writer, and indistinguishable from Hadoop's stock
@@ -146,5 +147,55 @@ class LocalFsSpec extends AnyFunSuite {
             f"mode $bits%o on ${if (isDir) "dir" else "file"}")
         }
     }
+  }
+
+  test("create with overwrite = false is exclusive: of 8 threads racing " +
+      "for one name, exactly one wins each of 200 rounds") {
+    val dir = tmpDir("localfs_excl")
+    // the FileSystem the engine's metadata goes through, also in a session
+    // that never installed LocalFs
+    val fs = RootFs(spark, dir.toString).fs
+    assert(fs.isInstanceOf[LocalFs.RawFs])
+    assert(RootFs(spark.newSession(), dir.toString).fs
+      .isInstanceOf[LocalFs.RawFs])
+    val threads = 8
+    val barrier = new CyclicBarrier(threads)
+    val pool = Executors.newFixedThreadPool(threads)
+    try (0 until 200).foreach { round =>
+      val p = new Path(new Path(dir.toUri), s"claim-$round")
+      val outcomes = (0 until threads).map { _ =>
+        pool.submit(new Callable[Boolean] {
+          override def call(): Boolean = {
+            barrier.await()
+            try { fs.create(p, false).close(); true }
+            catch { case _: FileAlreadyExistsException => false }
+          }
+        })
+      }.map(_.get())
+      assert(outcomes.count(identity) == 1, s"round $round: $outcomes")
+    } finally pool.shutdown()
+  }
+
+  test("the engine's I/O uses one filesystem API: no java.nio.file or " +
+      "java.io.File in graft.io (LocalFs.scala excepted), RunJob or " +
+      "SparkEntry") {
+    val main = Paths.get("src/main/scala/graft")
+    val io = Files.list(main.resolve("io"))
+    val sources =
+      try io.iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".scala") && n != "LocalFs.scala"
+      }.toSeq
+      finally io.close()
+    assert(sources.size >= 3, sources)
+    val banned = """java\.nio\.file|java\.io\.(File\b|_|\{[^}]*\bFile\b)""".r
+    val hits = (sources ++ Seq("RunJob.scala", "SparkEntry.scala")
+        .map(main.resolve)).flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if banned.findFirstIn(line).isDefined =>
+          s"${main.relativize(f)}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.spark
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
@@ -173,6 +174,32 @@ class RunJobSpec extends AnyFunSuite {
       .count() == 200)
     // and the lost marker was healed for future fast-path reruns
     assert(Files.exists(marker))
+  }
+
+  test("a truncated commit marker is healed: the rerun commits nothing, " +
+      "reports this run's rows, and rewrites the marker") {
+    val in = writeInput(200)
+    val args = RunJob.JobArgs(in, tmpDir("runjob_out"), "job_t",
+      partitions = 4, saltBuckets = 4, shufflePartitions = 4)
+    assert(RunJob.execute(spark, args).committedThisRun)
+    val progress = Paths.get(RunJob.workRoot(args), "_progress", "run=job_t")
+    val marker = progress.resolve("_committed.json")
+    val full = new String(Files.readAllBytes(marker), UTF_8)
+    // a marker cut off mid-write no longer parses
+    Files.write(marker, full.take(full.length / 2).getBytes(UTF_8))
+    val res = RunJob.execute(spark, args)
+    assert(!res.committedThisRun)
+    assert(res.tableRows == 200)
+    val table = RunJob.tableRoot(args)
+    assert(IcebergStyleTable.snapshots(table) == Seq(1))
+    val stamped = IcebergStyleTable.findSnapshotWithMeta(table, "run_id",
+      "job_t")
+    val healed = new String(Files.readAllBytes(marker), UTF_8)
+    assert(""""snapshot_version":(\d+)""".r.findFirstMatchIn(healed)
+      .map(_.group(1).toInt) == stamped && stamped.contains(1), healed)
+    assert(healed == full)
+    // published by rename: no temporary file is left beside it
+    assert(!Files.exists(progress.resolve("_committed.tmp")))
   }
 
   test("kill/resume: a killed run resumes without recomputation and " +
