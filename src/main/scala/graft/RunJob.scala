@@ -27,7 +27,9 @@ import graft.pipeline.QualityPipeline
   *      kill skips completed partitions;
   *   4. [[IcebergStyleTable.append]] — one atomic snapshot commit of the
   *      run's output into `<output>/table`, Hive-partitioned by
-  *      `part_date` with a url-salted shuffle (S5/S6, skew §2.11).
+  *      `part_date`, each date rebalanced into one zstd file and a hot
+  *      date split by AQE (S5/S6, skew §2.11); `--salt-buckets` sets only
+  *      the files per date `--compact` writes.
   *
   * The final commit is guarded by a `_committed.json` marker inside the
   * run's progress dir, published by write-then-rename: a job killed
@@ -162,7 +164,6 @@ object RunJob {
       val out = CheckpointedRun.output(spark, workRoot(args), args.runId)
       val snap = IcebergStyleTable.append(out, tableRoot(args),
         partitionCols = Seq("part_date"), saltCol = "url",
-        saltBuckets = args.saltBuckets,
         shufflePartitions = args.shufflePartitions,
         extraMeta = Map("run_id" -> args.runId))
       io.publish(marker, markerJson(args, snap.version, snap.rowCount))

@@ -49,9 +49,15 @@ object GraftFunctions {
           s"graft_bounded_ids cap must be an integer literal, got $other")
       }) })
 
-  /** Register on an existing session (idempotent). */
+  /** Register on an existing session, once: a name the session already
+    * holds ([[GraftExtensions]], or an earlier call) is left as it is, so
+    * repeated calls do not make Spark warn that each function replaced a
+    * previously registered one. */
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) => Shim.registerFunction(spark, name, b) }
+    builders.foreach { case (name, b) =>
+      if (!Shim.functionExists(spark, name))
+        Shim.registerFunction(spark, name, b)
+    }
 
   // Typed Column helpers
   def extract_text(c: Column): Column = Shim.column(ExtractText(Shim.expression(c)))

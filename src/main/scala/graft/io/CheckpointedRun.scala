@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.core.StageTimers
 import graft.expr.Kernels
@@ -221,7 +222,11 @@ object CheckpointedRun {
             .drop("_subsplit")
             .write.mode("overwrite").partitionBy("_bucket").parquet(stagedPath)
         }
-        spark.read.parquet(stagedPath)
+        // read with the schema that wrote it (`_bucket` typed as partition
+        // inference types it: P is an Int), so no job reads footers to
+        // infer it
+        spark.read.schema(input.schema.add("_bucket", IntegerType))
+          .parquet(stagedPath)
     }
 
     // the fresh partitions this call computes; `failAfter` stops the rest
@@ -294,10 +299,13 @@ object CheckpointedRun {
         m0(sum(when(col("perplexity") >
           lit(graft.model.PagesSynth.PerplexityMax), 1L).otherwise(0L)))
       else lit(0L)).as("perplexity_n_high"),
-      (if (cols("rule_lineage"))
-        m0(sum(size(filter(col("rule_lineage"), r => r("fired")))
-          .cast("long")))
-      else lit(0L)).as("heuristics_n_fired"))
+      (if (cols("rule_lineage")) {
+        // the rules whose `fired` is true: all of them but those that are
+        // not (false or null), counted by native array functions, not an
+        // interpreted lambda
+        val fired = col("rule_lineage.fired")
+        m0(sum((size(fired) - size(array_remove(fired, true))).cast("long")))
+      } else lit(0L)).as("heuristics_n_fired"))
   }
 
   /** Write partition `k` (a pool thread's job), then its manifest. The

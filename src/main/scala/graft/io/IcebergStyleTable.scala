@@ -10,12 +10,12 @@ import org.apache.spark.sql.functions._
   * (SURVEY §7.4 — no Iceberg artifact exists in /opt/spark/jars or the
   * offline cache, so the semantics the north-rule needs are realized
   * directly: Hive-layout partitioned parquet + JSON snapshot metadata,
-  * snapshot-commit-last atomicity, and a salted repartition for skewed
-  * partition keys).
+  * snapshot-commit-last atomicity, and a skew-guarded rebalance by
+  * partition value).
   *
   * Layout:
   * {{{
-  * <root>/data/g<n>/<p1>=<v>/<p2>=<v>/part-*.parquet   # generation n files
+  * <root>/data/g<n>/<p1>=<v>/<p2>=<v>/part-*.parquet   # generation n files, zstd
   * <root>/metadata/snap-<n>.json          # commit metadata of snapshot n
   * <root>/metadata/manifest-<n>.text      # COMPLETE live file list of n
   * <root>/metadata/v<n>.metadata.json     # schema, partition spec
@@ -35,7 +35,10 @@ import org.apache.spark.sql.functions._
   * deployment would keep generations for every retained snapshot).
   *
   * Row counts come from a Spark `Observation` on the write itself — no
-  * second scan of just-written data per commit.
+  * second scan of just-written data per commit. Every data file is
+  * written with zstd, as Iceberg's own Spark writer does; footer
+  * statistics are left untruncated, so MIN/MAX read from footers stay
+  * exact.
   *
   * All files go through the root's Hadoop FileSystem ([[RootFs]]). The
   * protocol needs an exclusive create and a rename that replaces the
@@ -178,6 +181,9 @@ object IcebergStyleTable {
   private def q(s: String): String = "\"" + s.replace("\\", "\\\\")
     .replace("\"", "\\\"") + "\""
 
+  /** Parquet codec of every table data file. */
+  private final val Codec = "zstd"
+
   /** Write `df`, counting its rows on the write job itself (no re-read).
     * `get` blocks until Spark delivers the metrics; a write that produced
     * none throws here, inside the caller's claim. */
@@ -186,6 +192,7 @@ object IcebergStyleTable {
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("rows"))
       .write.mode("overwrite")
+      .option("compression", Codec)
       .partitionBy(partitionCols: _*)
       .parquet(dest)
     obs.get("rows").asInstanceOf[Long]
@@ -206,15 +213,35 @@ object IcebergStyleTable {
     io.publish(meta(root, "version-hint.text"), version.toString)
   }
 
-  /** Append `df` as a new snapshot, salting the shuffle on skewed keys.
+  /** The session settings a partitioned append's skew guard rests on. */
+  final val RebalanceConfs: Seq[String] = Seq(
+    "spark.sql.adaptive.enabled",
+    "spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled")
+
+  /** Append `df` as a new snapshot.
     *
-    * `partitionCols` become Hive partition directories; the physical
-    * shuffle key is (partitionCols ++ salt) where salt =
-    * pmod(xxhash64(saltCol), saltBuckets) — Zipf-skewed hosts/TLDs
-    * (SURVEY §2.11) then bound the max output task instead of serializing
-    * one reducer per hot partition.
-    */
-  /** `extraMeta`: caller key/values recorded in the snapshot JSON (e.g.
+    * `partitionCols` become Hive partition directories. The rows are
+    * distributed by Spark's `REBALANCE` hint on `partitionCols`, starting
+    * from `shufflePartitions` shuffle partitions: each partition value is
+    * written by one task into one file, the hash distribution Iceberg's
+    * own Spark writer uses. Clustering a value's rows into one file lets
+    * the columnar encodings pay off, and writer setup and footer are paid
+    * once per value. Skew is left to AQE's
+    * `OptimizeSkewInRebalancePartitions`, which splits only a shuffle
+    * partition larger than `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * — Zipf-skewed hosts/dates (SURVEY §2.11) then still bound the largest
+    * write task, and no other value is spread. So a partitioned append
+    * requires both
+    * [[RebalanceConfs]]; with either off it throws an
+    * IllegalArgumentException before it claims a version, as the
+    * rebalance would silently lose its skew guard.
+    *
+    * With no `partitionCols` the shuffle key is the salt
+    * pmod(xxhash64(saltCol), saltBuckets), so the snapshot has at most
+    * `saltBuckets` files; `saltCol` and `saltBuckets` are unused
+    * otherwise.
+    *
+    * `extraMeta`: caller key/values recorded in the snapshot JSON (e.g.
     * RunJob's run_id — the snapshot then IS the durable record that a
     * run's rows were committed, closing the kill-window between commit
     * and any caller-side marker). Rendered as `"k":"v",` pairs. */
@@ -222,15 +249,23 @@ object IcebergStyleTable {
              saltCol: String, saltBuckets: Int = 16,
              shufflePartitions: Int = 32,
              extraMeta: Map[String, String] = Map.empty): Snapshot = {
+    if (partitionCols.nonEmpty) {
+      val off = RebalanceConfs.filterNot(df.sparkSession.conf.get(_).toBoolean)
+      require(off.isEmpty, "a partitioned append needs " +
+        s"${RebalanceConfs.map(_ + "=true").mkString(" and ")}; " +
+        s"off: ${off.mkString(", ")}")
+    }
     val io = RootFs(df.sparkSession, root)
     val version = currentVersion(io, root) + 1
     withClaim(io, root, version) {
 
-    val salted = df.repartition(shufflePartitions,
-      (partitionCols.map(col) :+
-        pmod(xxhash64(col(saltCol)), lit(saltBuckets))): _*)
+    val distributed =
+      if (partitionCols.isEmpty)
+        df.repartition(shufflePartitions,
+          pmod(xxhash64(col(saltCol)), lit(saltBuckets)))
+      else df.hint("rebalance", shufflePartitions +: partitionCols.map(col): _*)
     val dest = new Path(dataDir(root), genName(version)).toString
-    val rowCount = writeCounted(salted, partitionCols, dest)
+    val rowCount = writeCounted(distributed, partitionCols, dest)
 
     // schema metadata is written BEFORE the hint flip — once a reader can
     // see version N, every metadata file of N already exists
@@ -278,14 +313,12 @@ object IcebergStyleTable {
     * atomically via the version hint, and generations no longer referenced
     * by the current snapshot are retired AFTER the flip (single-snapshot
     * retention; keep them to retain time-travel). */
-  /** `saltBuckets`: like append's salt, bounds the hottest partition
-    * dir's rewrite to that many reducers instead of ONE (a Zipf-skewed
-    * table would otherwise funnel its hottest part_date through a single
-    * task — the exact skew failure append's salting exists to avoid).
-    * The salt hashes ALL columns (deterministic per row), so each
-    * partition dir compacts to at most `saltBuckets` files — the default
-    * of 1 maximizes file merging; raise it on skewed tables (RunJob
-    * does). */
+  /** `saltBuckets`: bounds the hottest partition dir's rewrite to that
+    * many reducers instead of ONE (a Zipf-skewed table would otherwise
+    * funnel its hottest part_date through a single task). The salt
+    * hashes ALL columns (deterministic per row), so each partition dir
+    * compacts to at most `saltBuckets` files — the default of 1
+    * maximizes file merging; raise it on skewed tables (RunJob does). */
   def compact(spark: SparkSession, root: String, partitionCols: Seq[String],
               saltBuckets: Int = 1): Snapshot = {
     val io = RootFs(spark, root)

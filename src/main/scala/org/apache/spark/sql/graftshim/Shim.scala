@@ -2,6 +2,7 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -28,15 +29,21 @@ object Shim {
   def awaitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  private def functionRegistry(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+
+  /** Whether the session's function registry holds `name`. */
+  def functionExists(spark: SparkSession, name: String): Boolean =
+    functionRegistry(spark).functionExists(FunctionIdentifier(name))
+
   /** Register a temp function builder on an already-built session (the
     * `withExtensions` path in [[graft.expr.GraftExtensions]] is preferred;
     * this covers sessions we didn't construct). */
   def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit = {
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
+                       builder: Seq[Expression] => Expression): Unit =
+    functionRegistry(spark)
       .createOrReplaceTempFunction(name, builder, "scala_udf")
-  }
 }
 
 /** The Hadoop conf Spark builds for a session's reads and writes: the

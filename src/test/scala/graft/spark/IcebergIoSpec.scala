@@ -1,20 +1,25 @@
 package graft.spark
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{CheckpointedRun, IcebergStyleTable}
 import graft.model.PagesSynth
 import graft.pipeline.QualityPipeline
 
-/** IO layer gates: Iceberg-style layout + snapshot commit, salted
+/** IO layer gates: Iceberg-style layout + snapshot commit, rebalanced
   * partitioned write, partition pruning, checkpoint/resume with zero
   * recomputation (SURVEY §5.4.6, §7.4, §7.6).
   */
@@ -245,6 +250,53 @@ class IcebergIoSpec extends AnyFunSuite {
     assert(got.size == 4)
     assert(got.values.map(_.head).sum == 40L)
     assert(got.values.forall(_.tail.forall(_ == 0L)), got)
+  }
+
+  test("partition manifests: heuristics_n_fired counts the rules whose " +
+      "fired is true, as filter(rule_lineage, r -> r.fired) does, over " +
+      "null lineages, null rules and null flags") {
+    val root = tmpDir("fired")
+    val rule = "STRUCT<rule: STRING, fired: BOOLEAN>"
+    val lineage = expr(s"""CASE pmod(xxhash64(url), 3)
+      WHEN 0 THEN CAST(NULL AS ARRAY<$rule>)
+      WHEN 1 THEN CAST(array() AS ARRAY<$rule>)
+      ELSE array(named_struct('rule', 'a', 'fired', true), NULL,
+        named_struct('rule', 'b', 'fired', CAST(NULL AS BOOLEAN)),
+        named_struct('rule', 'c', 'fired', false),
+        named_struct('rule', 'd', 'fired', true)) END""")
+    CheckpointedRun.run(spark, PagesSynth.pages(spark, 60, 2), "url",
+      (df: DataFrame) => df.select(col("url"), lineage.as("rule_lineage")),
+      root, "f1", numPartitions = 2)
+    val out = CheckpointedRun.output(spark, root, "f1")
+    val want = out.selectExpr(
+      "coalesce(sum(size(filter(rule_lineage, r -> r.fired))), 0)")
+      .head().getLong(0)
+    assert(want == 2L * out.filter(pmod(xxhash64(col("url")), lit(3)) === 2)
+      .count())
+    assert(manifestCounters(root, "f1").values.map(_(5)).sum == want)
+  }
+
+  test("checkpointed run: the partition write's executed plan holds no " +
+      "lambdafunction (no interpreted higher-order function)") {
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      CheckpointedRun.run(spark, PagesSynth.pages(spark, 40, 2), "url",
+        (df: DataFrame) => QualityPipeline(df), tmpDir("nolambda"), "l1",
+        numPartitions = 2)
+      Shim.awaitListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    // the partition writes are the plans that carry the manifest counters
+    val writes = plans.asScala.filter(_.contains("heuristics_n_fired")).toSeq
+    assert(writes.size == 2, plans.asScala.mkString("\n\n"))
+    writes.foreach(p => assert(!p.contains("lambdafunction"), p))
   }
 
   test("checkpointed run: exactly one Spark job per fresh partition — the " +
@@ -568,8 +620,14 @@ class IcebergIoSpec extends AnyFunSuite {
   test("compaction: fewer files, same rows, atomic snapshot flip") {
     val root = tmpDir("compact")
     val df = QualityPipeline(PagesSynth.pages(spark, 400, 4))
-    val snap1 = IcebergStyleTable.append(df, root, Seq("part_date"), "url", 8, 4)
-    val before = snap1.files.size
+    // an append writes one file per date: two appends leave two files on
+    // most dates for the compaction to merge
+    val half = pmod(xxhash64(col("url")), lit(2)) === 0
+    IcebergStyleTable.append(df.filter(half), root, Seq("part_date"), "url",
+      8, 4)
+    val snap1 = IcebergStyleTable.append(df.filter(!half), root,
+      Seq("part_date"), "url", 8, 4)
+    val before = IcebergStyleTable.manifest(root, snap1.version).size
     val snap2 = IcebergStyleTable.compact(spark, root, Seq("part_date"))
     assert(snap2.version == snap1.version + 1)
     assert(snap2.rowCount == 400)
@@ -594,5 +652,91 @@ class IcebergIoSpec extends AnyFunSuite {
     val files = back.filter(col("host") === hot)
       .select(countDistinct("file")).head().getLong(0)
     assert(files >= 2, s"hot host $hot landed in $files file(s)")
+  }
+
+  /** `body` with the session conf `key` set to `value`, then restored. */
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Codecs of every column chunk of the table files `files`. */
+  private def codecs(root: String, files: Seq[String]): Set[String] =
+    files.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(s"$root/data/$f"), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.asScala.toSeq
+        .flatMap(_.getColumns.asScala.map(_.getCodec.name))
+      finally r.close()
+    }.toSet
+
+  test("rebalanced append: one zstd file per part_date, and the table " +
+      "reads back equal to the input") {
+    val root = tmpDir("rebalance")
+    val df = QualityPipeline(PagesSynth.pages(spark, 400, 4))
+    val snap = IcebergStyleTable.append(df, root, Seq("part_date"), "url",
+      8, 4)
+    val dates = df.select("part_date").distinct().count()
+    assert(snap.files.size == dates, snap.files.mkString("\n"))
+    assert(snap.files.map(_.split('/')(1)).distinct.size == dates)
+    assert(codecs(root, snap.files) == Set("ZSTD"))
+    val back = IcebergStyleTable.read(spark, root)
+      .select(df.columns.map(col): _*)
+    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
+  }
+
+  test("rebalanced append: a hot part_date is split over several files " +
+      "by AQE's skew rule, and every row reads back once") {
+    val root = tmpDir("hotdate")
+    val n = 4000L
+    // 80% of the rows on one date; payloads that shuffle compression
+    // cannot shrink to nothing
+    val df = spark.range(0, n, 1, 8).select(
+      concat(lit("https://h/"), col("id").cast("string")).as("url"),
+      when(col("id") % 5 =!= 0, lit("2024-01-01").cast("date"))
+        .otherwise(date_add(lit("2024-02-01").cast("date"),
+          (col("id") % 40).cast("int"))).as("part_date"),
+      concat((1 to 8).map(i =>
+        sha2(concat(col("id").cast("string"), lit(s"#$i")), 256)): _*)
+        .as("payload"))
+    // 64 shuffle partitions for 41 dates: the hot date is (nearly) alone
+    // in its partition, which is then far above the advisory size
+    val snap = withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        "64k") {
+      IcebergStyleTable.append(df, root, Seq("part_date"), "url",
+        saltBuckets = 4, shufflePartitions = 64)
+    }
+    val hotFiles = snap.files.count(_.contains("/part_date=2024-01-01/"))
+    assert(hotFiles >= 2, snap.files.mkString("\n"))
+    assert(snap.rowCount == n)
+    val back = IcebergStyleTable.read(spark, root)
+    assert(back.count() == n)
+    assert(back.select(countDistinct("url")).head().getLong(0) == n)
+  }
+
+  test("a partitioned append with AQE or its rebalance skew rule off " +
+      "throws before it claims a version") {
+    val root = tmpDir("noaqe")
+    val df = spark.range(20).select(col("id").cast("string").as("url"),
+      (col("id") % 3).as("part"))
+    IcebergStyleTable.append(df, root, Seq("part"), "url", 4, 4)
+    IcebergStyleTable.RebalanceConfs.foreach { key =>
+      val e = withConf(key, "false") {
+        intercept[IllegalArgumentException] {
+          IcebergStyleTable.append(df, root, Seq("part"), "url", 4, 4)
+        }
+      }
+      IcebergStyleTable.RebalanceConfs.foreach(k =>
+        assert(e.getMessage.contains(k), e.getMessage))
+      assert(IcebergStyleTable.currentVersion(root) == 1)
+      assert(!Files.exists(Paths.get(root, "metadata", "claim-2")))
+    }
+    // an unpartitioned append keeps its salt spread and needs neither
+    withConf(IcebergStyleTable.RebalanceConfs.head, "false") {
+      assert(IcebergStyleTable.append(df, tmpDir("noaqe_flat"), Nil, "url",
+        4, 4).files.size <= 4)
+    }
   }
 }

@@ -82,8 +82,9 @@ class RunJobSpec extends AnyFunSuite {
     assert(metrics.agg(sum("rows")).head().getLong(0) == 300)
   }
 
-  test("a successful run logs no stack trace at WARN or above, and its " +
-      "output has no partition column") {
+  /** The log events at WARN or above while `body` runs, after a probe
+    * WARN with a throwable that the capture must see. */
+  private def warnings(body: => Unit): Seq[LogEvent] = {
     val events = new ConcurrentLinkedQueue[LogEvent]()
     val capture = new AbstractAppender("runjob-capture", null, null, true,
         Property.EMPTY_ARRAY) {
@@ -92,8 +93,6 @@ class RunJobSpec extends AnyFunSuite {
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val rootLogger = ctx.getConfiguration.getRootLogger
     val level = rootLogger.getLevel
-    val args = RunJob.JobArgs(writeInput(120), tmpDir("runjob_out"), "job_l",
-      partitions = 4, saltBuckets = 4, shufflePartitions = 4)
     capture.start()
     rootLogger.addAppender(capture, Level.WARN, null)
     rootLogger.setLevel(Level.WARN)
@@ -102,7 +101,7 @@ class RunJobSpec extends AnyFunSuite {
       // the capture must see a WARN with a throwable when one is logged
       LogManager.getLogger(getClass).warn("capture probe",
         new RuntimeException("probe"))
-      assert(RunJob.execute(spark, args).committedThisRun)
+      body
     } finally {
       rootLogger.removeAppender(capture.getName)
       rootLogger.setLevel(level)
@@ -112,6 +111,16 @@ class RunJobSpec extends AnyFunSuite {
     val (probe, run) = events.asScala.toSeq
       .partition(_.getMessage.getFormattedMessage == "capture probe")
     assert(probe.size == 1 && probe.head.getThrown != null)
+    run
+  }
+
+  test("a successful run logs no stack trace at WARN or above, and its " +
+      "output has no partition column") {
+    val args = RunJob.JobArgs(writeInput(120), tmpDir("runjob_out"), "job_l",
+      partitions = 4, saltBuckets = 4, shufflePartitions = 4)
+    val run = warnings {
+      assert(RunJob.execute(spark, args).committedThisRun)
+    }
     val traces = run.filter(e =>
       e.getLevel.isMoreSpecificThan(Level.WARN) && e.getThrown != null)
     assert(traces.isEmpty, traces.map(e =>
@@ -119,6 +128,21 @@ class RunJobSpec extends AnyFunSuite {
         e.getThrown).mkString("\n"))
     assert(!CheckpointedRun.output(spark, RunJob.workRoot(args), "job_l")
       .columns.contains("partition"))
+  }
+
+  test("the graft_* functions are registered once per session: two runs " +
+      "log no warning that a function replaced a registered one") {
+    val input = writeInput(60)
+    val run = warnings {
+      Seq("job_f1", "job_f2").foreach { id =>
+        assert(RunJob.execute(spark, RunJob.JobArgs(input,
+          tmpDir("runjob_out"), id, partitions = 2, saltBuckets = 4,
+          shufflePartitions = 4)).committedThisRun)
+      }
+    }
+    val replaced = run.map(_.getMessage.getFormattedMessage)
+      .filter(_.contains("replaced a previously registered function"))
+    assert(replaced.isEmpty, replaced.mkString("\n"))
   }
 
   test("input may be an Iceberg-style table root: rows resolved through " +
