@@ -1,11 +1,14 @@
 package graft.expr
 
+import java.lang.reflect.InvocationTargetException
+
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
@@ -13,15 +16,19 @@ import graft.core._
 /** Custom Catalyst expressions for the quality-filter engine.
   *
   * Design (SURVEY §2.8): these are native `Expression`s, not Scala UDFs.
-  * As of round 4 every kernel has REAL whole-stage codegen — `doGenCode`
-  * emits a direct static call into [[Kernels]] — rather than
-  * `CodegenFallback`. The distinction matters structurally, not just per
-  * call: `CollapseCodegenStages.supportCodegen` excludes a plan node
+  * Every scalar `graft_*` function is one row of [[GraftKernel.table]] —
+  * SQL name, input types, result type and the [[Kernels]] method that
+  * computes it — and one generic expression, [[GraftKernel]], evaluates
+  * any row. Its generated code is a direct static call into [[Kernels]],
+  * not `CodegenFallback`. The distinction matters structurally, not just
+  * per call: `CollapseCodegenStages.supportCodegen` excludes a plan node
   * containing ANY CodegenFallback expression from the generated span, so
   * a fallback `graft_page_process` pushed the WHOLE pipeline projection
   * (including its cheap built-in columns) out of WSCG into the
   * interpreted `ProjectExec`. With static-call codegen the full
-  * scan→project pipeline compiles into one generated stage.
+  * scan→project pipeline compiles into one generated stage. The
+  * interpreted `eval` calls the same method through reflection, so each
+  * kernel is named exactly once.
   *
   * Model/pattern state stays JVM-singleton (`graft.core` lazy vals
   * compile once per executor, the analog of the reference's
@@ -29,7 +36,7 @@ import graft.core._
   * every expression is null-intolerant (null in → null out).
   *
   * `regexp_extract_all` cannot express the fused scan because it has no
-  * per-alternative attribution and no offsets — hence [[PiiExtractAll]]
+  * per-alternative attribution and no offsets — hence `graft_pii_extract`
   * (SURVEY §2.8 rationale).
   */
 object GraftSchemas {
@@ -112,15 +119,24 @@ object GraftSchemas {
   * executor classloader, which plain-object forwarder methods are.
   * Overloads on the input type (UTF8String vs byte[]) let the html
   * kernels accept BINARY or STRING children with the overload resolved
-  * statically from the child's declared Java type. */
+  * from the child's Java type, statically in generated code and by
+  * parameter types in [[GraftKernel]]'s reflective lookup. */
 object Kernels {
 
+  /** `graft_extract_text(text)` — canonical full_text rebuild (G1
+    * contract: blank-skip, single-space rejoin; byte-identical per
+    * input). */
   def extractText(v: UTF8String): UTF8String =
     UTF8String.fromString(Tokenizer.tokenizeArrays(v.toString)._1)
 
+  /** `graft_pii_extract(full_text)` — fused multi-pattern scan + refine +
+    * sort; ARRAY<STRUCT<pii_type,start,end,text>> (D1-D3). */
   def piiExtract(v: UTF8String): ArrayData =
     GraftSchemas.matchesToCatalyst(PiiDetector.extract(v.toString))
 
+  /** `graft_pii_process(text)` — the whole document-local redaction
+    * pipeline in one pass: tokenize → scan/refine/sort → span join →
+    * scrub. STRUCT<full_text, scrubbed_text, pii_matches, n_redacted>. */
   def piiProcess(v: UTF8String): InternalRow = {
     val (full, matches, labeled, scrubbed) =
       PiiDetector.detectAndScrub(v.toString)
@@ -144,6 +160,10 @@ object Kernels {
     else StageTimers.scope(tc.getLocalProperty(StageScopeProperty))
   }
 
+  /** `graft_page_process(text)` — the fused whole-pipeline pass:
+    * tokenize once → PII scan/refine/join/scrub + langid + perplexity +
+    * lang-aware heuristics + keep/drop + full rule lineage, with per-row
+    * fault isolation (error column instead of stage failure, O1). */
   def pageProcess(v: UTF8String): InternalRow = {
     val r = DocProcessor.process(v.toString, stageScope())
     InternalRow(
@@ -159,6 +179,8 @@ object Kernels {
       r.error.map(UTF8String.fromString).orNull)
   }
 
+  /** `graft_pii_tokens(text)` — labeled token lineage:
+    * ARRAY<STRUCT<text,start,end,detected_as>> (J1-J2 output). */
   def piiTokens(v: UTF8String): ArrayData = {
     val (_, _, labeled, _) = PiiDetector.detectAndScrub(v.toString)
     new GenericArrayData(labeled.map { t =>
@@ -167,19 +189,33 @@ object Kernels {
     }.toArray[Any])
   }
 
+  /** `graft_langid(text)` — STRUCT<lang, conf> from the broadcast-free
+    * JVM-singleton profile table (per-executor init). */
   def langid(v: UTF8String): InternalRow = {
     val (lang, conf) = LangId.predict(v.toString)
     InternalRow(GraftSchemas.constUtf8(lang), conf)
   }
 
+  /** `graft_perplexity(text, lang)` — trigram stupid-backoff perplexity
+    * under the per-language LM (unknown lang → en model). */
   def perplexity(t: UTF8String, l: UTF8String): Double =
     NGramLM.perplexity(t.toString, l.toString)
 
+  /** `graft_quality_rules(text, lang)` — full Gopher/C4 rule lineage:
+    * ARRAY<STRUCT<rule,fired,value,threshold>>. The stopword rule is
+    * lang-aware (per-language stopword lists). */
   def qualityRules(t: UTF8String, l: UTF8String): ArrayData =
     GraftSchemas.rulesToCatalyst(
       Heuristics.evaluate(t.toString, l.toString))
 
-  /** Same accumulation order as [[VecMath.cosine]] (bit-identical
+  /** `graft_cosine(a, b)` — cosine similarity of two ARRAY<DOUBLE>
+    * vectors in one native pass (sequential double math, deterministic).
+    * The HOF formulation (`aggregate(zip_with(...))`) is interpreted per
+    * element and costs ~10µs/pair at 64 dims; this is ~100ns — the
+    * difference between a feasible and an infeasible pairwise stage
+    * (measured 135s → seconds on a 13.5M-pair sweep).
+    *
+    * Same accumulation order as [[VecMath.cosine]] (bit-identical
     * results — differential-tested in FusedKernelDiffSpec), but reading
     * the ArrayData elements in place: the previous `toDoubleArray()`
     * form allocated TWO array copies per invocation, which on the
@@ -202,6 +238,15 @@ object Kernels {
     if (nx == 0.0 || ny == 0.0) 0.0 else dot / (math.sqrt(nx) * math.sqrt(ny))
   }
 
+  /** `graft_shingles(text)` — distinct 3-word shingle strings (whitespace
+    * word split — the same `Character.isWhitespace` contract as
+    * [[graft.core.Tokenizer.words]] and [[graft.core.Dedup.shingles]], so
+    * the LSH banding stage and this confirmation stage agree on
+    * multi-line text — lowercased, first-occurrence order). Native form
+    * of the HOF pyramid `array_distinct(transform(sequence(...),
+    * slice/concat))` whose interpreted evaluation dominates the Jaccard
+    * dedup stage. The DuckDB oracle mirrors via
+    * `regexp_split_to_array(text, '\s+')`. */
   def shingles(v: UTF8String): ArrayData = {
     val text = v.toString
     val words = new scala.collection.mutable.ArrayBuffer[String]()
@@ -234,12 +279,25 @@ object Kernels {
       out.toArray.map(s => UTF8String.fromString(s.asInstanceOf[String]): Any))
   }
 
+  /** `graft_html_text(html)` — deterministic HTML→text extraction for
+    * html-only rows (P1 branch analog), from BINARY (UTF-8) or STRING. */
   def htmlText(v: UTF8String): UTF8String =
     UTF8String.fromString(HtmlText.extract(v.toString))
   def htmlText(v: Array[Byte]): UTF8String =
     UTF8String.fromString(HtmlText.extract(
       new String(v, java.nio.charset.StandardCharsets.UTF_8)))
 
+  /** `graft_html_text_safe(html)` — STRUCT<text, error>: the same
+    * extraction wrapped in per-row fault isolation (SURVEY O1, the
+    * reference's per-file try/except at backend/pdf/PDFRedactor.py:39-43).
+    * The pipeline routes html-only rows through THIS form: an extraction
+    * failure on one garbage page — decoding the input included, hence the
+    * by-name argument — degrades to `(text = '', error = <class:
+    * message>)` instead of failing the whole stage; the round-3 verdict's
+    * task-killer was one malformed numeric entity on one html-routed page
+    * escaping the fused kernel's fault envelope. `graft_html_text` stays
+    * the exact unguarded function for à-la-carte use and the oracle
+    * queries. */
   private def htmlTextSafeImpl(s: => String): InternalRow =
     try InternalRow(UTF8String.fromString(HtmlText.extract(s)), null)
     catch {
@@ -251,7 +309,8 @@ object Kernels {
   def htmlTextSafe(v: Array[Byte]): InternalRow = htmlTextSafeImpl(
     new String(v, java.nio.charset.StandardCharsets.UTF_8))
 
-  /** Blankness under the canonical [[graft.core.Blank.Chars]] set —
+  /** `graft_is_blank(text)`, the pipeline's P1 route predicate: blankness
+    * under the canonical [[graft.core.Blank.Chars]] set —
     * exactly `length(trim(text, Chars)) == 0`, but allocation-free: the
     * trim form copies nearly the whole text per row (UTF8String.trim
     * materializes the trimmed copy) just to test emptiness; this walks
@@ -282,12 +341,48 @@ object Kernels {
     true
   }
 
+  /** `graft_word_count(text)` — tokenizer-contract word count (BIGINT),
+    * without materializing the word list. */
+  def wordCount(v: UTF8String): Long = Tokenizer.wordCount(v.toString)
+
+  /** `graft_minhash(text)` — MinHash signature, ARRAY<BIGINT>(128). */
   def minhash(v: UTF8String): ArrayData =
     new GenericArrayData(Dedup.minHashSignature(v.toString))
 
+  /** `graft_lsh_bands(text)` — LSH band keys (32 bands x 4 rows),
+    * ARRAY<BIGINT>. Empty/whitespace docs emit NO bands (skew guard — see
+    * [[graft.core.Dedup.lshBandKeysGuarded]]). */
   def lshBands(v: UTF8String): ArrayData =
     new GenericArrayData(Dedup.lshBandKeysGuarded(v.toString))
 
+  /** `graft_simhash(text)` — 64-bit SimHash (BIGINT). */
+  def simHash(v: UTF8String): Long = Dedup.simHash(v.toString)
+
+  /** `graft_fingerprint(text)` — rolling-hash document fingerprint
+    * (BIGINT) over a 64-char window. The window is passed explicitly:
+    * a Scala default argument is no bytecode overload, so a generated
+    * call that left it out once failed to compile and the WHOLE
+    * projection silently fell back to interpreter mode (caught via the
+    * sf1 run's fallback warnings; CodegenSmokeSpec now sweeps every
+    * registered kernel against this class of bug). */
+  def fingerprint(v: UTF8String): Long = Dedup.fingerprint(v.toString, 64)
+
+  /** `graft_bpe_count(text)` — token count under the trained BPE merge
+    * table (whitespace words, lowercased, [[graft.core.Bpe]] merges;
+    * BIGINT). The merge table is a JVM singleton trained deterministically
+    * from SeedCorpus, and the DuckDB oracle re-applies the identical
+    * merges as a literal replace chain ([[graft.core.Bpe.tokenCountSql]]). */
+  def bpeCount(v: UTF8String): Long = Bpe.countText(v.toString)
+
+  /** `graft_lsh_project(emb)` — 16-hyperplane signed-random-projection
+    * LSH signature (BIGINT, low 16 bits). Hyperplane weights are small
+    * integers derived from (bit, dim) by fixed mixing arithmetic, so the
+    * exact same signature is computable in plain SQL (the DuckDB oracle
+    * mirrors it). Native sequential double math — the interpreted
+    * `aggregate(zip_with(...))` HOF form costs ~10µs/row; this is ~100ns.
+    * ANN use: candidates = rows whose signature is within a small hamming
+    * radius of the query's (multi-probe); rank candidates by exact
+    * cosine. */
   def lshProject(v: ArrayData): Long = {
     val len = v.numElements()
     var sig = 0L
@@ -363,6 +458,12 @@ object Kernels {
     arr
   }
 
+  /** `graft_ivf_assign(emb, centroids)` — IVF coarse-quantizer
+    * assignment: index (BIGINT) of the centroid with max cosine similarity
+    * (ties → lowest index). Centroids arrive as a broadcast literal
+    * ARRAY<ARRAY<DOUBLE>> — the coarse codebook is tiny by construction,
+    * so assignment is a pure map: no shuffle, no window, no per-row
+    * join. */
   def ivfAssign(a: ArrayData, cents: ArrayData): Long = {
     // identity-keyed caching is only sound for GenericArrayData (the
     // form literals take, with a stable boxed backing array) — other
@@ -391,161 +492,126 @@ object Kernels {
   }
 }
 
-/** Base for string-input kernels with REAL codegen: subclasses implement
-  * `doGenCode` as a direct static call into [[Kernels]] (or graft.core),
-  * so they stay INSIDE whole-stage codegen spans. Deliberately NOT a
-  * `CodegenFallback`: the WSCG planner (`CollapseCodegenStages
-  * .supportCodegen`) excludes any plan node containing a CodegenFallback
-  * expression from the generated span — an overridden doGenCode on a
-  * CodegenFallback subclass is never called (measured: the project
-  * dropped out of the WSCG subtree entirely). */
-abstract class StringKernelCodegenExpression extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
+/** One scalar `graft_*` function: its SQL name, its input types, its
+  * result type and the [[Kernels]] method that computes it. `defaults`
+  * fill trailing arguments a SQL caller may leave out. */
+final case class KernelSpec(name: String, inputTypes: Seq[Shim.InputType],
+                            dataType: DataType, method: String,
+                            defaults: Seq[Expression] = Nil)
+
+/** A scalar `graft_*` function applied to its arguments: the
+  * [[GraftKernel.table]] row called `name` supplies the input and result
+  * types and the [[Kernels]] method. [[UnaryKernel]] and [[BinaryKernel]]
+  * are its one- and two-argument forms, so that Spark's
+  * Unary/BinaryExpression supply the null-intolerant `eval`, `nullable`
+  * (any argument nullable), foldability and the null-safe code template:
+  * the generated Java is that template around one static call,
+  * `graft.expr.Kernels.<method>(…)`. `name` is part of equality: two
+  * kernels over one column are never one common subexpression. */
+sealed trait GraftKernel extends Expression with ExpectsInputTypes {
+  def name: String
+  @transient private lazy val spec: KernelSpec = GraftKernel.spec(name)
+  override def inputTypes: Seq[Shim.InputType] = spec.inputTypes
+  override def dataType: DataType = spec.dataType
   override def nullIntolerant: Boolean = true
-  /** Static call expression for one input, e.g.
-    * `c => s"graft.expr.Kernels.langid($c)"`. */
-  protected def staticCall(c: String): String
+  override def prettyName: String = name
+  // plans read `graft_page_process(raw_text#n)`: the name is not an argument
+  override protected def flatArguments: Iterator[Any] = children.iterator
+
+  /** The method generated code binds to: the row's method name at the
+    * children's Java types, resolved once per expression instance. */
+  @transient private lazy val method = Kernels.getClass.getMethod(
+    spec.method, children.map(c => CodeGenerator.javaClass(c.dataType)): _*)
+
+  protected def invoke(args: Any*): Any =
+    try method.invoke(Kernels, args.map(_.asInstanceOf[AnyRef]): _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
+
+  protected def call(args: String*): String =
+    s"graft.expr.Kernels.${spec.method}(${args.mkString(", ")})"
+}
+
+object GraftKernel {
+
+  def apply(name: String, children: Seq[Expression]): GraftKernel =
+    children match {
+      case Seq(c) => UnaryKernel(name, c)
+      case Seq(l, r) => BinaryKernel(name, l, r)
+    }
+
+  private val text = Seq(StringType)
+  private val vector = ArrayType(DoubleType)
+
+  /** Every scalar `graft_*` function, one row each. */
+  val table: Seq[KernelSpec] = Seq(
+    KernelSpec("graft_extract_text", text, StringType, "extractText"),
+    KernelSpec("graft_pii_extract", text,
+      ArrayType(GraftSchemas.matchStruct, containsNull = false), "piiExtract"),
+    KernelSpec("graft_pii_process", text, GraftSchemas.piiProcessStruct,
+      "piiProcess"),
+    KernelSpec("graft_page_process", text, GraftSchemas.pageProcessStruct,
+      "pageProcess"),
+    KernelSpec("graft_pii_tokens", text,
+      ArrayType(GraftSchemas.tokenStruct, containsNull = false), "piiTokens"),
+    KernelSpec("graft_langid", text, GraftSchemas.langStruct, "langid"),
+    KernelSpec("graft_perplexity", Seq(StringType, StringType), DoubleType,
+      "perplexity"),
+    KernelSpec("graft_quality_rules", Seq(StringType, StringType),
+      ArrayType(GraftSchemas.ruleStruct, containsNull = false), "qualityRules",
+      defaults = Seq(Literal("en"))),
+    KernelSpec("graft_html_text", Seq(Shim.StringOrBinary), StringType,
+      "htmlText"),
+    KernelSpec("graft_html_text_safe", Seq(Shim.StringOrBinary),
+      GraftSchemas.htmlSafeStruct, "htmlTextSafe"),
+    KernelSpec("graft_cosine", Seq(vector, vector), DoubleType, "cosine"),
+    KernelSpec("graft_shingles", text,
+      ArrayType(StringType, containsNull = false), "shingles"),
+    KernelSpec("graft_is_blank", text, BooleanType, "isBlankText"),
+    KernelSpec("graft_word_count", text, LongType, "wordCount"),
+    KernelSpec("graft_minhash", text, ArrayType(LongType, containsNull = false),
+      "minhash"),
+    KernelSpec("graft_lsh_bands", text,
+      ArrayType(LongType, containsNull = false), "lshBands"),
+    KernelSpec("graft_simhash", text, LongType, "simHash"),
+    KernelSpec("graft_fingerprint", text, LongType, "fingerprint"),
+    KernelSpec("graft_lsh_project", Seq(vector), LongType, "lshProject"),
+    KernelSpec("graft_ivf_assign", Seq(vector, ArrayType(vector)), LongType,
+      "ivfAssign"),
+    KernelSpec("graft_bpe_count", text, LongType, "bpeCount"))
+
+  private val byName: Map[String, KernelSpec] =
+    table.map(k => k.name -> k).toMap
+
+  def spec(name: String): KernelSpec = byName(name)
+}
+
+case class UnaryKernel(name: String, child: Expression) extends UnaryExpression
+    with GraftKernel {
+  override protected def nullSafeEval(v: Any): Any = invoke(v)
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, staticCall)
+    defineCodeGen(ctx, ev, call(_))
+  override protected def withNewChildInternal(c: Expression): UnaryKernel =
+    copy(child = c)
 }
 
-/** Binary analog of [[StringKernelCodegenExpression]]. */
-abstract class BinaryKernelCodegenExpression extends BinaryExpression
-    with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  protected def staticCall(a: String, b: String): String
+case class BinaryKernel(name: String, left: Expression, right: Expression)
+    extends BinaryExpression with GraftKernel {
+  override protected def nullSafeEval(a: Any, b: Any): Any = invoke(a, b)
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, staticCall)
-}
-
-/** `graft_extract_text(text)` — canonical full_text rebuild (G1 contract:
-  * blank-skip, single-space rejoin; byte-identical per input). */
-case class ExtractText(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any =
-    Kernels.extractText(v.asInstanceOf[UTF8String])
-  override protected def staticCall(c: String): String =
-    s"graft.expr.Kernels.extractText($c)"
-  override protected def withNewChildInternal(c: Expression): ExtractText = copy(c)
-  override def prettyName: String = "graft_extract_text"
-}
-
-/** `graft_pii_extract(full_text)` — fused multi-pattern scan + refine +
-  * sort; ARRAY<STRUCT<pii_type,start,end,text>> (D1-D3). */
-case class PiiExtractAll(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType =
-    ArrayType(GraftSchemas.matchStruct, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    Kernels.piiExtract(v.asInstanceOf[UTF8String])
-  override protected def staticCall(c: String): String =
-    s"graft.expr.Kernels.piiExtract($c)"
-  override protected def withNewChildInternal(c: Expression): PiiExtractAll = copy(c)
-  override def prettyName: String = "graft_pii_extract"
-}
-
-/** `graft_pii_process(text)` — the whole document-local redaction pipeline
-  * in one pass: tokenize → scan/refine/sort → span join → scrub.
-  * STRUCT<full_text, scrubbed_text, pii_matches, n_redacted>. */
-case class PiiProcess(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = GraftSchemas.piiProcessStruct
-  override def nullSafeEval(v: Any): Any =
-    Kernels.piiProcess(v.asInstanceOf[UTF8String])
-  override protected def staticCall(c: String): String =
-    s"graft.expr.Kernels.piiProcess($c)"
-  override protected def withNewChildInternal(c: Expression): PiiProcess = copy(c)
-  override def prettyName: String = "graft_pii_process"
-}
-
-/** `graft_page_process(text)` — the fused whole-pipeline pass:
-  * tokenize once → PII scan/refine/join/scrub + langid + perplexity +
-  * lang-aware heuristics + keep/drop + full rule lineage, with per-row
-  * fault isolation (error column instead of stage failure, O1). */
-case class PageProcess(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = GraftSchemas.pageProcessStruct
-  override def nullSafeEval(v: Any): Any =
-    Kernels.pageProcess(v.asInstanceOf[UTF8String])
-  override protected def staticCall(c: String): String =
-    s"graft.expr.Kernels.pageProcess($c)"
-  override protected def withNewChildInternal(c: Expression): PageProcess = copy(c)
-  override def prettyName: String = "graft_page_process"
-}
-
-/** `graft_pii_tokens(text)` — labeled token lineage:
-  * ARRAY<STRUCT<text,start,end,detected_as>> (J1-J2 output). */
-case class PiiTokens(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType =
-    ArrayType(GraftSchemas.tokenStruct, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    Kernels.piiTokens(v.asInstanceOf[UTF8String])
-  override protected def staticCall(c: String): String =
-    s"graft.expr.Kernels.piiTokens($c)"
-  override protected def withNewChildInternal(c: Expression): PiiTokens = copy(c)
-  override def prettyName: String = "graft_pii_tokens"
-}
-
-/** `graft_langid(text)` — STRUCT<lang, conf> from the broadcast-free
-  * JVM-singleton profile table (per-executor init). */
-case class LangIdExpr(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = GraftSchemas.langStruct
-  override def nullSafeEval(v: Any): Any =
-    Kernels.langid(v.asInstanceOf[UTF8String])
-  override protected def staticCall(c: String): String =
-    s"graft.expr.Kernels.langid($c)"
-  override protected def withNewChildInternal(c: Expression): LangIdExpr = copy(c)
-  override def prettyName: String = "graft_langid"
-}
-
-/** `graft_perplexity(text, lang)` — trigram stupid-backoff perplexity under
-  * the per-language LM (unknown lang → en model). */
-case class PerplexityExpr(left: Expression, right: Expression)
-    extends BinaryKernelCodegenExpression {
-  override def inputTypes = Seq(StringType, StringType)
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(t: Any, l: Any): Any =
-    Kernels.perplexity(t.asInstanceOf[UTF8String], l.asInstanceOf[UTF8String])
-  override protected def staticCall(a: String, b: String): String =
-    s"graft.expr.Kernels.perplexity($a, $b)"
+    defineCodeGen(ctx, ev, call(_, _))
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PerplexityExpr =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_perplexity"
+      l: Expression, r: Expression): BinaryKernel = copy(left = l, right = r)
 }
 
-/** `graft_quality_rules(text, lang)` — full Gopher/C4 rule lineage:
-  * ARRAY<STRUCT<rule,fired,value,threshold>>. The stopword rule is
-  * lang-aware (per-language stopword lists). */
-case class QualityRules(left: Expression, right: Expression)
-    extends BinaryKernelCodegenExpression {
-  override def inputTypes = Seq(StringType, StringType)
-  override def dataType: DataType =
-    ArrayType(GraftSchemas.ruleStruct, containsNull = false)
-  override def nullSafeEval(t: Any, l: Any): Any =
-    Kernels.qualityRules(t.asInstanceOf[UTF8String],
-      l.asInstanceOf[UTF8String])
-  override protected def staticCall(a: String, b: String): String =
-    s"graft.expr.Kernels.qualityRules($a, $b)"
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): QualityRules =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_quality_rules"
-}
-
-/** `graft_cosine(a, b)` — cosine similarity of two ARRAY<DOUBLE> vectors
-  * in one native pass (sequential double math, deterministic). The HOF
-  * formulation (`aggregate(zip_with(...))`) is interpreted per element and
-  * costs ~10µs/pair at 64 dims; this is ~100ns — the difference between a
-  * feasible and an infeasible pairwise stage (measured 135s → seconds on
-  * a 13.5M-pair sweep). */
 /** `graft_absmax(emb)` — max(abs(x)) of ARRAY<DOUBLE> (DOUBLE; null
   * elements are skipped, and null input or an array with no non-null
   * element gives null, matching `array_max` on the `transform` result).
   * Native whole-stage-codegen form of
   * `array_max(transform(emb, x -> abs(x)))`, whose per-element lambda
   * is CodegenFallback and evaluated interpreted in the int8-quantization
-  * scan. */
+  * scan. Its own class: the kernel's -1 sentinel maps to null. */
 case class AbsMax(child: Expression) extends UnaryExpression
     with ExpectsInputTypes {
   override def inputTypes = Seq(ArrayType(DoubleType))
@@ -563,217 +629,4 @@ case class AbsMax(child: Expression) extends UnaryExpression
       |${ev.isNull} = ${ev.value} < 0;""".stripMargin)
   override protected def withNewChildInternal(c: Expression): AbsMax = copy(c)
   override def prettyName: String = "graft_absmax"
-}
-
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryKernelCodegenExpression {
-  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def staticCall(a: String, b: String): String =
-    s"graft.expr.Kernels.cosine($a, $b)"
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_cosine"
-}
-
-/** `graft_shingles(text)` — distinct 3-word shingle strings (whitespace
-  * word split — the same `Character.isWhitespace` contract as
-  * [[graft.core.Tokenizer.words]] and [[graft.core.Dedup.shingles]], so
-  * the LSH banding stage and this confirmation stage agree on multi-line
-  * text — lowercased, first-occurrence order). Native form of the HOF
-  * pyramid `array_distinct(transform(sequence(...), slice/concat))` whose
-  * interpreted evaluation dominates the Jaccard dedup stage. The DuckDB
-  * oracle mirrors via `regexp_split_to_array(text, '\s+')`. */
-case class ShingleExpr(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    Kernels.shingles(v.asInstanceOf[UTF8String])
-  override protected def staticCall(c: String): String =
-    s"graft.expr.Kernels.shingles($c)"
-  override protected def withNewChildInternal(c: Expression): ShingleExpr = copy(c)
-  override def prettyName: String = "graft_shingles"
-}
-
-/** `graft_html_text(html)` — deterministic HTML→text extraction for
-  * html-only rows (P1 branch analog). BINARY (UTF-8) or STRING input
-  * (no ExpectsInputTypes: TypeCollection is private[sql] in Spark 4; the
-  * Kernels overload on the child's Java type handles both). */
-case class HtmlTextExpr(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any = v match {
-    case b: Array[Byte] => Kernels.htmlText(b)
-    case u: UTF8String => Kernels.htmlText(u)
-  }
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.Kernels.htmlText($c)")
-  override protected def withNewChildInternal(c: Expression): HtmlTextExpr = copy(c)
-  override def prettyName: String = "graft_html_text"
-}
-
-/** `graft_html_text_safe(html)` — STRUCT<text, error>: the same extraction
-  * wrapped in per-row fault isolation (SURVEY O1, the reference's per-file
-  * try/except at backend/pdf/PDFRedactor.py:39-43). The pipeline routes
-  * html-only rows through THIS form: an extraction failure on one garbage
-  * page degrades to `(text = '', error = <class: message>)` instead of
-  * failing the whole stage — the round-3 verdict's task-killer, where one
-  * malformed numeric entity on one html-routed page escaped the fused
-  * kernel's fault envelope. The plain [[HtmlTextExpr]] stays the exact
-  * unguarded function for à-la-carte use and the oracle queries. */
-case class HtmlTextSafeExpr(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = GraftSchemas.htmlSafeStruct
-  override def nullSafeEval(v: Any): Any =
-    try {
-      v match {
-        case b: Array[Byte] => Kernels.htmlTextSafe(b)
-        case u: UTF8String => Kernels.htmlTextSafe(u)
-      }
-    } catch {
-      // a child of unexpected runtime type still degrades per-row
-      case e: Throwable =>
-        InternalRow(UTF8String.EMPTY_UTF8, UTF8String.fromString(
-          s"HtmlExtractError: ${e.getClass.getName}: ${e.getMessage}"))
-    }
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.Kernels.htmlTextSafe($c)")
-  override protected def withNewChildInternal(c: Expression): HtmlTextSafeExpr = copy(c)
-  override def prettyName: String = "graft_html_text_safe"
-}
-
-/** `graft_is_blank(text)` — true iff every code point is in the canonical
-  * blank set ([[graft.core.Blank.Chars]]); the pipeline's P1 route
-  * predicate in allocation-free form (see [[Kernels.isBlankText]]). */
-case class IsBlankText(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(v: Any): Any =
-    Kernels.isBlankText(v.asInstanceOf[UTF8String])
-  override protected def staticCall(c: String): String =
-    s"graft.expr.Kernels.isBlankText($c)"
-  override protected def withNewChildInternal(c: Expression): IsBlankText = copy(c)
-  override def prettyName: String = "graft_is_blank"
-}
-
-/** `graft_word_count(text)` — tokenizer-contract word count (BIGINT).
-  * Allocation-free eval (no word-list materialization). */
-case class WordCount(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    Tokenizer.wordCount(v.asInstanceOf[UTF8String].toString)
-  override protected def staticCall(c: String): String =
-    s"graft.core.Tokenizer.wordCount($c.toString())"
-  override protected def withNewChildInternal(c: Expression): WordCount = copy(c)
-  override def prettyName: String = "graft_word_count"
-}
-
-/** `graft_minhash(text)` — MinHash signature, ARRAY<BIGINT>(128). */
-case class MinHashSig(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    Kernels.minhash(v.asInstanceOf[UTF8String])
-  override protected def staticCall(c: String): String =
-    s"graft.expr.Kernels.minhash($c)"
-  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(c)
-  override def prettyName: String = "graft_minhash"
-}
-
-/** `graft_lsh_bands(text)` — LSH band keys (32 bands x 4 rows),
-  * ARRAY<BIGINT>. Empty/whitespace docs emit NO bands (skew guard — see
-  * [[graft.core.Dedup.lshBandKeysGuarded]]). */
-case class LshBands(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    Kernels.lshBands(v.asInstanceOf[UTF8String])
-  override protected def staticCall(c: String): String =
-    s"graft.expr.Kernels.lshBands($c)"
-  override protected def withNewChildInternal(c: Expression): LshBands = copy(c)
-  override def prettyName: String = "graft_lsh_bands"
-}
-
-/** `graft_simhash(text)` — 64-bit SimHash (BIGINT). */
-case class SimHashExpr(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    Dedup.simHash(v.asInstanceOf[UTF8String].toString)
-  override protected def staticCall(c: String): String =
-    s"graft.core.Dedup.simHash($c.toString())"
-  override protected def withNewChildInternal(c: Expression): SimHashExpr = copy(c)
-  override def prettyName: String = "graft_simhash"
-}
-
-/** `graft_lsh_project(emb)` — 16-hyperplane signed-random-projection LSH
-  * signature (BIGINT, low 16 bits). Hyperplane weights are small integers
-  * derived from (bit, dim) by fixed mixing arithmetic, so the exact same
-  * signature is computable in plain SQL (the DuckDB oracle mirrors it).
-  * Native sequential double math — the interpreted
-  * `aggregate(zip_with(...))` HOF form costs ~10µs/row; this is ~100ns.
-  * ANN use: candidates = rows whose signature is within a small hamming
-  * radius of the query's (multi-probe); rank candidates by exact cosine. */
-case class LshProject(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(DoubleType))
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    Kernels.lshProject(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.Kernels.lshProject($c)")
-  override protected def withNewChildInternal(c: Expression): LshProject = copy(c)
-  override def prettyName: String = "graft_lsh_project"
-}
-
-/** `graft_ivf_assign(emb, centroids)` — IVF coarse-quantizer assignment:
-  * index (BIGINT) of the centroid with max cosine similarity (ties → lowest
-  * index). Centroids arrive as a broadcast literal ARRAY<ARRAY<DOUBLE>> —
-  * the coarse codebook is tiny by construction, so assignment is a pure
-  * map: no shuffle, no window, no per-row join. */
-case class IvfAssign(left: Expression, right: Expression)
-    extends BinaryKernelCodegenExpression {
-  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType)))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.ivfAssign(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def staticCall(a: String, b: String): String =
-    s"graft.expr.Kernels.ivfAssign($a, $b)"
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): IvfAssign =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_ivf_assign"
-}
-
-/** `graft_bpe_count(text)` — token count under the trained BPE merge
-  * table (whitespace words, lowercased, [[graft.core.Bpe]] merges;
-  * BIGINT). The merge table is a JVM singleton trained deterministically
-  * from SeedCorpus, and the DuckDB oracle re-applies the identical merges
-  * as a literal replace chain ([[graft.core.Bpe.tokenCountSql]]). */
-case class BpeCount(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    Bpe.countText(v.asInstanceOf[UTF8String].toString)
-  override protected def staticCall(c: String): String =
-    s"graft.core.Bpe.countText($c.toString())"
-  override protected def withNewChildInternal(c: Expression): BpeCount = copy(c)
-  override def prettyName: String = "graft_bpe_count"
-}
-
-/** `graft_fingerprint(text)` — rolling-hash document fingerprint (BIGINT). */
-case class FingerprintExpr(child: Expression) extends StringKernelCodegenExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    Dedup.fingerprint(v.asInstanceOf[UTF8String].toString, 64)
-  // window arg EXPLICIT: Scala default args don't exist as a bytecode
-  // overload, so Janino saw "no applicable method" and the WHOLE
-  // projection silently fell back to interpreter mode (caught via the
-  // sf1 run's fallback warnings; CodegenSmokeSpec now sweeps every
-  // registered kernel against this class of bug)
-  override protected def staticCall(c: String): String =
-    s"graft.core.Dedup.fingerprint($c.toString(), 64)"
-  override protected def withNewChildInternal(c: Expression): FingerprintExpr = copy(c)
-  override def prettyName: String = "graft_fingerprint"
 }

@@ -2,9 +2,13 @@ package graft.io
 
 import java.io.IOException
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-style table layout without the Iceberg runtime jar
   * (SURVEY §7.4 — no Iceberg artifact exists in /opt/spark/jars or the
@@ -198,10 +202,20 @@ object IcebergStyleTable {
     obs.get("rows").asInstanceOf[Long]
   }
 
+  /** Write snapshot `version`'s metadata and flip the hint to it. The
+    * schema (`v<n>.metadata.json`) and the manifest are written BEFORE
+    * the hint flip — once a reader can see version N, every metadata
+    * file of N already exists. */
   private def commitMetadata(io: RootFs, root: String, version: Int,
+                             schema: StructType,
                              files: Seq[String], added: Seq[String],
                              rowCount: Long, partitionCols: Seq[String],
                              extra: String): Unit = {
+    val metaJson =
+      s"""{"format-version":$version,"schema":${schema.json},
+         |"partition_spec":[${partitionCols.map(q).mkString(",")}],
+         |"current_snapshot":$version}""".stripMargin.replace("\n", "")
+    io.write(meta(root, s"v$version.metadata.json"), metaJson)
     io.write(meta(root, s"manifest-$version.text"), files.mkString("\n"))
     val snapJson =
       s"""{"version":$version,$extra"added_files":[${added.map(q).mkString(",")}],
@@ -267,30 +281,38 @@ object IcebergStyleTable {
     val dest = new Path(dataDir(root), genName(version)).toString
     val rowCount = writeCounted(distributed, partitionCols, dest)
 
-    // schema metadata is written BEFORE the hint flip — once a reader can
-    // see version N, every metadata file of N already exists
-    val schemaJson = df.schema.json
-    val metaJson =
-      s"""{"format-version":$version,"schema":$schemaJson,
-         |"partition_spec":[${partitionCols.map(q).mkString(",")}],
-         |"current_snapshot":$version}""".stripMargin.replace("\n", "")
-    io.write(meta(root, s"v$version.metadata.json"), metaJson)
-
     val added = listGenFiles(io, root, version)
     val extra = extraMeta.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}:${q(v)}," }.mkString
-    commitMetadata(io, root, version, manifest(io, root, version - 1) ++ added,
-      added, rowCount, partitionCols, extra = extra)
+    commitMetadata(io, root, version, df.schema,
+      manifest(io, root, version - 1) ++ added, added, rowCount,
+      partitionCols, extra = extra)
 
     Snapshot(version, added, rowCount)
     }
   }
 
+  /** The data columns generation `version` was written with: the schema
+    * of its `v<n>.metadata.json` without the partition columns, or None
+    * when the generation has no such file. */
+  private def recordedDataSchema(io: RootFs, root: String,
+                                 version: Int): Option[StructType] =
+    io.readOpt(meta(root, s"v$version.metadata.json")).map { text =>
+      val m = new ObjectMapper().readTree(text)
+      val parts = m.get("partition_spec").elements().asScala.map(_.asText)
+        .toSet
+      StructType(DataType.fromJson(m.get("schema").toString)
+        .asInstanceOf[StructType].filterNot(f => parts(f.name)))
+    }
+
   /** Read the current snapshot: file list resolved from its manifest
     * (NEVER from directory listing — in-flight commits are invisible).
     * Partition-pruning capable: each generation is scanned with its own
     * basePath, so Hive partition columns are recovered and filters on
-    * them prune directories for free. */
+    * them prune directories for free. A generation's data columns come
+    * from the schema its commit recorded, so no footer is read to infer
+    * them (that would be one Spark job per read); partition column types
+    * are inferred from the directory names. */
   def read(spark: SparkSession, root: String): DataFrame =
     read(spark, RootFs(spark, root), root)
 
@@ -300,8 +322,10 @@ object IcebergStyleTable {
     require(files.nonEmpty, s"no committed snapshot at $root (version=$v)")
     files.groupBy(f => f.takeWhile(_ != '/')).toSeq.sortBy(_._1)
       .map { case (gen, fs) =>
-        spark.read
+        val reader = spark.read
           .option("basePath", new Path(dataDir(root), gen).toString)
+        recordedDataSchema(io, root, gen.stripPrefix("g").toInt)
+          .fold(reader)(reader.schema)
           .parquet(fs.map(f => new Path(dataDir(root), f).toString): _*)
       }.reduce(_ unionByName _)
   }
@@ -337,8 +361,8 @@ object IcebergStyleTable {
     val rowCount = writeCounted(compacted, partitionCols, dest)
 
     val added = listGenFiles(io, root, version)
-    commitMetadata(io, root, version, files = added, added = added,
-      rowCount = rowCount, partitionCols = partitionCols,
+    commitMetadata(io, root, version, current.schema, files = added,
+      added = added, rowCount = rowCount, partitionCols = partitionCols,
       extra = "\"compaction\":true,")
 
     // retire unreferenced generations (readers of older snapshots are not

@@ -19,8 +19,8 @@ import graft.expr.GraftFunctions._
   * Everything is per-row column expressions — zero shuffles, zero custom
   * optimizer rules (SURVEY §4.2): the plan is a project over the scan, and
   * scaling is bounded only by input split parallelism. The only exchange
-  * a full job performs is the salted repartition before the partitioned
-  * write (graft.io.IcebergStyleTable).
+  * a full job performs is the table append's rebalance by `part_date`
+  * before the partitioned write (graft.io.IcebergStyleTable).
   *
   * The fused pass tokenizes each document exactly once (vs ~4x for the
   * à-la-carte stage expressions, which remain available for per-stage
@@ -96,9 +96,10 @@ object QualityPipeline {
         col("p.rule_lineage").as("rule_lineage"),
         coalesce(col("hx.error"), col("p.error")).as("error"),
         to_date(col("warc_ts")).as("part_date"),
-        // host for salting: any scheme, case-insensitive; URLs with no
-        // extractable host hash the whole URL instead of all collapsing
-        // into the hash('') bucket (a recreated hot partition otherwise)
+        // host bucket, a partition column for callers that partition by
+        // host: any scheme, case-insensitive; URLs with no extractable
+        // host hash the whole URL instead of all collapsing into the
+        // hash('') bucket (a recreated hot partition otherwise)
         pmod(xxhash64(coalesce(nullif(regexp_extract(col("url"),
           "(?i)^[a-z][a-z0-9+.-]*://([^/]+)", 1), lit("")), col("url"))),
           lit(64)).cast("int").as("host_bucket"))

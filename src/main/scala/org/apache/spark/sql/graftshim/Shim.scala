@@ -5,12 +5,14 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{AbstractDataType, BinaryType, StringType, TypeCollection}
 
 /** Minimal bridge into `private[sql]` surface of Spark 4.x.
   *
   * Spark 4 wraps `Column` around ColumnNode; building a `Column` from a
-  * Catalyst `Expression`, reaching the session FunctionRegistry, and the
-  * session's Hadoop conf are `private[sql]`. This shim lives inside the
+  * Catalyst `Expression`, reaching the session FunctionRegistry, a
+  * `TypeCollection` input type and the session's Hadoop conf are
+  * `private[sql]`. This shim lives inside the
   * `org.apache.spark.sql` package purely to re-export those capabilities
   * — the standard pattern for Spark-native extension libraries. No Spark
   * behavior is modified.
@@ -20,6 +22,13 @@ object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** An expected input type: a `DataType` or a `TypeCollection` of them
+    * (`AbstractDataType` and `TypeCollection` are `private[sql]`). */
+  type InputType = AbstractDataType
+
+  /** STRING or BINARY, as one expected input type. */
+  val StringOrBinary: InputType = TypeCollection(StringType, BinaryType)
 
   /** Drain the listener bus so every event posted so far has reached its
     * listeners before the caller reads what they recorded (a

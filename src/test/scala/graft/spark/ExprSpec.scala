@@ -169,4 +169,151 @@ class ExprSpec extends AnyFunSuite {
             s"${r.getDouble(2)}")
     }
   }
+
+  test("graft_* functions reject a wrong argument count or type at " +
+      "analysis, naming the function") {
+    val e0 = intercept[IllegalArgumentException](
+      spark.sql("SELECT graft_extract_text('a   b', 'zzz')"))
+    assert(e0.getMessage == "graft_extract_text takes 1 argument(s), got 2")
+    Seq("graft_langid('the quick brown fox', 'de')",
+      "graft_cosine(array(1d), array(1d), array(1d))",
+      "graft_perplexity('x')",
+      "graft_word_count()",
+      "graft_quality_rules('x', 'en', 'de')",
+      "graft_absmax()",
+      "graft_bounded_ids(1)").foreach { call =>
+      val e = intercept[IllegalArgumentException](
+        spark.sql(s"SELECT $call").collect())
+      assert(e.getMessage.startsWith(s"${call.takeWhile(_ != '(')} takes "),
+        e.getMessage)
+    }
+    Seq("graft_html_text(42)", "graft_html_text_safe(42)").foreach { call =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $call").collect())
+      assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), e.getMessage)
+      assert(e.getMessage.contains(call.takeWhile(_ != '(')), e.getMessage)
+    }
+    // the 1-argument form of graft_quality_rules still defaults to 'en'
+    val r = spark.sql("SELECT graft_quality_rules('x') = " +
+      "graft_quality_rules('x', 'en')").head()
+    assert(r.getBoolean(0))
+  }
+
+  test("every kernel-table row: interpreted eval == generated code == a " +
+      "direct Kernels call, over nulls, blanks, html bytes and arrays") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.expr.{GraftKernel, Kernels}
+
+    val vec = ArrayType(DoubleType, containsNull = false)
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("text", StringType), StructField("lang", StringType),
+      StructField("html", BinaryType), StructField("a", vec),
+      StructField("b", vec),
+      StructField("cents", ArrayType(vec, containsNull = false))))
+    val page = "<html><body><h1>Title</h1><p>Call 415-555-0199 or mail " +
+      "a.b@example.com &amp; more</p><script>x()</script></body></html>"
+    val rows = Seq(
+      Row(0L, null, null, null, null, null, null),
+      Row(1L, "", "en", Array.emptyByteArray, Seq.empty[Double],
+        Seq.empty[Double], Seq.empty[Seq[Double]]),
+      Row(2L, " \t\n\u00a0\u3000", "de", " \n".getBytes("UTF-8"),
+        Seq(0.0), Seq(-0.0), Seq(Seq(0.0))),
+      Row(3L, "The quick brown fox jumps over the lazy dog. SSN " +
+        "123-45-6789, card 4111 1111 1111 1111, ip 10.0.0.1.", "en",
+        page.getBytes("UTF-8"), Seq(0.5, -0.25, 1.0, 0.125),
+        Seq(1.0, 2.0, -3.0, 0.5),
+        Seq(Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0))),
+      Row(4L, "Der schnelle braune Fuchs springt über den faulen Hund " +
+        "und die Katze schläft.", "xx",
+        "<p>caf&eacute; &#x1F600; &bogus; &#99999999;</p>".getBytes("UTF-8"),
+        Seq(1e-300, 3.0), Seq(2.0), Seq(Seq(-1.0, 0.0), Seq(1.0, 1.0))),
+      Row(5L, page, null, "no tags at all".getBytes("UTF-8"),
+        Seq.tabulate(64)(i => math.sin(i)), Seq.tabulate(64)(i => math.cos(i)),
+        Seq(Seq.tabulate(64)(_.toDouble), Seq.tabulate(64)(i => -i * 0.5))))
+
+    // every row of the table over every column tuple its types accept
+    val attrs = schema.fields.toSeq.tail
+      .map(f => AttributeReference(f.name, f.dataType)())
+    val calls = GraftKernel.table.flatMap { k =>
+      k.inputTypes.foldLeft(Seq(Seq.empty[AttributeReference])) { (acc, _) =>
+        for (pre <- acc; a <- attrs) yield pre :+ a
+      }.filter(GraftKernel(k.name, _).checkInputDataTypes().isSuccess)
+        .map(args => (k, args.map(_.name)))
+    }
+    assert(calls.map(_._1).distinct == GraftKernel.table)
+
+    // the independent leg: each function's kernel named here, not taken
+    // from the table
+    def str(x: Any) = x.asInstanceOf[UTF8String]
+    def arr(x: Any) = x.asInstanceOf[ArrayData]
+    val direct: Map[String, Seq[Any] => Any] = Map(
+      "graft_extract_text" -> (a => Kernels.extractText(str(a(0)))),
+      "graft_pii_extract" -> (a => Kernels.piiExtract(str(a(0)))),
+      "graft_pii_process" -> (a => Kernels.piiProcess(str(a(0)))),
+      "graft_page_process" -> (a => Kernels.pageProcess(str(a(0)))),
+      "graft_pii_tokens" -> (a => Kernels.piiTokens(str(a(0)))),
+      "graft_langid" -> (a => Kernels.langid(str(a(0)))),
+      "graft_perplexity" -> (a => Kernels.perplexity(str(a(0)), str(a(1)))),
+      "graft_quality_rules" ->
+        (a => Kernels.qualityRules(str(a(0)), str(a(1)))),
+      "graft_html_text" -> (a => a(0) match {
+        case b: Array[Byte] => Kernels.htmlText(b)
+        case t => Kernels.htmlText(str(t))
+      }),
+      "graft_html_text_safe" -> (a => a(0) match {
+        case b: Array[Byte] => Kernels.htmlTextSafe(b)
+        case t => Kernels.htmlTextSafe(str(t))
+      }),
+      "graft_cosine" -> (a => Kernels.cosine(arr(a(0)), arr(a(1)))),
+      "graft_shingles" -> (a => Kernels.shingles(str(a(0)))),
+      "graft_is_blank" -> (a => Kernels.isBlankText(str(a(0)))),
+      "graft_word_count" ->
+        (a => graft.core.Tokenizer.wordCount(a(0).toString)),
+      "graft_minhash" -> (a => Kernels.minhash(str(a(0)))),
+      "graft_lsh_bands" -> (a => Kernels.lshBands(str(a(0)))),
+      "graft_simhash" -> (a => graft.core.Dedup.simHash(a(0).toString)),
+      "graft_fingerprint" ->
+        (a => graft.core.Dedup.fingerprint(a(0).toString, 64)),
+      "graft_lsh_project" -> (a => Kernels.lshProject(arr(a(0)))),
+      "graft_ivf_assign" -> (a => Kernels.ivfAssign(arr(a(0)), arr(a(1)))),
+      "graft_bpe_count" -> (a => graft.core.Bpe.countText(a(0).toString)))
+    assert(direct.keySet == GraftKernel.table.map(_.name).toSet)
+
+    def run(wholeStage: Boolean, confs: (String, String)*): Seq[Row] = {
+      val session = spark.newSession()
+      session.conf.set("spark.sql.codegen.wholeStage", wholeStage.toString)
+      confs.foreach { case (k, x) => session.conf.set(k, x) }
+      // an RDD source: a local relation would be folded by the optimizer
+      val df = session.createDataFrame(
+          session.sparkContext.parallelize(rows, 2), schema)
+        .selectExpr("id" +: calls.map { case (k, args) =>
+          s"${k.name}(${args.mkString(", ")})" }: _*)
+      assert(df.queryExecution.executedPlan.toString.contains("*(") ==
+        wholeStage)
+      df.collect().toSeq.sortBy(_.getLong(0))
+    }
+    val interpreted = run(wholeStage = false,
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val generated = run(wholeStage = true,
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+
+    for ((row, i) <- rows.zipWithIndex; ((k, args), j) <- calls.zipWithIndex) {
+      val in = args.map(a => CatalystTypeConverters.convertToCatalyst(
+        row.get(schema.fieldIndex(a))))
+      val want = Row(if (in.contains(null)) null
+        else CatalystTypeConverters.convertToScala(direct(k.name)(in),
+          k.dataType))
+      Seq("interpreted" -> interpreted(i), "generated" -> generated(i))
+        .foreach { case (mode, got) =>
+          assert(Row(got.get(j + 1)) == want,
+            s"$mode ${k.name}(${args.mkString(", ")}) on row $i")
+        }
+    }
+  }
 }

@@ -739,4 +739,56 @@ class IcebergIoSpec extends AnyFunSuite {
         4, 4).files.size <= 4)
     }
   }
+  test("a read runs no Spark job: each generation is read with the schema " +
+      "its commit recorded, equal to the footer-inferred one") {
+    val root = tmpDir("schema")
+    // three dates, so a generation is three files (a read of more paths
+    // than the parallel-discovery threshold lists them in a job)
+    val df = QualityPipeline(PagesSynth.pages(spark, 200, 4))
+      .withColumn("part_date", date_add(lit("2024-01-01").cast("date"),
+        pmod(xxhash64(col("url")), lit(3)).cast("int")))
+    val half = pmod(xxhash64(col("url")), lit(2)) === 0
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    /** The footer-inferred schema of the live files, generation by
+      * generation, as a read without recorded schemas sees them. */
+    def inferred(): org.apache.spark.sql.types.StructType =
+      IcebergStyleTable.manifest(root, IcebergStyleTable.currentVersion(root))
+        .groupBy(_.takeWhile(_ != '/')).toSeq.sortBy(_._1)
+        .map { case (g, fs) =>
+          spark.read.option("basePath", s"$root/data/$g")
+            .parquet(fs.map(f => s"$root/data/$f"): _*)
+        }.reduce(_ unionByName _).schema
+    def readChecked(): Unit = {
+      Shim.awaitListenerBus(spark)
+      val before = jobs.get()
+      val back = IcebergStyleTable.read(spark, root)
+      Shim.awaitListenerBus(spark)
+      assert(jobs.get() == before, s"${jobs.get() - before} job(s) in read")
+      assert(back.schema == inferred(),
+        s"${back.schema.treeString}\nvs\n${inferred().treeString}")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      IcebergStyleTable.append(df.filter(half), root, Seq("part_date"),
+        "url", 8, 4)
+      readChecked()
+      IcebergStyleTable.append(df.filter(!half), root, Seq("part_date"),
+        "url", 8, 4)
+      readChecked()
+      val snap = IcebergStyleTable.compact(spark, root, Seq("part_date"))
+      assert(Files.exists(Paths.get(root, "metadata",
+        s"v${snap.version}.metadata.json")))
+      readChecked()
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(IcebergStyleTable.read(spark, root).count() == 200)
+    // a generation committed without a recorded schema is still read, by
+    // inference
+    Files.delete(Paths.get(root, "metadata",
+      s"v${IcebergStyleTable.currentVersion(root)}.metadata.json"))
+    assert(IcebergStyleTable.read(spark, root).schema == inferred())
+  }
 }

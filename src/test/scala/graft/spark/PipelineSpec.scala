@@ -147,18 +147,23 @@ class PipelineSpec extends AnyFunSuite {
 
   test("html_text_safe degrades a per-row extraction failure to " +
       "(empty text, error) instead of throwing (O1 per-row isolation)") {
-    // force the failure path: a child of unexpected runtime type makes the
-    // extraction wrapper throw internally; the catch must turn that into a
-    // degraded row, proving one bad row can never fail the stage
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val e = graft.expr.HtmlTextSafeExpr(Literal(42))
-    val r = e.eval(null)
-      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+    // force the failure inside the kernel's own try: decoding a string
+    // whose byte length is negative throws where the kernel reads its
+    // input; the catch must turn that into a degraded row, proving one
+    // bad row can never fail the stage
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val e = graft.expr.GraftKernel("graft_html_text_safe",
+      Seq(BoundReference(0, StringType, nullable = true)))
+    val r = e.eval(InternalRow(UTF8String.fromAddress(null, 0L, -1)))
+      .asInstanceOf[InternalRow]
     assert(r.getUTF8String(0).toString == "")
     assert(r.getUTF8String(1).toString.startsWith("HtmlExtractError:"))
     // and the happy path carries no error
-    val ok = graft.expr.HtmlTextSafeExpr(Literal("<p>hi</p>"))
-      .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+    val ok = graft.expr.GraftKernel("graft_html_text_safe",
+      Seq(Literal("<p>hi</p>"))).eval(null).asInstanceOf[InternalRow]
     assert(ok.getUTF8String(0).toString.contains("hi"))
     assert(ok.isNullAt(1))
   }
