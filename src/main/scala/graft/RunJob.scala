@@ -15,14 +15,15 @@ import graft.pipeline.QualityPipeline
   *   --output <job root>                   \
   *   --run-id <stable id>                  \
   *   [--partitions 32] [--salt-buckets 16] [--shuffle-partitions 32] \
-  *   [--prebucketed <path>]
+  *   [--compact]
   * }}}
   *
   * Composition (each piece is the SURVEY operator it names):
   *   1. read the pages table `(url, warc_ts, html, text, lang)`;
   *   2. [[QualityPipeline]] — the fused per-document quality filter;
   *   3. [[CheckpointedRun.run]] — resumable execution over `--partitions`
-  *      logical url-hash partitions with per-partition progress manifests
+  *      logical url-hash partitions, each read from its own bucket of one
+  *      staged copy of the input, with per-partition progress manifests
   *      and stage metrics (O2-O4): re-running the SAME `--run-id` after a
   *      kill skips completed partitions;
   *   4. [[IcebergStyleTable.append]] — one atomic snapshot commit of the
@@ -52,7 +53,6 @@ object RunJob {
       partitions: Int = 32,
       saltBuckets: Int = 16,
       shufflePartitions: Int = 32,
-      prebucketed: Option[String] = None,
       compact: Boolean = false)
 
   /** `tableRows` is always THIS RUN's contributed row count — on a fresh
@@ -88,8 +88,6 @@ object RunJob {
         case "--shuffle-partitions" =>
           a = a.copy(shufflePartitions =
             positive("--shuffle-partitions")); i += 2
-        case "--prebucketed" =>
-          a = a.copy(prebucketed = Some(value("--prebucketed"))); i += 2
         case "--compact" => a = a.copy(compact = true); i += 1
         case other =>
           throw new IllegalArgumentException(s"unknown argument: $other")
@@ -127,7 +125,7 @@ object RunJob {
     val results = CheckpointedRun.run(spark, pages, keyCol = "url",
       transform = QualityPipeline.apply, root = workRoot(args),
       runId = args.runId, numPartitions = args.partitions,
-      failAfter = failAfter, prebucketed = args.prebucketed)
+      failAfter = failAfter)
 
     // Exactly-once commit detection: the DURABLE record is the run_id
     // stamped into the snapshot JSON at the atomic hint flip (the marker

@@ -505,6 +505,12 @@ object SparkEntry {
   private def ruleFired(rs: Column, name: String): Column =
     rs.getItem(ruleIdx(name))("fired")
 
+  /** How many elements of `types` equal `t`: its size less its size with
+    * every `t` removed. Native array functions, because a `filter` lambda
+    * is evaluated interpreted, outside whole-stage codegen. */
+  private def nOfType(types: Column, t: Column): Column =
+    (size(types) - size(array_remove(types, t))).cast("long")
+
   private val basicRuleNames = Seq("word_count_min", "word_count_max",
     "mean_word_length_min", "mean_word_length_max", "symbol_to_word_ratio",
     "alpha_word_ratio", "stopword_count", "lorem_ipsum", "curly_brace",
@@ -649,8 +655,7 @@ object SparkEntry {
     "d1_pii_counts" -> ((s, dir) => {
       val d = docsPar(s, dir).withColumn("pii_text", expr(piiTextSql))
         .withColumn("ms", pii_extract(col("pii_text")))
-      def cnt(t: String) = size(filter(col("ms"),
-        m => m("pii_type") === lit(t))).cast("long")
+      def cnt(t: String) = nOfType(col("ms.pii_type"), lit(t))
       d.select(col("doc_id"),
         cnt("SSN").as("n_ssn"), cnt("Email").as("n_email"),
         cnt("Phone Number").as("n_phone"), cnt("IP Address").as("n_ip"))
@@ -669,8 +674,8 @@ object SparkEntry {
       d.select(col("doc_id"), col("ms"),
           posexplode(col("ms")).as(Seq("pos", "m")))
         .select(col("doc_id"), col("m.pii_type").as("pii_type"),
-          size(filter(slice(col("ms"), lit(1), col("pos") + 1),
-            x => x("pii_type") === col("m.pii_type"))).cast("long").as("seq"),
+          nOfType(slice(col("ms.pii_type"), lit(1), col("pos") + 1),
+            col("m.pii_type")).as("seq"),
           col("m.text").as("match_text"))
         // dump only the 4 types the DuckDB oracle mirrors; the other 5
         // reference types (routing/account/card/credit-score x2) are
@@ -694,8 +699,7 @@ object SparkEntry {
     "d3_pii_financial" -> ((s, dir) => {
       val d = docsPar(s, dir).withColumn("fin_text", expr(finTextSql))
         .withColumn("ms", pii_extract(col("fin_text")))
-      def cnt(t: String) = size(filter(col("ms"),
-        m => m("pii_type") === lit(t))).cast("long")
+      def cnt(t: String) = nOfType(col("ms.pii_type"), lit(t))
       d.select(col("doc_id"),
         cnt("Credit Card Number").as("n_card"),
         cnt("Routing Number").as("n_routing"),

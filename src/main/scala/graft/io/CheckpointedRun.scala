@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
-import graft.core.StageTimers
+import graft.core.{Heuristics, StageTimers}
 import graft.expr.Kernels
 
 /** Resumable batch execution with per-partition progress manifests and
@@ -81,19 +81,11 @@ object CheckpointedRun {
     * waited for, and its error is rethrown as is; no partition job
     * outlives the call. `failAfter = k` runs the first k fresh
     * partitions, waits for them, then throws.
-    *
-    * Zero-copy mode: when the input ALREADY lives in the staged layout —
-    * a `_bucket=<k>` Hive-partitioned parquet keyed by the same
-    * pmod(xxhash64(key), P) (e.g. the previous pipeline stage wrote it
-    * bucketed) — pass it as `prebucketed` and the staging rewrite is
-    * skipped entirely: at 100 TB the staging pass doubles IO for nothing.
-    * Per-partition reads prune to one `_bucket` directory either way.
     */
   def run(spark: SparkSession, input: DataFrame, keyCol: String,
           transform: DataFrame => DataFrame, root: String, runId: String,
           numPartitions: Int = 8,
-          failAfter: Int = Int.MaxValue,
-          prebucketed: Option[String] = None): Seq[PartitionResult] = {
+          failAfter: Int = Int.MaxValue): Seq[PartitionResult] = {
     // checked before `_num_partitions` is recorded: a bad value must not
     // become part of the run's identity
     require(numPartitions >= 1,
@@ -121,113 +113,40 @@ object CheckpointedRun {
     // path would ever see again (the rerun returns here before reaching
     // the post-loop cleanup).
     if (done.size >= numPartitions) {
-      if (prebucketed.isEmpty) io.delete(stagedDir(root, runId))
+      io.delete(stagedDir(root, runId))
       return (0 until numPartitions)
         .map(k => PartitionResult(k, -1, skipped = true))
     }
 
-    val staged = prebucketed match {
-      case Some(path) =>
-        // zero-copy: trust-but-verify the layout — the bucket scheme is
-        // part of the run's identity, so a wrong-P / wrong-key input must
-        // fail loudly here, not silently route rows to the wrong resume
-        // partitions
-        val bucketDirs = RootFs(spark, path).list(new Path(path)).map(_.getPath)
-          .collect { case p if p.getName.startsWith("_bucket=") =>
-            (p.getName.stripPrefix("_bucket=").toLong, p.toString) }
-          .sortBy(_._1)
-        require(bucketDirs.nonEmpty,
-          s"prebucketed input at $path has no _bucket=<k> directories")
-        val maxBucket = bucketDirs.last._1
-        require(maxBucket < numPartitions,
-          s"prebucketed input at $path has _bucket=$maxBucket >= " +
-            s"numPartitions=$numPartitions — bucket scheme mismatch")
-        // a SMALLER-P or differently-keyed layout also passes the dir
-        // checks — verify actual membership on a bounded PER-BUCKET sample
-        // (any mismatched scheme puts ~(1-1/P) of rows in the wrong
-        // bucket). Sampling a few rows from EVERY _bucket directory, not
-        // a global limit(N) — which Spark satisfies from the first file(s)
-        // and so can draw all N rows from one directory — also catches a
-        // layout where only SOME bucket directories are mis-keyed. Cost:
-        // one limit-32 read per directory (first row group only),
-        // independent of input size; a full-scan check would defeat
-        // zero-copy.
-        // bounded work at production P: every directory is checked when
-        // P <= 64; beyond that a deterministic evenly-strided 64-dir
-        // subset is (a wrong key/P corrupts essentially every bucket, so
-        // 64 dirs catch a global mismatch with certainty and a partial
-        // mis-keying with high probability).
-        // CEIL stride: floor + take(64) would check only the FIRST 64
-        // dirs for 64 < P < 128, never sampling the upper buckets — a
-        // layout mis-keyed only in its tail would pass
-        val step = (bucketDirs.size + 63) / 64
-        val sampled = bucketDirs.indices.collect {
-          case idx if idx % math.max(1, step) == 0 => bucketDirs(idx)
-        }.take(64)
-        // the limit-32 reads run a few at a time on the scheduler instead
-        // of P sequential driver round-trips
-        val checks = sampled.map { case (k, dir) => () =>
-          // a legitimately row-less bucket dir (empty, or only a _SUCCESS
-          // marker) has nothing to verify — tolerate the schema-inference
-          // failure for EXACTLY that case. Any other layout (nested
-          // partition dirs, oddly-suffixed files) still goes through the
-          // real read, so a mis-keyed prebucketed input cannot dodge
-          // verification by its file naming.
-          val bad =
-            try spark.read.parquet(dir)
-              .select(col(keyCol)).limit(32)
-              .filter(pmod(xxhash64(col(keyCol)), lit(numPartitions))
-                .cast("long") =!= k)
-              .count()
-            catch {
-              // error-condition match first (version-stable); message
-              // substring kept as a fallback for builds predating the
-              // condition name
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-                    (e.getMessage != null &&
-                      e.getMessage.contains("Unable to infer schema")) =>
-                0L
-            }
-          (k, bad)
-        }
-        inPool(8, checks).foreach { case (k, bad) =>
-          require(bad == 0,
-            s"prebucketed input at $path is not bucketed by " +
-              s"pmod(xxhash64($keyCol), $numPartitions): $bad sampled " +
-              s"row(s) in _bucket=$k land outside their directory")
-        }
-        spark.read.parquet(path)
-      case None =>
-        val stagedPath = stagedDir(root, runId).toString
-        if (!io.fs.exists(new Path(stagedPath, "_SUCCESS"))) {
-          // Repartition ON THE BUCKET KEY before the partitioned write.
-          // The direct form (withColumn + partitionBy, no shuffle) has
-          // every input task write into up to P bucket directories —
-          // tasks x P files, which at production scale (10^5 input
-          // splits x 4096 buckets) is a catastrophic file-count
-          // explosion for any metadata layer. One shuffle keyed by
-          // (_bucket, subsplit) bounds output to `subsplits` files per
-          // bucket: the subsplit (an independent hash of the same key)
-          // keeps a large bucket readable with intra-bucket parallelism
-          // even before row-group splitting kicks in.
-          val subsplits = stagedSubsplits(spark, input, numPartitions)
-          input
-            .withColumn("_bucket",
-              pmod(xxhash64(col(keyCol)), lit(numPartitions)))
-            .withColumn("_subsplit",
-              pmod(xxhash64(col(keyCol), lit(0x5eed)), lit(subsplits)))
-            .repartition(numPartitions * subsplits,
-              col("_bucket"), col("_subsplit"))
-            .drop("_subsplit")
-            .write.mode("overwrite").partitionBy("_bucket").parquet(stagedPath)
-        }
-        // read with the schema that wrote it (`_bucket` typed as partition
-        // inference types it: P is an Int), so no job reads footers to
-        // infer it
-        spark.read.schema(input.schema.add("_bucket", IntegerType))
-          .parquet(stagedPath)
+    val stagedPath = stagedDir(root, runId).toString
+    if (!io.fs.exists(new Path(stagedPath, "_SUCCESS"))) {
+      // Repartition ON THE BUCKET KEY before the partitioned write. The
+      // direct form (withColumn + partitionBy, no shuffle) has every input
+      // task write into up to P bucket directories — tasks x P files,
+      // which at production scale (10^5 input splits x 4096 buckets) is a
+      // catastrophic file-count explosion for any metadata layer. One
+      // shuffle keyed by (_bucket, subsplit) bounds output to `subsplits`
+      // files per bucket: the subsplit (an independent hash of the same
+      // key) keeps a large bucket readable with intra-bucket parallelism
+      // even before row-group splitting kicks in. The shuffle partition is
+      // the key's own index, so each of the P x subsplits keys has its own
+      // reducer: hashing the keys would give some reducers two keys and
+      // leave others idle.
+      val subsplits = stagedSubsplits(spark, input, numPartitions)
+      input
+        .withColumn("_bucket",
+          pmod(xxhash64(col(keyCol)), lit(numPartitions)))
+        .withColumn("_subsplit",
+          pmod(xxhash64(col(keyCol), lit(0x5eed)), lit(subsplits)))
+        .repartitionById(numPartitions * subsplits,
+          (col("_bucket") * subsplits + col("_subsplit")).cast("int"))
+        .drop("_subsplit")
+        .write.mode("overwrite").partitionBy("_bucket").parquet(stagedPath)
     }
+    // read with the schema that wrote it (`_bucket` typed as partition
+    // inference types it: P is an Int), so no job reads footers to infer it
+    val staged = spark.read.schema(input.schema.add("_bucket", IntegerType))
+      .parquet(stagedPath)
 
     // the fresh partitions this call computes; `failAfter` stops the rest
     val fresh = (0 until numPartitions).filterNot(done)
@@ -251,12 +170,11 @@ object CheckpointedRun {
       byPartition.getOrElse(k, PartitionResult(k, -1, skipped = true)))
     // every partition is complete: reclaim the staged input copy —
     // leaving it would permanently double storage for every finished run
-    // (at the 100 TB design point, a 100 TB orphan per run id). Only the
-    // run's OWN staged dir is touched; prebucketed inputs belong to the
-    // caller. A rerun after this cleanup takes the all-skipped early
-    // return above (which retries this reclamation, healing a kill that
-    // landed mid-deletion) and never re-reads the staged path.
-    if (prebucketed.isEmpty) io.delete(stagedDir(root, runId))
+    // (at the 100 TB design point, a 100 TB orphan per run id). A rerun
+    // after this cleanup takes the all-skipped early return above (which
+    // retries this reclamation, healing a kill that landed mid-deletion)
+    // and never re-reads the staged path.
+    io.delete(stagedDir(root, runId))
     results
   }
 
@@ -293,11 +211,11 @@ object CheckpointedRun {
       else lit(0L)).as("scrub_n_redacted"),
       (if (cols("lang_conf"))
         m0(sum(when(col("lang_conf") <
-          lit(graft.model.PagesSynth.LangConfMin), 1L).otherwise(0L)))
+          lit(Heuristics.LangConfMin), 1L).otherwise(0L)))
       else lit(0L)).as("langid_n_low_conf"),
       (if (cols("perplexity"))
         m0(sum(when(col("perplexity") >
-          lit(graft.model.PagesSynth.PerplexityMax), 1L).otherwise(0L)))
+          lit(Heuristics.PerplexityMax), 1L).otherwise(0L)))
       else lit(0L)).as("perplexity_n_high"),
       (if (cols("rule_lineage")) {
         // the rules whose `fired` is true: all of them but those that are

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -468,6 +469,37 @@ class IcebergIoSpec extends AnyFunSuite {
     assert(a.exceptAll(b).count() == 0L && b.exceptAll(a).count() == 0L)
   }
 
+  test("staging write: every bucket has its own reducer, so every task of " +
+      "the write stage writes rows (P = 4 and P = 16)") {
+    val input = parquetPages(400)
+    Seq(4, 16).foreach { p =>
+      // (stage, records written) of each result task the run starts
+      val written = new ConcurrentLinkedQueue[(Int, Long)]()
+      val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskType == "ResultTask")
+            written.add(e.stageId -> e.taskMetrics.outputMetrics.recordsWritten)
+      }
+      Shim.awaitListenerBus(spark)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        // failAfter = 0 stops the run right after staging
+        val e = intercept[RuntimeException] {
+          CheckpointedRun.run(spark, input, "url", (df: DataFrame) => df,
+            tmpDir("staging_balance"), s"b$p", numPartitions = p,
+            failAfter = 0)
+        }
+        assert(e.getMessage == "injected failure before partition 0")
+        Shim.awaitListenerBus(spark)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val tasks = written.asScala.toSeq
+      assert(tasks.map(_._1).distinct.size == 1, tasks)
+      assert(tasks.size == p, tasks)
+      assert(tasks.forall(_._2 > 0),
+        s"records written by each staging task at P=$p: ${tasks.map(_._2)}")
+    }
+  }
+
   test("checkpointed run: numPartitions below 1 is rejected before it is " +
       "recorded, so the run id stays usable") {
     val root = tmpDir("badparts")
@@ -568,53 +600,6 @@ class IcebergIoSpec extends AnyFunSuite {
     val snap = IcebergStyleTable.append(df, root, Seq("part_date"), "url", 8, 2)
     assert(snap.version == 2)
     assert(IcebergStyleTable.read(spark, root).count() == 200)
-  }
-
-  test("zero-copy resume mode: prebucketed input skips the staging " +
-      "rewrite and matches the staged-mode output byte-for-byte") {
-    val input = PagesSynth.pages(spark, 200, 4)
-    val transform = (df: org.apache.spark.sql.DataFrame) => QualityPipeline(df)
-    // pre-bucket exactly as a previous pipeline stage would have
-    val pre = tmpDir("prebucketed")
-    input.withColumn("_bucket", pmod(xxhash64(col("url")), lit(8)))
-      .write.mode("overwrite").partitionBy("_bucket").parquet(pre)
-
-    val root = tmpDir("zerocopy")
-    val res = CheckpointedRun.run(spark, input, "url", transform, root, "z1",
-      numPartitions = 8, prebucketed = Some(pre))
-    assert(res.count(!_.skipped) == 8)
-    // the whole point: NO staging rewrite happened
-    assert(!Files.exists(Paths.get(root, "_staged")))
-
-    val rootB = tmpDir("zerocopyB")
-    CheckpointedRun.run(spark, input, "url", transform, rootB, "z2",
-      numPartitions = 8)
-    val a = CheckpointedRun.output(spark, root, "z1")
-      .select("url", "scrubbed_text", "keep", "perplexity")
-    val b = CheckpointedRun.output(spark, rootB, "z2")
-      .select("url", "scrubbed_text", "keep", "perplexity")
-    assert(a.count() == 200)
-    assert(a.exceptAll(b).count() == 0L && b.exceptAll(a).count() == 0L)
-
-    // a bucket-scheme mismatch must fail loudly, not misroute rows
-    intercept[IllegalArgumentException] {
-      CheckpointedRun.run(spark, input, "url", transform, tmpDir("zc_bad"),
-        "z3", numPartitions = 4, prebucketed = Some(pre))
-    }
-
-    // a layout where only SOME bucket directories are mis-keyed must also
-    // fail: the membership sample draws from EVERY _bucket directory (a
-    // global limit() could satisfy itself entirely from healthy buckets)
-    val pre2 = tmpDir("prebucketed_partial")
-    input.withColumn("_bucket", pmod(xxhash64(col("url")), lit(8)))
-      .write.mode("overwrite").partitionBy("_bucket").parquet(pre2)
-    input.filter(pmod(xxhash64(col("url")), lit(8)) === 0)
-      .write.mode("overwrite").parquet(s"$pre2/_bucket=5")
-    intercept[IllegalArgumentException] {
-      CheckpointedRun.run(spark, input, "url", transform,
-        tmpDir("zc_partial"), "z4", numPartitions = 8,
-        prebucketed = Some(pre2))
-    }
   }
 
   test("compaction: fewer files, same rows, atomic snapshot flip") {

@@ -318,48 +318,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("rpc boundary: one client per task, batched, retried, row-isolated") {
-    import spark.implicits._
-    RpcProbe.reset()
-    val out = graft.ops.RpcBoundary.mapWithClient[Long, (Long, String)](
-      spark.range(0, 200, 1, 4).as[Long],
-      mkClient = () => new RpcProbe,
-      onError = (id, e) => (id, s"ERR:${e.getMessage}"),
-      batchSize = 16,
-      backoffMs = Seq(0L, 0L)) // no sleeping in tests
-      .collect().sortBy(_._1)
-    assert(out.length == 200)
-    // exactly one client per task (4 partitions), closed at task end
-    assert(RpcProbe.constructed.get() == 4, RpcProbe.constructed.get())
-    assert(RpcProbe.closed.get() == 4)
-    // batches really were multi-row
-    assert(RpcProbe.maxBatch.get() > 1)
-    // the transiently-failing batch succeeded via retry; only the poisoned
-    // row (id 137) degraded to an error row
-    val errs = out.filter(_._2.startsWith("ERR:"))
-    assert(errs.map(_._1).toSeq == Seq(137L), errs.toSeq)
-    assert(out.filter(_._1 != 137L).forall(r => r._2 == s"ok-${r._1}"))
-  }
-
-  test("rpc boundary: a short client response fails the task loudly " +
-      "(contract violation), never silent row loss") {
-    import spark.implicits._
-    val thrown = intercept[org.apache.spark.SparkException] {
-      graft.ops.RpcBoundary.mapWithClient[Long, (Long, String)](
-        spark.range(0, 64, 1, 1).as[Long],
-        mkClient = () => new ShortRpcProbe,
-        onError = (id, e) => (id, s"ERR:${e.getMessage}"),
-        batchSize = 16,
-        backoffMs = Seq(0L)).collect()
-    }
-    // the violation must reach the driver as a task failure, not be
-    // retried into the output or data-fied through onError
-    def chain(t: Throwable): Seq[Throwable] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
-    assert(chain(thrown).exists(
-      _.isInstanceOf[graft.ops.RpcContractViolation]), thrown.toString)
-  }
-
   test("multimodal: a decoder returning fewer metas than blobs fails " +
       "loudly instead of misaligning metadata (lazyZip truncation)") {
     import spark.implicits._
@@ -415,40 +373,6 @@ class OpsSpec extends AnyFunSuite {
       .count()
     assert(BatchProbe.seen.get() > 0, "decoder never saw a multi-row batch")
   }
-}
-
-/** Probe RPC client (JVM-singleton counters — closure copies run in the
-  * same local[*] JVM): counts constructions/closes/batch shapes, fails the
-  * first call of the batch containing id 100 (retry path), and always
-  * fails id 137 (per-item isolation path). */
-class RpcProbe extends graft.ops.RpcClient[Long, (Long, String)] {
-  RpcProbe.constructed.incrementAndGet()
-  override def call(batch: Seq[Long]): Seq[(Long, String)] = {
-    RpcProbe.maxBatch.getAndAccumulate(batch.length,
-      (a: Int, b: Int) => math.max(a, b))
-    if (batch.contains(100L) &&
-        RpcProbe.transientFails.getAndIncrement() < 1)
-      throw new RuntimeException("transient")
-    if (batch.contains(137L)) throw new RuntimeException("poisoned")
-    batch.map(id => (id, s"ok-$id"))
-  }
-  override def close(): Unit = { RpcProbe.closed.incrementAndGet(); () }
-}
-object RpcProbe {
-  val constructed = new java.util.concurrent.atomic.AtomicInteger(0)
-  val closed = new java.util.concurrent.atomic.AtomicInteger(0)
-  val maxBatch = new java.util.concurrent.atomic.AtomicInteger(0)
-  val transientFails = new java.util.concurrent.atomic.AtomicInteger(0)
-  def reset(): Unit = { constructed.set(0); closed.set(0); maxBatch.set(0)
-    transientFails.set(0) }
-}
-
-/** Buggy client: silently drops the last request of every multi-request
-  * batch (returns n-1 responses) — the row-loss contract violation. */
-class ShortRpcProbe extends graft.ops.RpcClient[Long, (Long, String)] {
-  override def call(batch: Seq[Long]): Seq[(Long, String)] =
-    batch.dropRight(if (batch.length > 1) 1 else 0)
-      .map(id => (id, s"ok-$id"))
 }
 
 /** Buggy decoder: skips one blob per batch instead of throwing. */

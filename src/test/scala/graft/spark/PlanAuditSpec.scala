@@ -48,6 +48,14 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("aggregate(zip_with"), p.take(2000))
   }
 
+  test("d1/d2/d3 pii queries: per-type counts are native array functions " +
+      "— no lambda in the executed plan") {
+    Seq("d1_pii_counts", "d2_pii_matches", "d3_pii_financial").foreach { q =>
+      val p = plan(q)
+      assert(!p.contains("lambdafunction"), s"$q:\n${p.take(3000)}")
+    }
+  }
+
   test("dedup_minhash_pairs: no cartesian or nested-loop join anywhere") {
     val p = plan("dedup_minhash_pairs")
     assert(!p.contains("CartesianProduct"), p.take(3000))

@@ -37,14 +37,17 @@ class RunJobSpec extends AnyFunSuite {
   test("argument parsing: required args enforced, flags mapped") {
     val a = RunJob.parseArgs(Array("--input", "/i", "--output", "/o",
       "--run-id", "r1", "--partitions", "6", "--salt-buckets", "4",
-      "--shuffle-partitions", "3", "--prebucketed", "/p", "--compact"))
-    assert(a == RunJob.JobArgs("/i", "/o", "r1", 6, 4, 3, Some("/p"),
-      compact = true))
+      "--shuffle-partitions", "3", "--compact"))
+    assert(a == RunJob.JobArgs("/i", "/o", "r1", 6, 4, 3, compact = true))
     intercept[IllegalArgumentException] {
       RunJob.parseArgs(Array("--input", "/i"))
     }
-    intercept[IllegalArgumentException] {
-      RunJob.parseArgs(Array("--bogus", "x"))
+    Seq("--bogus", "--prebucketed").foreach { flag =>
+      val e = intercept[IllegalArgumentException] {
+        RunJob.parseArgs(Array("--input", "/i", "--output", "/o",
+          "--run-id", "r1", flag, "x"))
+      }
+      assert(e.getMessage == s"unknown argument: $flag", e.getMessage)
     }
     // a count below 1 is rejected up front, naming its flag
     Seq("--partitions" -> "0", "--partitions" -> "-3",

@@ -49,251 +49,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch.exceptAll(streamed).count() == 0L)
   }
 
-  test("stateful cross-batch dedup: re-crawled identical pages dropped") {
-    val dir = Files.createTempDirectory("stream_dedup").toString
-    val pages = PagesSynth.pages(spark, 50, 2)
-    // batch 1: originals; batch 2: exact re-crawls of 0..24 + 25 new docs
-    pages.write.mode("overwrite").parquet(s"$dir/in")
-    val stream = spark.readStream.schema(pages.schema).parquet(s"$dir/in")
-    def runOnce(): Unit = {
-      val q = graft.streaming.StreamingQuality.dedupFirstSeen(stream)
-        .toDF("url", "text")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/ckpt")
-        // Trigger.Once, not AvailableNow: with ProcessingTimeTimeout,
-        // FlatMapGroupsWithStateExec.shouldRunAnotherBatch always requests
-        // another batch, so AvailableNow keeps appending timeout-draining
-        // no-data batches and termination is slow/unbounded (measured:
-        // 18 min for this spec). One batch per runOnce is exactly the
-        // semantics these tests drive.
-        .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-      awaitDone(q)
-    }
-    runOnce()
-    assert(spark.read.parquet(s"$dir/out").count() == 50)
-
-    // second micro-batch: 25 identical re-crawls + 25 genuinely new pages
-    PagesSynth.pages(spark, 25, 2)
-      .union(PagesSynth.pages(spark, 75, 2)
-        .filter(col("url").rlike("/page/(5[0-9]|6[0-9]|7[0-4])$")))
-      .write.mode("append").parquet(s"$dir/in")
-    runOnce()
-    // only the 25 new urls pass; the 25 re-crawls are stateful-deduped
-    val out = spark.read.parquet(s"$dir/out")
-    assert(out.count() == 75)
-    assert(out.select("url").distinct().count() == 75)
-  }
-
-  test("stateful dedup remembers ALL past fingerprints (A->B->A) and " +
-      "emits multiple fresh fingerprints within one batch") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("stream_dedup_ab").toString
-    def write(rows: Seq[(String, String)], mode: String): Unit =
-      rows.toDF("url", "text").write.mode(mode).parquet(s"$dir/in")
-    // batch 1 carries TWO distinct fingerprints for u1 — both must emit
-    write(Seq(("u1", "A"), ("u1", "B"), ("u2", "X")), "overwrite")
-    val schema = spark.read.parquet(s"$dir/in").schema
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
-      val q = graft.streaming.StreamingQuality.dedupFirstSeen(stream)
-        .toDF("url", "text")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/ckpt")
-        // Trigger.Once, not AvailableNow: with ProcessingTimeTimeout,
-        // FlatMapGroupsWithStateExec.shouldRunAnotherBatch always requests
-        // another batch, so AvailableNow keeps appending timeout-draining
-        // no-data batches and termination is slow/unbounded (measured:
-        // 18 min for this spec). One batch per runOnce is exactly the
-        // semantics these tests drive.
-        .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-      awaitDone(q)
-    }
-    runOnce()
-    val out1 = spark.read.parquet(s"$dir/out").as[(String, String)]
-      .collect().toSet
-    assert(out1 == Set(("u1", "A"), ("u1", "B"), ("u2", "X")), out1)
-
-    // batch 2: u1 reverts to A (seen two batches ago) — must NOT re-emit;
-    // u1 also gets a genuinely new C — must emit
-    write(Seq(("u1", "A"), ("u1", "C")), "append")
-    runOnce()
-    val out2 = spark.read.parquet(s"$dir/out").as[(String, String)]
-      .collect().toSet
-    assert(out2 == out1 + (("u1", "C")), out2)
-  }
-
-  test("stateful dedup state is bounded: TTL expiry evicts the key and a " +
-      "later re-crawl re-admits") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("stream_dedup_ttl").toString
-    def write(rows: Seq[(String, String)], mode: String): Unit =
-      rows.toDF("url", "text").write.mode(mode).parquet(s"$dir/in")
-    write(Seq(("u1", "A"), ("keepalive", "Z0")), "overwrite")
-    val schema = spark.read.parquet(s"$dir/in").schema
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
-      val q = graft.streaming.StreamingQuality
-        .dedupFirstSeen(stream, ttl = "1 second")
-        .toDF("url", "text")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/ckpt")
-        // Trigger.Once: see the non-termination note in the first dedup test
-        .trigger(Trigger.Once()).start()
-      awaitDone(q)
-    }
-    runOnce()
-    // let u1's 1s processing-time TTL lapse, then run a batch with data
-    // only for OTHER keys — u1 has no data, so its expired timeout fires
-    // and the state is removed
-    Thread.sleep(2500)
-    write(Seq(("keepalive", "Z1")), "append")
-    runOnce()
-    // u1 re-crawls the SAME content A: state was expired, so it re-emits
-    write(Seq(("u1", "A")), "append")
-    runOnce()
-    val u1 = spark.read.parquet(s"$dir/out").as[(String, String)]
-      .collect().toSeq.filter(_._1 == "u1")
-    assert(u1 == Seq(("u1", "A"), ("u1", "A")),
-      s"expected A re-admitted after TTL expiry, got $u1")
-  }
-
-  test("stateful dedup per-key set is capped: oldest fingerprint evicted " +
-      "and re-admitted, newest retained") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("stream_dedup_cap").toString
-    def write(rows: Seq[(String, String)], mode: String): Unit =
-      rows.toDF("url", "text").write.mode(mode).parquet(s"$dir/in")
-    // A then B then C through a cap of 2, ONE fingerprint per batch —
-    // within a batch the group iterator's order is not the input order,
-    // so only per-batch sequencing pins which entry is "oldest"
-    write(Seq(("u1", "A")), "overwrite")
-    val schema = spark.read.parquet(s"$dir/in").schema
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
-      val q = graft.streaming.StreamingQuality
-        .dedupFirstSeen(stream, maxFingerprints = 2)
-        .toDF("url", "text")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/ckpt")
-        // Trigger.Once: see the non-termination note in the first dedup test
-        .trigger(Trigger.Once()).start()
-      awaitDone(q)
-    }
-    runOnce()
-    write(Seq(("u1", "B")), "append")
-    runOnce()
-    // C's insert exceeds the cap and evicts the OLDEST entry, A
-    write(Seq(("u1", "C")), "append")
-    runOnce()
-    // B and C are still in state (deduped); evicted A re-admits
-    write(Seq(("u1", "B"), ("u1", "C")), "append")
-    runOnce()
-    write(Seq(("u1", "A")), "append")
-    runOnce()
-    val out = spark.read.parquet(s"$dir/out").as[(String, String)]
-      .collect().toSeq.sortBy(_._2)
-    assert(out == Seq(("u1", "A"), ("u1", "A"), ("u1", "B"), ("u1", "C")),
-      s"expected A re-admitted after cap eviction, got $out")
-  }
-
-  test("stateful dedup cap is LRU, not FIFO: the actively recurring " +
-      "fingerprint survives stale one-offs filling the cap") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("stream_dedup_lru").toString
-    def write(rows: Seq[(String, String)], mode: String): Unit =
-      rows.toDF("url", "text").write.mode(mode).parquet(s"$dir/in")
-    write(Seq(("u1", "A")), "overwrite")
-    val schema = spark.read.parquet(s"$dir/in").schema
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
-      val q = graft.streaming.StreamingQuality
-        .dedupFirstSeen(stream, maxFingerprints = 2)
-        .toDF("url", "text")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(Trigger.Once()).start()
-      awaitDone(q)
-    }
-    runOnce()
-    // each batch re-sees the page's CURRENT content A (a hit, refreshing
-    // recency) plus one fresh stale fingerprint; under FIFO eviction A —
-    // the oldest insertion — would be evicted at the cap and the next
-    // unchanged re-crawl would wrongly re-emit as first-seen
-    Seq("X", "Y", "Z").foreach { stale =>
-      write(Seq(("u1", "A"), ("u1", stale)), "append")
-      runOnce()
-    }
-    write(Seq(("u1", "A")), "append")
-    runOnce()
-    val emittedA = spark.read.parquet(s"$dir/out").as[(String, String)]
-      .collect().count(_ == (("u1", "A")))
-    assert(emittedA == 1,
-      s"content A re-emitted $emittedA times — cap evicted the live " +
-        "fingerprint (FIFO) instead of a stale one (LRU)")
-  }
-
-  test("stateful dedup at realistic key cardinality: 100k distinct urls, " +
-      "state rows stay == keys (not keys x batches), memory flat once the " +
-      "per-key cap is reached, batch latency flat") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("stream_dedup_scale").toString
-    val nKeys = 100000
-    def write(batch: Int, mode: String): Unit =
-      spark.range(nKeys)
-        .select(concat(lit("u"), col("id")).as("url"),
-          concat(lit(s"content-$batch-"), col("id")).as("text"))
-        .write.mode(mode).parquet(s"$dir/in")
-    write(0, "overwrite")
-    val schema = spark.read.parquet(s"$dir/in").schema
-
-    final case class BatchStats(stateRows: Long, stateBytes: Long,
-                                wallMs: Long)
-    def runOnce(): BatchStats = {
-      val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
-      val t0 = System.nanoTime()
-      val q = graft.streaming.StreamingQuality
-        .dedupFirstSeen(stream, maxFingerprints = 2)
-        .toDF("url", "text")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/ckpt")
-        // Trigger.Once: see the non-termination note in the first dedup test
-        .trigger(Trigger.Once()).start()
-      awaitDone(q)
-      val wall = (System.nanoTime() - t0) / 1000000
-      val so = q.lastProgress.stateOperators(0)
-      BatchStats(so.numRowsTotal, so.memoryUsedBytes, wall)
-    }
-
-    // every batch re-crawls ALL 100k urls with CHANGED content — the
-    // adversarial case where unbounded dedup state grows keys x batches
-    val stats = (0 to 3).map { b =>
-      if (b > 0) write(b, "append")
-      runOnce()
-    }
-    // all-fresh content: every row passes every batch
-    assert(spark.read.parquet(s"$dir/out").count() == 4L * nKeys)
-
-    // state rows == number of keys after every batch (one state entry per
-    // key, never per (key, batch))
-    stats.foreach(s => assert(s.stateRows == nKeys,
-      s"state rows ${s.stateRows} != $nKeys"))
-    // per-key cap of 2 is reached at batch 1; state MEMORY must be flat
-    // afterwards (batch 3 vs batch 1), not growing with batches seen
-    assert(stats(3).stateBytes <= (stats(1).stateBytes * 1.3).toLong,
-      s"state bytes grew past the cap: ${stats.map(_.stateBytes)}")
-    // batch latency flat: the last all-rewrite batch costs no more than
-    // 3x the second (generous bound for shared-host noise — the failure
-    // mode guarded against is superlinear growth in state size)
-    assert(stats(3).wallMs <= stats(1).wallMs * 3,
-      s"batch latency not flat: ${stats.map(_.wallMs)}")
-  }
-
   test("watermarked tumbling-window aggregation over events") {
     val dir = Files.createTempDirectory("stream_events").toString
     // driver parquet carries TIMESTAMP_NTZ; watermarks need TIMESTAMP (LTZ)
