@@ -38,9 +38,14 @@ import graft.pipeline.QualityPipeline
   * to a no-op instead of appending a duplicate snapshot. Killed BEFORE
   * the commit, the rerun skips all completed partitions and performs just
   * the commit — so the table holds the run's rows exactly once under any
-  * kill/retry schedule.
+  * kill/retry schedule. Once the marker is published, the run's partition
+  * outputs (`<output>/work/run=<id>`, a second copy of the committed
+  * rows) are deleted, and a rerun of a committed run retries that
+  * deletion; the progress dir with its manifests and marker stays.
   *
-  * Job identity is the explicit `--run-id` (O2 — no wall clock), and the
+  * Job identity is the explicit `--run-id` (O2 — no wall clock), a plain
+  * name checked before anything is written (`[A-Za-z0-9._-]+`, not `.`
+  * or `..`: it becomes a path component and a JSON string), and the
   * partition count is part of that identity (CheckpointedRun refuses a
   * resume with a different `--partitions`).
   */
@@ -95,6 +100,7 @@ object RunJob {
     }
     require(a.input.nonEmpty && a.output.nonEmpty && a.runId.nonEmpty,
       "--input, --output and --run-id are required")
+    CheckpointedRun.checkRunId(a.runId)
     a
   }
 
@@ -156,6 +162,9 @@ object RunJob {
       // heal a lost or unparseable marker
       if (markerVersion.isEmpty && v.isDefined)
         io.publish(marker, markerJson(args, v.get, rows))
+      // and finish the reclamation of the partition outputs, which a kill
+      // after the marker may have cut short
+      io.delete(CheckpointedRun.runDir(workRoot(args), args.runId))
       JobResult(results, IcebergStyleTable.currentVersion(tableRoot(args)),
         rows, committedThisRun = false)
     } else {
@@ -165,6 +174,9 @@ object RunJob {
         shufflePartitions = args.shufflePartitions,
         extraMeta = Map("run_id" -> args.runId))
       io.publish(marker, markerJson(args, snap.version, snap.rowCount))
+      // the table holds the rows now: the partition outputs are a second
+      // copy of them, so reclaim it
+      io.delete(CheckpointedRun.runDir(workRoot(args), args.runId))
       // optional out-of-band small-file compaction: a new snapshot with
       // an atomic flip — readers never see a partial rewrite. Runs AFTER
       // the commit record: a kill during compaction leaves the appended

@@ -3,7 +3,6 @@ package graft.core
 /** Result of the fused per-document pass (SURVEY §1.4 output row, minus
   * the pass-through columns). */
 final case class DocResult(
-    fullText: String,
     scrubbedText: String,
     matches: Vector[PiiMatch],
     nRedacted: Int,
@@ -65,12 +64,12 @@ object DocProcessor {
         pipelineRules(ppl, conf)
       val t5 = System.nanoTime()
       StageTimers.record(scope, t0, t1, t2, t3, t4, t5)
-      DocResult(full, scrubbed, matches,
+      DocResult(scrubbed, matches,
         nRedacted, lang, conf, ppl, rules,
         keep = !rules.exists(_.fired), error = None)
     } catch {
       case e: Throwable =>
-        DocResult("", "", Vector.empty, 0, "und", 0.0,
+        DocResult("", Vector.empty, 0, "und", 0.0,
           NGramLM.PerplexityEmpty, Vector.empty, keep = false,
           error = Some(s"${e.getClass.getName}: ${e.getMessage}"))
     }

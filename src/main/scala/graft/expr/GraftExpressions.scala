@@ -40,11 +40,17 @@ import graft.core._
   * (SURVEY §2.8 rationale).
   */
 object GraftSchemas {
-  val matchStruct: StructType = StructType(Seq(
+  /** A PII span as the pipeline commits it: the type and the offsets
+    * into the canonical text (`graft_extract_text` of the input), without
+    * the matched string, so no clear-text PII leaves the fused pass. */
+  val spanStruct: StructType = StructType(Seq(
     StructField("pii_type", StringType, nullable = false),
     StructField("start", IntegerType, nullable = false),
-    StructField("end", IntegerType, nullable = false),
-    StructField("text", StringType, nullable = false)))
+    StructField("end", IntegerType, nullable = false)))
+
+  /** A span with its matched string, for the PII queries. */
+  val matchStruct: StructType =
+    spanStruct.add(StructField("text", StringType, nullable = false))
 
   val tokenStruct: StructType = StructType(Seq(
     StructField("text", StringType, nullable = false),
@@ -73,11 +79,11 @@ object GraftSchemas {
     StructField("text", StringType, nullable = false),
     StructField("error", StringType, nullable = true)))
 
-  /** Output of the fused per-document pass. */
+  /** Output of the fused per-document pass: the scrubbed text and the
+    * spans, never the unscrubbed text. */
   val pageProcessStruct: StructType = StructType(Seq(
-    StructField("full_text", StringType, nullable = false),
     StructField("scrubbed_text", StringType, nullable = false),
-    StructField("pii_matches", ArrayType(matchStruct, containsNull = false),
+    StructField("pii_matches", ArrayType(spanStruct, containsNull = false),
       nullable = false),
     StructField("n_redacted", IntegerType, nullable = false),
     StructField("lang", StringType, nullable = false),
@@ -105,6 +111,11 @@ object GraftSchemas {
     new GenericArrayData(ms.map { m =>
       InternalRow(constUtf8(m.piiType.value), m.start, m.end,
         UTF8String.fromString(m.text))
+    }.toArray[Any])
+
+  def spansToCatalyst(ms: Seq[PiiMatch]): ArrayData =
+    new GenericArrayData(ms.map { m =>
+      InternalRow(constUtf8(m.piiType.value), m.start, m.end)
     }.toArray[Any])
 
   def rulesToCatalyst(rs: Seq[RuleResult]): ArrayData =
@@ -163,13 +174,13 @@ object Kernels {
   /** `graft_page_process(text)` — the fused whole-pipeline pass:
     * tokenize once → PII scan/refine/join/scrub + langid + perplexity +
     * lang-aware heuristics + keep/drop + full rule lineage, with per-row
-    * fault isolation (error column instead of stage failure, O1). */
+    * fault isolation (error column instead of stage failure, O1). Emits
+    * the scrubbed text and PII spans only (`pageProcessStruct`). */
   def pageProcess(v: UTF8String): InternalRow = {
     val r = DocProcessor.process(v.toString, stageScope())
     InternalRow(
-      UTF8String.fromString(r.fullText),
       UTF8String.fromString(r.scrubbedText),
-      GraftSchemas.matchesToCatalyst(r.matches),
+      GraftSchemas.spansToCatalyst(r.matches),
       r.nRedacted,
       GraftSchemas.constUtf8(r.lang),
       r.langConf,

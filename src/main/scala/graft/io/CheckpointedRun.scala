@@ -41,6 +41,12 @@ object CheckpointedRun {
   /** Most files per staged bucket directory (bounded total: P x this). */
   final val StagedSubsplits = 8
 
+  /** A run id names directories that are deleted recursively and is
+    * written unescaped into JSON, so only a plain file name qualifies. */
+  def checkRunId(runId: String): Unit =
+    require(runId.matches("[A-Za-z0-9._-]+") && runId != "." && runId != "..",
+      s"--run-id must match [A-Za-z0-9._-]+ and not be . or .. (got '$runId')")
+
   private def progressDir(root: String, runId: String) =
     new Path(s"$root/_progress/run=$runId")
 
@@ -88,6 +94,7 @@ object CheckpointedRun {
           failAfter: Int = Int.MaxValue): Seq[PartitionResult] = {
     // checked before `_num_partitions` is recorded: a bad value must not
     // become part of the run's identity
+    checkRunId(runId)
     require(numPartitions >= 1,
       s"numPartitions must be at least 1 (got $numPartitions)")
     val io = RootFs(spark, root)
@@ -302,6 +309,9 @@ object CheckpointedRun {
   private def stagedDir(root: String, runId: String) =
     new Path(s"$root/_staged/run=$runId")
 
+  /** The run's partition outputs, `partition=<k>` below it. */
+  def runDir(root: String, runId: String): Path = new Path(s"$root/run=$runId")
+
   private def partitionDir(root: String, runId: String, k: Int): String =
     s"$root/run=$runId/partition=$k"
 
@@ -312,7 +322,10 @@ object CheckpointedRun {
     * `partition=<k>` directories by name, for every k below the run's
     * recorded partition count. A `partition=*` glob would have Spark's
     * FileStreamSink probe the literal glob path for a `_spark_metadata`
-    * log and log the resulting FileNotFoundException at WARN. */
+    * log and log the resulting FileNotFoundException at WARN.
+    *
+    * Valid only until the outputs are committed: `RunJob` deletes
+    * [[runDir]] once its commit marker is published. */
   def output(spark: SparkSession, root: String, runId: String): DataFrame = {
     val parts = RootFs(spark, root).read(numPartitionsFile(root, runId))
       .trim.toInt

@@ -43,7 +43,14 @@ object QualityPipeline {
     * whitespace class matches U+00A0 or U+3000). */
   final val BlankChars: String = graft.core.Blank.Chars
 
-  /** pages(url, warc_ts, html, text, lang) → output rows (SURVEY §1.4). */
+  /** pages(url, warc_ts, html, text, lang) → output rows (SURVEY §1.4):
+    * `url, warc_ts, lang_claimed, lang_pred, lang_conf, perplexity, keep,
+    * scrubbed_text, pii_matches, n_redacted, rule_lineage, error,
+    * part_date, host_bucket`. The document text leaves only scrubbed: the
+    * extracted text holds the PII the scrub removed, so it stays inside
+    * the fused pass, and `pii_matches` carries each span's type and
+    * offsets, not its string. `graft_extract_text` of the routed input
+    * rebuilds the extracted text where a caller needs it. */
   def apply(pages: DataFrame): DataFrame = {
     pages
       // S2 validation analog FIRST, on source columns only — keeps the
@@ -89,7 +96,6 @@ object QualityPipeline {
         col("p.conf").as("lang_conf"),
         col("p.perplexity").as("perplexity"),
         col("p.keep").as("keep"),
-        col("p.full_text").as("extracted_text"),
         col("p.scrubbed_text").as("scrubbed_text"),
         col("p.pii_matches").as("pii_matches"),
         col("p.n_redacted").as("n_redacted"),

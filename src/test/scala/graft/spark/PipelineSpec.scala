@@ -1,8 +1,10 @@
 package graft.spark
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.expr.GraftFunctions.{extract_text, html_text_safe, is_blank_text}
 import graft.model.PagesSynth
 import graft.pipeline.QualityPipeline
 
@@ -20,6 +22,18 @@ class PipelineSpec extends AnyFunSuite {
       .cast("long"))
     .cache()
   private lazy val truths = PagesSynth.truths(spark, N, 8)
+
+  /** `pages` joined by url with the text the pipeline scores, which its
+    * output no longer carries: the P1 route (blank or missing text with
+    * html → `graft_html_text_safe`), then `graft_extract_text`'s
+    * canonical rebuild. */
+  private def withExtracted(pages: DataFrame, out: DataFrame): DataFrame = {
+    val routed = when((col("text").isNull || is_blank_text(col("text"))) &&
+      col("html").isNotNull, html_text_safe(col("html")).getField("text"))
+      .otherwise(col("text"))
+    out.join(pages.select(col("url"),
+      extract_text(routed).as("extracted_text")), "url")
+  }
 
   test("keep/drop F1 >= 0.99 vs planted labels (hard gate)") {
     val j = out.join(truths, "id")
@@ -63,13 +77,11 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("byte-identical output per url across different partitionings") {
-    val a = QualityPipeline(PagesSynth.pages(spark, 400, 2))
+    def run(pages: DataFrame) = withExtracted(pages, QualityPipeline(pages))
       .select(col("url"), col("extracted_text"), col("scrubbed_text"),
         col("lang_pred"), col("perplexity"), col("keep"))
-    val b = QualityPipeline(
-        PagesSynth.pages(spark, 400, 13).repartition(7, col("url")))
-      .select(col("url"), col("extracted_text"), col("scrubbed_text"),
-        col("lang_pred"), col("perplexity"), col("keep"))
+    val a = run(PagesSynth.pages(spark, 400, 2))
+    val b = run(PagesSynth.pages(spark, 400, 13).repartition(7, col("url")))
     assert(a.exceptAll(b).count() == 0L)
     assert(b.exceptAll(a).count() == 0L)
   }
@@ -78,10 +90,11 @@ class PipelineSpec extends AnyFunSuite {
     val pages = PagesSynth.pages(spark, N, 8)
     val htmlOnly = pages.filter(col("text").isNull && col("html").isNotNull)
     assert(htmlOnly.count() > 0, "generator should emit html-only rows")
-    val processed = out.join(
-      htmlOnly.select(regexp_extract(col("url"), "/page/(\\d+)$", 1)
-        .cast("long").as("id")), "id")
+    val processed = withExtracted(htmlOnly, out)
     assert(processed.count() == htmlOnly.count())
+    // the pipeline scored the extracted text: unscrubbed, it is that text
+    assert(processed.filter(col("n_redacted") === 0 &&
+      col("scrubbed_text") =!= col("extracted_text")).count() == 0L)
     // extracted text is non-empty and html tags are gone
     assert(processed.filter(length(col("extracted_text")) < 50).count() == 0L)
     assert(processed.filter(col("extracted_text").contains("<p>")).count() == 0L)
@@ -104,12 +117,15 @@ class PipelineSpec extends AnyFunSuite {
       ("not-a-url-at-all", new java.sql.Timestamp(0L),
         None: Option[Array[Byte]], Some("plain text body here"), "en"))
       .toDF("url", "warc_ts", "html", "text", "lang")
-    val byUrl = QualityPipeline(rows)
+    val byUrl = withExtracted(rows, QualityPipeline(rows))
       .select("url", "extracted_text", "host_bucket")
       .collect().map(r => r.getString(0) -> (r.getString(1), r.getInt(2)))
       .toMap
     assert(byUrl("https://a.example/1")._1.contains("quick brown fox"),
       "blank text must route to html extraction")
+    // and the pipeline scored that text (it holds no PII to scrub)
+    assert(QualityPipeline(rows).filter(col("url") === "https://a.example/1")
+      .head().getAs[String]("scrubbed_text") == byUrl("https://a.example/1")._1)
     // uppercase scheme extracts a host; pure junk hashes the whole url —
     // neither may equal the empty-string hash bucket
     val emptyBucket = math.floorMod(
@@ -134,7 +150,8 @@ class PipelineSpec extends AnyFunSuite {
       .toDF("url", "text", "html")
       .withColumn("warc_ts", lit("2025-01-01 00:00:00").cast("timestamp"))
       .withColumn("lang", lit("en"))
-    val rows = QualityPipeline(pages).orderBy("url").collect()
+    val rows = withExtracted(pages, QualityPipeline(pages))
+      .orderBy("url").collect()
     assert(rows.length == 2, "both rows must survive the stage")
     val bad = rows(0)
     // the formerly-lethal entities decode to spaces; the row is scored,

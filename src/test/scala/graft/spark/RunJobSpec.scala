@@ -1,7 +1,8 @@
 package graft.spark
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.sql.Timestamp
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
@@ -9,12 +10,13 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.RunJob
 import graft.io.{CheckpointedRun, IcebergStyleTable}
-import graft.model.PagesSynth
+import graft.model.{PageRow, PagesSynth}
 
 /** End-to-end gate for the composed spark-submit entry (graft.RunJob):
   * pages parquet → QualityPipeline → CheckpointedRun → atomic
@@ -59,6 +61,116 @@ class RunJobSpec extends AnyFunSuite {
         }
         assert(e.getMessage.contains(flag), e.getMessage)
     }
+  }
+
+  test("a run id that is not a plain name is rejected before anything " +
+      "is written") {
+    Seq("fresh_p4-s1-warmup", "job_w", "smoke1", "c1", "r.2", "A-b_9")
+      .foreach { id =>
+        assert(RunJob.parseArgs(Array("--input", "/i", "--output", "/o",
+          "--run-id", id)).runId == id)
+      }
+    val in = writeInput(40)
+    Seq("a/../b", "x\"y", "..", ".", "", "a b", "run/x").foreach { id =>
+      val e = intercept[IllegalArgumentException] {
+        RunJob.parseArgs(Array("--input", "/i", "--output", "/o",
+          "--run-id", id))
+      }
+      assert(e.getMessage.contains("--run-id"), e.getMessage)
+      // a job built without parseArgs is stopped as well, before
+      // CheckpointedRun records anything under the output root
+      val out = Paths.get(tmpDir("runjob_out"), "job")
+      val e2 = intercept[IllegalArgumentException] {
+        RunJob.execute(spark, RunJob.JobArgs(in, out.toString, id,
+          partitions = 2, saltBuckets = 4, shufflePartitions = 4))
+      }
+      assert(e2.getMessage.contains("--run-id"), e2.getMessage)
+      assert(!Files.exists(out), s"$out was created for run id '$id'")
+    }
+  }
+
+  /** The parquet files at any depth under `root`. */
+  private def parquetFiles(root: String): Seq[Path] =
+    if (!Files.exists(Paths.get(root))) Seq.empty
+    else {
+      val s = Files.walk(Paths.get(root))
+      try s.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      finally s.close()
+    }
+
+  /** Every string value, at any nesting depth, of the rows in `files`
+    * (read with their schemas merged, so no file's column is dropped). */
+  private def stringsIn(files: Seq[Path]): Seq[String] = {
+    def strings(v: Any): Iterator[String] = v match {
+      case s: String => Iterator(s)
+      case r: Row => r.toSeq.iterator.flatMap(strings)
+      case xs: Iterable[_] => xs.iterator.flatMap(strings)
+      case (a, b) => strings(a) ++ strings(b)
+      case _ => Iterator.empty
+    }
+    if (files.isEmpty) Seq.empty
+    else spark.read.option("mergeSchema", "true")
+      .parquet(files.map(_.toString): _*).collect().toSeq.flatMap(strings)
+  }
+
+  test("privacy: no parquet file under the work or table root holds a " +
+      "planted SSN, killed or committed, and the partition outputs are " +
+      "reclaimed after the commit") {
+    import spark.implicits._
+    val ssn = "123-45-6789"
+    // the planted doc's url hashes to partition 0, which the killed
+    // attempt writes
+    val url = spark.range(100)
+      .select(concat(lit("https://pii.example/doc/"), col("id")).as("url"))
+      .filter(pmod(xxhash64(col("url")), lit(4)) === 0).head().getString(0)
+    val text = (1 to 12).map(i =>
+      s"the quick brown fox number $i jumps over the lazy dog today.")
+      .mkString(" ") + s" my ssn is $ssn, please keep it safe."
+    val in = tmpDir("runjob_in")
+    PagesSynth.pages(spark, 120, 4)
+      .union(Seq(PageRow(url, Timestamp.valueOf("2025-01-01 00:00:00"),
+        None, Some(text), "en")).toDF())
+      .write.mode("overwrite").parquet(in)
+    val args = RunJob.JobArgs(in, tmpDir("runjob_out"), "job_p",
+      partitions = 4, saltBuckets = 4, shufflePartitions = 4)
+    val work = RunJob.workRoot(args)
+    def leaks(files: Seq[Path]) = stringsIn(files).filter(_.contains(ssn))
+
+    intercept[RuntimeException] { RunJob.execute(spark, args, failAfter = 2) }
+    val (staged, outputs) = parquetFiles(work)
+      .partition(_.toString.contains("/_staged/"))
+    // the staged input copy holds the SSN, so the scan can see one
+    assert(leaks(staged).nonEmpty)
+    val killed = stringsIn(outputs)
+    assert(killed.contains(url), "the planted doc's partition was not written")
+    assert(!killed.exists(_.contains(ssn)))
+
+    val res = RunJob.execute(spark, args)
+    assert(res.committedThisRun && res.tableRows == 121)
+    val committed = parquetFiles(work) ++ parquetFiles(RunJob.tableRoot(args))
+    assert(stringsIn(committed).contains(url))
+    assert(leaks(committed).isEmpty)
+    assert(!Files.exists(Paths.get(work, "run=job_p")))
+    assert(CheckpointedRun.metricsTable(spark, work, "job_p").count() == 4)
+  }
+
+  test("a leftover partition output of a committed run is removed by the " +
+      "rerun, which commits nothing") {
+    val args = RunJob.JobArgs(writeInput(100), tmpDir("runjob_out"), "job_h",
+      partitions = 4, saltBuckets = 4, shufflePartitions = 4)
+    val res1 = RunJob.execute(spark, args)
+    assert(res1.committedThisRun)
+    // a kill during the reclamation leaves part of the run dir behind
+    val runDir = Paths.get(RunJob.workRoot(args), "run=job_h")
+    val leftover = runDir.resolve("partition=0").resolve("part-0.parquet")
+    Files.createDirectories(leftover.getParent)
+    Files.write(leftover, "left".getBytes(UTF_8))
+    val res2 = RunJob.execute(spark, args)
+    assert(!res2.committedThisRun)
+    assert(IcebergStyleTable.snapshots(RunJob.tableRoot(args)) == Seq(1))
+    assert(res2.tableRows == res1.tableRows)
+    assert(!Files.exists(runDir))
   }
 
   test("full job: pipeline output lands in the table exactly once, with " +
@@ -129,7 +241,7 @@ class RunJobSpec extends AnyFunSuite {
     assert(traces.isEmpty, traces.map(e =>
       s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}: " +
         e.getThrown).mkString("\n"))
-    assert(!CheckpointedRun.output(spark, RunJob.workRoot(args), "job_l")
+    assert(!IcebergStyleTable.read(spark, RunJob.tableRoot(args))
       .columns.contains("partition"))
   }
 

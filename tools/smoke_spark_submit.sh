@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # End-to-end smoke of the literal spark-submit invocation documented in
 # README: thin jar + Spark-provided classpath, MakePages -> RunJob ->
-# row-count assertion against the committed table. Exits non-zero on any
+# row-count assertion against the committed table, and a check that the
+# committed run's partition outputs were reclaimed. Exits non-zero on any
 # failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -36,4 +37,7 @@ ROWS=$(echo "$STATUS" | grep -o '"table_rows":[0-9]*' | cut -d: -f2)
 ROWS2=$(echo "$STATUS2" | grep -o '"table_rows":[0-9]*' | cut -d: -f2)
 test "$ROWS" = "$ROWS2"
 test "$ROWS" -gt 0
+# the committed run keeps its commit marker but not its partition outputs
+test ! -e "$WORK/job/work/run=smoke1"
+test -f "$WORK/job/work/_progress/run=smoke1/_committed.json"
 echo "SMOKE OK: $ROWS rows committed exactly once via literal spark-submit"
