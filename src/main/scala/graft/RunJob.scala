@@ -134,9 +134,9 @@ object RunJob {
       failAfter = failAfter)
 
     // Exactly-once commit detection: the DURABLE record is the run_id
-    // stamped into the snapshot JSON at the atomic hint flip (the marker
-    // alone had a crash window — a kill between hint flip and marker
-    // write would make the rerun append a duplicate snapshot). The
+    // stamped into the snapshot JSON, whose publish is the commit (the
+    // marker alone had a crash window — a kill between the commit and the
+    // marker write would make the rerun append a duplicate snapshot). The
     // marker remains as a fast path and a metrics record.
     val io = RootFs(spark, workRoot(args))
     val marker = commitMarker(args)
@@ -159,9 +159,12 @@ object RunJob {
       // the snapshot first): report rows as 0 rather than guessing
       val rows = v.map(IcebergStyleTable.snapshotAddedRows(tableRoot(args), _))
         .getOrElse(0L)
-      // heal a lost or unparseable marker
-      if (markerVersion.isEmpty && v.isDefined)
+      // heal a lost or unparseable marker; publish never replaces, so an
+      // unparseable one goes first
+      if (markerVersion.isEmpty && v.isDefined) {
+        io.delete(marker)
         io.publish(marker, markerJson(args, v.get, rows))
+      }
       // and finish the reclamation of the partition outputs, which a kill
       // after the marker may have cut short
       io.delete(CheckpointedRun.runDir(workRoot(args), args.runId))
@@ -177,11 +180,12 @@ object RunJob {
       // the table holds the rows now: the partition outputs are a second
       // copy of them, so reclaim it
       io.delete(CheckpointedRun.runDir(workRoot(args), args.runId))
-      // optional out-of-band small-file compaction: a new snapshot with
-      // an atomic flip — readers never see a partial rewrite. Runs AFTER
-      // the commit record: a kill during compaction leaves the appended
-      // snapshot live and the rerun a no-op (compaction is re-runnable
-      // maintenance, not part of the run's exactly-once contract).
+      // optional out-of-band small-file compaction: a new snapshot,
+      // committed the same way — readers never see a partial rewrite.
+      // Runs AFTER the commit record: a kill during compaction leaves the
+      // appended snapshot live and the rerun a no-op (compaction is
+      // re-runnable maintenance, not part of the run's exactly-once
+      // contract).
       val finalVersion =
         if (args.compact)
           IcebergStyleTable.compact(spark, tableRoot(args),

@@ -1,10 +1,10 @@
 package graft.io
 
-import java.io.IOException
+import java.util.{ConcurrentModificationException, UUID}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,30 +13,41 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** Iceberg-style table layout without the Iceberg runtime jar
   * (SURVEY §7.4 — no Iceberg artifact exists in /opt/spark/jars or the
   * offline cache, so the semantics the north-rule needs are realized
-  * directly: Hive-layout partitioned parquet + JSON snapshot metadata,
+  * directly: Hive-layout partitioned parquet + one JSON file per snapshot,
   * snapshot-commit-last atomicity, and a skew-guarded rebalance by
   * partition value).
   *
   * Layout:
   * {{{
-  * <root>/data/g<n>/<p1>=<v>/<p2>=<v>/part-*.parquet   # generation n files, zstd
-  * <root>/metadata/snap-<n>.json          # commit metadata of snapshot n
-  * <root>/metadata/manifest-<n>.text      # COMPLETE live file list of n
-  * <root>/metadata/v<n>.metadata.json     # schema, partition spec
-  * <root>/metadata/version-hint.text      # current version (atomic rename)
+  * <root>/data/g<n>-<id>/<p1>=<v>/<p2>=<v>/part-*.parquet  # one commit
+  *                                  # attempt's files for version n, zstd
+  * <root>/metadata/snap-<n>.json    # snapshot n: schema, partition spec,
+  *                                  # COMPLETE live file list, added files
+  *                                  # and rows, the caller's metadata
   * }}}
   *
   * Commit protocol (O4/S6 analog — the reference's single-transaction
-  * SQLite commit log, backend/db.py:6-21): every commit writes its data
-  * files into a fresh generation directory that no current snapshot
-  * references, then writes the manifest + snapshot JSON, and flips the
-  * version hint LAST — readers resolve their file list from the manifest
-  * of the hinted version (never from directory listing), so they see
-  * either the previous complete snapshot or the new complete snapshot,
-  * never a partial one. Compaction follows the same path: new generation,
-  * new manifest referencing only it, hint flip, then retirement of
-  * now-unreferenced generations (single-snapshot retention; a time-travel
-  * deployment would keep generations for every retained snapshot).
+  * SQLite commit log, backend/db.py:6-21 — and the commit of Iceberg's
+  * file-system tables): a committer reads the current version n, writes
+  * its data files into a generation directory of its own
+  * (`g<n+1>-<random id>`), then publishes `snap-<n+1>.json` under a name
+  * that must not exist yet ([[RootFs.publish]]). That publish is the
+  * commit point. Of two committers racing for n+1 exactly one publishes;
+  * the other deletes its generation and throws a
+  * `ConcurrentModificationException`, having found out only after its
+  * data write (optimistic concurrency, as Iceberg's). The current version
+  * is the largest snapshot listed in `metadata/`, and snapshots are never
+  * deleted, so a reader's version never goes back. Readers resolve their
+  * file list from that snapshot (never from a data directory listing), so
+  * they see either the previous complete snapshot or the new complete
+  * snapshot, never a partial one. Compaction commits the same way, then
+  * retires the generations the new snapshot no longer references
+  * (single-snapshot retention; a time-travel deployment would keep
+  * generations for every retained snapshot).
+  *
+  * A committer killed between its data write and its publish leaves an
+  * unreferenced generation directory; it blocks no later commit. Removing
+  * such orphans (Iceberg's `remove_orphan_files`) is not done here.
   *
   * Row counts come from a Spark `Observation` on the write itself — no
   * second scan of just-written data per commit. Every data file is
@@ -45,121 +56,36 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * exact.
   *
   * All files go through the root's Hadoop FileSystem ([[RootFs]]). The
-  * protocol needs an exclusive create and a rename that replaces the
-  * hint atomically: `file://` has both; HDFS has the first and refuses
-  * the replace loudly; object stores have neither (unsupported).
+  * protocol needs a rename that refuses an existing name: `file://`
+  * ([[LocalFs]]) and HDFS have one; object stores do not (unsupported).
   */
 object IcebergStyleTable {
 
   final case class Snapshot(version: Int, files: Seq[String], rowCount: Long)
 
   private def metaDir(root: String): Path = new Path(s"$root/metadata")
-  private def meta(root: String, name: String): Path =
-    new Path(metaDir(root), name)
+  private def snapPath(root: String, version: Int): Path =
+    new Path(metaDir(root), s"snap-$version.json")
   private def dataDir(root: String): Path = new Path(s"$root/data")
-  private def genName(version: Int): String = s"g$version"
 
-  /** A claim not followed by its committed snapshot within this lease is
-    * treated as abandoned by a DEAD committer (SIGKILL/OOM between claim
-    * and hint flip leaves no JVM catch to release it) and is reclaimable —
-    * without expiry one crashed writer would wedge the table forever,
-    * since every later committer recomputes the same next version and hits
-    * the stale claim. The lease must exceed the longest plausible
-    * write-generation + metadata time for the deployment. */
-  final val ClaimLeaseMillis: Long =
-    sys.env.get("GRAFT_CLAIM_LEASE_MS").map(_.toLong)
-      .getOrElse(15L * 60L * 1000L)
-
-  /** Atomically claim version `version` for this committer. Two concurrent
-    * writers that both read currentVersion = N-1 would otherwise write the
-    * same generation dir (mode overwrite) and the last hint flip would
-    * silently discard the other's commit — the compare-and-swap here makes
-    * the loser fail loudly instead. The claim is an exclusive create:
-    * O_CREAT|O_EXCL on `file://` ([[LocalFs]]), the namenode's
-    * create-if-absent on HDFS; an object store would need a conditional
-    * PUT / metastore CAS.
-    *
-    * Stale-claim recovery: if the existing claim's version was never
-    * committed AND the claim file is older than [[ClaimLeaseMillis]], the
-    * claim is expired — it is atomically RENAMED to a tombstone (rename,
-    * not delete+create: exactly one reclaimer can win the rename, so two
-    * concurrent reclaimers cannot both end up owning the version) and the
-    * claim is retried once. A reclaimer that loses the post-rename
-    * re-claim race throws like any other loser.
-    *
-    * Each claim file carries its owner's NONCE, and release-on-failure
-    * deletes the claim only if the content still matches — without this,
-    * a slow committer whose lease expired (and whose claim was reclaimed
-    * by a second writer) would, on its own eventual failure, delete the
-    * SECOND writer's live claim and open the version to a third racer.
-    * The lease-vs-slow-writer race itself is inherent to lease-based
-    * recovery: deployments must size the lease above the longest
-    * plausible commit (a metastore with fencing tokens removes it
-    * entirely; this layer documents the trade, it cannot hide it).
-    * Returns the claim nonce. */
-  private def claimVersion(io: RootFs, root: String, version: Int): String = {
-    val claim = meta(root, s"claim-$version")
-    val nonce = s"${java.util.UUID.randomUUID()}"
-    def tryCreate(): Boolean =
-      try { io.write(claim, nonce, overwrite = false); true }
-      catch { case _: FileAlreadyExistsException => false }
-    def fail(): Nothing =
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot version $version at $root is already claimed by " +
-          "another committer; re-read currentVersion and retry")
-    if (!tryCreate()) {
-      // committed == the hint reached this version. Deliberately NOT
-      // "snap-N.json exists": the snapshot file is written BEFORE the
-      // hint flip, so a writer killed between the two leaves an orphaned
-      // snap-N.json — treating that as committed would make the stale
-      // claim unreclaimable and wedge the table on exactly the crash the
-      // lease exists to recover from.
-      val committed = currentVersion(io, root) >= version
-      val ageMs =
-        try System.currentTimeMillis() -
-          io.fs.getFileStatus(claim).getModificationTime
-        catch { case _: IOException => 0L }
-      if (!committed && ageMs > ClaimLeaseMillis) {
-        val tomb = meta(root, s"claim-$version.stale-${System.nanoTime()}")
-        val won =
-          try { io.rename(claim, tomb); true }
-          catch { case _: IOException => false }
-        if (!(won && tryCreate())) fail()
-      } else fail()
-    }
-    nonce
-  }
-
-  /** Run the commit body under a claimed version; a FAILED commit releases
-    * its claim so the version number stays committable (without this, one
-    * crashed writer would wedge the table forever — every later committer
-    * recomputes the same version and hits the stale claim). The release
-    * is OWNERSHIP-CHECKED via the claim nonce: a failing writer whose
-    * claim was already lease-reclaimed must not delete the reclaimer's
-    * live claim. The read-then-delete is not atomic, so this NARROWS the
-    * already-lease-sized race (reclaim must land exactly between the
-    * failing writer's ownership read and its delete) rather than closing
-    * it — a fencing metastore CAS closes it outright; on plain files this
-    * is the honest limit. A SUCCESSFUL commit keeps the claim file: the
-    * hint has advanced past it, and it doubles as a committer record. */
-  private def withClaim[A](io: RootFs, root: String, version: Int)(
-      body: => A): A = {
-    val nonce = claimVersion(io, root, version)
-    try body
-    catch {
-      case t: Throwable =>
-        val claim = meta(root, s"claim-$version")
-        val owned =
-          try io.read(claim) == nonce catch { case _: IOException => false }
-        if (owned) io.delete(claim)
-        throw t
-    }
-  }
+  /** The name of snapshot n as this object writes it (a positive Int,
+    * no leading zero). Anything else in `metadata/`, such as a publish's
+    * temp file or a stray copy, is not a snapshot. */
+  private val SnapName = """snap-([1-9]\d{0,8})\.json""".r
 
   def currentVersion(root: String): Int = currentVersion(RootFs(root), root)
 
   private def currentVersion(io: RootFs, root: String): Int =
-    io.readOpt(meta(root, "version-hint.text")).map(_.trim.toInt).getOrElse(0)
+    snapshots(io, root).lastOption.getOrElse(0)
+
+  /** Snapshot `version`'s JSON. A snapshot that cannot be read is a
+    * fault, not an absent record: every listed snapshot was published
+    * whole. */
+  private def snapshot(io: RootFs, root: String, version: Int): JsonNode =
+    new ObjectMapper().readTree(io.read(snapPath(root, version)))
+
+  private def strings(array: JsonNode): Seq[String] =
+    array.elements().asScala.map(_.asText).toSeq
 
   /** Live data files (relative to data/) of snapshot `version`. */
   def manifest(root: String, version: Int): Seq[String] =
@@ -167,15 +93,17 @@ object IcebergStyleTable {
 
   private def manifest(io: RootFs, root: String, version: Int): Seq[String] =
     if (version <= 0) Seq.empty
-    else io.readOpt(meta(root, s"manifest-$version.text")).toSeq
-      .flatMap(_.linesIterator.filter(_.nonEmpty))
+    else strings(snapshot(io, root, version).get("files"))
 
-  /** The parquet files of generation `version`, as data-relative paths
-    * (`g<n>/<col>=<v>/part-*.parquet`, Hive escapes kept as on disk). */
+  /** The generation directory of data file `file` (data-relative). */
+  private def genOf(file: String): String = file.takeWhile(_ != '/')
+
+  /** The parquet files of generation `gen`, as data-relative paths
+    * (`g<n>-<id>/<col>=<v>/part-*.parquet`, Hive escapes kept as on disk). */
   private def listGenFiles(io: RootFs, root: String,
-                           version: Int): Seq[String] = {
+                           gen: String): Seq[String] = {
     val base = io.fs.makeQualified(dataDir(root)).toUri.getPath + "/"
-    io.list(new Path(dataDir(root), genName(version)), recursive = true)
+    io.list(new Path(dataDir(root), gen), recursive = true)
       .map(_.getPath.toUri.getPath)
       .filter(_.endsWith(".parquet"))
       .map(_.stripPrefix(base))
@@ -185,12 +113,14 @@ object IcebergStyleTable {
   private def q(s: String): String = "\"" + s.replace("\\", "\\\\")
     .replace("\"", "\\\"") + "\""
 
+  private def arr(ss: Seq[String]): String = ss.map(q).mkString("[", ",", "]")
+
   /** Parquet codec of every table data file. */
   private final val Codec = "zstd"
 
   /** Write `df`, counting its rows on the write job itself (no re-read).
     * `get` blocks until Spark delivers the metrics; a write that produced
-    * none throws here, inside the caller's claim. */
+    * none throws here, before the commit. */
   private def writeCounted(df: DataFrame, partitionCols: Seq[String],
                            dest: String): Long = {
     val obs = Observation()
@@ -202,29 +132,40 @@ object IcebergStyleTable {
     obs.get("rows").asInstanceOf[Long]
   }
 
-  /** Write snapshot `version`'s metadata and flip the hint to it. The
-    * schema (`v<n>.metadata.json`) and the manifest are written BEFORE
-    * the hint flip — once a reader can see version N, every metadata
-    * file of N already exists. */
-  private def commitMetadata(io: RootFs, root: String, version: Int,
-                             schema: StructType,
-                             files: Seq[String], added: Seq[String],
-                             rowCount: Long, partitionCols: Seq[String],
-                             extra: String): Unit = {
-    val metaJson =
-      s"""{"format-version":$version,"schema":${schema.json},
-         |"partition_spec":[${partitionCols.map(q).mkString(",")}],
-         |"current_snapshot":$version}""".stripMargin.replace("\n", "")
-    io.write(meta(root, s"v$version.metadata.json"), metaJson)
-    io.write(meta(root, s"manifest-$version.text"), files.mkString("\n"))
-    val snapJson =
-      s"""{"version":$version,$extra"added_files":[${added.map(q).mkString(",")}],
-         |"added_rows":$rowCount,
-         |"partition_spec":[${partitionCols.map(q).mkString(",")}]}"""
-        .stripMargin.replace("\n", "")
-    io.write(meta(root, s"snap-$version.json"), snapJson)
-    // atomic last step: readers flip to the new snapshot only here
-    io.publish(meta(root, "version-hint.text"), version.toString)
+  /** Commit version `base + 1`: `write` writes the rows into this
+    * attempt's own generation directory and returns their count, and
+    * `snap-<base+1>.json` is published listing `kept` (the live files
+    * carried over) plus the generation's files. If anything fails before
+    * the publish, or another committer published that version first (a
+    * `ConcurrentModificationException`), the generation is deleted. */
+  private def commit(io: RootFs, root: String, base: Int,
+                     schema: StructType, partitionCols: Seq[String],
+                     kept: Seq[String], extra: String)(
+      write: String => Long): Snapshot = {
+    val version = base + 1
+    val gen = s"g$version-${UUID.randomUUID()}"
+    val genDir = new Path(dataDir(root), gen)
+    try {
+      val rowCount = write(genDir.toString)
+      val added = listGenFiles(io, root, gen)
+      val json =
+        s"""{"version":$version,$extra"added_files":${arr(added)},
+           |"added_rows":$rowCount,"partition_spec":${arr(partitionCols)},
+           |"schema":${schema.json},"files":${arr(kept ++ added)}}"""
+          .stripMargin.replace("\n", "")
+      try io.publish(snapPath(root, version), json)
+      catch {
+        case _: FileAlreadyExistsException =>
+          throw new ConcurrentModificationException(
+            s"snapshot version $version at $root was committed by another " +
+              "committer; re-read currentVersion and retry")
+      }
+      Snapshot(version, added, rowCount)
+    } catch {
+      case t: Throwable =>
+        try io.delete(genDir) catch { case e: Throwable => t.addSuppressed(e) }
+        throw t
+    }
   }
 
   /** The session settings a partitioned append's skew guard rests on. */
@@ -247,7 +188,7 @@ object IcebergStyleTable {
     * write task, and no other value is spread. So a partitioned append
     * requires both
     * [[RebalanceConfs]]; with either off it throws an
-    * IllegalArgumentException before it claims a version, as the
+    * IllegalArgumentException before it writes anything, as the
     * rebalance would silently lose its skew guard.
     *
     * With no `partitionCols` the shuffle key is the salt
@@ -270,62 +211,52 @@ object IcebergStyleTable {
         s"off: ${off.mkString(", ")}")
     }
     val io = RootFs(df.sparkSession, root)
-    val version = currentVersion(io, root) + 1
-    withClaim(io, root, version) {
-
+    val base = currentVersion(io, root)
     val distributed =
       if (partitionCols.isEmpty)
         df.repartition(shufflePartitions,
           pmod(xxhash64(col(saltCol)), lit(saltBuckets)))
       else df.hint("rebalance", shufflePartitions +: partitionCols.map(col): _*)
-    val dest = new Path(dataDir(root), genName(version)).toString
-    val rowCount = writeCounted(distributed, partitionCols, dest)
-
-    val added = listGenFiles(io, root, version)
     val extra = extraMeta.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}:${q(v)}," }.mkString
-    commitMetadata(io, root, version, df.schema,
-      manifest(io, root, version - 1) ++ added, added, rowCount,
-      partitionCols, extra = extra)
-
-    Snapshot(version, added, rowCount)
-    }
+    commit(io, root, base, df.schema, partitionCols,
+      kept = manifest(io, root, base), extra = extra)(
+      writeCounted(distributed, partitionCols, _))
   }
 
-  /** The data columns generation `version` was written with: the schema
-    * of its `v<n>.metadata.json` without the partition columns, or None
-    * when the generation has no such file. */
-  private def recordedDataSchema(io: RootFs, root: String,
-                                 version: Int): Option[StructType] =
-    io.readOpt(meta(root, s"v$version.metadata.json")).map { text =>
-      val m = new ObjectMapper().readTree(text)
-      val parts = m.get("partition_spec").elements().asScala.map(_.asText)
-        .toSet
-      StructType(DataType.fromJson(m.get("schema").toString)
-        .asInstanceOf[StructType].filterNot(f => parts(f.name)))
-    }
+  /** The data columns generation `gen` was written with: the schema its
+    * snapshot (`snap-<n>.json` of `g<n>-…`) recorded, without the
+    * partition columns. */
+  private def dataSchema(io: RootFs, root: String, gen: String): StructType = {
+    val m = snapshot(io, root, gen.drop(1).takeWhile(_.isDigit).toInt)
+    val parts = strings(m.get("partition_spec")).toSet
+    StructType(DataType.fromJson(m.get("schema").toString)
+      .asInstanceOf[StructType].filterNot(f => parts(f.name)))
+  }
 
-  /** Read the current snapshot: file list resolved from its manifest
-    * (NEVER from directory listing — in-flight commits are invisible).
-    * Partition-pruning capable: each generation is scanned with its own
-    * basePath, so Hive partition columns are recovered and filters on
-    * them prune directories for free. A generation's data columns come
-    * from the schema its commit recorded, so no footer is read to infer
-    * them (that would be one Spark job per read); partition column types
-    * are inferred from the directory names. */
-  def read(spark: SparkSession, root: String): DataFrame =
-    read(spark, RootFs(spark, root), root)
+  /** Read the current snapshot: file list resolved from its snapshot
+    * file (NEVER from directory listing — in-flight commits are
+    * invisible). Partition-pruning capable: each generation is scanned
+    * with its own basePath, so Hive partition columns are recovered and
+    * filters on them prune directories for free. A generation's data
+    * columns come from the schema its commit recorded, so no footer is
+    * read to infer them (that would be one Spark job per read); partition
+    * column types are inferred from the directory names. */
+  def read(spark: SparkSession, root: String): DataFrame = {
+    val io = RootFs(spark, root)
+    read(spark, io, root, currentVersion(io, root))
+  }
 
-  private def read(spark: SparkSession, io: RootFs, root: String): DataFrame = {
-    val v = currentVersion(io, root)
-    val files = manifest(io, root, v)
-    require(files.nonEmpty, s"no committed snapshot at $root (version=$v)")
-    files.groupBy(f => f.takeWhile(_ != '/')).toSeq.sortBy(_._1)
+  private def read(spark: SparkSession, io: RootFs, root: String,
+                   version: Int): DataFrame = {
+    val files = manifest(io, root, version)
+    require(files.nonEmpty,
+      s"no committed snapshot at $root (version=$version)")
+    files.groupBy(genOf).toSeq.sortBy(_._1)
       .map { case (gen, fs) =>
-        val reader = spark.read
+        spark.read
           .option("basePath", new Path(dataDir(root), gen).toString)
-        recordedDataSchema(io, root, gen.stripPrefix("g").toInt)
-          .fold(reader)(reader.schema)
+          .schema(dataSchema(io, root, gen))
           .parquet(fs.map(f => new Path(dataDir(root), f).toString): _*)
       }.reduce(_ unionByName _)
   }
@@ -333,10 +264,10 @@ object IcebergStyleTable {
   /** Rewrite the table's live files into one compacted generation and
     * commit it as a new snapshot — the Iceberg `rewrite_data_files`
     * analog. At fine partition granularity (date x host_bucket) small
-    * scales produce tiny files; compaction runs out-of-band, readers flip
-    * atomically via the version hint, and generations no longer referenced
-    * by the current snapshot are retired AFTER the flip (single-snapshot
-    * retention; keep them to retain time-travel). */
+    * scales produce tiny files; compaction runs out-of-band, readers move
+    * to the new snapshot atomically at its publish, and generations no
+    * longer referenced by the current snapshot are retired AFTER it
+    * (single-snapshot retention; keep them to retain time-travel). */
   /** `saltBuckets`: bounds the hottest partition dir's rewrite to that
     * many reducers instead of ONE (a Zipf-skewed table would otherwise
     * funnel its hottest part_date through a single task). The salt
@@ -346,68 +277,48 @@ object IcebergStyleTable {
   def compact(spark: SparkSession, root: String, partitionCols: Seq[String],
               saltBuckets: Int = 1): Snapshot = {
     val io = RootFs(spark, root)
-    val current = read(spark, io, root)
-    val version = currentVersion(io, root) + 1
-    withClaim(io, root, version) {
-    val liveGens = manifest(io, root, version - 1)
-      .map(f => f.takeWhile(_ != '/')).distinct
+    val base = currentVersion(io, root)
+    val current = read(spark, io, root, base)
+    val liveGens = manifest(io, root, base).map(genOf).distinct
 
     val salt = pmod(xxhash64(current.columns.map(col): _*),
       lit(saltBuckets))
     val compacted = current
       .repartition((partitionCols.map(col) :+ salt): _*)
       .sortWithinPartitions(partitionCols.map(col): _*)
-    val dest = new Path(dataDir(root), genName(version)).toString
-    val rowCount = writeCounted(compacted, partitionCols, dest)
-
-    val added = listGenFiles(io, root, version)
-    commitMetadata(io, root, version, current.schema, files = added,
-      added = added, rowCount = rowCount, partitionCols = partitionCols,
-      extra = "\"compaction\":true,")
+    val snap = commit(io, root, base, current.schema, partitionCols,
+      kept = Nil, extra = "\"compaction\":true,")(
+      writeCounted(compacted, partitionCols, _))
 
     // retire unreferenced generations (readers of older snapshots are not
     // supported under single-snapshot retention — documented above)
     liveGens.foreach(g => io.delete(new Path(dataDir(root), g)))
-
-    Snapshot(version, added, rowCount)
-    }
+    snap
   }
 
-  /** Version of the COMMITTED snapshot whose JSON carries `"key":"value"`
-    * (written via `append(extraMeta = ...)`), if any — the durable-commit
-    * lookup for callers that stamp their identity into the snapshot
-    * (RunJob's exactly-once guard survives a kill between hint flip and
-    * any caller-side marker precisely because this record IS the commit).
-    *
-    * Restricted to versions <= the hinted currentVersion: snap-N.json is
-    * written BEFORE the hint flip, so an append killed between the two
-    * leaves an orphaned snapshot file for a version that never became
-    * visible — counting it as committed would make the caller skip its
-    * retry and silently lose the run's data. */
+  /** Version of the snapshot whose JSON carries `"key":"value"` (written
+    * via `append(extraMeta = ...)`), if any — the durable-commit lookup
+    * for callers that stamp their identity into the snapshot (RunJob's
+    * exactly-once guard survives a kill between the commit and any
+    * caller-side marker precisely because this record IS the commit).
+    * Every listed snapshot is committed, and one that cannot be read
+    * throws: reading it as "not this caller's" would let the caller
+    * commit its rows twice. */
   def findSnapshotWithMeta(root: String, key: String,
                            value: String): Option[Int] = {
     val io = RootFs(root)
-    val needle = s"${q(key)}:${q(value)}"
-    val committed = currentVersion(io, root)
-    snapshots(io, root).filter(_ <= committed).find { v =>
-      try io.read(meta(root, s"snap-$v.json")).contains(needle)
-      catch { case _: IOException => false }
-    }
+    snapshots(io, root).find(v =>
+      Option(snapshot(io, root, v).get(key)).exists(_.asText == value))
   }
 
-  /** `added_rows` recorded in snapshot `version`'s JSON (0 if absent). */
+  /** `added_rows` recorded in snapshot `version`'s JSON. */
   def snapshotAddedRows(root: String, version: Int): Long =
-    try {
-      val s = RootFs(root).read(meta(root, s"snap-$version.json"))
-      "\"added_rows\":(\\d+)".r.findFirstMatchIn(s)
-        .map(_.group(1).toLong).getOrElse(0L)
-    } catch { case _: IOException => 0L }
+    snapshot(RootFs(root), root, version).get("added_rows").asLong
 
   def snapshots(root: String): Seq[Int] = snapshots(RootFs(root), root)
 
   private def snapshots(io: RootFs, root: String): Seq[Int] =
     io.list(metaDir(root)).map(_.getPath.getName)
-      .collect { case n if n.startsWith("snap-") =>
-        n.stripPrefix("snap-").stripSuffix(".json").toInt }
+      .collect { case SnapName(n) => n.toInt }
       .sorted
 }

@@ -1,7 +1,7 @@
 package graft.io
 
 import java.io.IOException
-import java.nio.file.Files
+import java.nio.file.{Files, LinkOption}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException,
@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
 /** The `file://` FileSystem of the engine's sessions: Hadoop's checksummed
   * `LocalFileSystem` (same `.crc` sidecars, same layout, same permission
   * bits) over a raw filesystem that sets permissions in-process, creates
-  * exclusively, and renames without a copy fallback.
+  * exclusively, and renames without a copy fallback and without replacing
+  * an existing file.
   *
   * Without libhadoop's NativeIO, the stock `RawLocalFileSystem`
   * forks a `chmod` child process in `setPermission`, which Hadoop calls for
@@ -66,10 +67,24 @@ object LocalFs {
       super.create(f, true, bufferSize, replication, blockSize, progress)
     }
 
-    /** One rename(2), or false. The stock class falls back to a
-      * copy-and-delete when `File.renameTo` fails, which is not atomic. */
-    override def rename(src: Path, dst: Path): Boolean =
-      pathToFile(src).renameTo(pathToFile(dst))
+    /** A rename that refuses an existing `dst` (false), as HDFS's does,
+      * and never falls back to the stock class's copy-and-delete, which is
+      * not atomic. A regular file is linked to `dst` and then unlinked
+      * from `src`: link(2) is atomic and fails on an existing name, where
+      * rename(2) would replace it. Anything else, such as the directories
+      * Spark's committers move, is one rename(2). */
+    override def rename(src: Path, dst: Path): Boolean = {
+      val (s, d) = (pathToFile(src).toPath, pathToFile(dst).toPath)
+      if (!Files.isRegularFile(s, LinkOption.NOFOLLOW_LINKS))
+        s.toFile.renameTo(d.toFile)
+      else {
+        val linked =
+          try { Files.createLink(d, s); true }
+          catch { case _: IOException => false }
+        if (linked) Files.delete(s)
+        linked
+      }
+    }
   }
 
   /** The keys that route a conf's `file://` through [[LocalFs]], here

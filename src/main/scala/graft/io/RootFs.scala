@@ -2,22 +2,22 @@ package graft.io
 
 import java.io.{FileNotFoundException, IOException}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileAlreadyExistsException,
+  FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.SessionHadoopConf
 
 /** The FileSystem that holds a root's own files (progress manifests,
-  * version claims, snapshot metadata, the version hint, the commit
-  * marker), and how the engine writes, publishes and reads one. A write
-  * creates missing parent directories.
+  * table snapshots, the commit marker), and how the engine writes,
+  * publishes and reads one. A write creates missing parent directories.
   *
   * Resolved once per public call from the session's Hadoop conf, with
   * `file://` routed through [[LocalFs]] whether or not the session
   * installed it. A checksummed FileSystem is unwrapped to its raw one, so
-  * no `.crc` sidecar appears beside metadata and a publish on `file://`
-  * is one rename(2). A `rename` or `delete` that fails throws an
-  * `IOException` naming its paths.
+  * no `.crc` sidecar appears beside metadata. A `publish` or `delete` that
+  * fails throws an `IOException` naming its paths.
   */
 final class RootFs private (val fs: FileSystem) {
 
@@ -29,27 +29,28 @@ final class RootFs private (val fs: FileSystem) {
   def readOpt(p: Path): Option[String] =
     try Some(read(p)) catch { case _: FileNotFoundException => None }
 
-  /** Writes `p` in place; `overwrite = false` is an exclusive create
-    * that fails with `FileAlreadyExistsException`. */
-  def write(p: Path, content: String, overwrite: Boolean = true): Unit = {
-    val out = fs.create(p, overwrite)
+  /** Writes `p` in place. */
+  def write(p: Path, content: String): Unit = {
+    val out = fs.create(p, true)
     try out.write(content.getBytes(UTF_8)) finally out.close()
   }
 
-  /** Writes a `.tmp` sibling and renames it to `p`, so no reader sees a
-    * partial file. Replacing an existing `p` works where rename replaces
-    * (`file://`) and throws where it does not (HDFS). */
+  /** Writes a temp sibling and renames it onto `p`, so no reader sees a
+    * partial file. The rename never replaces: if `p` exists, the temp file
+    * is deleted and a `FileAlreadyExistsException` thrown, as both
+    * `file://` ([[LocalFs]]) and HDFS refuse a rename onto an existing
+    * name. The temp name is unique per call, so concurrent publishers of
+    * one name never share a temp file, and starts with a dot, so it is
+    * none of the names the engine looks for. */
   def publish(p: Path, content: String): Unit = {
-    val dot = p.getName.lastIndexOf('.')
-    val tmp = new Path(p.getParent,
-      (if (dot > 0) p.getName.take(dot) else p.getName) + ".tmp")
+    val tmp = new Path(p.getParent, s".${p.getName}.${UUID.randomUUID()}.tmp")
     write(tmp, content)
-    rename(tmp, p)
+    if (!fs.rename(tmp, p)) {
+      delete(tmp)
+      if (fs.exists(p)) throw new FileAlreadyExistsException(s"$p exists")
+      throw new IOException(s"could not rename $tmp to $p")
+    }
   }
-
-  def rename(src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new IOException(s"could not rename $src to $dst")
 
   /** Deletes `p` and everything under it; a path already gone is fine. */
   def delete(p: Path): Unit =

@@ -1,7 +1,9 @@
 package graft.spark
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.ConcurrentModificationException
+import java.util.concurrent.{Callable, ConcurrentHashMap,
+  ConcurrentLinkedQueue, CyclicBarrier, Executors}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
@@ -31,6 +33,13 @@ class IcebergIoSpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** The names in directory `first/more...`, sorted. */
+  private def names(first: String, more: String*): Seq[String] = {
+    val ls = Files.list(Paths.get(first, more: _*))
+    try ls.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    finally ls.close()
+  }
+
   test("iceberg-style append: layout, snapshot json, version hint, read-back") {
     val root = tmpDir("iceberg")
     val df = QualityPipeline(PagesSynth.pages(spark, 300, 4))
@@ -42,8 +51,8 @@ class IcebergIoSpec extends AnyFunSuite {
     assert(snap.files.nonEmpty)
     assert(snap.files.forall(_.contains("part_date=")))
     assert(IcebergStyleTable.currentVersion(root) == 1)
-    assert(Files.exists(Paths.get(root, "metadata", "snap-1.json")))
-    assert(Files.exists(Paths.get(root, "metadata", "v1.metadata.json")))
+    // one file commits a snapshot: no claim, hint, schema or manifest file
+    assert(names(root, "metadata") == Seq("snap-1.json"))
 
     val back = IcebergStyleTable.read(spark, root)
     assert(back.count() == 300)
@@ -57,6 +66,7 @@ class IcebergIoSpec extends AnyFunSuite {
       Seq("part_date", "host_bucket"), "url", 8, 4)
     assert(IcebergStyleTable.currentVersion(root) == 2)
     assert(IcebergStyleTable.snapshots(root) == Seq(1, 2))
+    assert(names(root, "metadata") == Seq("snap-1.json", "snap-2.json"))
     assert(IcebergStyleTable.read(spark, root).count() > 300)
   }
 
@@ -70,7 +80,9 @@ class IcebergIoSpec extends AnyFunSuite {
       .toDF("url", "tag")
     val snap = IcebergStyleTable.append(df, root, Seq("tag"), "url", 2, 2)
     val data = Paths.get(root, "data")
-    val walk = Files.walk(data.resolve("g1"))
+    val gens = snap.files.map(_.takeWhile(_ != '/')).distinct
+    assert(gens.size == 1 && gens.head.startsWith("g1-"), gens)
+    val walk = Files.walk(data.resolve(gens.head))
     val onDisk =
       try walk.iterator().asScala
         .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
@@ -111,14 +123,17 @@ class IcebergIoSpec extends AnyFunSuite {
       try while (!stop) seen += IcebergStyleTable.currentVersion(root)
       catch { case t: Throwable => failure.set(t) })
     reader.start()
-    try (2 to 10).foreach(_ =>
-      IcebergStyleTable.append(df, root, Nil, "url", 2, 2))
-    finally { stop = true; reader.join() }
+    try {
+      (2 to 10).foreach(_ =>
+        IcebergStyleTable.append(df, root, Nil, "url", 2, 2))
+      IcebergStyleTable.compact(spark, root, Nil)
+    } finally { stop = true; reader.join() }
     assert(failure.get == null, String.valueOf(failure.get))
-    assert(seen.nonEmpty && seen.head >= 1 && seen.last <= 10)
+    assert(seen.nonEmpty && seen.head >= 1 && seen.last <= 11)
     assert(seen.zip(seen.drop(1)).forall { case (a, b) => a <= b })
-    assert(seen.distinct.size > 1, "the reader overlapped no flip")
-    assert(IcebergStyleTable.currentVersion(root) == 10)
+    assert(seen.distinct.size > 1, "the reader overlapped no commit")
+    assert(IcebergStyleTable.currentVersion(root) == 11)
+    assert(IcebergStyleTable.read(spark, root).count() == 200)
   }
 
   test("partition pruning reaches the scan (PushedFilters/partition dirs)") {
@@ -520,71 +535,80 @@ class IcebergIoSpec extends AnyFunSuite {
   test("concurrent committers: the second writer of the same version fails " +
       "loudly instead of silently discarding the first") {
     val root = tmpDir("cas")
-    val df = QualityPipeline(PagesSynth.pages(spark, 100, 2))
-    IcebergStyleTable.append(df, root, Seq("part_date"), "url", 8, 2)
-    // another committer has read currentVersion=1 and claimed version 2
-    // but not yet flipped the hint — this committer must NOT also write v2
-    Files.createFile(Paths.get(root, "metadata", "claim-2"))
-    intercept[java.util.ConcurrentModificationException] {
-      IcebergStyleTable.append(df, root, Seq("part_date"), "url", 8, 2)
-    }
-    // table is unchanged and still readable at version 1
-    assert(IcebergStyleTable.currentVersion(root) == 1)
-    assert(IcebergStyleTable.read(spark, root).count() == 100)
+    val df = spark.range(0, 20).selectExpr("concat('u', id) AS url", "id")
+    // 4 committers append 3 times each to one table: every append either
+    // commits or throws, having lost its version to another committer
+    val threads = 4
+    val barrier = new CyclicBarrier(threads)
+    val pool = Executors.newFixedThreadPool(threads)
+    val outcomes =
+      try (0 until threads).map { t =>
+        pool.submit(new Callable[Seq[Option[IcebergStyleTable.Snapshot]]] {
+          override def call(): Seq[Option[IcebergStyleTable.Snapshot]] = {
+            barrier.await()
+            (0 until 3).map { i =>
+              try Some(IcebergStyleTable.append(
+                df.withColumn("id", col("id") + (t * 3 + i) * 100), root, Nil,
+                "url", 2, 2))
+              catch { case _: ConcurrentModificationException => None }
+            }
+          }
+        })
+      }.flatMap(_.get())
+      finally pool.shutdown()
+    val won = outcomes.flatten
+    assert(won.map(_.version).sorted == (1 to won.size), outcomes)
+    val v = IcebergStyleTable.currentVersion(root)
+    assert(v == won.size)
+    assert(IcebergStyleTable.read(spark, root).count() ==
+      won.map(_.rowCount).sum)
+    val live = IcebergStyleTable.manifest(root, v)
+    assert(live.forall(f => Files.isRegularFile(Paths.get(root, "data", f))))
+    // every losing attempt deleted its own generation
+    assert(names(root, "data") == live.map(_.takeWhile(_ != '/')).distinct
+      .sorted)
   }
 
-  test("findSnapshotWithMeta ignores orphaned snapshots (snap json written " +
-      "but hint never flipped) — a killed append must not read as " +
-      "committed, or the caller would skip its retry and lose the data") {
-    val root = tmpDir("orphan")
-    val df = QualityPipeline(PagesSynth.pages(spark, 100, 2))
-    IcebergStyleTable.append(df, root, Seq("part_date"), "url", 8, 2,
-      extraMeta = Map("run_id" -> "rX"))
-    assert(IcebergStyleTable.findSnapshotWithMeta(root, "run_id", "rX")
-      == Some(1))
-    // simulate an append killed between snap-2.json write and hint flip
-    Files.write(Paths.get(root, "metadata", "snap-2.json"),
-      """{"version":2,"run_id":"rY","added_rows":100}""".getBytes("UTF-8"))
-    assert(IcebergStyleTable.findSnapshotWithMeta(root, "run_id", "rY")
-      .isEmpty, "orphaned snapshot counted as committed")
+  test("only snap-<n>.json names a snapshot: stray names and a leftover " +
+      "publish temp file in metadata/ are ignored") {
+    val root = tmpDir("snapnames")
+    val df = spark.range(0, 20).selectExpr("concat('u', id) AS url", "id")
+    IcebergStyleTable.append(df, root, Nil, "url", 2, 2)
+    Seq("snap-2.json.bak", "snap-x.json", "snap-03.json",
+        "snap-99999999999.json", ".snap-2.json.0b1c.tmp")
+      .foreach(n => Files.write(Paths.get(root, "metadata", n),
+        "{}".getBytes("UTF-8")))
+    assert(IcebergStyleTable.snapshots(root) == Seq(1))
     assert(IcebergStyleTable.currentVersion(root) == 1)
+    assert(IcebergStyleTable.findSnapshotWithMeta(root, "run_id", "r")
+      .isEmpty)
+    assert(IcebergStyleTable.read(spark, root).count() == 20)
+    assert(IcebergStyleTable.append(df, root, Nil, "url", 2, 2).version == 2)
   }
 
-  test("a claim abandoned by a DEAD committer (no snapshot, older than the " +
-      "lease) is reclaimed — a SIGKILL between claim and hint flip cannot " +
-      "wedge the table forever") {
-    val root = tmpDir("caslease")
+  test("a committer killed between its data write and its publish leaves " +
+      "an orphan generation that does not block the next commit") {
+    val root = tmpDir("killed")
     val df = QualityPipeline(PagesSynth.pages(spark, 100, 2))
     IcebergStyleTable.append(df, root, Seq("part_date"), "url", 8, 2)
-    // a committer claimed version 2 then died without a JVM catch: the
-    // claim file exists, no snap-2.json, and the lease has long lapsed
-    val stale = Paths.get(root, "metadata", "claim-2")
-    Files.createFile(stale)
-    Files.setLastModifiedTime(stale, java.nio.file.attribute.FileTime
-      .fromMillis(System.currentTimeMillis() - 60L * 60L * 1000L))
-    // the next committer expires the stale claim and commits v2
+    // what a SIGKILLed committer of version 2 leaves: its data files and
+    // the temp file of a snapshot publish that was never renamed
+    val orphan = Paths.get(root, "data", "g2-dead", "part_date=2024-01-01")
+    Files.createDirectories(orphan)
+    Files.write(orphan.resolve("part-00000.zstd.parquet"), Array[Byte](1, 2))
+    Files.write(Paths.get(root, "metadata", ".snap-2.json.dead.tmp"),
+      """{"version":2""".getBytes("UTF-8"))
+    assert(IcebergStyleTable.currentVersion(root) == 1)
     val snap = IcebergStyleTable.append(df, root, Seq("part_date"), "url", 8, 2)
     assert(snap.version == 2)
     assert(IcebergStyleTable.currentVersion(root) == 2)
+    assert(!IcebergStyleTable.manifest(root, 2)
+      .exists(_.startsWith("g2-dead/")))
     assert(IcebergStyleTable.read(spark, root).count() == 200)
-    // the expired claim was tombstoned (audit trail), not silently deleted
-    import scala.jdk.CollectionConverters._
-    val tombs = Files.list(Paths.get(root, "metadata")).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(_.startsWith("claim-2.stale-")).toSeq
-    assert(tombs.nonEmpty)
-
-    // but a LIVE claim (fresh mtime, uncommitted) is still protected: the
-    // lease guards only abandoned claims
-    Files.createFile(Paths.get(root, "metadata", "claim-3"))
-    intercept[java.util.ConcurrentModificationException] {
-      IcebergStyleTable.append(df, root, Seq("part_date"), "url", 8, 2)
-    }
-    assert(IcebergStyleTable.currentVersion(root) == 2)
   }
 
-  test("a FAILED commit releases its version claim — the table is not " +
-      "wedged for later committers") {
+  test("a FAILED commit deletes its generation — the table is not wedged " +
+      "for later committers") {
     val root = tmpDir("casfail")
     val df = QualityPipeline(PagesSynth.pages(spark, 100, 2))
     IcebergStyleTable.append(df, root, Seq("part_date"), "url", 8, 2)
@@ -594,9 +618,8 @@ class IcebergIoSpec extends AnyFunSuite {
     intercept[Exception] {
       IcebergStyleTable.append(poisoned, root, Seq("part_date"), "url", 8, 2)
     }
-    // the failed committer's claim must be gone, so the SAME version is
-    // claimable again and the next commit succeeds
-    assert(!Files.exists(Paths.get(root, "metadata", "claim-2")))
+    assert(!names(root, "data").exists(_.startsWith("g2-")))
+    assert(IcebergStyleTable.currentVersion(root) == 1)
     val snap = IcebergStyleTable.append(df, root, Seq("part_date"), "url", 8, 2)
     assert(snap.version == 2)
     assert(IcebergStyleTable.read(spark, root).count() == 200)
@@ -716,7 +739,7 @@ class IcebergIoSpec extends AnyFunSuite {
       IcebergStyleTable.RebalanceConfs.foreach(k =>
         assert(e.getMessage.contains(k), e.getMessage))
       assert(IcebergStyleTable.currentVersion(root) == 1)
-      assert(!Files.exists(Paths.get(root, "metadata", "claim-2")))
+      assert(!names(root, "data").exists(_.startsWith("g2-")))
     }
     // an unpartitioned append keeps its salt spread and needs neither
     withConf(IcebergStyleTable.RebalanceConfs.head, "false") {
@@ -764,16 +787,9 @@ class IcebergIoSpec extends AnyFunSuite {
       IcebergStyleTable.append(df.filter(!half), root, Seq("part_date"),
         "url", 8, 4)
       readChecked()
-      val snap = IcebergStyleTable.compact(spark, root, Seq("part_date"))
-      assert(Files.exists(Paths.get(root, "metadata",
-        s"v${snap.version}.metadata.json")))
+      IcebergStyleTable.compact(spark, root, Seq("part_date"))
       readChecked()
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(IcebergStyleTable.read(spark, root).count() == 200)
-    // a generation committed without a recorded schema is still read, by
-    // inference
-    Files.delete(Paths.get(root, "metadata",
-      s"v${IcebergStyleTable.currentVersion(root)}.metadata.json"))
-    assert(IcebergStyleTable.read(spark, root).schema == inferred())
   }
 }

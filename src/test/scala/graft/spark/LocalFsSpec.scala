@@ -154,7 +154,8 @@ class LocalFsSpec extends AnyFunSuite {
     val dir = tmpDir("localfs_excl")
     // the FileSystem the engine's metadata goes through, also in a session
     // that never installed LocalFs
-    val fs = RootFs(spark, dir.toString).fs
+    val io = RootFs(spark, dir.toString)
+    val fs = io.fs
     assert(fs.isInstanceOf[LocalFs.RawFs])
     assert(RootFs(spark.newSession(), dir.toString).fs
       .isInstanceOf[LocalFs.RawFs])
@@ -173,7 +174,48 @@ class LocalFsSpec extends AnyFunSuite {
         })
       }.map(_.get())
       assert(outcomes.count(identity) == 1, s"round $round: $outcomes")
+
+      // the same race through a publish (temp file, then a rename that
+      // never replaces): one publisher wins, with its whole content
+      val q = new Path(new Path(dir.toUri), s"snap-$round.json")
+      val published = (0 until threads).map { t =>
+        pool.submit(new Callable[Option[String]] {
+          override def call(): Option[String] = {
+            val content = s"$t:" + "x" * 8192
+            barrier.await()
+            try { io.publish(q, content); Some(content) }
+            catch { case _: FileAlreadyExistsException => None }
+          }
+        })
+      }.map(_.get()).flatten
+      assert(published.size == 1, s"round $round: ${published.size} won")
+      assert(io.read(q) == published.head)
     } finally pool.shutdown()
+    val ls = Files.list(dir)
+    val tmps = try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".tmp")).toSeq finally ls.close()
+    assert(tmps.isEmpty, tmps)
+  }
+
+  test("rename never replaces: onto an existing file it returns false and " +
+      "leaves both files intact, as HDFS's does") {
+    val dir = tmpDir("localfs_rename")
+    val fs = RootFs(spark, dir.toString).fs
+    def path(name: String) = new Path(dir.resolve(name).toUri)
+    def text(name: String) = new String(Files.readAllBytes(dir.resolve(name)),
+      "UTF-8")
+    Files.write(dir.resolve("a"), "A".getBytes("UTF-8"))
+    Files.write(dir.resolve("b"), "B".getBytes("UTF-8"))
+    assert(!fs.rename(path("a"), path("b")))
+    assert(text("a") == "A" && text("b") == "B")
+    // onto a free name the file moves
+    assert(fs.rename(path("a"), path("c")))
+    assert(!Files.exists(dir.resolve("a")) && text("c") == "A")
+    // and a directory moves whole, as Spark's committers move them
+    Files.createDirectories(dir.resolve("d/e"))
+    assert(fs.rename(path("d"), path("f")))
+    assert(Files.isDirectory(dir.resolve("f/e")) &&
+      !Files.exists(dir.resolve("d")))
   }
 
   test("the engine's I/O uses one filesystem API: no java.nio.file or " +

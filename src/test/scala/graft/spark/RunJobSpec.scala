@@ -338,7 +338,31 @@ class RunJobSpec extends AnyFunSuite {
       .map(_.group(1).toInt) == stamped && stamped.contains(1), healed)
     assert(healed == full)
     // published by rename: no temporary file is left beside it
-    assert(!Files.exists(progress.resolve("_committed.tmp")))
+    val ls = Files.list(progress)
+    val tmps = try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".tmp")).toSeq finally ls.close()
+    assert(tmps.isEmpty, tmps)
+  }
+
+  test("an unreadable snapshot fails the exactly-once lookup instead of " +
+      "reading as another run's: the rerun throws and commits nothing") {
+    val in = writeInput(200)
+    val args = RunJob.JobArgs(in, tmpDir("runjob_out"), "job_u",
+      partitions = 4, saltBuckets = 4, shufflePartitions = 4)
+    assert(RunJob.execute(spark, args).committedThisRun)
+    val table = RunJob.tableRoot(args)
+    // the marker is lost and snap-1.json cannot be read: a directory
+    // takes its name (permission bits would not stop a run as root)
+    Files.delete(Paths.get(RunJob.workRoot(args), "_progress", "run=job_u",
+      "_committed.json"))
+    val snap = Paths.get(table, "metadata", "snap-1.json")
+    Files.delete(snap)
+    Files.createDirectory(snap)
+    intercept[java.io.IOException] {
+      IcebergStyleTable.snapshotAddedRows(table, 1)
+    }
+    intercept[java.io.IOException](RunJob.execute(spark, args))
+    assert(IcebergStyleTable.snapshots(table) == Seq(1))
   }
 
   test("kill/resume: a killed run resumes without recomputation and " +
@@ -353,8 +377,7 @@ class RunJobSpec extends AnyFunSuite {
     }
     assert(CheckpointedRun
       .completedPartitions(RunJob.workRoot(args), "job2").size == 3)
-    assert(!Files.exists(
-      Paths.get(RunJob.tableRoot(args), "metadata", "version-hint.text")))
+    assert(IcebergStyleTable.currentVersion(RunJob.tableRoot(args)) == 0)
 
     // resume: finishes the remaining 5, commits the table
     val res = RunJob.execute(spark, args)

@@ -1,9 +1,10 @@
 #!/usr/bin/env bash
 # End-to-end smoke of the literal spark-submit invocation documented in
 # README: thin jar + Spark-provided classpath, MakePages -> RunJob ->
-# row-count assertion against the committed table, and a check that the
-# committed run's partition outputs were reclaimed. Exits non-zero on any
-# failure.
+# row-count assertion against the committed table, a check that the
+# committed run's partition outputs were reclaimed, and a check that the
+# table's metadata holds exactly its one snapshot file. Exits non-zero on
+# any failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SPARK_HOME="${SPARK_HOME:-/opt/spark}"
@@ -40,4 +41,6 @@ test "$ROWS" -gt 0
 # the committed run keeps its commit marker but not its partition outputs
 test ! -e "$WORK/job/work/run=smoke1"
 test -f "$WORK/job/work/_progress/run=smoke1/_committed.json"
+# one file commits a snapshot: the table's metadata is snap-1.json alone
+test "$(ls -A "$WORK/job/table/metadata")" = "snap-1.json"
 echo "SMOKE OK: $ROWS rows committed exactly once via literal spark-submit"
