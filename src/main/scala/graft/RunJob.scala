@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.io.{CheckpointedRun, IcebergStyleTable, LocalFs, RootFs}
@@ -32,16 +31,16 @@ import graft.pipeline.QualityPipeline
   *      date split by AQE (S5/S6, skew §2.11); `--salt-buckets` sets only
   *      the files per date `--compact` writes.
   *
-  * The final commit is guarded by a `_committed.json` marker inside the
-  * run's progress dir, published by write-then-rename: a job killed
-  * between table commit and exit (or re-submitted after success) resumes
-  * to a no-op instead of appending a duplicate snapshot. Killed BEFORE
-  * the commit, the rerun skips all completed partitions and performs just
-  * the commit — so the table holds the run's rows exactly once under any
-  * kill/retry schedule. Once the marker is published, the run's partition
-  * outputs (`<output>/work/run=<id>`, a second copy of the committed
-  * rows) are deleted, and a rerun of a committed run retries that
-  * deletion; the progress dir with its manifests and marker stays.
+  * The commit record is the run id stamped into the table snapshot,
+  * whose publish is the commit: a job killed after the commit (or
+  * re-submitted after success) finds it and resumes to a no-op instead
+  * of appending a duplicate snapshot. Killed BEFORE the commit, the rerun
+  * skips all completed partitions and performs just the commit — so the
+  * table holds the run's rows exactly once under any kill/retry
+  * schedule. Once the snapshot is published, the run's partition outputs
+  * (`<output>/work/run=<id>`, a second copy of the committed rows) are
+  * deleted, and a rerun of a committed run retries that deletion; the
+  * progress dir with its manifests stays.
   *
   * Job identity is the explicit `--run-id` (O2 — no wall clock), a plain
   * name checked before anything is written (`[A-Za-z0-9._-]+`, not `.`
@@ -106,11 +105,6 @@ object RunJob {
 
   def workRoot(args: JobArgs): String = s"${args.output}/work"
   def tableRoot(args: JobArgs): String = s"${args.output}/table"
-  private def commitMarker(args: JobArgs) =
-    new Path(s"${workRoot(args)}/_progress/run=${args.runId}/_committed.json")
-
-  private def markerJson(args: JobArgs, version: Int, rows: Long): String =
-    s"""{"run_id":"${args.runId}","snapshot_version":$version,"rows":$rows}"""
 
   /** The whole job; `failAfter` is the kill-injection test hook
     * (CheckpointedRun's — aborts after N fresh partitions). Installs
@@ -133,50 +127,26 @@ object RunJob {
       runId = args.runId, numPartitions = args.partitions,
       failAfter = failAfter)
 
-    // Exactly-once commit detection: the DURABLE record is the run_id
-    // stamped into the snapshot JSON, whose publish is the commit (the
-    // marker alone had a crash window — a kill between the commit and the
-    // marker write would make the rerun append a duplicate snapshot). The
-    // marker remains as a fast path and a metrics record.
+    // Exactly-once: the run_id stamped into the snapshot JSON, whose
+    // publish is the commit, is the only commit record
     val io = RootFs(spark, workRoot(args))
-    val marker = commitMarker(args)
-    val markerText = io.readOpt(marker)
     val recorded = IcebergStyleTable
       .findSnapshotWithMeta(tableRoot(args), "run_id", args.runId)
-    if (markerText.isDefined || recorded.isDefined) {
-      // already committed by a previous attempt — resume is a no-op;
-      // report this run's contributed rows from its snapshot record. The
-      // version must be ATTRIBUTABLE to this run: the snapshot's stamped
-      // run_id, or the version recorded in this run's own marker. Falling
-      // back to currentVersion would attribute a LATER run's snapshot
-      // (and its added_rows) to this run if other runs committed since.
-      val markerVersion = markerText.flatMap(
-        """"snapshot_version"\s*:\s*(\d+)""".r.findFirstMatchIn(_))
-        .map(_.group(1).toInt)
-      val v = recorded.orElse(markerVersion)
-      // unattributable (marker unparseable AND no stamped snapshot —
-      // cannot happen through this code's own write order, which stamps
-      // the snapshot first): report rows as 0 rather than guessing
-      val rows = v.map(IcebergStyleTable.snapshotAddedRows(tableRoot(args), _))
-        .getOrElse(0L)
-      // heal a lost or unparseable marker; publish never replaces, so an
-      // unparseable one goes first
-      if (markerVersion.isEmpty && v.isDefined) {
-        io.delete(marker)
-        io.publish(marker, markerJson(args, v.get, rows))
-      }
-      // and finish the reclamation of the partition outputs, which a kill
-      // after the marker may have cut short
+    if (recorded.isDefined) {
+      // already committed by a previous attempt — resume is a no-op that
+      // reports this run's contributed rows from its own snapshot, and
+      // finishes the reclamation of the partition outputs, which a kill
+      // after the commit may have cut short
       io.delete(CheckpointedRun.runDir(workRoot(args), args.runId))
       JobResult(results, IcebergStyleTable.currentVersion(tableRoot(args)),
-        rows, committedThisRun = false)
+        IcebergStyleTable.snapshotAddedRows(tableRoot(args), recorded.get),
+        committedThisRun = false)
     } else {
       val out = CheckpointedRun.output(spark, workRoot(args), args.runId)
       val snap = IcebergStyleTable.append(out, tableRoot(args),
         partitionCols = Seq("part_date"), saltCol = "url",
         shufflePartitions = args.shufflePartitions,
         extraMeta = Map("run_id" -> args.runId))
-      io.publish(marker, markerJson(args, snap.version, snap.rowCount))
       // the table holds the rows now: the partition outputs are a second
       // copy of them, so reclaim it
       io.delete(CheckpointedRun.runDir(workRoot(args), args.runId))

@@ -35,9 +35,9 @@ object DocProcessor {
 
   def process(text: String): DocResult = process(text, null)
 
-  /** [[process]], charging the stage times to `scope` (may be null) as
+  /** [[process]], charging the stage times to `times` (may be null) as
     * well as to the JVM-wide [[StageTimers]]. */
-  def process(text: String, scope: StageTimers.Scope): DocResult =
+  def process(text: String, times: StageTimes): DocResult =
     try {
       val t0 = System.nanoTime()
       val (full, wordArr, startArr) = Tokenizer.tokenizeArrays(text)
@@ -63,7 +63,7 @@ object DocProcessor {
       val rules = Heuristics.evaluateWith(text, words, lang) ++
         pipelineRules(ppl, conf)
       val t5 = System.nanoTime()
-      StageTimers.record(scope, t0, t1, t2, t3, t4, t5)
+      StageTimers.record(times, t0, t1, t2, t3, t4, t5)
       DocResult(scrubbed, matches,
         nRedacted, lang, conf, ppl, rules,
         keep = !rules.exists(_.fired), error = None)

@@ -2,7 +2,7 @@ package graft.expr
 
 import java.lang.reflect.InvocationTargetException
 
-import org.apache.spark.TaskContext
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
@@ -158,26 +158,15 @@ object Kernels {
       labeled.count(_.detectedAs.isDefined))
   }
 
-  /** Spark local property naming the [[StageTimers]] scope that a job's
-    * [[pageProcess]] calls are also charged to. */
-  final val StageScopeProperty = "graft.stage.scope"
-
-  /** The scope named by the running task's job, or null outside a task,
-    * without the property, or where the scope was not opened (an
-    * executor JVM on a cluster). */
-  private def stageScope(): StageTimers.Scope = {
-    val tc = TaskContext.get()
-    if (tc == null) null
-    else StageTimers.scope(tc.getLocalProperty(StageScopeProperty))
-  }
-
   /** `graft_page_process(text)` — the fused whole-pipeline pass:
     * tokenize once → PII scan/refine/join/scrub + langid + perplexity +
     * lang-aware heuristics + keep/drop + full rule lineage, with per-row
     * fault isolation (error column instead of stage failure, O1). Emits
-    * the scrubbed text and PII spans only (`pageProcessStruct`). */
-  def pageProcess(v: UTF8String): InternalRow = {
-    val r = DocProcessor.process(v.toString, stageScope())
+    * the scrubbed text and PII spans only (`pageProcessStruct`). The
+    * stage times are charged to `times` (may be null) as well as to the
+    * JVM-wide [[StageTimers]]. */
+  def pageProcess(v: UTF8String, times: StageTimes): InternalRow = {
+    val r = DocProcessor.process(v.toString, times)
     InternalRow(
       UTF8String.fromString(r.scrubbedText),
       GraftSchemas.spansToCatalyst(r.matches),
@@ -513,10 +502,11 @@ final case class KernelSpec(name: String, inputTypes: Seq[Shim.InputType],
 /** A scalar `graft_*` function applied to its arguments: the
   * [[GraftKernel.table]] row called `name` supplies the input and result
   * types and the [[Kernels]] method. [[UnaryKernel]] and [[BinaryKernel]]
-  * are its one- and two-argument forms, so that Spark's
-  * Unary/BinaryExpression supply the null-intolerant `eval`, `nullable`
-  * (any argument nullable), foldability and the null-safe code template:
-  * the generated Java is that template around one static call,
+  * are its one- and two-argument forms ([[PageProcess]] is
+  * `graft_page_process`'s, which also passes its stage times), so that
+  * Spark's Unary/BinaryExpression supply the null-intolerant `eval`,
+  * `nullable` (any argument nullable), foldability and the null-safe code
+  * template: the generated Java is that template around one static call,
   * `graft.expr.Kernels.<method>(…)`. `name` is part of equality: two
   * kernels over one column are never one common subexpression. */
 sealed trait GraftKernel extends Expression with ExpectsInputTypes {
@@ -546,6 +536,7 @@ object GraftKernel {
 
   def apply(name: String, children: Seq[Expression]): GraftKernel =
     children match {
+      case Seq(c) if name == PageProcess.Name => PageProcess(c)
       case Seq(c) => UnaryKernel(name, c)
       case Seq(l, r) => BinaryKernel(name, l, r)
     }
@@ -614,6 +605,33 @@ case class BinaryKernel(name: String, left: Expression, right: Expression)
     defineCodeGen(ctx, ev, call(_, _))
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): BinaryKernel = copy(left = l, right = r)
+}
+
+/** `graft_page_process(text)`: the kernel-table row whose expression
+  * carries the [[StageTimes]] its documents are charged to. They are
+  * created when the expression is built, on the driver of the active
+  * session, and every copy the optimizer makes shares them, so the copies
+  * stay one common subexpression. Generated code passes them to the
+  * kernel as a reference object, and `eval` passes the same object. */
+case class PageProcess(child: Expression, times: StageTimes)
+    extends UnaryExpression with GraftKernel {
+  override def name: String = PageProcess.Name
+  override protected def nullSafeEval(v: Any): Any =
+    Kernels.pageProcess(v.asInstanceOf[UTF8String], times)
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("stageTimes", times)
+    defineCodeGen(ctx, ev, call(_, t))
+  }
+  override protected def withNewChildInternal(c: Expression): PageProcess =
+    copy(child = c)
+}
+
+object PageProcess {
+  final val Name = "graft_page_process"
+
+  def apply(child: Expression): PageProcess =
+    PageProcess(child, StageTimes(SparkSession.active.sparkContext))
 }
 
 /** `graft_absmax(emb)` — max(abs(x)) of ARRAY<DOUBLE> (DOUBLE; null

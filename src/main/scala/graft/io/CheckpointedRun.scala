@@ -9,8 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
-import graft.core.{Heuristics, StageTimers}
-import graft.expr.Kernels
+import graft.core.{Heuristics, StageTimes}
+import graft.expr.PageProcess
 
 /** Resumable batch execution with per-partition progress manifests and
   * per-stage metrics (SURVEY §7.6; BASELINE.json: "checkpoints
@@ -31,8 +31,9 @@ import graft.expr.Kernels
   * Metrics: one JSON manifest per (run, partition) with row counters per
   * stage (langid / perplexity / heuristics / scrub), collected by a Spark
   * `Observation` on the partition's own write job (no re-read of the
-  * output), plus wall time — the O4 commit-log analog, queryable as a
-  * table via [[metricsTable]].
+  * output), the kernel's per-stage `cpu_sec`, merged by Spark from the
+  * same job's tasks, plus wall time — the O4 commit-log analog,
+  * queryable as a table via [[metricsTable]].
   */
 object CheckpointedRun {
 
@@ -53,14 +54,21 @@ object CheckpointedRun {
   def completedPartitions(root: String, runId: String): Set[Int] =
     manifests(RootFs(root), root, runId).keySet
 
-  /** The run's partition manifests by partition. */
+  private val ManifestName = """partition=(0|[1-9]\d{0,8})\.json""".r
+
+  /** The run's partition manifests by partition: the
+    * `partition=<k>.json` names with a plain decimal `k` below the run's
+    * recorded partition count. Any other file in the progress dir is
+    * ignored. */
   private def manifests(io: RootFs, root: String,
-                        runId: String): Map[Int, Path] =
+                        runId: String): Map[Int, Path] = {
+    val parts = recordedPartitions(io, root, runId).getOrElse(0)
     io.list(progressDir(root, runId)).map(_.getPath)
-      .collect { case p if p.getName.startsWith("partition=") &&
-          p.getName.endsWith(".json") =>
-        p.getName.stripPrefix("partition=").stripSuffix(".json").toInt -> p }
-      .toMap
+      .flatMap(p => p.getName match {
+        case ManifestName(k) if k.toInt < parts => Some(k.toInt -> p)
+        case _ => None
+      }).toMap
+  }
 
   /** Run `transform` over `input` split into `numPartitions` logical
     * partitions by `keyCol`; completed partitions are skipped on resume.
@@ -86,7 +94,10 @@ object CheckpointedRun {
     * the partitions not yet started are skipped, the running ones are
     * waited for, and its error is rethrown as is; no partition job
     * outlives the call. `failAfter = k` runs the first k fresh
-    * partitions, waits for them, then throws.
+    * partitions, waits for them, then throws. A partition's stage times
+    * come from the expressions its own `transform` call built: a
+    * transform that reuses one built column for every partition charges
+    * them all to it.
     */
   def run(spark: SparkSession, input: DataFrame, keyCol: String,
           transform: DataFrame => DataFrame, root: String, runId: String,
@@ -98,12 +109,11 @@ object CheckpointedRun {
     require(numPartitions >= 1,
       s"numPartitions must be at least 1 (got $numPartitions)")
     val io = RootFs(spark, root)
-    val done = manifests(io, root, runId).keySet
 
     // a run's partition scheme is part of its identity: resuming the same
     // runId with a different numPartitions would silently skip buckets
     // (staged copy AND completion manifests are keyed by the old scheme)
-    io.readOpt(numPartitionsFile(root, runId)).map(_.trim.toInt) match {
+    recordedPartitions(io, root, runId) match {
       case Some(prev) =>
         require(prev == numPartitions,
           s"run $runId was started with numPartitions=$prev; " +
@@ -111,6 +121,7 @@ object CheckpointedRun {
       case None =>
         io.write(numPartitionsFile(root, runId), numPartitions.toString)
     }
+    val done = manifests(io, root, runId).keySet
 
     // fully-completed rerun: skip staging entirely — the staged copy is
     // deleted after completion (below), and rebuilding it just to skip
@@ -119,7 +130,7 @@ object CheckpointedRun {
     // cleanup leaves a partial _staged/run=<id> orphan that only this
     // path would ever see again (the rerun returns here before reaching
     // the post-loop cleanup).
-    if (done.size >= numPartitions) {
+    if ((0 until numPartitions).forall(done)) {
       io.delete(stagedDir(root, runId))
       return (0 until numPartitions)
         .map(k => PartitionResult(k, -1, skipped = true))
@@ -165,7 +176,7 @@ object CheckpointedRun {
       val part = staged.filter(col("_bucket") === k).drop("_bucket")
       val obs = Observation()
       val out = observed(transform(part), obs)
-      () => writePartition(spark, io, out, obs, root, runId, k)
+      () => writePartition(io, out, obs, root, runId, k)
     }
     val written = inPool(
       math.min(toRun.size, spark.sparkContext.defaultParallelism), writes)
@@ -234,25 +245,18 @@ object CheckpointedRun {
   }
 
   /** Write partition `k` (a pool thread's job), then its manifest. The
-    * kernel's stage times are charged to a [[StageTimers]] scope named by
-    * a local property the write job inherits, so partitions running side
-    * by side do not count each other's time. */
-  private def writePartition(spark: SparkSession, io: RootFs, out: DataFrame,
-                             obs: Observation, root: String, runId: String,
+    * kernel's stage times are the [[StageTimes]] of the
+    * `graft_page_process` expressions in `out`'s plan, which Spark merged
+    * from the write's tasks on whatever executors ran them. */
+  private def writePartition(io: RootFs, out: DataFrame, obs: Observation,
+                             root: String, runId: String,
                              k: Int): PartitionResult = {
     val t0 = System.nanoTime()
-    val outPath = partitionDir(root, runId, k)
-    val sc = spark.sparkContext
-    val scope = java.util.UUID.randomUUID().toString
-    StageTimers.openScope(scope)
-    sc.setLocalProperty(Kernels.StageScopeProperty, scope)
-    val stageNanos =
-      try {
-        out.write.mode("overwrite").parquet(outPath)
-        StageTimers.closeScope(scope)
-      } catch {
-        case e: Throwable => StageTimers.closeScope(scope); throw e
-      } finally sc.setLocalProperty(Kernels.StageScopeProperty, null)
+    out.write.mode("overwrite").parquet(partitionDir(root, runId, k))
+    val stageNanos = StageTimes.sum(out.queryExecution.analyzed
+      .flatMap(_.expressions.flatMap(_.collect { case p: PageProcess =>
+        p.times }))
+      .distinct)
     val m = obs.get.view.mapValues(_.asInstanceOf[Long]).toMap
     val rows = m("rows")
     val wall = (System.nanoTime() - t0) / 1e9
@@ -318,6 +322,10 @@ object CheckpointedRun {
   private def numPartitionsFile(root: String, runId: String) =
     new Path(progressDir(root, runId), "_num_partitions")
 
+  private def recordedPartitions(io: RootFs, root: String,
+                                 runId: String): Option[Int] =
+    io.readOpt(numPartitionsFile(root, runId)).map(_.trim.toInt)
+
   /** Read the final output of a (possibly resumed) run: its
     * `partition=<k>` directories by name, for every k below the run's
     * recorded partition count. A `partition=*` glob would have Spark's
@@ -325,17 +333,16 @@ object CheckpointedRun {
     * log and log the resulting FileNotFoundException at WARN.
     *
     * Valid only until the outputs are committed: `RunJob` deletes
-    * [[runDir]] once its commit marker is published. */
+    * [[runDir]] once its table snapshot is published. */
   def output(spark: SparkSession, root: String, runId: String): DataFrame = {
     val parts = RootFs(spark, root).read(numPartitionsFile(root, runId))
       .trim.toInt
     spark.read.parquet((0 until parts).map(partitionDir(root, runId, _)): _*)
   }
 
-  /** The metrics manifests as a queryable DataFrame (metrics table, O4).
-    * Only `partition=<k>.json` manifests qualify — the progress dir also
-    * holds RunJob's `_committed.json` commit marker, whose different
-    * schema would union in a spurious mostly-null row. */
+  /** The metrics manifests as a queryable DataFrame (metrics table, O4):
+    * one row per `partition=<k>.json` manifest, with per-stage `cpu_sec`
+    * merged from the executors that ran the partition's kernel. */
   def metricsTable(spark: SparkSession, root: String, runId: String): DataFrame =
     spark.read.json(manifests(RootFs(spark, root), root, runId)
       .values.map(_.toString).toSeq: _*)

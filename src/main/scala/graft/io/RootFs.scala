@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.SessionHadoopConf
 
 /** The FileSystem that holds a root's own files (progress manifests,
-  * table snapshots, the commit marker), and how the engine writes,
-  * publishes and reads one. A write creates missing parent directories.
+  * table snapshots), and how the engine writes, publishes and reads one.
+  * A write creates missing parent directories.
   *
   * Resolved once per public call from the session's Hadoop conf, with
   * `file://` routed through [[LocalFs]] whether or not the session

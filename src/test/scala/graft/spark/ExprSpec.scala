@@ -255,7 +255,7 @@ class ExprSpec extends AnyFunSuite {
       "graft_extract_text" -> (a => Kernels.extractText(str(a(0)))),
       "graft_pii_extract" -> (a => Kernels.piiExtract(str(a(0)))),
       "graft_pii_process" -> (a => Kernels.piiProcess(str(a(0)))),
-      "graft_page_process" -> (a => Kernels.pageProcess(str(a(0)))),
+      "graft_page_process" -> (a => Kernels.pageProcess(str(a(0)), null)),
       "graft_pii_tokens" -> (a => Kernels.piiTokens(str(a(0)))),
       "graft_langid" -> (a => Kernels.langid(str(a(0)))),
       "graft_perplexity" -> (a => Kernels.perplexity(str(a(0)), str(a(1)))),

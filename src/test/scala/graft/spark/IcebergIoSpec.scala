@@ -268,6 +268,34 @@ class IcebergIoSpec extends AnyFunSuite {
     assert(got.values.forall(_.tail.forall(_ == 0L)), got)
   }
 
+  test("partition manifests: only partition=<k>.json with k below the " +
+      "run's partition count names a manifest: stray names in the progress " +
+      "dir are ignored by completedPartitions, run and metricsTable") {
+    val root = tmpDir("strays")
+    val input = PagesSynth.pages(spark, 40, 2)
+    val identity = (df: DataFrame) => df
+    // killed before its last partition: 0..6 are done, 7 is missing
+    intercept[RuntimeException] {
+      CheckpointedRun.run(spark, input, "url", identity, root, "s1",
+        numPartitions = 8, failAfter = 7)
+    }
+    val progress = Paths.get(root, "_progress", "run=s1")
+    val manifest0 = Files.readAllBytes(progress.resolve("partition=0.json"))
+    Seq("partition=1.bak.json", "partition=99.json").foreach(n =>
+      Files.write(progress.resolve(n), manifest0))
+    assert(CheckpointedRun.completedPartitions(root, "s1") == (0 to 6).toSet)
+    assert(CheckpointedRun.metricsTable(spark, root, "s1")
+      .select("partition").collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L to 6L))
+    // eight manifest-like names for eight partitions: partition 7 still runs
+    val res = CheckpointedRun.run(spark, input, "url", identity, root, "s1",
+      numPartitions = 8)
+    assert(res.filterNot(_.skipped).map(_.partition) == Seq(7))
+    assert(CheckpointedRun.completedPartitions(root, "s1") == (0 to 7).toSet)
+    assert(CheckpointedRun.metricsTable(spark, root, "s1")
+      .agg(sum("rows")).head().getLong(0) == 40L)
+  }
+
   test("partition manifests: heuristics_n_fired counts the rules whose " +
       "fired is true, as filter(rule_lineage, r -> r.fired) does, over " +
       "null lineages, null rules and null flags") {

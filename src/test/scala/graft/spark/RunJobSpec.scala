@@ -290,20 +290,14 @@ class RunJobSpec extends AnyFunSuite {
     assert(table.select(countDistinct("url")).head().getLong(0) == 300)
   }
 
-  test("crash window closed: a kill between table commit and marker " +
-      "write cannot duplicate the snapshot — the run_id stamped in the " +
-      "snapshot JSON is the durable record") {
+  test("a re-submit of a committed run commits nothing and reports its " +
+      "own rows: the run_id stamped in the snapshot JSON is the commit " +
+      "record") {
     val in = writeInput(200)
     val args = RunJob.JobArgs(in, tmpDir("runjob_out"), "job_w",
       partitions = 4, saltBuckets = 4, shufflePartitions = 4)
     val res1 = RunJob.execute(spark, args)
     assert(res1.committedThisRun && res1.tableRows == 200)
-    // simulate the kill: the commit (hint flip) happened but the marker
-    // write did not
-    val marker = Paths.get(RunJob.workRoot(args), "_progress",
-      "run=job_w", "_committed.json")
-    assert(Files.exists(marker))
-    Files.delete(marker)
     // rerun: must detect the snapshot's run_id, NOT append again
     val res2 = RunJob.execute(spark, args)
     assert(!res2.committedThisRun)
@@ -311,37 +305,6 @@ class RunJobSpec extends AnyFunSuite {
     assert(IcebergStyleTable.snapshots(RunJob.tableRoot(args)) == Seq(1))
     assert(IcebergStyleTable.read(spark, RunJob.tableRoot(args))
       .count() == 200)
-    // and the lost marker was healed for future fast-path reruns
-    assert(Files.exists(marker))
-  }
-
-  test("a truncated commit marker is healed: the rerun commits nothing, " +
-      "reports this run's rows, and rewrites the marker") {
-    val in = writeInput(200)
-    val args = RunJob.JobArgs(in, tmpDir("runjob_out"), "job_t",
-      partitions = 4, saltBuckets = 4, shufflePartitions = 4)
-    assert(RunJob.execute(spark, args).committedThisRun)
-    val progress = Paths.get(RunJob.workRoot(args), "_progress", "run=job_t")
-    val marker = progress.resolve("_committed.json")
-    val full = new String(Files.readAllBytes(marker), UTF_8)
-    // a marker cut off mid-write no longer parses
-    Files.write(marker, full.take(full.length / 2).getBytes(UTF_8))
-    val res = RunJob.execute(spark, args)
-    assert(!res.committedThisRun)
-    assert(res.tableRows == 200)
-    val table = RunJob.tableRoot(args)
-    assert(IcebergStyleTable.snapshots(table) == Seq(1))
-    val stamped = IcebergStyleTable.findSnapshotWithMeta(table, "run_id",
-      "job_t")
-    val healed = new String(Files.readAllBytes(marker), UTF_8)
-    assert(""""snapshot_version":(\d+)""".r.findFirstMatchIn(healed)
-      .map(_.group(1).toInt) == stamped && stamped.contains(1), healed)
-    assert(healed == full)
-    // published by rename: no temporary file is left beside it
-    val ls = Files.list(progress)
-    val tmps = try ls.iterator().asScala.map(_.getFileName.toString)
-      .filter(_.endsWith(".tmp")).toSeq finally ls.close()
-    assert(tmps.isEmpty, tmps)
   }
 
   test("an unreadable snapshot fails the exactly-once lookup instead of " +
@@ -351,10 +314,8 @@ class RunJobSpec extends AnyFunSuite {
       partitions = 4, saltBuckets = 4, shufflePartitions = 4)
     assert(RunJob.execute(spark, args).committedThisRun)
     val table = RunJob.tableRoot(args)
-    // the marker is lost and snap-1.json cannot be read: a directory
-    // takes its name (permission bits would not stop a run as root)
-    Files.delete(Paths.get(RunJob.workRoot(args), "_progress", "run=job_u",
-      "_committed.json"))
+    // snap-1.json cannot be read: a directory takes its name (permission
+    // bits would not stop a run as root)
     val snap = Paths.get(table, "metadata", "snap-1.json")
     Files.delete(snap)
     Files.createDirectory(snap)
@@ -389,7 +350,7 @@ class RunJobSpec extends AnyFunSuite {
     assert(table.select(countDistinct("url")).head().getLong(0) == 240)
 
     // re-submitting the finished run is a no-op: all partitions skip and
-    // the _committed marker prevents a duplicate snapshot
+    // the run_id stamped in snapshot 1 prevents a duplicate snapshot
     val res2 = RunJob.execute(spark, args)
     assert(res2.partitions.forall(_.skipped))
     assert(!res2.committedThisRun)
