@@ -108,11 +108,17 @@ object Bench {
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
-  private def runPipeline(spark: SparkSession, pagesPath: String): Double = {
+  /** One pass: its wall seconds, and the fused kernel's nanos per stage
+    * and documents, read from the pass's own plan. */
+  private def runPipeline(
+      spark: SparkSession,
+      pagesPath: String): (Double, Map[String, Long], Long) = {
     val t0 = System.nanoTime()
-    graft.pipeline.QualityPipeline(spark.read.parquet(pagesPath))
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
+    val out = graft.pipeline.QualityPipeline(spark.read.parquet(pagesPath))
+    out.write.format("noop").mode("overwrite").save()
+    val t = (System.nanoTime() - t0) / 1e9
+    val (stageNanos, docs) = graft.expr.PageProcess.stageTimes(out)
+    (t, stageNanos, docs)
   }
 
   def main(args: Array[String]): Unit = {
@@ -181,7 +187,7 @@ object Bench {
       scala.collection.mutable.ArrayBuffer[Double]()).toMap
     val cycleSteal = scala.collection.mutable.ArrayBuffer[Long]()
     // per-level, per-cycle series: process CPU (jiffies), steal during the
-    // timed pass, fused-kernel nanos + docs (StageTimers) — the CPU-time
+    // timed pass, fused-kernel nanos + docs (runPipeline) — the CPU-time
     // evidence runs alongside every wall measurement
     val cycleCpu = levels.map(l => l ->
       scala.collection.mutable.ArrayBuffer[Long]()).toMap
@@ -194,7 +200,7 @@ object Bench {
     val cycleGc = levels.map(l => l ->
       scala.collection.mutable.ArrayBuffer[Long]()).toMap
     // per-cycle stage maps so the profile can be restricted to CLEAN
-    // cycles at the end (StageTimers measure thread-wall inside the
+    // cycles at the end (stage times measure thread-wall inside the
     // kernel, which preemption inflates — a stolen window would otherwise
     // contaminate the per-stage µs/doc exactly like the headline times)
     val stage32Cycles =
@@ -206,17 +212,14 @@ object Bench {
         val s = session(level)
         s.sparkContext.setLogLevel("WARN")
         if (cycle == 1) runPipeline(s, pagesPath) // per-session first warmup
-        val stage0 = graft.core.StageTimers.snapshot()
         val st0 = stealJiffies
         val cpu0 = procSelfCpuJiffies
         val gc0 = gcMillis
-        val t = runPipeline(s, pagesPath)
+        val (t, stageNanos, nDocs) = runPipeline(s, pagesPath)
         cycleGc(level) += gcMillis - gc0
         cycleCpu(level) += procSelfCpuJiffies - cpu0
         cycleStealLvl(level) += stealJiffies - st0
         cycleTimes(level) += t
-        val (stageNanos, nDocs) = graft.core.StageTimers.delta(stage0,
-          graft.core.StageTimers.snapshot())
         kernelNanos(level) += stageNanos.values.sum
         kernelDocs(level) += nDocs
         if (level == 32) stage32Cycles += ((stageNanos, nDocs))
@@ -256,7 +259,7 @@ object Bench {
     // stage profile over CLEAN level-32 passes only — same selection as
     // the headline medians
     val stage32Docs = used.map(stage32Cycles(_)._2).sum
-    graft.core.StageTimers.stages.foreach { st =>
+    graft.core.StageTimes.stages.foreach { st =>
       val ns = used.map(c => stage32Cycles(c)._1.getOrElse(st, 0L))
         .map(BigInt(_)).sum
       results(s"stage_${st}_us_per_doc") =
@@ -298,7 +301,7 @@ object Bench {
     val cpuEff832All = (0 until cyclesRun).map(cpuEffCycle(_, 8, 32))
     val cpuSec = levels.map(l =>
       l -> median(used.map(cycleCpu(l)(_).toDouble / 100.0))).toMap
-    // fused-kernel CPU per doc from StageTimers (engine work only, no
+    // fused-kernel CPU per doc from the stage times (engine work only, no
     // Spark overhead) — the second, independent constant-work-per-doc
     // witness
     val kernelUsPerDoc = levels.map { l =>

@@ -183,7 +183,8 @@ object RunJob {
         s""""table_version":${res.tableVersion},""" +
         s""""table_rows":${res.tableRows},""" +
         s""""committed_this_run":${res.committedThisRun},""" +
-        s""""metrics":"${workRoot(args)}/_progress/run=${args.runId}"}""")
+        s""""metrics":"${CheckpointedRun.progressDir(workRoot(args),
+          args.runId)}"}""")
     spark.stop()
   }
 }

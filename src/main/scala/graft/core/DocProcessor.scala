@@ -33,10 +33,12 @@ object DocProcessor {
     RuleResult("lang_conf_min", conf < Heuristics.LangConfMin, conf,
       Heuristics.LangConfMin))
 
+  /** [[process]] charging no stage times. */
   def process(text: String): DocResult = process(text, null)
 
-  /** [[process]], charging the stage times to `times` (may be null) as
-    * well as to the JVM-wide [[StageTimers]]. */
+  /** The fused pass over `text`. If `times` is not null, each stage's
+    * wall time is charged to it, and the document is counted once its
+    * five stages complete; a document that fails is not charged. */
   def process(text: String, times: StageTimes): DocResult =
     try {
       val t0 = System.nanoTime()
@@ -63,7 +65,7 @@ object DocProcessor {
       val rules = Heuristics.evaluateWith(text, words, lang) ++
         pipelineRules(ppl, conf)
       val t5 = System.nanoTime()
-      StageTimers.record(times, t0, t1, t2, t3, t4, t5)
+      if (times != null) times.record(t0, t1, t2, t3, t4, t5)
       DocResult(scrubbed, matches,
         nRedacted, lang, conf, ppl, rules,
         keep = !rules.exists(_.fired), error = None)
@@ -73,4 +75,11 @@ object DocProcessor {
           NGramLM.PerplexityEmpty, Vector.empty, keep = false,
           error = Some(s"${e.getClass.getName}: ${e.getMessage}"))
     }
+
+  // Build the lazy models (LangId.profiles, NGramLM.models) with the
+  // object, before any document is timed: otherwise each fresh JVM
+  // charges their synthesis to the langid and perplexity stages of its
+  // first document.
+  process("Warm-up page. Write to jane.doe@example.com or call " +
+    "555-867-5309.\nA second line of plain English text.", null)
 }

@@ -190,28 +190,6 @@ object Heuristics {
   }
 
   // ------------------------------------------------------------------
-  // Rule builders
-  // ------------------------------------------------------------------
-
-  /** Rules expressible with plain string/arithmetic ops — the
-    * lang-independent subset is mirrored in the DuckDB oracle SQL
-    * (SURVEY §5.4.4). The stopword rule is lang-aware: the Gopher list for
-    * en, vocab-head function words otherwise (English stopwords would drop
-    * every non-English page). */
-  def basicRules(text: String, lang: String = "en"): Vector[RuleResult] = {
-    val ws = Tokenizer.words(text)
-    basicRulesWith(text, ws, lang)
-  }
-
-  /** Back-compat form: tokenized words supplied, scan done here. */
-  def basicRulesWith(text: String, ws: IndexedSeq[String],
-                     lang: String): Vector[RuleResult] = {
-    val st = scanText(text)
-    val s = scratch.get()
-    basicRulesFrom(ws.length, scanWordsInto(ws, lang, s), st)
-  }
-
-  // ------------------------------------------------------------------
   // Fused per-word scan
   // ------------------------------------------------------------------
 
@@ -351,6 +329,11 @@ object Heuristics {
 
   private val blockProbe = new LowerWordProbe(Blocklist.toSeq.sorted)
 
+  /** Rules expressible with plain string/arithmetic ops — the
+    * lang-independent subset is mirrored in the DuckDB oracle SQL
+    * (SURVEY §5.4.4). The stopword rule is lang-aware: the Gopher list for
+    * en, vocab-head function words otherwise (English stopwords would drop
+    * every non-English page). */
   private def basicRulesFrom(n: Int, agg: WordAgg,
                              st: TextStats): Vector[RuleResult] = {
     val lenSum = agg.lenSum
@@ -399,9 +382,6 @@ object Heuristics {
     else stopwordProbeCache.computeIfAbsent(lang, buildStopProbe(_))
 
   /** Line-shape rules (lines split on '\n'; blank lines excluded). */
-  def lineRules(text: String): Vector[RuleResult] =
-    lineRulesFrom(scanText(text))
-
   private def lineRulesFrom(st: TextStats): Vector[RuleResult] = {
     val n = st.nLines
     val bullet = if (n == 0) 0.0 else st.bulletLines.toDouble / n
@@ -422,30 +402,9 @@ object Heuristics {
     *     chars(k-gram incl. separators) / chars(full_text)
     *   - dup_k_gram_char_fraction: sum over k-grams with count >= 2 of
     *     count x chars / chars(full_text), capped at 1.0
-    */
-  def repetitionRules(text: String): Vector[RuleResult] =
-    repetitionRulesWith(text,
-      Tokenizer.words(text).map(_.toLowerCase(Locale.ROOT)))
-
-  def repetitionRulesWith(text: String,
-                          wordsLower: IndexedSeq[String]): Vector[RuleResult] = {
-    val st = scanText(text)
-    // pre-lowered words: hash directly (the fused-path arrays are filled
-    // by scanWordsInto instead)
-    val s = scratch.get()
-    val nW = wordsLower.length
-    s.ensureWords(nW)
-    var wi = 0
-    while (wi < nW) {
-      s.wHash(wi) = NGramLM.hashWord(wordsLower(wi))
-      s.lenPrefix(wi + 1) = s.lenPrefix(wi) + wordsLower(wi).length
-      wi += 1
-    }
-    repetitionRulesFrom(text, nW, st, s)
-  }
-
-  /** N-gram/duplication rules over the PRE-FILLED `s.wHash`/`s.lenPrefix`
-    * arrays (one fused fill shared with the basic rules — see
+    *
+    * The n-gram rules read the PRE-FILLED `s.wHash`/`s.lenPrefix` arrays
+    * (one fused fill shared with the basic rules — see
     * [[scanWordsInto]]). */
   private def repetitionRulesFrom(text: String, nW: Int,
                                   st: TextStats,

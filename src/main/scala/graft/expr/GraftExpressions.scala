@@ -2,7 +2,7 @@ package graft.expr
 
 import java.lang.reflect.InvocationTargetException
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
@@ -163,8 +163,7 @@ object Kernels {
     * lang-aware heuristics + keep/drop + full rule lineage, with per-row
     * fault isolation (error column instead of stage failure, O1). Emits
     * the scrubbed text and PII spans only (`pageProcessStruct`). The
-    * stage times are charged to `times` (may be null) as well as to the
-    * JVM-wide [[StageTimers]]. */
+    * stage times are charged to `times` (may be null). */
   def pageProcess(v: UTF8String, times: StageTimes): InternalRow = {
     val r = DocProcessor.process(v.toString, times)
     InternalRow(
@@ -632,6 +631,16 @@ object PageProcess {
 
   def apply(child: Expression): PageProcess =
     PageProcess(child, StageTimes(SparkSession.active.sparkContext))
+
+  /** The kernel's nanos per stage and its documents, merged from the
+    * tasks of the jobs that ran `df`: the [[StageTimes]] of the
+    * `graft_page_process` expressions in its analyzed plan, summed; 0
+    * each if it has none. Read on the driver after `df` has run. */
+  def stageTimes(df: DataFrame): (Map[String, Long], Long) =
+    StageTimes.sum(df.queryExecution.analyzed
+      .flatMap(_.expressions.flatMap(_.collect { case p: PageProcess =>
+        p.times }))
+      .distinct)
 }
 
 /** `graft_absmax(emb)` — max(abs(x)) of ARRAY<DOUBLE> (DOUBLE; null

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
-import graft.core.{Heuristics, StageTimes}
+import graft.core.Heuristics
 import graft.expr.PageProcess
 
 /** Resumable batch execution with per-partition progress manifests and
@@ -48,7 +48,8 @@ object CheckpointedRun {
     require(runId.matches("[A-Za-z0-9._-]+") && runId != "." && runId != "..",
       s"--run-id must match [A-Za-z0-9._-]+ and not be . or .. (got '$runId')")
 
-  private def progressDir(root: String, runId: String) =
+  /** Where run `runId`'s partition manifests live. */
+  def progressDir(root: String, runId: String): Path =
     new Path(s"$root/_progress/run=$runId")
 
   def completedPartitions(root: String, runId: String): Set[Int] =
@@ -245,18 +246,15 @@ object CheckpointedRun {
   }
 
   /** Write partition `k` (a pool thread's job), then its manifest. The
-    * kernel's stage times are the [[StageTimes]] of the
-    * `graft_page_process` expressions in `out`'s plan, which Spark merged
-    * from the write's tasks on whatever executors ran them. */
+    * kernel's stage times are those of `out`'s own plan
+    * ([[PageProcess.stageTimes]]), which Spark merged from the write's
+    * tasks on whatever executors ran them. */
   private def writePartition(io: RootFs, out: DataFrame, obs: Observation,
                              root: String, runId: String,
                              k: Int): PartitionResult = {
     val t0 = System.nanoTime()
     out.write.mode("overwrite").parquet(partitionDir(root, runId, k))
-    val stageNanos = StageTimes.sum(out.queryExecution.analyzed
-      .flatMap(_.expressions.flatMap(_.collect { case p: PageProcess =>
-        p.times }))
-      .distinct)
+    val (stageNanos, _) = PageProcess.stageTimes(out)
     val m = obs.get.view.mapValues(_.asInstanceOf[Long]).toMap
     val rows = m("rows")
     val wall = (System.nanoTime() - t0) / 1e9

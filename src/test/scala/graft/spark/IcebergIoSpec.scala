@@ -391,23 +391,25 @@ class IcebergIoSpec extends AnyFunSuite {
     }
     // jobs started before the first transform call are the staging copy
     @volatile var stagingJobs: Option[Set[Int]] = None
+    // each partition's built frame, in partition order (a fresh run calls
+    // transform once per partition, in order)
+    val built = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val transform = (df: DataFrame) => {
       if (stagingJobs.isEmpty) {
         Shim.awaitListenerBus(spark)
         stagingJobs = Some(starts.keySet.asScala.toSet)
       }
-      QualityPipeline(df)
+      val out = QualityPipeline(df)
+      built += out
+      out
     }
     val root = tmpDir("overlap")
     spark.sparkContext.addSparkListener(listener)
-    val st0 = graft.core.StageTimers.snapshot()
     try {
       CheckpointedRun.run(spark, input, "url", transform, root, "o1",
         numPartitions = 4)
       Shim.awaitListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
-    val (global, _) = graft.core.StageTimers.delta(st0,
-      graft.core.StageTimers.snapshot())
 
     val jobs = starts.keySet.asScala.toSeq.filterNot(stagingJobs.get)
       .map(j => (starts.get(j).longValue, ends.get(j).longValue))
@@ -421,19 +423,29 @@ class IcebergIoSpec extends AnyFunSuite {
       "langid" -> "langid", "perplexity" -> "perplexity",
       "heuristics" -> "heuristics")
     val manifests = CheckpointedRun.metricsTable(spark, root, "o1")
-      .select(col("rows") +: stageCols.map { case (_, m) =>
-        col(s"stages.$m.cpu_sec") }: _*).collect()
+      .select(col("partition") +: col("rows") +: stageCols.map {
+        case (_, m) => col(s"stages.$m.cpu_sec") }: _*)
+      .orderBy("partition").collect()
     assert(manifests.length == 4)
-    manifests.filter(_.getLong(0) > 0).foreach { r =>
-      assert((1 to stageCols.size).forall(r.getDouble(_) > 0.0), r)
+    manifests.filter(_.getLong(1) > 0).foreach { r =>
+      assert((2 until 2 + stageCols.size).forall(r.getDouble(_) > 0.0), r)
     }
-    assert(manifests.map(_.getLong(0)).sum == 400L)
-    stageCols.zipWithIndex.foreach { case ((stage, _), i) =>
-      val parts = manifests.map(_.getDouble(i + 1)).sum
-      assert(math.abs(parts - global(stage) / 1e9) < 1e-6,
-        s"$stage: partitions sum to $parts s, global delta " +
-          s"${global(stage) / 1e9} s")
+    // exact witness: the documents charged to each partition's own plan
+    // are that partition's rows, and its manifest's cpu_sec are that
+    // plan's nanos
+    assert(built.size == 4)
+    val charged = built.map(graft.expr.PageProcess.stageTimes).toSeq
+    manifests.zip(charged).foreach { case (r, (nanos, docs)) =>
+      assert(docs == r.getLong(1), s"partition ${r.getLong(0)}: $docs docs " +
+        s"charged, ${r.getLong(1)} rows")
+      stageCols.zipWithIndex.foreach { case ((stage, _), i) =>
+        assert(r.getDouble(i + 2) == nanos(stage) / 1e9,
+          s"partition ${r.getLong(0)} $stage: ${r.getDouble(i + 2)} s, " +
+            s"plan ${nanos(stage) / 1e9} s")
+      }
     }
+    assert(manifests.map(_.getLong(1)).sum == 400L)
+    assert(charged.map(_._2).sum == 400L)
   }
 
   test("checkpointed run: a failing partition's own error is rethrown, " +

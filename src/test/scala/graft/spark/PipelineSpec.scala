@@ -4,7 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.StageTimes
 import graft.expr.GraftFunctions.{extract_text, html_text_safe, is_blank_text}
+import graft.expr.PageProcess
 import graft.model.PagesSynth
 import graft.pipeline.QualityPipeline
 
@@ -195,6 +197,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(names.distinct.length == names.length)
     // kept doc: nothing fired
     assert(rules.forall(r => !r.getBoolean(1)))
+  }
+
+  test("stage times: a noop write of the pipeline charges each document " +
+      "once, and time to all five stages, to its own plan") {
+    val n = 300L
+    val df = QualityPipeline(PagesSynth.pages(spark, n, 4))
+    df.write.format("noop").mode("overwrite").save()
+    val (nanos, docs) = PageProcess.stageTimes(df)
+    assert(docs == n)
+    assert(nanos.keySet == StageTimes.stages.toSet)
+    assert(nanos.values.forall(_ > 0), nanos)
   }
 
   test("host_bucket partition column is Zipf-bounded and stable") {

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a compiled main against the Spark jars without sbt (no build lock,
-# no sbt startup). Usage: tools/run_main.sh graft.BenchExtra kernels 20000
-cd /root/repo
+# no sbt startup). Usage: tools/run_main.sh graft.Verify <sf-dir> <out-dir>
+cd "$(dirname "$0")/.."
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
