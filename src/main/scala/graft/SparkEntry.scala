@@ -9,6 +9,7 @@ import org.apache.parquet.io.InputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.{Blank, Heuristics}
 import graft.expr.GraftFunctions
 import graft.expr.GraftFunctions._
 import graft.io.RootFs
@@ -237,50 +238,64 @@ object SparkEntry {
       .agg(min(col("margin"))).head().getDouble(0)
   }
 
-  /** Deterministic PII-planted text over the documents table — the same
-    * construction is expressed in the DuckDB oracle, so regex stages can
-    * be cross-checked per pattern. Pure integer/concat ops only. */
-  private val piiTextSql: String =
-    "concat(text, ' Contact: user', cast(doc_id as string), " +
-      "'@example.com or (415) 555-', cast(1000 + doc_id % 9000 as string), " +
-      "'. SSN: ', cast(100 + doc_id % 900 as string), '-', " +
-      "cast(10 + doc_id % 89 as string), '-', " +
-      "cast(1000 + doc_id % 8999 as string), " +
-      "'. Host 10.', cast(doc_id % 250 as string), '.', " +
-      "cast(doc_id % 100 as string), '.', cast(1 + doc_id % 50 as string), '.')"
+  // The planted inputs below are each ONE SQL text that both engines
+  // evaluate: the Spark query through `expr` and the DuckDB oracle inline.
+  // Spark 4.1 and DuckDB 1.0 agree on everything they use: `||`
+  // (NULL-propagating in both, unlike DuckDB's `concat`, which skips
+  // NULLs), `CAST(x AS STRING)`, `CASE x WHEN`, integer `%`.
 
-  private val piiTextDuck: String =
-    "text || ' Contact: user' || doc_id || '@example.com or (415) 555-' || " +
-      "(1000 + doc_id % 9000) || '. SSN: ' || (100 + doc_id % 900) || '-' || " +
-      "(10 + doc_id % 89) || '-' || (1000 + doc_id % 8999) || " +
-      "'. Host 10.' || (doc_id % 250) || '.' || (doc_id % 100) || '.' || " +
-      "(1 + doc_id % 50) || '.'"
+  /** Deterministic PII-planted text over the documents table, so regex
+    * stages can be cross-checked per pattern. */
+  private val piiTextSql: String =
+    "text || ' Contact: user' || CAST(doc_id AS STRING) || " +
+      "'@example.com or (415) 555-' || " +
+      "CAST(1000 + doc_id % 9000 AS STRING) || " +
+      "'. SSN: ' || CAST(100 + doc_id % 900 AS STRING) || '-' || " +
+      "CAST(10 + doc_id % 89 AS STRING) || '-' || " +
+      "CAST(1000 + doc_id % 8999 AS STRING) || " +
+      "'. Host 10.' || CAST(doc_id % 250 AS STRING) || '.' || " +
+      "CAST(doc_id % 100 AS STRING) || '.' || " +
+      "CAST(1 + doc_id % 50 AS STRING) || '.'"
 
   /** Standalone financial-PII text (no base text, so no accidental
     * matches): one card / routing / account / credit-score / rating per
     * doc, token-separated and overlap-free across the five types by
     * construction (digit-group shapes 4-4-4-4 / 9 / 11 / 3 cannot satisfy
     * each other's patterns; verified in the d3 query comment). */
-  private val ratingCaseSql: String =
-    "case cast(doc_id % 6 as int) when 0 then 'very good' when 1 then 'good' " +
-      "when 2 then 'excellent' when 3 then 'fair' when 4 then 'poor' " +
-      "else 'bad' end"
   private val finTextSql: String =
-    "concat('card 4', cast(100 + doc_id % 900 as string), '-1111-2222-', " +
-      "cast(1000 + doc_id % 9000 as string), " +
-      "' routing ', cast(100000000 + doc_id % 900000000 as string), " +
-      "' account ', cast(10000000000 + doc_id as string), " +
-      "' credit score: ', cast(300 + doc_id % 550 as string), " +
-      s"'. credit report: ', $ratingCaseSql, '.')"
-  private val finTextDuck: String =
-    "'card 4' || (100 + doc_id % 900) || '-1111-2222-' || " +
-      "(1000 + doc_id % 9000) || ' routing ' || " +
-      "(100000000 + doc_id % 900000000) || ' account ' || " +
-      "(10000000000 + doc_id) || ' credit score: ' || " +
-      "(300 + doc_id % 550) || '. credit report: ' || " +
-      "(CASE doc_id % 6 WHEN 0 THEN 'very good' WHEN 1 THEN 'good' " +
-      "WHEN 2 THEN 'excellent' WHEN 3 THEN 'fair' WHEN 4 THEN 'poor' " +
-      "ELSE 'bad' END) || '.'"
+    "'card 4' || CAST(100 + doc_id % 900 AS STRING) || '-1111-2222-' || " +
+      "CAST(1000 + doc_id % 9000 AS STRING) || " +
+      "' routing ' || CAST(100000000 + doc_id % 900000000 AS STRING) || " +
+      "' account ' || CAST(10000000000 + doc_id AS STRING) || " +
+      "' credit score: ' || CAST(300 + doc_id % 550 AS STRING) || " +
+      "'. credit report: ' || (CASE doc_id % 6 WHEN 0 THEN 'very good' " +
+      "WHEN 1 THEN 'good' WHEN 2 THEN 'excellent' WHEN 3 THEN 'fair' " +
+      "WHEN 4 THEN 'poor' ELSE 'bad' END) || '.'"
+
+  /** One PII type the oracle counts with its own RE2 regex, written
+    * independently of `PiiDetector.patterns`: its engine label, the
+    * query's count column, the regex. */
+  private final case class MirroredPii(label: String, column: String,
+                                       re2: String)
+
+  /** The webtext four, planted by [[piiTextSql]] (d1 counts, d2 rows). */
+  private val webPii = Seq(
+    MirroredPii("SSN", "n_ssn", "\\d{3}-\\d{2}-\\d{4}"),
+    MirroredPii("Email", "n_email",
+      "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"),
+    MirroredPii("Phone Number", "n_phone",
+      "\\(?\\d{3}\\)?[-.\\s]?\\d{3}[-.\\s]?\\d{4}"),
+    MirroredPii("IP Address", "n_ip", "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b"))
+
+  /** The financial five, planted by [[finTextSql]] (d3 counts). */
+  private val finPii = Seq(
+    MirroredPii("Credit Card Number", "n_card",
+      "\\b(?:\\d{4}[ -]?){3}\\d{4}\\b"),
+    MirroredPii("Routing Number", "n_routing", "\\b\\d{9}\\b"),
+    MirroredPii("Account Number", "n_account", "\\b\\d{10,17}\\b"),
+    MirroredPii("Credit Score", "n_score", "credit score:\\s*\\d{3}"),
+    MirroredPii("Credit Score Rating", "n_rating",
+      "credit report:\\s*(very good|good|excellent|fair|poor|bad)"))
 
   /** Deterministic scrub-oracle text: a fully constructed document whose
     * expected SCRUBBED form is computable in plain SQL — every PII value
@@ -313,19 +328,13 @@ object SparkEntry {
     * lowercase path); the oracle recounts from the same construction, so
     * natural occurrences in the base text stay correct on both sides. */
   private val toxTextSql: String =
-    "case when doc_id % 7 = 0 then concat(text, ' viagra casino xxx') " +
-      "when doc_id % 7 = 1 then concat(text, ' NSFW') else text end"
-  private val toxTextDuck: String =
     "CASE WHEN doc_id % 7 = 0 THEN text || ' viagra casino xxx' " +
       "WHEN doc_id % 7 = 1 THEN text || ' NSFW' ELSE text END"
 
   /** Deterministic dup/near-dup planting for the dedup operators. */
   private val dupTextSql: String =
-    "case when doc_id % 11 < 2 then concat('duplicate cluster ', " +
-      "cast(doc_id % 3 as string)) else text end"
-  private val dupTextDuck: String =
-    "case when doc_id % 11 < 2 then 'duplicate cluster ' || (doc_id % 3) " +
-      "else text end"
+    "CASE WHEN doc_id % 11 < 2 THEN 'duplicate cluster ' || " +
+      "CAST(doc_id % 3 AS STRING) ELSE text END"
 
   /** Documents-table row count from the footers, memoized per table
     * signature — sizes the scale-aware plantings below (and is what a
@@ -352,9 +361,11 @@ object SparkEntry {
       "watches from the tall oak tree near the quiet river bank every " +
       "single morning of the long warm summer season tail variant"
 
-  /** Near-dup planting parameterized by variant count; variant index is
-    * `(doc_id div 25) % v` (the planted docs' own ordinal — a plain
-    * `doc_id % v` only reaches gcd(25, v) residues).
+  /** Near-dup planting over `nVar` variants, as SQL text: Spark passes
+    * the count, the oracles pass [[NVarToken]]. The variant index is
+    * `floor(doc_id / 25) % nVar` (the planted docs' own ordinal — a plain
+    * `doc_id % nVar` only reaches gcd(25, nVar) residues); `floor` comes
+    * before the cast because DuckDB's double-to-BIGINT cast rounds.
     *
     * The tag is appended to EVERY word of the base, so different variants
     * share ZERO shingles. A trailing-tag-only construction left
@@ -365,44 +376,39 @@ object SparkEntry {
     * the quadratic cross-variant pair set while the capped LSH side
     * (correctly) dropped it. Disjoint variants make the planted truth
     * identical at every scale: within-variant J = 1, cross-variant
-    * J = 0. */
-  /** HOF-free planting form: the variant tag is interleaved between the
-    * literal base words with a flat `concat` instead of
-    * `array_join(transform(split(...)))`. Byte-identical output (same
-    * words, same tag, same single-space joins — asserted in OpsSpec),
-    * but higher-order functions are CodegenFallback expressions in
-    * Spark, so the transform form both evaluated interpreted AND pushed
-    * the whole projection (including the banding kernel) out of
-    * whole-stage codegen for every dedup query. */
-  private def nearDupSql(v: Int): String = {
-    val tag = s"cast((doc_id div 25) % $v as string)"
+    * J = 0.
+    *
+    * A flat `||` chain of the literal words, not
+    * `array_join(transform(split(...)))`: higher-order functions are
+    * CodegenFallback expressions in Spark, so the transform form both
+    * evaluated interpreted AND pushed the whole projection (including the
+    * banding kernel) out of whole-stage codegen for every dedup query. */
+  private def nearDupSql(nVar: String): String = {
+    val tag = s"CAST(CAST(floor(doc_id / 25) AS BIGINT) % $nVar AS STRING)"
     val pieces = nearDupBaseWords.split(' ').zipWithIndex.map {
-      case (w, i) => (if (i == 0) s"'$w'" else s"' $w'") + s", $tag"
-    }.mkString(", ")
-    s"case when doc_id % 25 = 0 then concat($pieces) else text end"
+      case (w, i) => (if (i == 0) s"'$w'" else s"' $w'") + s" || $tag"
+    }.mkString(" || ")
+    s"CASE WHEN doc_id % 25 = 0 THEN $pieces ELSE text END"
   }
 
   /** Placeholder Verify substitutes with the computed variant count. */
   final val NVarToken = "__NVAR__"
 
-  /** DuckDB form of nearDupSql's planted paragraph — ONE copy shared by
-    * the oracles that rebuild it (a drifted copy would silently
-    * desynchronize the pair sets). */
-  private val nearDupBaseDuck: String =
-    s"array_to_string(list_transform(string_split('$nearDupBaseWords', ' '), " +
-      s"w -> w || ((doc_id // 25) % $NVarToken)), ' ')"
+  /** DuckDB words of the text expression `t`: the `\s+` split mirrors the
+    * Scala Character.isWhitespace word split (a single-space split would
+    * silently diverge on multi-line text). */
+  private def duckWords(t: String): String =
+    s"list_filter(regexp_split_to_array($t, '\\s+'), w -> w <> '')"
 
   /** CTE chain computing the exact-Jaccard >= 0.8 pair set (`jpairs`) in
-    * DuckDB — shared by the dedup_minhash_pairs and dedup_clusters
-    * oracles. Mirrors the Spark shingle construction exactly. */
-  private val exactJaccardPairsCtes: String = {
-    val base = nearDupBaseDuck
-    // \s+ split mirrors the Scala Character.isWhitespace word split (a
-    // single-space split would silently diverge on multi-line text)
-    s"w AS (SELECT doc_id, " +
-      s"list_transform(list_filter(regexp_split_to_array(" +
-      s"CASE WHEN doc_id % 25 = 0 THEN $base ELSE text END, '\\s+'), " +
-      s"x -> x <> ''), x -> lower(x)) AS ws FROM documents), " +
+    * DuckDB over the near-dup planting of the documents that satisfy
+    * `docFilter` — the ground truth of the dedup_minhash_pairs,
+    * dedup_clusters and dedup_ngram_jaccard oracles. Mirrors the Spark
+    * shingle construction exactly. */
+  private def exactJaccardPairsCtes(docFilter: String): String =
+    s"w AS (SELECT doc_id, list_transform(" +
+      s"${duckWords(nearDupSql(NVarToken))}, x -> lower(x)) AS ws " +
+      s"FROM documents WHERE $docFilter), " +
       // empty/whitespace docs carry no shingles on the Spark side (the
       // LSH skew guard) — the oracle excludes them identically
       s"d AS (SELECT doc_id, CASE WHEN len(ws) >= 3 THEN " +
@@ -420,7 +426,6 @@ object SparkEntry {
       s"FROM pair JOIN sizes sa ON id_a = sa.doc_id " +
       s"JOIN sizes sb ON id_b = sb.doc_id " +
       s"WHERE n_inter * 10 >= (sa.n + sb.n - n_inter) * 8)"
-  }
 
   /** Parameterized IVF ANN search (the `ann_ivf_topk` body): trained
     * codebook of `k` cells, multi-probe over the query's `nprobe` nearest
@@ -456,13 +461,10 @@ object SparkEntry {
   }
 
   /** Shared DuckDB fragments for the heuristics-rule mirrors — ONE copy
-    * of each expression and of the full keep predicate (three queries
-    * previously duplicated them verbatim; a threshold edited in one copy
-    * would silently desynchronize the others). Thresholds mirror
-    * graft.core.Heuristics. */
+    * of each expression, read by the heuristics_basic and quality_score
+    * oracles and by [[basicRules]]. */
   private object DuckHeuristics {
-    val words =
-      "list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '')"
+    val words = duckWords("text")
     val wc = s"len($words)"
     val totalChars = s"len(array_to_string($words, '')) "
     val symbols = "(len(regexp_extract_all(text, '#')) + " +
@@ -475,12 +477,6 @@ object SparkEntry {
     val lorem =
       "CASE WHEN contains(lower(text), 'lorem ipsum') THEN 1 ELSE 0 END"
     val curly = "CASE WHEN contains(text, '{') THEN 1 ELSE 0 END"
-    val keep = s"NOT ($wc < 50 OR $wc > 100000 " +
-      s"OR ($wc > 0 AND ($totalChars * 1.0 / $wc) < 3.0) " +
-      s"OR ($totalChars * 1.0 / $wc) > 10.0 " +
-      s"OR ($symbols * 1.0 / $wc) > 0.1 " +
-      s"OR ($wc > 0 AND ($alpha * 1.0 / $wc) < 0.8) " +
-      s"OR $stop < 2 OR $lorem > 0 OR $curly > 0 OR $sent < 3)"
   }
 
   private def rules(c: Column, lang: Column) = quality_rules(c, lang)
@@ -497,7 +493,7 @@ object SparkEntry {
     * `rs[i].field` is a native GetArrayItem/GetStructField chain and
     * selects the same element by the fixed order. */
   private lazy val ruleIdx: Map[String, Int] =
-    graft.core.Heuristics.evaluate("probe text", "en").zipWithIndex
+    Heuristics.evaluate("probe text", "en").zipWithIndex
       .map { case (r, i) => r.rule -> i }.toMap
 
   private def ruleValue(rs: Column, name: String): Column =
@@ -511,10 +507,50 @@ object SparkEntry {
   private def nOfType(types: Column, t: Column): Column =
     (size(types) - size(array_remove(types, t))).cast("long")
 
-  private val basicRuleNames = Seq("word_count_min", "word_count_max",
-    "mean_word_length_min", "mean_word_length_max", "symbol_to_word_ratio",
-    "alpha_word_ratio", "stopword_count", "lorem_ipsum", "curly_brace",
-    "min_sentence_count")
+  /** Per-doc match count of each of `types` in the planted text
+    * `textSql` (d1 / d3), and the DuckDB oracle that recounts them with
+    * each type's own regex. */
+  private def piiCounts(docs: DataFrame, textSql: String,
+                        types: Seq[MirroredPii]): DataFrame =
+    docs.withColumn("ms", pii_extract(expr(textSql)))
+      .select(col("doc_id") +: types.map(t =>
+        nOfType(col("ms.pii_type"), lit(t.label)).as(t.column)): _*)
+      .orderBy("doc_id")
+  private def piiCountsOracle(textSql: String,
+                              types: Seq[MirroredPii]): String =
+    types.map(t => s"len(regexp_extract_all($textSql, '${t.re2}')) " +
+        s"AS ${t.column}")
+      .mkString("SELECT doc_id, ", ", ", " FROM documents ORDER BY doc_id")
+
+  /** The ten basic Gopher/C4 rules whose OR drops a page in
+    * heuristics_basic and keep_stats: the engine's rule name, and the
+    * DuckDB predicate that recomputes its `fired` flag with
+    * [[Heuristics]]' thresholds. */
+  private val basicRules: Seq[(String, String)] = {
+    import DuckHeuristics._
+    Seq(
+      "word_count_min" -> s"$wc < ${Heuristics.MinWords}",
+      "word_count_max" -> s"$wc > ${Heuristics.MaxWords}",
+      "mean_word_length_min" -> (s"($wc > 0 AND ($totalChars * 1.0 / $wc) " +
+        s"< ${Heuristics.MinMeanWordLen})"),
+      "mean_word_length_max" ->
+        s"($totalChars * 1.0 / $wc) > ${Heuristics.MaxMeanWordLen}",
+      "symbol_to_word_ratio" ->
+        s"($symbols * 1.0 / $wc) > ${Heuristics.MaxSymbolWordRatio}",
+      "alpha_word_ratio" -> (s"($wc > 0 AND ($alpha * 1.0 / $wc) " +
+        s"< ${Heuristics.MinAlphaWordRatio})"),
+      "stopword_count" -> s"$stop < ${Heuristics.MinStopwords}",
+      "lorem_ipsum" -> s"$lorem > 0",
+      "curly_brace" -> s"$curly > 0",
+      "min_sentence_count" -> s"$sent < ${Heuristics.MinSentences}")
+  }
+
+  /** No basic rule fired: from the lineage `rs` on the Spark side, and
+    * recomputed from `text` on the DuckDB side. */
+  private def keepBasic(rs: Column): Column =
+    !basicRules.map { case (n, _) => ruleFired(rs, n) }.reduce(_ || _)
+  private val keepBasicDuck: String =
+    basicRules.map(_._2).mkString("NOT (", " OR ", ")")
 
   /** Flagship: the full quality-filter pipeline over a synthesized pages
     * table at sf0.001 scale; driver smoke-checks rows > 0. */
@@ -543,7 +579,7 @@ object SparkEntry {
     // banding is ~100-200 us/row (shingles + 128 MinHashes): a lower
     // amortization threshold than the default kernel class
     val d = docsPar(s, dir, minRowsPerCore = 64L).withColumn("t",
-      expr(nearDupSql(nearDupVariants(numDocs(s, dir)))))
+      expr(nearDupSql(nearDupVariants(numDocs(s, dir)).toString)))
     // Since the single-pass candidate generation below, the band keys
     // have exactly ONE consumer (the count+capped-list aggregation), so
     // the banding kernel is evaluated once per run.
@@ -612,12 +648,11 @@ object SparkEntry {
 
     // ---- P1: branch predicate (extract vs direct route). Blank = empty
     //      or ALL-whitespace, via the SAME canonical char-set the pipeline
-    //      routes on (QualityPipeline.BlankChars = Python str.strip()'s
-    //      set; trim(chars) on both engines — Java \s and RE2 \s disagree
-    //      on U+000B and both miss NBSP/U+3000) ----
+    //      routes on (graft.core.Blank.Chars = Python str.strip()'s
+    //      set; trim(chars) on both engines) ----
     "p1_branch_route" -> ((s, dir) =>
       docs(s, dir).select(col("doc_id"),
-        when(length(trim(col("text"), QualityPipeline.BlankChars)) === 0,
+        when(length(trim(col("text"), Blank.Chars)) === 0,
           lit("extract"))
           .otherwise(lit("direct")).as("route"))
         .orderBy("doc_id")),
@@ -652,15 +687,8 @@ object SparkEntry {
         .orderBy("doc_id")),
 
     // ---- D1-D3: fused multi-pattern scan (per-type counts, planted) ----
-    "d1_pii_counts" -> ((s, dir) => {
-      val d = docsPar(s, dir).withColumn("pii_text", expr(piiTextSql))
-        .withColumn("ms", pii_extract(col("pii_text")))
-      def cnt(t: String) = nOfType(col("ms.pii_type"), lit(t))
-      d.select(col("doc_id"),
-        cnt("SSN").as("n_ssn"), cnt("Email").as("n_email"),
-        cnt("Phone Number").as("n_phone"), cnt("IP Address").as("n_ip"))
-        .orderBy("doc_id")
-    }),
+    "d1_pii_counts" -> ((s, dir) =>
+      piiCounts(docsPar(s, dir), piiTextSql, webPii)),
 
     // ---- D1 full lineage: one scalar row per match (the driver's pandas
     //      compare cannot sort nested arrays, so the struct array is
@@ -682,8 +710,7 @@ object SparkEntry {
         // pinned by PiiPatternSpec + goldens — without this filter a
         // future testdata regen containing e.g. a 9-digit run would emit
         // rows the oracle lacks
-        .filter(col("pii_type").isin("SSN", "Email", "Phone Number",
-          "IP Address"))
+        .filter(col("pii_type").isin(webPii.map(_.label): _*))
         .orderBy("doc_id", "pii_type", "seq")
     }),
 
@@ -696,18 +723,8 @@ object SparkEntry {
     //      consumes the 11-digit account before the phone pattern could
     //      claim its 10-digit prefix, which independent per-pattern
     //      counting cannot mirror. ----
-    "d3_pii_financial" -> ((s, dir) => {
-      val d = docsPar(s, dir).withColumn("fin_text", expr(finTextSql))
-        .withColumn("ms", pii_extract(col("fin_text")))
-      def cnt(t: String) = nOfType(col("ms.pii_type"), lit(t))
-      d.select(col("doc_id"),
-        cnt("Credit Card Number").as("n_card"),
-        cnt("Routing Number").as("n_routing"),
-        cnt("Account Number").as("n_account"),
-        cnt("Credit Score").as("n_score"),
-        cnt("Credit Score Rating").as("n_rating"))
-        .orderBy("doc_id")
-    }),
+    "d3_pii_financial" -> ((s, dir) =>
+      piiCounts(docsPar(s, dir), finTextSql, finPii)),
 
     // ---- J1+J2+R1: span join + whole-token scrub, byte-exact vs the
     //      DuckDB-constructed expected text (see scrubTextSql). Scrub over
@@ -736,7 +753,7 @@ object SparkEntry {
         .withColumn("lid",
           langid(extract_text(coalesce(col("text"), html_text(col("html"))))))
         .select(col("url"), col("lid.lang").as("lang_pred"),
-          (col("lid.conf") >= lit(QualityPipeline.LangConfMin))
+          (col("lid.conf") >= lit(Heuristics.LangConfMin))
             .as("conf_above_min"))
         .orderBy("url")
     }),
@@ -763,7 +780,7 @@ object SparkEntry {
         .withColumn("ppl_s", perplexity(
           translate(col("txt"), "aeiouAEIOU", "zqxjvZQXJV"), col("pred")))
         .select(col("url"),
-          (col("ppl") <= lit(QualityPipeline.PerplexityMax * 0.8))
+          (col("ppl") <= lit(Heuristics.PerplexityMax * 0.8))
             .as("ppl_below_gate"),
           when(col("true_lang") =!= "zh", col("ppl_s") > col("ppl"))
             .otherwise(col("ppl_s") >= col("ppl")).as("scrambled_worse"))
@@ -773,15 +790,13 @@ object SparkEntry {
     // ---- Gopher/C4 heuristics: integer-exact observables ----
     "heuristics_basic" -> ((s, dir) => {
       val d = docsPar(s, dir).withColumn("rs", rules(col("text"), lit("en")))
-      val fired = basicRuleNames.map(n => ruleFired(col("rs"), n))
-        .reduce(_ || _)
       d.select(col("doc_id"),
         ruleValue(col("rs"), "word_count_min").cast("long").as("word_count"),
         ruleValue(col("rs"), "stopword_count").cast("long").as("stopword_count"),
         ruleValue(col("rs"), "min_sentence_count").cast("long").as("sentences"),
         ruleValue(col("rs"), "lorem_ipsum").cast("long").as("has_lorem"),
         ruleValue(col("rs"), "curly_brace").cast("long").as("has_curly"),
-        (!fired).as("keep_basic"))
+        keepBasic(col("rs")).as("keep_basic"))
         .orderBy("doc_id")
     }),
 
@@ -801,11 +816,9 @@ object SparkEntry {
     // ---- keep/drop aggregate per language ----
     "keep_stats" -> ((s, dir) => {
       val d = docsPar(s, dir).withColumn("rs", rules(col("text"), lit("en")))
-      val fired = basicRuleNames.map(n => ruleFired(col("rs"), n))
-        .reduce(_ || _)
       d.groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
-          sum(when(!fired, 1L).otherwise(0L)).as("n_keep"))
+          sum(when(keepBasic(col("rs")), 1L).otherwise(0L)).as("n_keep"))
         .orderBy("lang")
     }),
 
@@ -903,7 +916,7 @@ object SparkEntry {
     // ---- dedup: 3-gram-shingle Jaccard over planted near-dup clusters ----
     "dedup_ngram_jaccard" -> ((s, dir) => {
       val d = docs(s, dir).withColumn("t",
-          expr(nearDupSql(nearDupVariants(numDocs(s, dir)))))
+          expr(nearDupSql(nearDupVariants(numDocs(s, dir)).toString)))
         .filter(expr("doc_id % 25 = 0"))
         .select(col("doc_id"), shingles(col("t")).as("sh"))
       val sh = d.select(col("doc_id"), explode(col("sh")).as("w"))
@@ -1315,7 +1328,7 @@ object SparkEntry {
 
     "p1_branch_route" ->
       (s"SELECT doc_id, CASE WHEN length(trim(text, " +
-        s"'${QualityPipeline.BlankChars}')) = 0 THEN 'extract' " +
+        s"'${Blank.Chars}')) = 0 THEN 'extract' " +
         "ELSE 'direct' END AS route FROM documents ORDER BY doc_id"),
 
     // expected extraction rebuilt literally: block <p> → newline, closing
@@ -1327,76 +1340,47 @@ object SparkEntry {
         "|| 'b' || chr(39) || 'c—d…e f&bogus;gàhÉiéjαk→l m ' AS extracted " +
         "FROM documents ORDER BY doc_id"),
 
-    "g1_tokenize_stats" ->
-      ("SELECT doc_id, " +
-        "len(list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '')) " +
-        "AS n_words, " +
-        "length(array_to_string(list_filter(regexp_split_to_array(text, " +
-        "'\\s+'), w -> w <> ''), ' ')) AS full_text_len " +
-        "FROM documents ORDER BY doc_id"),
+    "g1_tokenize_stats" -> {
+      val words = duckWords("text")
+      s"SELECT doc_id, len($words) AS n_words, " +
+        s"length(array_to_string($words, ' ')) AS full_text_len " +
+        "FROM documents ORDER BY doc_id"
+    },
 
-    "d1_pii_counts" ->
-      (s"SELECT doc_id, " +
-        s"len(regexp_extract_all($piiTextDuck, '\\d{3}-\\d{2}-\\d{4}')) AS n_ssn, " +
-        s"len(regexp_extract_all($piiTextDuck, " +
-        s"'[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}')) AS n_email, " +
-        s"len(regexp_extract_all($piiTextDuck, " +
-        s"'\\(?\\d{3}\\)?[-.\\s]?\\d{3}[-.\\s]?\\d{4}')) AS n_phone, " +
-        s"len(regexp_extract_all($piiTextDuck, " +
-        s"'\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b')) AS n_ip " +
-        s"FROM documents ORDER BY doc_id"),
+    "d1_pii_counts" -> piiCountsOracle(piiTextSql, webPii),
 
-    "d3_pii_financial" ->
-      (s"SELECT doc_id, " +
-        s"len(regexp_extract_all($finTextDuck, " +
-        s"'\\b(?:\\d{4}[ -]?){3}\\d{4}\\b')) AS n_card, " +
-        s"len(regexp_extract_all($finTextDuck, '\\b\\d{9}\\b')) AS n_routing, " +
-        s"len(regexp_extract_all($finTextDuck, '\\b\\d{10,17}\\b')) AS n_account, " +
-        s"len(regexp_extract_all($finTextDuck, " +
-        s"'credit score:\\s*\\d{3}')) AS n_score, " +
-        s"len(regexp_extract_all($finTextDuck, " +
-        s"'credit report:\\s*(very good|good|excellent|fair|poor|bad)')) " +
-        s"AS n_rating FROM documents ORDER BY doc_id"),
+    "d3_pii_financial" -> piiCountsOracle(finTextSql, finPii),
 
     // per-type match rows with ordinal: unnest(range) gives the 1-based
     // in-order position; regex finditer order == the engine's sorted order
     // within a type (matches are emitted in text order).
-    "d2_pii_matches" -> {
-      def one(label: String, pat: String): String =
-        s"SELECT doc_id, '$label' AS pii_type, CAST(i AS BIGINT) AS seq, " +
+    "d2_pii_matches" -> webPii.map(t =>
+        s"SELECT doc_id, '${t.label}' AS pii_type, CAST(i AS BIGINT) AS seq, " +
           s"ms[i] AS match_text FROM (SELECT doc_id, ms, " +
           s"unnest(range(1, len(ms) + 1)) AS i FROM (SELECT doc_id, " +
-          s"regexp_extract_all($piiTextDuck, '$pat') AS ms FROM documents))"
-      Seq(
-        one("SSN", "\\d{3}-\\d{2}-\\d{4}"),
-        one("Email", "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"),
-        one("Phone Number", "\\(?\\d{3}\\)?[-.\\s]?\\d{3}[-.\\s]?\\d{4}"),
-        one("IP Address", "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b"))
-        .mkString("", " UNION ALL ", " ORDER BY doc_id, pii_type, seq")
-    },
+          s"regexp_extract_all($piiTextSql, '${t.re2}') AS ms FROM documents))")
+      .mkString("", " UNION ALL ", " ORDER BY doc_id, pii_type, seq"),
 
     "heuristics_basic" -> {
       import DuckHeuristics._
       s"SELECT doc_id, $wc AS word_count, $stop AS stopword_count, " +
         s"$sent AS sentences, CAST($lorem AS BIGINT) AS has_lorem, " +
         s"CAST($curly AS BIGINT) AS has_curly, " +
-        s"$keep AS keep_basic " +
+        s"$keepBasicDuck AS keep_basic " +
         s"FROM documents ORDER BY doc_id"
     },
 
-    "keep_stats" -> {
-      import DuckHeuristics._
-      s"SELECT lang, count(*) AS n_docs, " +
-        s"CAST(sum(CASE WHEN $keep " +
+    "keep_stats" ->
+      (s"SELECT lang, count(*) AS n_docs, " +
+        s"CAST(sum(CASE WHEN $keepBasicDuck " +
         s"THEN 1 ELSE 0 END) AS BIGINT) AS n_keep " +
-        s"FROM documents GROUP BY lang ORDER BY lang"
-    },
+        s"FROM documents GROUP BY lang ORDER BY lang"),
 
     "toxicity_blocklist" -> {
-      val listLit = graft.core.Heuristics.Blocklist.toSeq.sorted
+      val listLit = Heuristics.Blocklist.toSeq.sorted
         .map(w => s"'$w'").mkString("[", ", ", "]")
-      val hits = s"len(list_filter(list_transform(list_filter(" +
-        s"regexp_split_to_array($toxTextDuck, '\\s+'), w -> w <> ''), " +
+      val hits = s"len(list_filter(list_transform(" +
+        s"${duckWords(toxTextSql)}, " +
         s"w -> lower(w)), w -> list_contains($listLit, w)))"
       s"SELECT doc_id, CAST($hits AS BIGINT) AS n_blocklist_hits, " +
         s"$hits > 0 AS flagged FROM documents ORDER BY doc_id"
@@ -1429,7 +1413,7 @@ object SparkEntry {
         "AS BIGINT) AS fake_height FROM documents ORDER BY doc_id"),
 
     "dedup_exact" ->
-      (s"SELECT md5($dupTextDuck) AS text_hash, count(*) AS n_dups, " +
+      (s"SELECT md5($dupTextSql) AS text_hash, count(*) AS n_dups, " +
         s"min(doc_id) AS min_doc_id FROM documents " +
         s"GROUP BY 1 HAVING count(*) > 1 ORDER BY text_hash"),
 
@@ -1437,7 +1421,7 @@ object SparkEntry {
     // Jaccard >= 0.8 over ALL pairs (feasible at verify scale only; the
     // Spark side reaches the same set through banding + confirmation)
     "dedup_minhash_pairs" ->
-      (s"WITH $exactJaccardPairsCtes " +
+      (s"WITH ${exactJaccardPairsCtes("TRUE")} " +
         s"SELECT id_a, id_b, n_inter, n_union FROM jpairs " +
         s"ORDER BY id_a, id_b"),
 
@@ -1445,7 +1429,7 @@ object SparkEntry {
     // DuckDB as a recursive reachability closure (cluster = min reachable
     // id; component sizes are small so the closure is cheap at verify scale)
     "dedup_clusters" ->
-      (s"WITH RECURSIVE $exactJaccardPairsCtes, " +
+      (s"WITH RECURSIVE ${exactJaccardPairsCtes("TRUE")}, " +
         "edges AS (SELECT id_a AS src, id_b AS dst FROM jpairs " +
         "UNION ALL SELECT id_b, id_a FROM jpairs), " +
         "reach(id, c) AS (" +
@@ -1477,8 +1461,7 @@ object SparkEntry {
         "ORDER BY grp"),
 
     "text_token_counts" -> {
-      val words =
-        "list_filter(regexp_split_to_array(text, '\\s+'), w -> w <> '')"
+      val words = duckWords("text")
       // the trained merge table, embedded as a per-word replace chain
       val perWord = graft.core.Bpe.tokenCountSql("w")
       s"SELECT doc_id, len($words) AS ws_tokens, " +
@@ -1525,28 +1508,11 @@ object SparkEntry {
     "ann_ivf_topk" -> ivfOracleSql("ivf_centroids", IvfNProbe),
     "ann_ivf_auto" -> ivfOracleSql("ivf_centroids_auto", 4),
 
-    "dedup_ngram_jaccard" -> {
-      val base = nearDupBaseDuck
-      s"WITH w AS (SELECT doc_id, " +
-        s"list_transform(list_filter(regexp_split_to_array(" +
-        s"CASE WHEN doc_id % 25 = 0 THEN $base ELSE text END, '\\s+'), " +
-        s"x -> x <> ''), x -> lower(x)) AS ws " +
-        s"FROM documents WHERE doc_id % 25 = 0), " +
-        s"d AS (SELECT doc_id, CASE WHEN len(ws) >= 3 THEN " +
-        s"list_distinct(list_transform(range(0, len(ws) - 2), " +
-        s"i -> ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3])) " +
-        s"ELSE [array_to_string(ws, ' ')] END AS sh FROM w), " +
-        s"sh AS (SELECT doc_id, unnest(d.sh) AS w FROM d), " +
-        s"pair AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
-        s"count(*) AS n_inter FROM sh a JOIN sh b ON a.w = b.w " +
-        s"AND a.doc_id < b.doc_id GROUP BY 1, 2), " +
-        s"sizes AS (SELECT doc_id, len(d.sh) AS n FROM d) " +
-        s"SELECT id_a, id_b, n_inter, sa.n + sb.n - n_inter AS n_union " +
-        s"FROM pair JOIN sizes sa ON id_a = sa.doc_id " +
-        s"JOIN sizes sb ON id_b = sb.doc_id " +
-        s"WHERE n_inter * 10 >= (sa.n + sb.n - n_inter) * 8 " +
-        s"ORDER BY id_a, id_b"
-    },
+    // the planted docs' pair set alone, from the same ground truth
+    "dedup_ngram_jaccard" ->
+      (s"WITH ${exactJaccardPairsCtes("doc_id % 25 = 0")} " +
+        s"SELECT id_a, id_b, n_inter, n_union FROM jpairs " +
+        s"ORDER BY id_a, id_b"),
 
     "events_window" ->
       ("SELECT CAST(epoch(time_bucket(INTERVAL '5 minutes', ts)) AS BIGINT) " +

@@ -30,18 +30,17 @@ object Verify {
     // codebook would silently mismatch. Stale aux dumps are also deleted
     // FIRST, same invariant as the query dumps below: a failed dump must
     // surface as a MISSING oracle input, never as last run's data.
-    val auxKey = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val auxDir = new java.io.File(s"target/verify_aux/$auxKey").getAbsolutePath
-    Seq("pipeline_truth", "ivf_centroids", "ivf_centroids_auto")
-      .foreach { sub =>
-      val d = Paths.get(auxDir, sub)
+    def deleteTree(d: java.nio.file.Path): Unit =
       if (Files.exists(d)) {
         import scala.jdk.CollectionConverters._
         val s = Files.walk(d)
         val all = try s.iterator().asScala.toSeq finally s.close()
         all.reverse.foreach(Files.deleteIfExists(_))
       }
-    }
+    val auxKey = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
+    val auxDir = new java.io.File(s"target/verify_aux/$auxKey").getAbsolutePath
+    Seq("pipeline_truth", "ivf_centroids", "ivf_centroids_auto")
+      .foreach(sub => deleteTree(Paths.get(auxDir, sub)))
     try graft.model.PagesSynth.truthTable(spark, SparkEntry.synthN(sfDir), 16)
       .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/pipeline_truth")
     catch {
@@ -85,12 +84,7 @@ object Verify {
       // missing result, not silently pass the compare against the parquet
       // a previous run left in the same outDir
       val dest = Paths.get(s"$outDir/$name")
-      if (Files.exists(dest)) {
-        import scala.jdk.CollectionConverters._
-        val s = Files.walk(dest)
-        val all = try s.iterator().asScala.toSeq finally s.close()
-        all.reverse.foreach(Files.deleteIfExists(_))
-      }
+      deleteTree(dest)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(dest.toString)
       catch { case e: Throwable =>

@@ -4,7 +4,9 @@ package graft.core
   * whitespace: ASCII controls + every Unicode space incl. NBSP and the
   * ideographic space U+3000) - ONE definition shared by the pipeline
   * route, the p1_branch_route query and its DuckDB oracle (which embed
-  * [[Chars]] as a trim set), and the allocation-free
+  * [[Chars]] as a trim set: no regex-engine whitespace class, because
+  * Java and RE2 disagree on U+000B and neither class matches U+00A0 or
+  * U+3000), and the allocation-free
   * [[isBlankCodePoint]] predicate the pipeline hot path uses (a
   * `trim(chars)`-then-length formulation copies nearly the whole text
   * per row just to test emptiness). */

@@ -308,9 +308,6 @@ object PagesSynth {
     (truth, row)
   }
 
-  def row(id: Long): PageRow = generate(id)._2
-  def truth(id: Long): PageTruth = generate(id)._1
-
   /** Distributed materialization: one deterministic row per id. */
   def pages(spark: SparkSession, n: Long, numPartitions: Int = 32,
             validated: Boolean = true): DataFrame = {
@@ -325,7 +322,7 @@ object PagesSynth {
              numPartitions: Int = 32): DataFrame = {
     import spark.implicits._
     spark.range(0, n, 1, numPartitions).as[Long]
-      .mapPartitions(_.map(truth))
+      .mapPartitions(_.map(id => generate(id)._1))
       .toDF()
   }
 

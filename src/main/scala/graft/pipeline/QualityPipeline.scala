@@ -28,21 +28,6 @@ import graft.expr.GraftFunctions._
   */
 object QualityPipeline {
 
-  final val PerplexityMax: Double = graft.core.Heuristics.PerplexityMax
-  final val LangConfMin: Double = graft.core.Heuristics.LangConfMin
-
-  /** The blank-route whitespace set: Python `str.strip()`'s full
-    * whitespace (ASCII controls + every Unicode space, incl. NBSP and
-    * the ideographic space U+3000 common on CJK pages), so an NBSP- or
-    * ideographic-space-padded text field routes to html extraction
-    * exactly like the reference. ONE canonical constant
-    * ([[graft.core.Blank.Chars]]) shared by the pipeline route (via the
-    * allocation-free graft_is_blank kernel), the p1_branch_route query,
-    * and its DuckDB oracle -- trim(chars) on the oracle sides, no regex-engine whitespace-class
-    * parity games (Java and RE2 disagree on U+000B, and neither regex
-    * whitespace class matches U+00A0 or U+3000). */
-  final val BlankChars: String = graft.core.Blank.Chars
-
   /** pages(url, warc_ts, html, text, lang) → output rows (SURVEY §1.4):
     * `url, warc_ts, lang_claimed, lang_pred, lang_conf, perplexity, keep,
     * scrubbed_text, pii_matches, n_redacted, rule_lineage, error,

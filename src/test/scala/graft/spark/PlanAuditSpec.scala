@@ -48,12 +48,17 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("aggregate(zip_with"), p.take(2000))
   }
 
-  test("d1/d2/d3 pii queries: per-type counts are native array functions " +
-      "— no lambda in the executed plan") {
-    Seq("d1_pii_counts", "d2_pii_matches", "d3_pii_financial").foreach { q =>
-      val p = plan(q)
-      assert(!p.contains("lambdafunction"), s"$q:\n${p.take(3000)}")
-    }
+  // the d1-d3 per-type counts are native array functions, and the shared
+  // plantings are flat || chains: a lambdafunction would push the query's
+  // projection, kernel included, out of whole-stage codegen
+  test("shared-planting queries: no lambda in the executed plan") {
+    Seq("d1_pii_counts", "d2_pii_matches", "d3_pii_financial", "j2_scrub",
+        "toxicity_blocklist", "dedup_exact", "dedup_simhash",
+        "text_fingerprint", "dedup_ngram_jaccard", "dedup_minhash_pairs")
+      .foreach { q =>
+        val p = plan(q)
+        assert(!p.contains("lambdafunction"), s"$q:\n${p.take(3000)}")
+      }
   }
 
   test("dedup_minhash_pairs: no cartesian or nested-loop join anywhere") {

@@ -6,7 +6,10 @@ Usage: check_oracle.py <sfDir> <verifyOutDir>
 For each entry in <verifyOutDir>/oracle_sql.json: register every parquet in
 <sfDir> as a DuckDB view named by its table, run the oracle SQL, load the
 Spark dump <verifyOutDir>/<name>/*.parquet, sort columns by name, sort rows,
-and compare cell-by-cell (floats to 1e-9 rel; everything else exact).
+and compare column by column, strictly: equal dtypes and equal values
+rendered as strings, with no float tolerance. A dump with no oracle entry
+is a failure (every query is oracled). Ends with `N OK, R ROWS, F FAIL`;
+exits 1 when F > 0.
 """
 import json
 import sys
@@ -29,6 +32,8 @@ def main(sf_dir: str, out_dir: str) -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     failures = 0
+    oks = 0
+    rows_only = 0
     for name, sql in sorted(oracle.items()):
         try:
             expect = norm(con.execute(sql).df())
@@ -73,7 +78,9 @@ def main(sf_dir: str, out_dir: str) -> int:
             failures += 1
         else:
             print(f"OK   {name} ({len(got)} rows)")
-    # rows-only entries (queries without oracle)
+            oks += 1
+    # dumps without an oracle entry: each one is a query that lost its
+    # oracle, so it counts as a failure
     import glob
     import os
     for d in sorted(glob.glob(f"{out_dir}/*/")):
@@ -83,9 +90,11 @@ def main(sf_dir: str, out_dir: str) -> int:
                 n = duckdb.sql(
                     f"SELECT count(*) FROM '{d}*.parquet'").fetchone()[0]
                 print(f"ROWS {name}: {n} rows (no oracle)")
+                rows_only += 1
             except Exception as e:  # noqa: BLE001
                 print(f"FAIL {name}: unreadable dump: {e}")
-                failures += 1
+            failures += 1
+    print(f"{oks} OK, {rows_only} ROWS, {failures} FAIL")
     return failures
 
 
