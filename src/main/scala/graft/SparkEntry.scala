@@ -16,9 +16,10 @@ import graft.io.RootFs
 import graft.model.PagesSynth
 import graft.pipeline.QualityPipeline
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the §2.11 graft-mandated stages and the training-data
-  * ops layer), with DuckDB oracle SQL for every SQL-expressible one.
+/** Query contract — one [[SparkEntry.oracled]] record per implemented
+  * operator from SURVEY.md §2 (+ the §2.11 graft-mandated stages and the
+  * training-data ops layer): its name, its Spark plan and the DuckDB
+  * oracle SQL that must return the same rows.
   *
   * Oracle-safety rules used throughout (driver compares sorted-column
   * value hashes): every aggregate/computed column is aliased identically
@@ -28,10 +29,6 @@ import graft.pipeline.QualityPipeline
   * unique key.
   */
 object SparkEntry {
-
-  private def withFns(s: SparkSession): SparkSession = {
-    GraftFunctions.register(s); s
-  }
 
   /** Parquet can only split at row-group boundaries, and the testdata
     * tables are single-file single-row-group (DuckDB COPY default), so a
@@ -90,7 +87,7 @@ object SparkEntry {
     * takes the win exactly where it exists. */
   private def scanParallel(s: SparkSession, dir: String, table: String,
                            minRowsPerCore: Long): DataFrame = {
-    val df = withFns(s).read.parquet(s"$dir/$table.parquet")
+    val df = s.read.parquet(s"$dir/$table.parquet")
     val cores = s.sparkContext.defaultParallelism
     val io = RootFs(s, dir)
     // unreadable footers: assume splittable, with unknown rows, which
@@ -111,10 +108,10 @@ object SparkEntry {
     * made per query: heavy kernels read through [[docsPar]]/[[embsPar]],
     * light ones through these. */
   private def docs(s: SparkSession, dir: String): DataFrame =
-    withFns(s).read.parquet(s"$dir/documents.parquet")
+    s.read.parquet(s"$dir/documents.parquet")
 
   private def embs(s: SparkSession, dir: String): DataFrame =
-    withFns(s).read.parquet(s"$dir/embeddings.parquet")
+    s.read.parquet(s"$dir/embeddings.parquet")
 
   /** Adaptive parallel scan — for queries dominated by heavy per-row
     * kernels, where a single-row-group file would otherwise pin the
@@ -208,7 +205,7 @@ object SparkEntry {
         // on a large table) — at warehouse scale this is a TABLESAMPLE
         // either way
         val sampleN = math.max(512, 8 * kEff)
-        val sample = withFns(s).read.parquet(s"$dir/embeddings.parquet")
+        val sample = embs(s, dir)
           .filter(col("vec_id") < sampleN).orderBy("vec_id")
           .select(col("embedding").cast("array<double>").as("emb"))
           .collect().map(_.getSeq[Double](0).toArray)
@@ -507,20 +504,20 @@ object SparkEntry {
   private def nOfType(types: Column, t: Column): Column =
     (size(types) - size(array_remove(types, t))).cast("long")
 
-  /** Per-doc match count of each of `types` in the planted text
-    * `textSql` (d1 / d3), and the DuckDB oracle that recounts them with
-    * each type's own regex. */
-  private def piiCounts(docs: DataFrame, textSql: String,
-                        types: Seq[MirroredPii]): DataFrame =
-    docs.withColumn("ms", pii_extract(expr(textSql)))
-      .select(col("doc_id") +: types.map(t =>
-        nOfType(col("ms.pii_type"), lit(t.label)).as(t.column)): _*)
-      .orderBy("doc_id")
-  private def piiCountsOracle(textSql: String,
-                              types: Seq[MirroredPii]): String =
-    types.map(t => s"len(regexp_extract_all($textSql, '${t.re2}')) " +
-        s"AS ${t.column}")
-      .mkString("SELECT doc_id, ", ", ", " FROM documents ORDER BY doc_id")
+  /** Query `name`: the per-doc match count of each of `types` in the
+    * planted text `textSql` (d1 / d3), oracled by recounting each type
+    * with its own regex. */
+  private def piiCounts(name: String, textSql: String,
+                        types: Seq[MirroredPii]): Oracled =
+    Oracled(name, types.map(t =>
+        s"len(regexp_extract_all($textSql, '${t.re2}')) AS ${t.column}")
+        .mkString("SELECT doc_id, ", ", ", " FROM documents ORDER BY doc_id")) {
+      (s, dir) =>
+        docsPar(s, dir).withColumn("ms", pii_extract(expr(textSql)))
+          .select(col("doc_id") +: types.map(t =>
+            nOfType(col("ms.pii_type"), lit(t.label)).as(t.column)): _*)
+          .orderBy("doc_id")
+    }
 
   /** The ten basic Gopher/C4 rules whose OR drops a page in
     * heuristics_basic and keep_stats: the engine's rule name, and the
@@ -555,7 +552,7 @@ object SparkEntry {
   /** Flagship: the full quality-filter pipeline over a synthesized pages
     * table at sf0.001 scale; driver smoke-checks rows > 0. */
   def entry(spark: SparkSession): DataFrame = {
-    withFns(spark)
+    GraftFunctions.register(spark)
     QualityPipeline(PagesSynth.pages(spark, 500, 8))
   }
 
@@ -636,26 +633,39 @@ object SparkEntry {
       .filter(col("n_inter") * lit(10) >= col("n_union") * lit(8)) // J>=0.8
   }
 
-  // lazy val, not def: Bench/Verify access these maps dozens of times and
+  /** One oracled query: its name, the DuckDB SQL that must return the same
+    * rows, and its Spark plan over a testdata directory. */
+  final case class Oracled(name: String, oracle: String)(
+      val plan: (SparkSession, String) => DataFrame)
+
+  // lazy val, not def: Bench/Verify access the table dozens of times and
   // the entries (closures, expanded oracle SQL incl. the BPE merge chain)
   // are pure constants
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val oracled: Seq[Oracled] = Seq(
     // ---- S1/S2: source scan + projection + residual validation ----
-    "s1_scan_project" -> ((s, dir) =>
+    Oracled("s1_scan_project",
+        "SELECT doc_id, source, n_chars FROM documents WHERE text IS NOT NULL " +
+          "ORDER BY doc_id") { (s, dir) =>
       docs(s, dir).filter(col("text").isNotNull)
         .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // ---- P1: branch predicate (extract vs direct route). Blank = empty
     //      or ALL-whitespace, via the SAME canonical char-set the pipeline
     //      routes on (graft.core.Blank.Chars = Python str.strip()'s
-    //      set; trim(chars) on both engines) ----
-    "p1_branch_route" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        when(length(trim(col("text"), Blank.Chars)) === 0,
-          lit("extract"))
-          .otherwise(lit("direct")).as("route"))
-        .orderBy("doc_id")),
+    //      set; trimmed from both ends on both engines) ----
+    Oracled("p1_branch_route",
+        s"SELECT doc_id, CASE WHEN length(trim(text, " +
+          s"'${Blank.Chars}')) = 0 THEN 'extract' " +
+          "ELSE 'direct' END AS route FROM documents ORDER BY doc_id") {
+      (s, dir) =>
+        docs(s, dir).select(col("doc_id"),
+          when(length(btrim(col("text"), lit(Blank.Chars))) === 0,
+            lit("extract"))
+            .otherwise(lit("direct")).as("route"))
+          .orderBy("doc_id")
+    },
 
     // ---- P1 extract stage: html→text entity decoding, byte-exact vs a
     //      DuckDB-constructed expected string. The html is built from
@@ -666,8 +676,12 @@ object SparkEntry {
     //      space, never throws), and an unknown entity-shaped name
     //      (&bogus; — passes through RAW like a standards parser: prose
     //      such as "Q&A;" is never deleted). Tag semantics pinned: <p>
-    //      emits a newline, a closing tag a space. ----
-    "html_entities" -> ((s, dir) => {
+    //      emits a newline, a closing tag a space; chr(39) is the hex-ref
+    //      apostrophe. ----
+    Oracled("html_entities",
+        "SELECT doc_id, chr(10) || 'a' || chr(65 + CAST(doc_id % 26 AS INT)) " +
+          "|| 'b' || chr(39) || 'c—d…e f&bogus;gàhÉiéjαk→l m ' AS extracted " +
+          "FROM documents ORDER BY doc_id") { (s, dir) =>
       val d = docs(s, dir).withColumn("h",
         expr("concat('<p>a&#', cast(65 + doc_id % 26 as string), " +
           "';b&#x27;c&mdash;d&hellip;e&#1114200;f&bogus;g" +
@@ -677,42 +691,55 @@ object SparkEntry {
           "&agrave;h&Eacute;i&eacute;j&alpha;k&rarr;l&#123456789;m</p>')"))
       d.select(col("doc_id"), html_text(col("h")).as("extracted"))
         .orderBy("doc_id")
-    }),
+    },
 
     // ---- G1 + P2: tokenizer with running offsets, blank-filtered ----
-    "g1_tokenize_stats" -> ((s, dir) =>
+    Oracled("g1_tokenize_stats", {
+      val words = duckWords("text")
+      s"SELECT doc_id, len($words) AS n_words, " +
+        s"length(array_to_string($words, ' ')) AS full_text_len " +
+        "FROM documents ORDER BY doc_id"
+    }) { (s, dir) =>
       docs(s, dir).select(col("doc_id"),
         word_count(col("text")).as("n_words"),
         length(extract_text(col("text"))).cast("long").as("full_text_len"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // ---- D1-D3: fused multi-pattern scan (per-type counts, planted) ----
-    "d1_pii_counts" -> ((s, dir) =>
-      piiCounts(docsPar(s, dir), piiTextSql, webPii)),
+    piiCounts("d1_pii_counts", piiTextSql, webPii),
 
     // ---- D1 full lineage: one scalar row per match (the driver's pandas
     //      compare cannot sort nested arrays, so the struct array is
     //      flattened; offsets stay golden-tested in PiiDetectorSpec).
     //      seq = 1-based position of the match within its type, computed
     //      from the already-sorted match array in the same project — no
-    //      shuffle, single scan. ----
-    "d2_pii_matches" -> ((s, dir) => {
-      val d = docsPar(s, dir).withColumn("pii_text", expr(piiTextSql))
-        .select(col("doc_id"), pii_extract(col("pii_text")).as("ms"))
-      d.select(col("doc_id"), col("ms"),
-          posexplode(col("ms")).as(Seq("pos", "m")))
-        .select(col("doc_id"), col("m.pii_type").as("pii_type"),
-          nOfType(slice(col("ms.pii_type"), lit(1), col("pos") + 1),
-            col("m.pii_type")).as("seq"),
-          col("m.text").as("match_text"))
-        // dump only the 4 types the DuckDB oracle mirrors; the other 5
-        // reference types (routing/account/card/credit-score x2) are
-        // pinned by PiiPatternSpec + goldens — without this filter a
-        // future testdata regen containing e.g. a 9-digit run would emit
-        // rows the oracle lacks
-        .filter(col("pii_type").isin(webPii.map(_.label): _*))
-        .orderBy("doc_id", "pii_type", "seq")
-    }),
+    //      shuffle, single scan. The oracle's unnest(range) gives the same
+    //      in-order position: regex finditer order == the engine's sorted
+    //      order within a type (matches are emitted in text order). ----
+    Oracled("d2_pii_matches", webPii.map(t =>
+        s"SELECT doc_id, '${t.label}' AS pii_type, CAST(i AS BIGINT) AS seq, " +
+          s"ms[i] AS match_text FROM (SELECT doc_id, ms, " +
+          s"unnest(range(1, len(ms) + 1)) AS i FROM (SELECT doc_id, " +
+          s"regexp_extract_all($piiTextSql, '${t.re2}') AS ms FROM documents))")
+        .mkString("", " UNION ALL ", " ORDER BY doc_id, pii_type, seq")) {
+      (s, dir) =>
+        val d = docsPar(s, dir).withColumn("pii_text", expr(piiTextSql))
+          .select(col("doc_id"), pii_extract(col("pii_text")).as("ms"))
+        d.select(col("doc_id"), col("ms"),
+            posexplode(col("ms")).as(Seq("pos", "m")))
+          .select(col("doc_id"), col("m.pii_type").as("pii_type"),
+            nOfType(slice(col("ms.pii_type"), lit(1), col("pos") + 1),
+              col("m.pii_type")).as("seq"),
+            col("m.text").as("match_text"))
+          // dump only the 4 types the DuckDB oracle mirrors; the other 5
+          // reference types (routing/account/card/credit-score x2) are
+          // pinned by PiiPatternSpec + goldens — without this filter a
+          // future testdata regen containing e.g. a 9-digit run would emit
+          // rows the oracle lacks
+          .filter(col("pii_type").isin(webPii.map(_.label): _*))
+          .orderBy("doc_id", "pii_type", "seq")
+    },
 
     // ---- D1 financial patterns (reference core set beyond the webtext
     //      four): card / routing / account / credit score / rating,
@@ -723,19 +750,23 @@ object SparkEntry {
     //      consumes the 11-digit account before the phone pattern could
     //      claim its 10-digit prefix, which independent per-pattern
     //      counting cannot mirror. ----
-    "d3_pii_financial" -> ((s, dir) =>
-      piiCounts(docsPar(s, dir), finTextSql, finPii)),
+    piiCounts("d3_pii_financial", finTextSql, finPii),
 
     // ---- J1+J2+R1: span join + whole-token scrub, byte-exact vs the
-    //      DuckDB-constructed expected text (see scrubTextSql). Scrub over
+    //      DuckDB-constructed expected text (see scrubTextSql: labels,
+    //      token-mask shape, first-match-wins precedence). Scrub over
     //      arbitrary natural text stays golden + property-tested
     //      (GoldenFixtureSpec, CoreProps idempotence). ----
-    "j2_scrub" -> ((s, dir) =>
-      docsPar(s, dir).withColumn("pii_text", expr(scrubTextSql))
-        .withColumn("p", pii_process(col("pii_text")))
-        .select(col("doc_id"), col("p.scrubbed_text").as("scrubbed_text"),
-          col("p.n_redacted").cast("long").as("n_redacted"))
-        .orderBy("doc_id")),
+    Oracled("j2_scrub",
+        s"SELECT doc_id, $scrubbedExpectedDuck AS scrubbed_text, " +
+          "CAST(6 AS BIGINT) AS n_redacted FROM documents ORDER BY doc_id") {
+      (s, dir) =>
+        docsPar(s, dir).withColumn("pii_text", expr(scrubTextSql))
+          .withColumn("p", pii_process(col("pii_text")))
+          .select(col("doc_id"), col("p.scrubbed_text").as("scrubbed_text"),
+            col("p.n_redacted").cast("long").as("n_redacted"))
+          .orderBy("doc_id")
+    },
 
     // ---- langid stage (SURVEY §2.11), oracled against generator truth:
     //      clean validated pages carry a construction-exact language label
@@ -746,8 +777,10 @@ object SparkEntry {
     //      UN-oracle-able (its `lang` is a source label, 43% agreement
     //      with the text) and is covered by LangIdSpec + the pipeline
     //      bench instead. ----
-    "langid_pred" -> ((s, dir) => {
-      withFns(s)
+    Oracled("langid_pred",
+        "SELECT url, lang AS lang_pred, TRUE AS conf_above_min " +
+          s"FROM read_parquet('$AuxDirToken/pipeline_truth/*.parquet') " +
+          "WHERE defect = 'none' AND validated_ok ORDER BY url") { (s, dir) =>
       PagesSynth.pagesWithTruth(s, synthN(dir), 16) // ONE generation pass
         .filter(col("defect") === "none" && col("validated_ok"))
         .withColumn("lid",
@@ -756,7 +789,7 @@ object SparkEntry {
           (col("lid.conf") >= lit(Heuristics.LangConfMin))
             .as("conf_above_min"))
         .orderBy("url")
-    }),
+    },
 
     // ---- perplexity stage (SURVEY §2.11), oracled via two invariants the
     //      generator construction guarantees per clean validated page:
@@ -770,8 +803,10 @@ object SparkEntry {
     //      A broken LM (constant, random, or hash-degenerate) fails one
     //      of the two. Raw ppl values are model state DuckDB cannot
     //      recompute; they stay golden in QualityModelSpec. ----
-    "perplexity_score" -> ((s, dir) => {
-      withFns(s)
+    Oracled("perplexity_score",
+        "SELECT url, TRUE AS ppl_below_gate, TRUE AS scrambled_worse " +
+          s"FROM read_parquet('$AuxDirToken/pipeline_truth/*.parquet') " +
+          "WHERE defect = 'none' AND validated_ok ORDER BY url") { (s, dir) =>
       PagesSynth.pagesWithTruth(s, synthN(dir), 16) // ONE generation pass
         .filter(col("defect") === "none" && col("validated_ok"))
         .withColumn("txt", coalesce(col("text"), html_text(col("html"))))
@@ -785,10 +820,17 @@ object SparkEntry {
           when(col("true_lang") =!= "zh", col("ppl_s") > col("ppl"))
             .otherwise(col("ppl_s") >= col("ppl")).as("scrambled_worse"))
         .orderBy("url")
-    }),
+    },
 
     // ---- Gopher/C4 heuristics: integer-exact observables ----
-    "heuristics_basic" -> ((s, dir) => {
+    Oracled("heuristics_basic", {
+      import DuckHeuristics._
+      s"SELECT doc_id, $wc AS word_count, $stop AS stopword_count, " +
+        s"$sent AS sentences, CAST($lorem AS BIGINT) AS has_lorem, " +
+        s"CAST($curly AS BIGINT) AS has_curly, " +
+        s"$keepBasicDuck AS keep_basic " +
+        s"FROM documents ORDER BY doc_id"
+    }) { (s, dir) =>
       val d = docsPar(s, dir).withColumn("rs", rules(col("text"), lit("en")))
       d.select(col("doc_id"),
         ruleValue(col("rs"), "word_count_min").cast("long").as("word_count"),
@@ -798,12 +840,20 @@ object SparkEntry {
         ruleValue(col("rs"), "curly_brace").cast("long").as("has_curly"),
         keepBasic(col("rs")).as("keep_basic"))
         .orderBy("doc_id")
-    }),
+    },
 
     // ---- §2.11 toxicity: C4-style badwords filter (blocklist_hit rule)
     //      over planted markers — any occurrence drops the page, the
     //      lineage value carries the occurrence count ----
-    "toxicity_blocklist" -> ((s, dir) => {
+    Oracled("toxicity_blocklist", {
+      val listLit = Heuristics.Blocklist.toSeq.sorted
+        .map(w => s"'$w'").mkString("[", ", ", "]")
+      val hits = s"len(list_filter(list_transform(" +
+        s"${duckWords(toxTextSql)}, " +
+        s"w -> lower(w)), w -> list_contains($listLit, w)))"
+      s"SELECT doc_id, CAST($hits AS BIGINT) AS n_blocklist_hits, " +
+        s"$hits > 0 AS flagged FROM documents ORDER BY doc_id"
+    }) { (s, dir) =>
       val d = docsPar(s, dir).withColumn("t", expr(toxTextSql))
         .withColumn("rs", rules(col("t"), lit("en")))
       d.select(col("doc_id"),
@@ -811,36 +861,51 @@ object SparkEntry {
           .as("n_blocklist_hits"),
         ruleFired(col("rs"), "blocklist_hit").as("flagged"))
         .orderBy("doc_id")
-    }),
+    },
 
     // ---- keep/drop aggregate per language ----
-    "keep_stats" -> ((s, dir) => {
+    Oracled("keep_stats",
+        s"SELECT lang, count(*) AS n_docs, " +
+          s"CAST(sum(CASE WHEN $keepBasicDuck " +
+          s"THEN 1 ELSE 0 END) AS BIGINT) AS n_keep " +
+          s"FROM documents GROUP BY lang ORDER BY lang") { (s, dir) =>
       val d = docsPar(s, dir).withColumn("rs", rules(col("text"), lit("en")))
       d.groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(keepBasic(col("rs")), 1L).otherwise(0L)).as("n_keep"))
         .orderBy("lang")
-    }),
+    },
 
-    // ---- O4/O5: metrics aggregate (per source) ----
-    "o4_metrics" -> ((s, dir) =>
+    // ---- O4/O5: metrics aggregate (per source). DuckDB sum(BIGINT) is
+    //      HUGEINT and pandas-renders as float64; the hash compare is
+    //      dtype-exact, so the oracle casts back to BIGINT. ----
+    Oracled("o4_metrics",
+        "SELECT source, count(*) AS n_docs, " +
+          "CAST(sum(n_chars) AS BIGINT) AS sum_chars, " +
+          "max(n_chars) AS max_chars FROM documents GROUP BY source " +
+          "ORDER BY source") { (s, dir) =>
       docs(s, dir).groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("sum_chars"),
           max(col("n_chars")).as("max_chars"))
-        .orderBy("source")),
+        .orderBy("source")
+    },
 
     // ---- full pipeline over synthesized pages, oracled against the
     //      generator truth table (labels exact by construction: validated
     //      generation + honest exhaust labels ⇒ keep == expected_keep on
     //      EVERY row — the F1 == 1.0 gate of PipelineSpec, now driver-
-    //      verified). PII accounting invariants are restricted to where
-    //      construction guarantees them: clean docs find exactly the
-    //      planted match count; any doc redacts at least one token per
-    //      planted string. Scrubbed bytes stay golden-tested; the scrub
-    //      CONTRACT itself is byte-exactly oracled by j2_scrub. ----
-    "pipeline_full" -> ((s, dir) => {
-      withFns(s)
+    //      verified; the dumped truth table carries no pipeline output).
+    //      PII accounting invariants are restricted to where construction
+    //      guarantees them: clean docs find exactly the planted match
+    //      count; any doc redacts at least one token per planted string.
+    //      Scrubbed bytes stay golden-tested; the scrub CONTRACT itself is
+    //      byte-exactly oracled by j2_scrub. ----
+    Oracled("pipeline_full",
+        "SELECT url, expected_keep AS keep, expected_keep, n_pii, " +
+          "TRUE AS pii_count_exact, TRUE AS scrub_covers_planted " +
+          s"FROM read_parquet('$AuxDirToken/pipeline_truth/*.parquet') " +
+          "ORDER BY url") { (s, dir) =>
       // one generation pass, materialized once (localCheckpoint) because
       // the frame is consumed twice — as pipeline input and as the truth
       // side of the join; without it Spark would re-run the validated
@@ -861,15 +926,19 @@ object SparkEntry {
             .otherwise(col("n_redacted").cast("long") >= col("n_pii"))
             .as("scrub_covers_planted"))
         .orderBy("url")
-    }),
+    },
 
     // ---- dedup: exact (hash groups, planted duplicates) ----
-    "dedup_exact" -> ((s, dir) =>
+    Oracled("dedup_exact",
+        s"SELECT md5($dupTextSql) AS text_hash, count(*) AS n_dups, " +
+          s"min(doc_id) AS min_doc_id FROM documents " +
+          s"GROUP BY 1 HAVING count(*) > 1 ORDER BY text_hash") { (s, dir) =>
       docs(s, dir).withColumn("t", expr(dupTextSql))
         .groupBy(md5(col("t")).as("text_hash"))
         .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("min_doc_id"))
         .filter(col("n_dups") > 1)
-        .orderBy("text_hash")),
+        .orderBy("text_hash")
+    },
 
     // ---- dedup: MinHash/LSH near-dup discovery — the full scale pipeline:
     //   1. band join on LSH keys (only (doc_id, band) longs cross the
@@ -882,39 +951,65 @@ object SparkEntry {
     // The oracle brute-forces exact Jaccard over all pairs — feasible at
     // verify scale; the Spark plan never goes all-pairs. LSH(b=32,r=4)
     // recall at the J>=0.8 output threshold is 1-(1-0.8^4)^32 ≈ 1-5e-8.
-    "dedup_minhash_pairs" -> ((s, dir) =>
-      minhashConfirmedPairs(s, dir).orderBy("id_a", "id_b")),
+    Oracled("dedup_minhash_pairs",
+        s"WITH ${exactJaccardPairsCtes("TRUE")} " +
+          s"SELECT id_a, id_b, n_inter, n_union FROM jpairs " +
+          s"ORDER BY id_a, id_b") { (s, dir) =>
+      minhashConfirmedPairs(s, dir).orderBy("id_a", "id_b")
+    },
 
     // ---- dedup: duplicate clustering — connected components over the
     //      confirmed near-dup pairs via alternating large-star/small-star
     //      (graft.ops.ConnectedComponents): O(log n) rounds, min-agg only
     //      (no label hubs under degree skew), ONE observed Spark job per
     //      phase (round 2 ran a separate convergence action per round).
-    //      canonical = the component's min doc_id. ----
-    "dedup_clusters" -> ((s, dir) => {
+    //      canonical = the component's min doc_id. The oracle computes
+    //      the components over the SAME exact pair set as a recursive
+    //      reachability closure (cluster = min reachable id; component
+    //      sizes are small, so the closure is cheap at verify scale). ----
+    Oracled("dedup_clusters",
+        s"WITH RECURSIVE ${exactJaccardPairsCtes("TRUE")}, " +
+          "edges AS (SELECT id_a AS src, id_b AS dst FROM jpairs " +
+          "UNION ALL SELECT id_b, id_a FROM jpairs), " +
+          "reach(id, c) AS (" +
+          "SELECT src, src FROM edges " +
+          "UNION " +
+          "SELECT e.dst, r.c FROM reach r JOIN edges e ON e.src = r.id) " +
+          "SELECT id AS doc_id, min(c) AS cluster_id, " +
+          "id = min(c) AS is_canonical " +
+          "FROM reach GROUP BY id ORDER BY doc_id") { (s, dir) =>
       val pairs = minhashConfirmedPairs(s, dir)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
       graft.ops.ConnectedComponents.labels(pairs)
         .select(col("id").as("doc_id"), col("cluster_id"),
           (col("id") === col("cluster_id")).as("is_canonical"))
         .orderBy("doc_id")
-    }),
+    },
 
     // ---- dedup: SimHash invariants over planted exact-dup clusters.
     //      Raw 64-bit hashes are not DuckDB-mirrorable, so the driver row
     //      is the invariant a dedup consumer relies on: identical text =>
     //      identical SimHash (one distinct hash per planted cluster).
     //      Raw hash values + near-dup hamming stay golden in DedupSpec. ----
-    "dedup_simhash" -> ((s, dir) =>
+    Oracled("dedup_simhash",
+        "SELECT doc_id % 3 AS cluster, CAST(1 AS BIGINT) AS n_distinct_simhash, " +
+          "count(*) AS n_docs FROM documents WHERE doc_id % 11 < 2 " +
+          "GROUP BY 1 ORDER BY cluster") { (s, dir) =>
       docs(s, dir).withColumn("t", expr(dupTextSql))
         .filter(col("doc_id") % 11 < 2)
         .groupBy((col("doc_id") % 3).as("cluster"))
         .agg(countDistinct(simhash(col("t"))).as("n_distinct_simhash"),
           count(lit(1)).as("n_docs"))
-        .orderBy("cluster")),
+        .orderBy("cluster")
+    },
 
-    // ---- dedup: 3-gram-shingle Jaccard over planted near-dup clusters ----
-    "dedup_ngram_jaccard" -> ((s, dir) => {
+    // ---- dedup: 3-gram-shingle Jaccard over planted near-dup clusters;
+    //      the oracle is the planted docs' pair set alone, from the same
+    //      ground truth ----
+    Oracled("dedup_ngram_jaccard",
+        s"WITH ${exactJaccardPairsCtes("doc_id % 25 = 0")} " +
+          s"SELECT id_a, id_b, n_inter, n_union FROM jpairs " +
+          s"ORDER BY id_a, id_b") { (s, dir) =>
       val d = docs(s, dir).withColumn("t",
           expr(nearDupSql(nearDupVariants(numDocs(s, dir)).toString)))
         .filter(expr("doc_id % 25 = 0"))
@@ -931,12 +1026,23 @@ object SparkEntry {
           (col("sa.n") + col("sb.n") - col("n_inter")).as("n_union"))
         .filter(col("n_inter") * lit(10) >= col("n_union") * lit(8)) // J>=0.8
         .orderBy("id_a", "id_b")
-    }),
+    },
 
     // ---- fingerprinting: invariants (raw hashes golden in DedupSpec).
     //      Planted clusters collapse to 1 fingerprint each; the unplanted
-    //      remainder (unique texts) must stay collision-free. ----
-    "text_fingerprint" -> ((s, dir) => {
+    //      remainder must stay collision-free. Its expected distinct count
+    //      is the TRUE distinct-text count, not count(*): at sf >= 0.1 the
+    //      synthetic vocab produces natural duplicate texts (caught by the
+    //      sf1 run), and identical texts SHOULD share a fingerprint. ----
+    Oracled("text_fingerprint",
+        "SELECT 'cluster_' || (doc_id % 3) AS grp, count(*) AS n_docs, " +
+          "CAST(1 AS BIGINT) AS n_distinct_fp FROM documents " +
+          "WHERE doc_id % 11 < 2 GROUP BY 1 " +
+          "UNION ALL " +
+          "SELECT 'unique_texts' AS grp, count(*) AS n_docs, " +
+          "count(DISTINCT text) AS n_distinct_fp FROM documents " +
+          "WHERE doc_id % 11 >= 2 " +
+          "ORDER BY grp") { (s, dir) =>
       val d = docs(s, dir).withColumn("t", expr(dupTextSql))
         .withColumn("fp", fingerprint(col("t")))
       val clusters = d.filter(col("doc_id") % 11 < 2)
@@ -949,23 +1055,38 @@ object SparkEntry {
         .select(lit("unique_texts").as("grp"), col("n_docs"),
           col("n_distinct_fp"))
       clusters.unionByName(rest).orderBy("grp")
-    }),
+    },
 
     // ---- text analysis: token counting — whitespace words, TRAINED BPE
     //      (actual merges, graft.core.Bpe; the oracle re-applies the
-    //      identical merge table as a literal replace chain), and the
-    //      word/number/punct regex segmentation kept as a third view ----
-    "text_token_counts" -> ((s, dir) =>
+    //      identical merge table as a literal per-word replace chain), and
+    //      the word/number/punct regex segmentation kept as a third view ----
+    Oracled("text_token_counts", {
+      val words = duckWords("text")
+      val perWord = graft.core.Bpe.tokenCountSql("w")
+      s"SELECT doc_id, len($words) AS ws_tokens, " +
+        s"CAST(coalesce(list_sum(list_transform($words, " +
+        s"w -> $perWord)), 0) AS BIGINT) AS bpe_tokens, " +
+        "len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) " +
+        "AS regex_tokens FROM documents ORDER BY doc_id"
+    }) { (s, dir) =>
       docsPar(s, dir).select(col("doc_id"),
         word_count(col("text")).as("ws_tokens"),
         bpe_count(col("text")).as("bpe_tokens"),
         size(regexp_extract_all(col("text"),
           lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"), lit(0)))
           .cast("long").as("regex_tokens"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // ---- similarity: brute-force cosine top-k ----
-    "knn_bruteforce" -> ((s, dir) => {
+    Oracled("knn_bruteforce",
+        "WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS q_emb " +
+          "FROM embeddings WHERE vec_id = 0) " +
+          "SELECT vec_id, round(list_cosine_similarity(" +
+          "CAST(embedding AS DOUBLE[]), q_emb), 4) " +
+          "AS cosine FROM embeddings, q WHERE vec_id <> 0 " +
+          "ORDER BY cosine DESC, vec_id LIMIT 10") { (s, dir) =>
       val emb = embs(s, dir)
         .withColumn("emb", col("embedding").cast("array<double>"))
       val q = emb.filter(col("vec_id") === 0)
@@ -975,7 +1096,7 @@ object SparkEntry {
           round(cosine(col("emb"), col("q_emb")), 4).as("cosine"))
         .orderBy(col("cosine").desc, col("vec_id"))
         .limit(10)
-    }),
+    },
 
     // ---- similarity: LSH ANN — 16-hyperplane signed projection (native
     //      graft_lsh_project, 65k buckets) + hamming-radius multi-probe.
@@ -983,8 +1104,25 @@ object SparkEntry {
     //      rank candidates by exact cosine. For batch ANN at scale the
     //      probe set is enumerated (bit-flip expansion) and equi-joined on
     //      the signature; with a single query vector the broadcast +
-    //      popcount filter below is the same pruning. ----
-    "ann_lsh_topk" -> ((s, dir) => {
+    //      popcount filter below is the same pruning. The oracle mirrors
+    //      graft_lsh_project bit-for-bit: same integer hyperplane weights,
+    //      1-based (bit, dim) arithmetic (DuckDB list lambdas/indexing are
+    //      1-based). ----
+    Oracled("ann_lsh_topk", {
+      val sigExpr = (1 to 16).map { b =>
+        s"(CASE WHEN list_sum(list_transform(range(1, len(emb) + 1), " +
+          s"i -> emb[i] * CAST((2654435761 * i + 40503 * $b) % 9 - 4 " +
+          s"AS DOUBLE))) > 0 THEN ${1 << (b - 1)} ELSE 0 END)"
+      }.mkString(" + ")
+      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb " +
+        "FROM embeddings), " +
+        s"s AS (SELECT vec_id, emb, CAST($sigExpr AS BIGINT) AS sig FROM e), " +
+        "q AS (SELECT emb AS q_emb, sig AS q_sig FROM s WHERE vec_id = 0) " +
+        "SELECT vec_id, round(list_cosine_similarity(emb, q_emb), 4) " +
+        "AS cosine FROM s, q " +
+        "WHERE vec_id <> 0 AND bit_count(xor(sig, q_sig)) <= 5 " +
+        "ORDER BY cosine DESC, vec_id LIMIT 10"
+    }) { (s, dir) =>
       val emb = embs(s, dir)
         .withColumn("emb", col("embedding").cast("array<double>"))
         .withColumn("sig", lsh_project(col("emb")))
@@ -996,36 +1134,60 @@ object SparkEntry {
           round(cosine(col("emb"), col("q_emb")), 4).as("cosine"))
         .orderBy(col("cosine").desc, col("vec_id"))
         .limit(10)
-    }),
+    },
 
     // ---- streaming-shaped: tumbling window aggregation over events ----
     // Window key as epoch seconds and the value sum as integer micros:
     // both BIGINT on both sides (see q1_agg note on hash-exact dtypes).
-    "events_window" -> ((s, dir) =>
-      s.read.parquet(s"$dir/events.parquet")
-        .groupBy(window(col("ts"), "5 minutes").getField("start")
-          .cast("timestamp").cast("long").as("window_start"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          min(col("value")).as("min_value"),
-          max(col("value")).as("max_value"),
-          sum(round(col("value") * 1000000).cast("long")).as("sum_value_micros"))
-        .orderBy("window_start", "event_type")),
+    Oracled("events_window",
+        "SELECT CAST(epoch(time_bucket(INTERVAL '5 minutes', ts)) AS BIGINT) " +
+          "AS window_start, " +
+          "event_type, count(*) AS n, min(value) AS min_value, " +
+          "max(value) AS max_value, " +
+          "CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) " +
+          "AS sum_value_micros " +
+          "FROM events GROUP BY 1, 2 ORDER BY window_start, event_type") {
+      (s, dir) =>
+        s.read.parquet(s"$dir/events.parquet")
+          .groupBy(window(col("ts"), "5 minutes").getField("start")
+            .cast("timestamp").cast("long").as("window_start"),
+            col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            min(col("value")).as("min_value"),
+            max(col("value")).as("max_value"),
+            sum(round(col("value") * 1000000).cast("long"))
+              .as("sum_value_micros"))
+          .orderBy("window_start", "event_type")
+    },
 
     // ---- relational coverage: agg / broadcast join / window top-k ----
     // Money flows as integer cents end-to-end: round(x*100) is the same
     // double op in Spark and DuckDB, and BIGINT sums are exact — DECIMAL
     // sums hash-fail because DuckDB's pandas bridge renders them float64.
-    "q1_agg" -> ((s, dir) =>
+    Oracled("q1_agg",
+        "SELECT l_returnflag, l_linestatus, " +
+          "CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) " +
+          "AS sum_qty_cents, " +
+          "CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) " +
+          "AS sum_price_cents, " +
+          "count(*) AS n_rows FROM lineitem GROUP BY 1, 2 " +
+          "ORDER BY l_returnflag, l_linestatus") { (s, dir) =>
       s.read.parquet(s"$dir/lineitem.parquet")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(round(col("l_quantity") * 100).cast("long")).as("sum_qty_cents"),
           sum(round(col("l_extendedprice") * 100).cast("long"))
             .as("sum_price_cents"),
           count(lit(1)).as("n_rows"))
-        .orderBy("l_returnflag", "l_linestatus")),
+        .orderBy("l_returnflag", "l_linestatus")
+    },
 
-    "q2_join_topn" -> ((s, dir) => {
+    Oracled("q2_join_topn",
+        "SELECT n_name, count(*) AS n_orders, " +
+          "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) " +
+          "AS revenue_cents " +
+          "FROM orders JOIN customer ON o_custkey = c_custkey " +
+          "JOIN nation ON c_nationkey = n_nationkey " +
+          "GROUP BY n_name ORDER BY n_name") { (s, dir) =>
       val o = s.read.parquet(s"$dir/orders.parquet")
       val c = s.read.parquet(s"$dir/customer.parquet")
       val n = s.read.parquet(s"$dir/nation.parquet")
@@ -1035,9 +1197,15 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_orders"),
           sum(round(col("o_totalprice") * 100).cast("long")).as("revenue_cents"))
         .orderBy("n_name")
-    }),
+    },
 
-    "q3_window_topk" -> ((s, dir) => {
+    Oracled("q3_window_topk",
+        "SELECT o_custkey, o_orderkey, " +
+          "CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents, rn FROM (" +
+          "SELECT o_custkey, o_orderkey, o_totalprice, " +
+          "row_number() OVER (PARTITION BY o_custkey " +
+          "ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM orders) " +
+          "WHERE rn <= 3 ORDER BY o_custkey, rn, o_orderkey") { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val o = s.read.parquet(s"$dir/orders.parquet")
       val w = Window.partitionBy(col("o_custkey"))
@@ -1048,10 +1216,14 @@ object SparkEntry {
           round(col("o_totalprice") * 100).cast("long").as("price_cents"),
           col("rn").cast("long").as("rn"))
         .orderBy("o_custkey", "rn", "o_orderkey")
-    }),
+    },
 
     // ---- relational coverage: set ops (EXCEPT/INTERSECT) ----
-    "q4_setop" -> ((s, dir) => {
+    Oracled("q4_setop",
+        "SELECT partkey FROM (" +
+          "SELECT DISTINCT l_partkey AS partkey FROM lineitem " +
+          "INTERSECT SELECT p_partkey FROM part WHERE p_size > 25) " +
+          "ORDER BY partkey") { (s, dir) =>
       val li = s.read.parquet(s"$dir/lineitem.parquet")
       val p = s.read.parquet(s"$dir/part.parquet")
       val used = li.select(col("l_partkey").as("p_partkey")).distinct()
@@ -1059,16 +1231,23 @@ object SparkEntry {
       used.intersect(large).withColumnRenamed("p_partkey", "partkey")
         .union(used.exceptAll(used)) // exercise both set ops in one plan
         .orderBy("partkey")
-    }),
+    },
 
     // ---- relational coverage: ROLLUP grouping sets ----
-    "q5_rollup" -> ((s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(round(col("l_quantity") * 100).cast("long")).as("sum_qty_cents"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)),
+    Oracled("q5_rollup",
+        "SELECT l_returnflag, l_linestatus, count(*) AS n_rows, " +
+          "CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) " +
+          "AS sum_qty_cents " +
+          "FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus) " +
+          "ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST") {
+      (s, dir) =>
+        s.read.parquet(s"$dir/lineitem.parquet")
+          .rollup(col("l_returnflag"), col("l_linestatus"))
+          .agg(count(lit(1)).as("n_rows"),
+            sum(round(col("l_quantity") * 100).cast("long")).as("sum_qty_cents"))
+          .orderBy(col("l_returnflag").asc_nulls_first,
+            col("l_linestatus").asc_nulls_first)
+    },
 
     // ---- dedup: embedding-cosine near-dup pairs (planted, oracled) ----
     // Planted near-copies: vec_id % 25 == 0 gets a perturbed twin at
@@ -1078,7 +1257,19 @@ object SparkEntry {
     // scales, which have <= 2000; at sf >= 1 it keeps the exhibit's
     // quadratic cost constant). The discovery path at scale is the
     // LSH/IVF bucketing below, never all-pairs.
-    "dedup_embedding_pairs" -> ((s, dir) => {
+    Oracled("dedup_embedding_pairs",
+        s"WITH capped AS (SELECT * FROM embeddings WHERE vec_id < $EmbPairsCap), " +
+          "planted AS (SELECT vec_id + 100000 AS vec_id, " +
+          "list_transform(CAST(embedding AS DOUBLE[]), (x, i) -> " +
+          "x + ((i * 37) % 11 - 5) / 200.0) AS emb " +
+          "FROM capped WHERE vec_id % 25 = 0), " +
+          "base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb " +
+          "FROM capped UNION ALL SELECT vec_id, emb FROM planted) " +
+          "SELECT a.vec_id AS id_a, b.vec_id AS id_b, " +
+          "round(list_cosine_similarity(a.emb, b.emb), 4) AS cosine " +
+          "FROM base a JOIN base b ON a.vec_id < b.vec_id " +
+          "WHERE list_cosine_similarity(a.emb, b.emb) >= 0.8 " +
+          "ORDER BY id_a, id_b") { (s, dir) =>
       val emb = embsPar(s, dir)
         .filter(col("vec_id") < EmbPairsCap)
       val asD = col("embedding").cast("array<double>")
@@ -1095,7 +1286,7 @@ object SparkEntry {
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
           round(cos, 4).as("cosine"))
         .orderBy("id_a", "id_b")
-    }),
+    },
 
     // ---- similarity: IVF ANN with a TRAINED coarse quantizer (seeded
     //      deterministic k-means over a bounded sample — ivfCentroids)
@@ -1108,21 +1299,36 @@ object SparkEntry {
     //      assignment is ONE native expression in the scan projection —
     //      no per-row join, no window, no extra shuffle; the probe set is
     //      a 2-element isin filter. The oracle reads the DUMPED codebook
-    //      and independently recomputes assignment + probe-cell search. ----
-    "ann_ivf_topk" -> ((s, dir) => ivfTopK(s, dir)),
+    //      (an oracle input; training determinism is sbt-tested) and
+    //      independently recomputes assignment + probe-cell search, probe
+    //      cells ranked as on the Spark side (ties → lowest cell id). ----
+    Oracled("ann_ivf_topk", ivfOracleSql("ivf_centroids", IvfNProbe)) {
+      (s, dir) => ivfTopK(s, dir)
+    },
 
     // ---- similarity: IVF with AUTO-SIZED k (k = 0 -> clamp(sqrt(N), 8,
     //      4096) from the table; 22 cells at verify scale) and a wider
     //      probe set — the configuration a deployment actually runs,
     //      driver-verified against the independently recomputed
     //      assignment + probe search over the dumped auto-k codebook. ----
-    "ann_ivf_auto" -> ((s, dir) => ivfTopK(s, dir, k = 0, nprobe = 4)),
+    Oracled("ann_ivf_auto", ivfOracleSql("ivf_centroids_auto", 4)) {
+      (s, dir) => ivfTopK(s, dir, k = 0, nprobe = 4)
+    },
 
     // ---- similarity: int8 vector quantization (the ANN compression
     //      path at scale — 4x smaller candidate tables; per-vector
     //      symmetric scale q = round(x * 127 / max|x|)). Exploded to
     //      scalar rows for the driver compare. ----
-    "emb_quantize_int8" -> ((s, dir) => {
+    Oracled("emb_quantize_int8",
+        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb " +
+          "FROM embeddings), " +
+          "m AS (SELECT vec_id, emb, " +
+          "list_max(list_transform(emb, x -> abs(x))) AS m FROM e), " +
+          "u AS (SELECT vec_id, emb, m, unnest(range(1, len(emb) + 1)) AS i " +
+          "FROM m) " +
+          "SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim, " +
+          "CAST(CASE WHEN m = 0 THEN 0 ELSE round(emb[i] * 127.0 / m) END " +
+          "AS BIGINT) AS q FROM u ORDER BY vec_id, dim") { (s, dir) =>
       val emb = embs(s, dir)
         .withColumn("emb", col("embedding").cast("array<double>"))
         // native kernel for max|x| — the HOF form `array_max(transform(
@@ -1138,10 +1344,18 @@ object SparkEntry {
             .otherwise(round(col("x") * 127.0 / col("m")).cast("long"))
             .as("q"))
         .orderBy("vec_id", "dim")
-    }),
+    },
 
     // ---- text analysis: composite quality score (oracled) ----
-    "quality_score" -> ((s, dir) => {
+    Oracled("quality_score", {
+      import DuckHeuristics._
+      s"SELECT doc_id, round(" +
+        s"least($wc, 200.0) / 200.0 * 0.25 + " +
+        s"(CASE WHEN $wc > 0 THEN $alpha * 1.0 / $wc ELSE 0.0 END) * 0.25 + " +
+        s"least($stop, 8.0) / 8.0 * 0.25 + " +
+        s"least($sent, 20.0) / 20.0 * 0.25, 6) AS quality_score " +
+        s"FROM documents ORDER BY doc_id"
+    }) { (s, dir) =>
       val d = docsPar(s, dir).withColumn("rs", rules(col("text"), lit("en")))
       val wc = ruleValue(col("rs"), "word_count_min")
       val alpha = ruleValue(col("rs"), "alpha_word_ratio")
@@ -1152,15 +1366,37 @@ object SparkEntry {
           least(stop, lit(8.0)) / 8.0 * 0.25 +
           least(sent, lit(20.0)) / 20.0 * 0.25, 6).as("quality_score"))
         .orderBy("doc_id")
-    }),
+    },
 
     // ---- multimodal plumbing: opaque binary + batched stub decode,
     //      oracled end-to-end (the DuckDB side recomputes the stub's
-    //      straight-line dim arithmetic from the source text). Nested
-    //      frame offsets are flattened to scalars (the driver's pandas
-    //      compare cannot sort array columns); the full offsets array and
-    //      the FNV content_hash stay covered by OpsSpec. ----
-    "mm_decode_features" -> ((s, dir) => {
+    //      straight-line dim arithmetic from the source text, BIGINT
+    //      throughout, no overflow). Nested frame offsets are flattened to
+    //      scalars (the pandas compare cannot sort array columns); the
+    //      full offsets array and the FNV content_hash stay covered by
+    //      OpsSpec. ----
+    Oracled("mm_decode_features",
+        "WITH s AS (SELECT doc_id, " +
+          "CAST(octet_length(encode(text)) AS BIGINT) AS olen, " +
+          "CAST(length(text) AS BIGINT) AS clen, " +
+          "CAST(CASE WHEN length(text) = 0 THEN 0 " +
+          "ELSE unicode(substr(text, 1, 1)) END AS BIGINT) AS fcp, " +
+          "CAST(CASE WHEN length(text) = 0 THEN 0 " +
+          "ELSE unicode(substr(text, length(text), 1)) END AS BIGINT) AS lcp " +
+          "FROM documents), " +
+          "f AS (SELECT doc_id, olen AS n_bytes, " +
+          "160 + (olen * 7919 + fcp * 131) % 1760 AS width, " +
+          "90 + (clen * 104729 + lcp * 137) % 990 AS height, " +
+          "1 + (olen + fcp + lcp) % 3 AS channels, " +
+          "1000 + (olen * 2654435761 + clen * 40503) % 59000 AS duration_ms " +
+          "FROM s) " +
+          "SELECT doc_id, n_bytes, CAST(width AS BIGINT) AS width, " +
+          "CAST(height AS BIGINT) AS height, " +
+          "CAST(channels AS BIGINT) AS channels, " +
+          "CAST(duration_ms AS BIGINT) AS duration_ms, " +
+          "CAST(least(16, (duration_ms + 4999) // 5000) AS BIGINT) AS n_frames, " +
+          "CAST(0 AS BIGINT) AS first_offset_ms " +
+          "FROM f ORDER BY doc_id") { (s, dir) =>
       import s.implicits._
       val blobs = docs(s, dir)
         .select(col("doc_id"), encode(col("text"), "utf-8").as("blob"))
@@ -1179,10 +1415,15 @@ object SparkEntry {
           col("duration_ms").cast("long").as("duration_ms"),
           col("n_frames"), col("first_offset_ms"))
         .orderBy("doc_id")
-    }),
+    },
 
     // ---- multimodal: column-level fake meta (pure SQL plumbing) ----
-    "mm_meta_extract" -> ((s, dir) =>
+    Oracled("mm_meta_extract",
+        "SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS blob_bytes, " +
+          "CAST(320 + (CAST(octet_length(encode(text)) AS BIGINT) * 7919) % 1600 " +
+          "AS BIGINT) AS fake_width, " +
+          "CAST(240 + (CAST(octet_length(encode(text)) AS BIGINT) * 104729) % 900 " +
+          "AS BIGINT) AS fake_height FROM documents ORDER BY doc_id") { (s, dir) =>
       docs(s, dir)
         .withColumn("blob", encode(col("text"), "utf-8"))
         .select(col("doc_id"),
@@ -1198,7 +1439,10 @@ object SparkEntry {
             .as("fake_width"),
           (lit(240L) + (length(col("blob")).cast("long") * 104729L) % 900L)
             .as("fake_height"))
-        .orderBy("doc_id")))
+        .orderBy("doc_id")
+    }
+  ).ensuring(qs => qs.map(_.name).distinct.size == qs.size,
+    "a query name is declared twice")
 
   /** Bound on the brute-force embedding-pairs exhibit (see
     * `dedup_embedding_pairs`). 2000 = the sf0.1 table size, so every
@@ -1232,319 +1476,7 @@ object SparkEntry {
       "AND a.cent_id IN (SELECT cent_id FROM probes) " +
       "ORDER BY cosine DESC, vec_id LIMIT 10"
 
-  lazy val oracleSql: Map[String, String] = Map(
-    // keep == expected_keep on EVERY row is exact by construction
-    // (validated generation + honest exhaust labels — the PipelineSpec
-    // F1 == 1.0 gate); the truth table is dumped by Verify and carries no
-    // pipeline output
-    "pipeline_full" ->
-      ("SELECT url, expected_keep AS keep, expected_keep, n_pii, " +
-        "TRUE AS pii_count_exact, TRUE AS scrub_covers_planted " +
-        s"FROM read_parquet('$AuxDirToken/pipeline_truth/*.parquet') " +
-        "ORDER BY url"),
-
-    // clean validated pages: predicted lang == generator lang and conf
-    // above the gate, both guaranteed by the generation-time validation
-    "langid_pred" ->
-      ("SELECT url, lang AS lang_pred, TRUE AS conf_above_min " +
-        s"FROM read_parquet('$AuxDirToken/pipeline_truth/*.parquet') " +
-        "WHERE defect = 'none' AND validated_ok ORDER BY url"),
-
-    "perplexity_score" ->
-      ("SELECT url, TRUE AS ppl_below_gate, TRUE AS scrambled_worse " +
-        s"FROM read_parquet('$AuxDirToken/pipeline_truth/*.parquet') " +
-        "WHERE defect = 'none' AND validated_ok ORDER BY url"),
-
-    // byte-exact expected scrub output, constructed independently from
-    // doc_id (labels, token-mask shape, first-match-wins precedence)
-    "j2_scrub" ->
-      (s"SELECT doc_id, $scrubbedExpectedDuck AS scrubbed_text, " +
-        "CAST(6 AS BIGINT) AS n_redacted FROM documents ORDER BY doc_id"),
-
-    // straight-line stub-decode arithmetic recomputed from the source
-    // text (see StubDecoder) — BIGINT throughout, no overflow
-    "mm_decode_features" ->
-      ("WITH s AS (SELECT doc_id, " +
-        "CAST(octet_length(encode(text)) AS BIGINT) AS olen, " +
-        "CAST(length(text) AS BIGINT) AS clen, " +
-        "CAST(CASE WHEN length(text) = 0 THEN 0 " +
-        "ELSE unicode(substr(text, 1, 1)) END AS BIGINT) AS fcp, " +
-        "CAST(CASE WHEN length(text) = 0 THEN 0 " +
-        "ELSE unicode(substr(text, length(text), 1)) END AS BIGINT) AS lcp " +
-        "FROM documents), " +
-        "f AS (SELECT doc_id, olen AS n_bytes, " +
-        "160 + (olen * 7919 + fcp * 131) % 1760 AS width, " +
-        "90 + (clen * 104729 + lcp * 137) % 990 AS height, " +
-        "1 + (olen + fcp + lcp) % 3 AS channels, " +
-        "1000 + (olen * 2654435761 + clen * 40503) % 59000 AS duration_ms " +
-        "FROM s) " +
-        "SELECT doc_id, n_bytes, CAST(width AS BIGINT) AS width, " +
-        "CAST(height AS BIGINT) AS height, " +
-        "CAST(channels AS BIGINT) AS channels, " +
-        "CAST(duration_ms AS BIGINT) AS duration_ms, " +
-        "CAST(least(16, (duration_ms + 4999) // 5000) AS BIGINT) AS n_frames, " +
-        "CAST(0 AS BIGINT) AS first_offset_ms " +
-        "FROM f ORDER BY doc_id"),
-    "q4_setop" ->
-      ("SELECT partkey FROM (" +
-        "SELECT DISTINCT l_partkey AS partkey FROM lineitem " +
-        "INTERSECT SELECT p_partkey FROM part WHERE p_size > 25) " +
-        "ORDER BY partkey"),
-
-    "q5_rollup" ->
-      ("SELECT l_returnflag, l_linestatus, count(*) AS n_rows, " +
-        "CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) " +
-        "AS sum_qty_cents " +
-        "FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus) " +
-        "ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"),
-
-    "dedup_embedding_pairs" ->
-      (s"WITH capped AS (SELECT * FROM embeddings WHERE vec_id < $EmbPairsCap), " +
-        "planted AS (SELECT vec_id + 100000 AS vec_id, " +
-        "list_transform(CAST(embedding AS DOUBLE[]), (x, i) -> " +
-        "x + ((i * 37) % 11 - 5) / 200.0) AS emb " +
-        "FROM capped WHERE vec_id % 25 = 0), " +
-        "base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb " +
-        "FROM capped UNION ALL SELECT vec_id, emb FROM planted) " +
-        "SELECT a.vec_id AS id_a, b.vec_id AS id_b, " +
-        "round(list_cosine_similarity(a.emb, b.emb), 4) AS cosine " +
-        "FROM base a JOIN base b ON a.vec_id < b.vec_id " +
-        "WHERE list_cosine_similarity(a.emb, b.emb) >= 0.8 " +
-        "ORDER BY id_a, id_b"),
-
-    "quality_score" -> {
-      import DuckHeuristics._
-      s"SELECT doc_id, round(" +
-        s"least($wc, 200.0) / 200.0 * 0.25 + " +
-        s"(CASE WHEN $wc > 0 THEN $alpha * 1.0 / $wc ELSE 0.0 END) * 0.25 + " +
-        s"least($stop, 8.0) / 8.0 * 0.25 + " +
-        s"least($sent, 20.0) / 20.0 * 0.25, 6) AS quality_score " +
-        s"FROM documents ORDER BY doc_id"
-    },
-
-    "s1_scan_project" ->
-      ("SELECT doc_id, source, n_chars FROM documents WHERE text IS NOT NULL " +
-        "ORDER BY doc_id"),
-
-    "p1_branch_route" ->
-      (s"SELECT doc_id, CASE WHEN length(trim(text, " +
-        s"'${Blank.Chars}')) = 0 THEN 'extract' " +
-        "ELSE 'direct' END AS route FROM documents ORDER BY doc_id"),
-
-    // expected extraction rebuilt literally: block <p> → newline, closing
-    // tag → trailing space, entities decoded (chr(39) = the hex-ref
-    // apostrophe; — … à É é α → literal UTF-8; out-of-range AND overlong
-    // numeric → space; unknown &bogus; passes through raw)
-    "html_entities" ->
-      ("SELECT doc_id, chr(10) || 'a' || chr(65 + CAST(doc_id % 26 AS INT)) " +
-        "|| 'b' || chr(39) || 'c—d…e f&bogus;gàhÉiéjαk→l m ' AS extracted " +
-        "FROM documents ORDER BY doc_id"),
-
-    "g1_tokenize_stats" -> {
-      val words = duckWords("text")
-      s"SELECT doc_id, len($words) AS n_words, " +
-        s"length(array_to_string($words, ' ')) AS full_text_len " +
-        "FROM documents ORDER BY doc_id"
-    },
-
-    "d1_pii_counts" -> piiCountsOracle(piiTextSql, webPii),
-
-    "d3_pii_financial" -> piiCountsOracle(finTextSql, finPii),
-
-    // per-type match rows with ordinal: unnest(range) gives the 1-based
-    // in-order position; regex finditer order == the engine's sorted order
-    // within a type (matches are emitted in text order).
-    "d2_pii_matches" -> webPii.map(t =>
-        s"SELECT doc_id, '${t.label}' AS pii_type, CAST(i AS BIGINT) AS seq, " +
-          s"ms[i] AS match_text FROM (SELECT doc_id, ms, " +
-          s"unnest(range(1, len(ms) + 1)) AS i FROM (SELECT doc_id, " +
-          s"regexp_extract_all($piiTextSql, '${t.re2}') AS ms FROM documents))")
-      .mkString("", " UNION ALL ", " ORDER BY doc_id, pii_type, seq"),
-
-    "heuristics_basic" -> {
-      import DuckHeuristics._
-      s"SELECT doc_id, $wc AS word_count, $stop AS stopword_count, " +
-        s"$sent AS sentences, CAST($lorem AS BIGINT) AS has_lorem, " +
-        s"CAST($curly AS BIGINT) AS has_curly, " +
-        s"$keepBasicDuck AS keep_basic " +
-        s"FROM documents ORDER BY doc_id"
-    },
-
-    "keep_stats" ->
-      (s"SELECT lang, count(*) AS n_docs, " +
-        s"CAST(sum(CASE WHEN $keepBasicDuck " +
-        s"THEN 1 ELSE 0 END) AS BIGINT) AS n_keep " +
-        s"FROM documents GROUP BY lang ORDER BY lang"),
-
-    "toxicity_blocklist" -> {
-      val listLit = Heuristics.Blocklist.toSeq.sorted
-        .map(w => s"'$w'").mkString("[", ", ", "]")
-      val hits = s"len(list_filter(list_transform(" +
-        s"${duckWords(toxTextSql)}, " +
-        s"w -> lower(w)), w -> list_contains($listLit, w)))"
-      s"SELECT doc_id, CAST($hits AS BIGINT) AS n_blocklist_hits, " +
-        s"$hits > 0 AS flagged FROM documents ORDER BY doc_id"
-    },
-
-    // DuckDB sum(BIGINT) is HUGEINT and pandas-renders as float64; the
-    // driver's hash compare is dtype-exact, so cast back to BIGINT.
-    "o4_metrics" ->
-      ("SELECT source, count(*) AS n_docs, " +
-        "CAST(sum(n_chars) AS BIGINT) AS sum_chars, " +
-        "max(n_chars) AS max_chars FROM documents GROUP BY source " +
-        "ORDER BY source"),
-
-    "emb_quantize_int8" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb " +
-        "FROM embeddings), " +
-        "m AS (SELECT vec_id, emb, " +
-        "list_max(list_transform(emb, x -> abs(x))) AS m FROM e), " +
-        "u AS (SELECT vec_id, emb, m, unnest(range(1, len(emb) + 1)) AS i " +
-        "FROM m) " +
-        "SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim, " +
-        "CAST(CASE WHEN m = 0 THEN 0 ELSE round(emb[i] * 127.0 / m) END " +
-        "AS BIGINT) AS q FROM u ORDER BY vec_id, dim"),
-
-    "mm_meta_extract" ->
-      ("SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS blob_bytes, " +
-        "CAST(320 + (CAST(octet_length(encode(text)) AS BIGINT) * 7919) % 1600 " +
-        "AS BIGINT) AS fake_width, " +
-        "CAST(240 + (CAST(octet_length(encode(text)) AS BIGINT) * 104729) % 900 " +
-        "AS BIGINT) AS fake_height FROM documents ORDER BY doc_id"),
-
-    "dedup_exact" ->
-      (s"SELECT md5($dupTextSql) AS text_hash, count(*) AS n_dups, " +
-        s"min(doc_id) AS min_doc_id FROM documents " +
-        s"GROUP BY 1 HAVING count(*) > 1 ORDER BY text_hash"),
-
-    // ground truth for the LSH pipeline: brute-force exact 3-gram-shingle
-    // Jaccard >= 0.8 over ALL pairs (feasible at verify scale only; the
-    // Spark side reaches the same set through banding + confirmation)
-    "dedup_minhash_pairs" ->
-      (s"WITH ${exactJaccardPairsCtes("TRUE")} " +
-        s"SELECT id_a, id_b, n_inter, n_union FROM jpairs " +
-        s"ORDER BY id_a, id_b"),
-
-    // clusters = connected components over the SAME pair set, computed in
-    // DuckDB as a recursive reachability closure (cluster = min reachable
-    // id; component sizes are small so the closure is cheap at verify scale)
-    "dedup_clusters" ->
-      (s"WITH RECURSIVE ${exactJaccardPairsCtes("TRUE")}, " +
-        "edges AS (SELECT id_a AS src, id_b AS dst FROM jpairs " +
-        "UNION ALL SELECT id_b, id_a FROM jpairs), " +
-        "reach(id, c) AS (" +
-        "SELECT src, src FROM edges " +
-        "UNION " +
-        "SELECT e.dst, r.c FROM reach r JOIN edges e ON e.src = r.id) " +
-        "SELECT id AS doc_id, min(c) AS cluster_id, " +
-        "id = min(c) AS is_canonical " +
-        "FROM reach GROUP BY id ORDER BY doc_id"),
-
-    "dedup_simhash" ->
-      ("SELECT doc_id % 3 AS cluster, CAST(1 AS BIGINT) AS n_distinct_simhash, " +
-        "count(*) AS n_docs FROM documents WHERE doc_id % 11 < 2 " +
-        "GROUP BY 1 ORDER BY cluster"),
-
-    // the unplanted group's expected distinct-fingerprint count is the
-    // TRUE distinct-text count, not count(*): at sf >= 0.1 the synthetic
-    // vocab produces natural duplicate texts (scale-fragile assumption
-    // caught by the sf1 run), and identical texts SHOULD share a
-    // fingerprint — the gate is collision-freedom over distinct texts
-    "text_fingerprint" ->
-      ("SELECT 'cluster_' || (doc_id % 3) AS grp, count(*) AS n_docs, " +
-        "CAST(1 AS BIGINT) AS n_distinct_fp FROM documents " +
-        "WHERE doc_id % 11 < 2 GROUP BY 1 " +
-        "UNION ALL " +
-        "SELECT 'unique_texts' AS grp, count(*) AS n_docs, " +
-        "count(DISTINCT text) AS n_distinct_fp FROM documents " +
-        "WHERE doc_id % 11 >= 2 " +
-        "ORDER BY grp"),
-
-    "text_token_counts" -> {
-      val words = duckWords("text")
-      // the trained merge table, embedded as a per-word replace chain
-      val perWord = graft.core.Bpe.tokenCountSql("w")
-      s"SELECT doc_id, len($words) AS ws_tokens, " +
-        s"CAST(coalesce(list_sum(list_transform($words, " +
-        s"w -> $perWord)), 0) AS BIGINT) AS bpe_tokens, " +
-        "len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) " +
-        "AS regex_tokens FROM documents ORDER BY doc_id"
-    },
-
-    "knn_bruteforce" ->
-      ("WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS q_emb " +
-        "FROM embeddings WHERE vec_id = 0) " +
-        "SELECT vec_id, round(list_cosine_similarity(" +
-        "CAST(embedding AS DOUBLE[]), q_emb), 4) " +
-        "AS cosine FROM embeddings, q WHERE vec_id <> 0 " +
-        "ORDER BY cosine DESC, vec_id LIMIT 10"),
-
-    // mirrors graft_lsh_project bit-for-bit: same integer hyperplane
-    // weights, 1-based (bit, dim) arithmetic (DuckDB list lambdas/indexing
-    // are 1-based)
-    "ann_lsh_topk" -> {
-      val sigExpr = (1 to 16).map { b =>
-        s"(CASE WHEN list_sum(list_transform(range(1, len(emb) + 1), " +
-          s"i -> emb[i] * CAST((2654435761 * i + 40503 * $b) % 9 - 4 " +
-          s"AS DOUBLE))) > 0 THEN ${1 << (b - 1)} ELSE 0 END)"
-      }.mkString(" + ")
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb " +
-        "FROM embeddings), " +
-        s"s AS (SELECT vec_id, emb, CAST($sigExpr AS BIGINT) AS sig FROM e), " +
-        "q AS (SELECT emb AS q_emb, sig AS q_sig FROM s WHERE vec_id = 0) " +
-        "SELECT vec_id, round(list_cosine_similarity(emb, q_emb), 4) " +
-        "AS cosine FROM s, q " +
-        "WHERE vec_id <> 0 AND bit_count(xor(sig, q_sig)) <= 5 " +
-        "ORDER BY cosine DESC, vec_id LIMIT 10"
-    },
-
-    // cell assignment + multi-probe search recomputed independently GIVEN
-    // the dumped trained codebook (the codebook is an oracle input;
-    // training determinism is sbt-tested). Probe cells = the query's
-    // top-nprobe centroids by cosine, ties → lowest cell id — the same
-    // ranking the Spark side computes on the driver. Two exhibits share
-    // the template: explicit k = IvfK / nprobe = IvfNProbe, and the
-    // auto-sized k (codebook dumped separately) with nprobe = 4.
-    "ann_ivf_topk" -> ivfOracleSql("ivf_centroids", IvfNProbe),
-    "ann_ivf_auto" -> ivfOracleSql("ivf_centroids_auto", 4),
-
-    // the planted docs' pair set alone, from the same ground truth
-    "dedup_ngram_jaccard" ->
-      (s"WITH ${exactJaccardPairsCtes("doc_id % 25 = 0")} " +
-        s"SELECT id_a, id_b, n_inter, n_union FROM jpairs " +
-        s"ORDER BY id_a, id_b"),
-
-    "events_window" ->
-      ("SELECT CAST(epoch(time_bucket(INTERVAL '5 minutes', ts)) AS BIGINT) " +
-        "AS window_start, " +
-        "event_type, count(*) AS n, min(value) AS min_value, " +
-        "max(value) AS max_value, " +
-        "CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) " +
-        "AS sum_value_micros " +
-        "FROM events GROUP BY 1, 2 ORDER BY window_start, event_type"),
-
-    "q1_agg" ->
-      ("SELECT l_returnflag, l_linestatus, " +
-        "CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) " +
-        "AS sum_qty_cents, " +
-        "CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) " +
-        "AS sum_price_cents, " +
-        "count(*) AS n_rows FROM lineitem GROUP BY 1, 2 " +
-        "ORDER BY l_returnflag, l_linestatus"),
-
-    "q2_join_topn" ->
-      ("SELECT n_name, count(*) AS n_orders, " +
-        "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) " +
-        "AS revenue_cents " +
-        "FROM orders JOIN customer ON o_custkey = c_custkey " +
-        "JOIN nation ON c_nationkey = n_nationkey " +
-        "GROUP BY n_name ORDER BY n_name"),
-
-    "q3_window_topk" ->
-      ("SELECT o_custkey, o_orderkey, " +
-        "CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents, rn FROM (" +
-        "SELECT o_custkey, o_orderkey, o_totalprice, " +
-        "row_number() OVER (PARTITION BY o_custkey " +
-        "ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM orders) " +
-        "WHERE rn <= 3 ORDER BY o_custkey, rn, o_orderkey"))
+  /** The Spark plans of [[oracled]] by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    oracled.map(q => q.name -> q.plan).toMap
 }

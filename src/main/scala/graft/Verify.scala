@@ -1,8 +1,10 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.oracled query's result → parquet,
+  * plus its oracle SQL in oracle_sql.json, for the DuckDB compare
+  * (tools/check_oracle.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -79,41 +81,28 @@ object Verify {
         }
       }
 
-    SparkEntry.queries.foreach { case (name, fn) =>
-      // delete any stale dump FIRST: a failing query must show up as a
-      // missing result, not silently pass the compare against the parquet
-      // a previous run left in the same outDir
-      val dest = Paths.get(s"$outDir/$name")
-      deleteTree(dest)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(dest.toString)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // scale-dependent oracle constant: the near-dup variant count the
     // Spark queries derive from the documents row count — substituted
     // here so the DuckDB side plants the identical clusters at any sf
     val nVar =
       SparkEntry.nearDupVariants(SparkEntry.numDocs(spark, sfDir)).toString
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(SparkEntry.AuxDirToken, auxDir)
-          .replace(SparkEntry.NVarToken, nVar))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val oracles = new java.util.LinkedHashMap[String, String]()
+    SparkEntry.oracled.foreach { q =>
+      // delete any stale dump FIRST: a failing query must show up as a
+      // missing result, not silently pass the compare against the parquet
+      // a previous run left in the same outDir
+      val dest = Paths.get(s"$outDir/${q.name}")
+      deleteTree(dest)
+      try q.plan(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(dest.toString)
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+      }
+      oracles.put(q.name, q.oracle.replace(SparkEntry.AuxDirToken, auxDir)
+        .replace(SparkEntry.NVarToken, nVar))
+    }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new ObjectMapper().writeValueAsString(oracles))
     spark.stop()
   }
 }

@@ -44,23 +44,6 @@ final class NGramLM private (
     2 * Log10Alpha + math.log10((cW + 1.0) / (totalUnigrams + vocabSize + 1.0))
   }
 
-  /** Perplexity = 10^(-mean log10 prob) over the token stream (lowercased). */
-  def perplexity(tokens: IndexedSeq[String]): Double = {
-    if (tokens.isEmpty) return PerplexityEmpty
-    var h2 = BosHash // w_{i-2}
-    var h1 = BosHash // w_{i-1}
-    var h12 = combine(BosHash, BosHash)
-    var sum = 0.0
-    var i = 0
-    while (i < tokens.length) {
-      val w = hashWord(tokens(i).toLowerCase(Locale.ROOT))
-      sum += logProb(h1, h12, w)
-      h2 = h1; h1 = w; h12 = combine(h2, h1)
-      i += 1
-    }
-    math.pow(10.0, -sum / tokens.length)
-  }
-
   /** Tokens are letter-normalized (punctuation stripped, lowercased by the
     * scorer) so sentence punctuation doesn't register as OOV. */
   def perplexityOfText(text: String): Double =

@@ -82,7 +82,10 @@ object IcebergStyleTable {
     * fault, not an absent record: every listed snapshot was published
     * whole. */
   private def snapshot(io: RootFs, root: String, version: Int): JsonNode =
-    new ObjectMapper().readTree(io.read(snapPath(root, version)))
+    Json.readTree(io.read(snapPath(root, version)))
+
+  /** Reads every snapshot and quotes every string written into one. */
+  private val Json = new ObjectMapper()
 
   private def strings(array: JsonNode): Seq[String] =
     array.elements().asScala.map(_.asText).toSeq
@@ -110,8 +113,7 @@ object IcebergStyleTable {
       .sorted
   }
 
-  private def q(s: String): String = "\"" + s.replace("\\", "\\\\")
-    .replace("\"", "\\\"") + "\""
+  private def q(s: String): String = Json.writeValueAsString(s)
 
   private def arr(ss: Seq[String]): String = ss.map(q).mkString("[", ",", "]")
 

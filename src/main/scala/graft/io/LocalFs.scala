@@ -4,17 +4,15 @@ import java.io.IOException
 import java.nio.file.{Files, LinkOption}
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
 
 /** The `file://` FileSystem of the engine's sessions: Hadoop's checksummed
   * `LocalFileSystem` (same `.crc` sidecars, same layout, same permission
-  * bits) over a raw filesystem that sets permissions in-process, creates
-  * exclusively, and renames without a copy fallback and without replacing
-  * an existing file.
+  * bits) over a raw filesystem that sets permissions in-process and
+  * renames without a copy fallback and without replacing an existing
+  * file.
   *
   * Without libhadoop's NativeIO, the stock `RawLocalFileSystem`
   * forks a `chmod` child process in `setPermission`, which Hadoop calls for
@@ -44,27 +42,6 @@ object LocalFs {
         }
         Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
       }
-    }
-
-    /** `overwrite = false` is an exclusive create: the name is claimed
-      * with O_CREAT|O_EXCL before the stream opens. The stock class checks
-      * `exists` and then opens, two steps a second creator can interleave.
-      * (The checksummed [[LocalFs]] reaches the raw filesystem through the
-      * `create` that takes a permission, which keeps the stock check.) */
-    override def create(f: Path, overwrite: Boolean, bufferSize: Int,
-                        replication: Short, blockSize: Long,
-                        progress: Progressable): FSDataOutputStream = {
-      if (!overwrite) {
-        val parent = f.getParent
-        if (parent != null && !mkdirs(parent))
-          throw new IOException(s"Mkdirs failed to create $parent")
-        try Files.createFile(pathToFile(f).toPath)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            throw new FileAlreadyExistsException(s"File already exists: $f")
-        }
-      }
-      super.create(f, true, bufferSize, replication, blockSize, progress)
     }
 
     /** A rename that refuses an existing `dst` (false), as HDFS's does,

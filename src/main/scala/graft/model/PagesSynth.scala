@@ -61,8 +61,6 @@ final case class PageWithTruth(url: String, warc_ts: Timestamp,
 object PagesSynth {
 
   final val Seed = 42L
-  final val PerplexityMax: Double = Heuristics.PerplexityMax
-  final val LangConfMin: Double = Heuristics.LangConfMin
   final val NumHosts = 500
 
   private val tlds = IndexedSeq("com", "org", "net", "de", "fr", "es", "cn", "io")
@@ -277,8 +275,9 @@ object PagesSynth {
             // n-grams spanning raw line breaks hash differently)
             val (pred, conf) = LangId.predict(Tokenizer.tokenize(evalText)._1)
             val ppl = NGramLM.perplexity(evalText, pred)
-            Heuristics.keep(rules) && pred == lang && conf >= LangConfMin &&
-              ppl <= PerplexityMax * 0.8
+            Heuristics.keep(rules) && pred == lang &&
+              conf >= Heuristics.LangConfMin &&
+              ppl <= Heuristics.PerplexityMax * 0.8
           } else {
             // defect docs must actually trip the pipeline (probabilistic
             // defects like non_alpha can land in the binomial tail where

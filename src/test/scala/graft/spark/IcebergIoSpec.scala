@@ -18,6 +18,7 @@ import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Heuristics
 import graft.io.{CheckpointedRun, IcebergStyleTable}
 import graft.model.PagesSynth
 import graft.pipeline.QualityPipeline
@@ -40,7 +41,8 @@ class IcebergIoSpec extends AnyFunSuite {
     finally ls.close()
   }
 
-  test("iceberg-style append: layout, snapshot json, version hint, read-back") {
+  test("iceberg-style append: layout, one snapshot json per commit, " +
+      "read-back") {
     val root = tmpDir("iceberg")
     val df = QualityPipeline(PagesSynth.pages(spark, 300, 4))
     val snap = IcebergStyleTable.append(df, root,
@@ -111,9 +113,10 @@ class IcebergIoSpec extends AnyFunSuite {
     }
   }
 
-  test("the version hint flips atomically: a reader polling currentVersion " +
-      "through 10 appends sees only committed versions, never going back") {
-    val root = tmpDir("hintflip")
+  test("the current version advances atomically: a reader polling " +
+      "currentVersion through 10 appends sees only committed versions, " +
+      "never going back") {
+    val root = tmpDir("versionflip")
     val df = spark.range(0, 20).selectExpr("concat('u', id) AS url", "id")
     IcebergStyleTable.append(df, root, Nil, "url", 2, 2)
     val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -245,9 +248,9 @@ class IcebergIoSpec extends AnyFunSuite {
         rows.filter(nonNull(_, "n_redacted"))
           .map(_.getAs[Number]("n_redacted").longValue).sum,
         n(r => nonNull(r, "lang_conf") &&
-          r.getAs[Double]("lang_conf") < PagesSynth.LangConfMin),
+          r.getAs[Double]("lang_conf") < Heuristics.LangConfMin),
         n(r => nonNull(r, "perplexity") &&
-          r.getAs[Double]("perplexity") > PagesSynth.PerplexityMax),
+          r.getAs[Double]("perplexity") > Heuristics.PerplexityMax),
         rows.filter(nonNull(_, "rule_lineage"))
           .map(_.getAs[Seq[Row]]("rule_lineage").count(rule =>
             !rule.isNullAt(rule.fieldIndex("fired")) &&
@@ -626,6 +629,18 @@ class IcebergIoSpec extends AnyFunSuite {
     assert(IcebergStyleTable.append(df, root, Nil, "url", 2, 2).version == 2)
   }
 
+  test("caller metadata holding a tab is quoted as JSON: the table reads, " +
+      "its snapshot is found by that value, and the next append commits") {
+    val root = tmpDir("metaquote")
+    val df = spark.range(0, 20).selectExpr("concat('u', id) AS url", "id")
+    IcebergStyleTable.append(df, root, Nil, "url", 2, 2,
+      extraMeta = Map("note" -> "a\tb"))
+    assert(IcebergStyleTable.read(spark, root).count() == 20)
+    assert(IcebergStyleTable.findSnapshotWithMeta(root, "note", "a\tb")
+      .contains(1))
+    assert(IcebergStyleTable.append(df, root, Nil, "url", 2, 2).version == 2)
+  }
+
   test("a committer killed between its data write and its publish leaves " +
       "an orphan generation that does not block the next commit") {
     val root = tmpDir("killed")
@@ -686,7 +701,8 @@ class IcebergIoSpec extends AnyFunSuite {
     assert(back.select(countDistinct("url")).head().getLong(0) == 400)
   }
 
-  test("salted write bounds skew: no output partition dominated by one host") {
+  test("partitioned append bounds skew: the hottest host's rows land in " +
+      "more than one file") {
     val root = tmpDir("salt")
     val df = QualityPipeline(PagesSynth.pages(spark, 2000, 8))
     IcebergStyleTable.append(df, root, Seq("part_date"), "url",

@@ -149,34 +149,21 @@ class LocalFsSpec extends AnyFunSuite {
     }
   }
 
-  test("create with overwrite = false is exclusive: of 8 threads racing " +
-      "for one name, exactly one wins each of 200 rounds") {
-    val dir = tmpDir("localfs_excl")
-    // the FileSystem the engine's metadata goes through, also in a session
-    // that never installed LocalFs
+  test("the engine's metadata goes through LocalFs's raw filesystem, and " +
+      "of 8 threads publishing one name, exactly one wins each of 200 " +
+      "rounds") {
+    val dir = tmpDir("localfs_publish")
+    // also in a session that never installed LocalFs
     val io = RootFs(spark, dir.toString)
-    val fs = io.fs
-    assert(fs.isInstanceOf[LocalFs.RawFs])
+    assert(io.fs.isInstanceOf[LocalFs.RawFs])
     assert(RootFs(spark.newSession(), dir.toString).fs
       .isInstanceOf[LocalFs.RawFs])
     val threads = 8
     val barrier = new CyclicBarrier(threads)
     val pool = Executors.newFixedThreadPool(threads)
     try (0 until 200).foreach { round =>
-      val p = new Path(new Path(dir.toUri), s"claim-$round")
-      val outcomes = (0 until threads).map { _ =>
-        pool.submit(new Callable[Boolean] {
-          override def call(): Boolean = {
-            barrier.await()
-            try { fs.create(p, false).close(); true }
-            catch { case _: FileAlreadyExistsException => false }
-          }
-        })
-      }.map(_.get())
-      assert(outcomes.count(identity) == 1, s"round $round: $outcomes")
-
-      // the same race through a publish (temp file, then a rename that
-      // never replaces): one publisher wins, with its whole content
+      // a publish is a temp file, then a rename that never replaces: one
+      // publisher wins, with its whole content
       val q = new Path(new Path(dir.toUri), s"snap-$round.json")
       val published = (0 until threads).map { t =>
         pool.submit(new Callable[Option[String]] {
