@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
 import graft.io.{CheckpointedRun, IcebergStyleTable, LocalFs, RootFs}
@@ -167,24 +168,28 @@ object RunJob {
     }
   }
 
+  /** The one JSON status line `main` prints: the run's outcome and the
+    * location of its per-partition metrics table (a node's `toString` is
+    * its compact JSON). */
+  def statusLine(args: JobArgs, res: JobResult): String =
+    new ObjectMapper().createObjectNode()
+      .put("run_id", args.runId)
+      .put("partitions_fresh", res.partitions.count(!_.skipped))
+      .put("partitions_skipped", res.partitions.count(_.skipped))
+      .put("table_version", res.tableVersion)
+      .put("table_rows", res.tableRows)
+      .put("committed_this_run", res.committedThisRun)
+      .put("metrics",
+        CheckpointedRun.progressDir(workRoot(args), args.runId).toString)
+      .toString
+
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv)
     val spark = SparkSession.builder()
       .appName(s"graft-quality-filter-${args.runId}")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    val res = execute(spark, args)
-    val fresh = res.partitions.count(!_.skipped)
-    val skipped = res.partitions.count(_.skipped)
-    // one JSON status line + the per-partition metrics table location
-    println(
-      s"""{"run_id":"${args.runId}","partitions_fresh":$fresh,""" +
-        s""""partitions_skipped":$skipped,""" +
-        s""""table_version":${res.tableVersion},""" +
-        s""""table_rows":${res.tableRows},""" +
-        s""""committed_this_run":${res.committedThisRun},""" +
-        s""""metrics":"${CheckpointedRun.progressDir(workRoot(args),
-          args.runId)}"}""")
+    println(statusLine(args, execute(spark, args)))
     spark.stop()
   }
 }

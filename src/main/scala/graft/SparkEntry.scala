@@ -9,7 +9,7 @@ import org.apache.parquet.io.InputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Blank, Heuristics}
+import graft.core.{Blank, Heuristics, VecMath}
 import graft.expr.GraftFunctions
 import graft.expr.GraftFunctions._
 import graft.io.RootFs
@@ -30,6 +30,29 @@ import graft.pipeline.QualityPipeline
   */
 object SparkEntry {
 
+  /** (rowGroups, rows) from the table's footers, read through the
+    * session's FileSystem on every call. Throws when the footers are
+    * unreadable; Spark's own scan of the table reads the same footers
+    * through the same FileSystem. */
+  private def parquetFooterStats(s: SparkSession, dir: String,
+                                 table: String): (Int, Long) = {
+    val io = RootFs(s, dir)
+    val p = new Path(s"$dir/$table.parquet")
+    val st = io.fs.getFileStatus(p)
+    val files =
+      if (st.isDirectory) io.list(p)
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      else Seq(st)
+    val stats = files.map { f =>
+      val r = ParquetFileReader.open(new InputFile {
+        def getLength: Long = f.getLen
+        def newStream() = HadoopStreams.wrap(io.fs.open(f.getPath))
+      })
+      try (r.getRowGroups.size, r.getRecordCount) finally r.close()
+    }
+    (stats.map(_._1).sum, stats.map(_._2).sum)
+  }
+
   /** Parquet can only split at row-group boundaries, and the testdata
     * tables are single-file single-row-group (DuckDB COPY default), so a
     * bare scan runs EVERY per-row kernel on one core no matter the
@@ -43,39 +66,7 @@ object SparkEntry {
     * repartition width is the session's defaultParallelism, never a
     * constant.
     *
-    * The signature lives in the cached VALUE (not the key): a table
-    * regenerated in place replaces its entry instead of adding one. */
-  private val footerStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, (Int, Long))]()
-  /** (rowGroups, rows) from the footers, read through the session's
-    * FileSystem and cached per table signature `sig`. Throws when the
-    * footers are unreadable; Spark's own scan of the table reads the same
-    * footers through the same FileSystem. */
-  private def parquetFooterStats(io: RootFs, dir: String, table: String,
-                                 sig: String): (Int, Long) =
-    footerStatsCache.compute(s"$dir/$table", (_, cached) =>
-      if (cached != null && cached._1 == sig) cached
-      else {
-        val p = tablePath(dir, table)
-        val st = io.fs.getFileStatus(p)
-        val files =
-          if (st.isDirectory) io.list(p)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          else Seq(st)
-        val stats = files.map { f =>
-          val r = ParquetFileReader.open(new InputFile {
-            def getLength: Long = f.getLen
-            def newStream() = HadoopStreams.wrap(io.fs.open(f.getPath))
-          })
-          try (r.getRowGroups.size, r.getRecordCount) finally r.close()
-        }
-        (sig, (stats.map(_._1).sum, stats.map(_._2).sum))
-      })._2
-
-  private def tablePath(dir: String, table: String) =
-    new Path(s"$dir/$table.parquet")
-
-  /** Repartition-after-read pays off only when the single-task kernel
+    * Repartition-after-read pays off only when the single-task kernel
     * time it parallelizes exceeds the exchange's fixed cost, so the
     * gate is (a) the file layout cannot feed the cores (row-group
     * count), AND (b) at least `minRowsPerCore` rows land on each core
@@ -89,11 +80,10 @@ object SparkEntry {
                            minRowsPerCore: Long): DataFrame = {
     val df = s.read.parquet(s"$dir/$table.parquet")
     val cores = s.sparkContext.defaultParallelism
-    val io = RootFs(s, dir)
     // unreadable footers: assume splittable, with unknown rows, which
     // disables the repartition (never worse than the old plan)
     val (groups, rows) =
-      try parquetFooterStats(io, dir, table, tableSig(io, dir, table))
+      try parquetFooterStats(s, dir, table)
       catch { case NonFatal(_) => (Int.MaxValue, 0L) }
     if (groups < cores && rows >= cores * minRowsPerCore)
       df.repartition(cores)
@@ -139,10 +129,9 @@ object SparkEntry {
     * warehouse scale). The codebook is an ORACLE INPUT: Verify dumps it,
     * and the DuckDB side verifies assignment + cell-restricted search
     * GIVEN these centroids (the invariant "assigned cell = argmax cosine
-    * over trained centroids" from the round-2 verdict). Memoized per
-    * (dir signature, k) — training is deterministic, and the key carries
-    * the table file's mtime+size so an in-place regeneration invalidates
-    * the cache.
+    * over trained centroids" from the round-2 verdict). Trained on every
+    * call: the seeded k-means over the vec_id-ordered sample is
+    * bit-stable, so Verify's dumped codebook and the query plans' agree.
     *
     * `IvfK` / `IvfNProbe` are the EXHIBIT DEFAULTS for the driver query at
     * verify scale, not hard-coded engine constants: [[ivfCentroids]] and
@@ -152,13 +141,6 @@ object SparkEntry {
   final val IvfK = 8
   final val IvfNProbe = 2
 
-  /** Driver-side cosine for ranking the query's probe cells over the tiny
-    * codebook — THE shared [[graft.core.VecMath.cosine]], so the probe
-    * ranking, the graft_cosine/graft_ivf_assign kernels, and DuckDB's
-    * list_cosine_similarity all agree bit-for-bit. */
-  private def cosLocal(x: Array[Double], y: Array[Double]): Double =
-    graft.core.VecMath.cosine(x, y)
-
   /** Auto-sized IVF cell count for a table of `rows` vectors — the
     * standard k ~ sqrt(N) sizing, clamped to [8, 4096]. Callers pass
     * k = 0 to [[ivfCentroids]]/[[ivfTopK]] to engage it (the verify-scale
@@ -167,53 +149,23 @@ object SparkEntry {
   def ivfAutoK(rows: Long): Int =
     math.min(4096L, math.max(8L, math.round(math.sqrt(rows.toDouble)))).toInt
 
-  /** Cheap file signature (mtime + size) for memoization keys: a table
-    * regenerated IN PLACE within one JVM must invalidate the cached row
-    * counts / codebooks derived from it, or the scale-derived constants
-    * (nearDupVariants, ivfAutoK) silently desynchronize from what a
-    * freshly-started oracle computes. */
-  private def tableSig(io: RootFs, dir: String, table: String): String =
-    try {
-      val st = io.fs.getFileStatus(tablePath(dir, table))
-      s"${st.getModificationTime}:${st.getLen}"
-    } catch { case _: java.io.IOException => "absent" }
-
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), (String, Seq[Seq[Double]])]()
   def ivfCentroids(s: SparkSession, dir: String,
                    k: Int = IvfK): Seq[Seq[Double]] = {
-    // ONE signature snapshot per call, reused for both the auto-k row
-    // count and the codebook cache — two independent snapshots would
-    // let an in-place regeneration race a stale-k codebook in under the
-    // new table's signature
-    val io = RootFs(s, dir)
-    val sig = tableSig(io, dir, "embeddings")
     val kEff =
-      if (k == 0) ivfAutoK(parquetFooterStats(io, dir, "embeddings", sig)._2)
+      if (k == 0) ivfAutoK(parquetFooterStats(s, dir, "embeddings")._2)
       else k
-    // evict this dir's stale-signature entries first (round-5 advice):
-    // an in-place regeneration that changes the row count changes the
-    // auto-kEff, and the sig-in-value replacement alone would strand the
-    // old (dir, oldK) codebook (k x dim doubles) for the JVM lifetime
-    ivfCache.forEach((key, value) =>
-      if (key._1 == dir && value._1 != sig) ivfCache.remove(key, value))
-    ivfCache.compute((dir, kEff), (_, cached) =>
-      if (cached != null && cached._1 == sig) cached
-      else {
-        // training sample stays bounded but scales with k (>= 8 points
-        // per cell; a fixed 512-row sample would be degenerate at auto-k
-        // on a large table) — at warehouse scale this is a TABLESAMPLE
-        // either way
-        val sampleN = math.max(512, 8 * kEff)
-        val sample = embs(s, dir)
-          .filter(col("vec_id") < sampleN).orderBy("vec_id")
-          .select(col("embedding").cast("array<double>").as("emb"))
-          .collect().map(_.getSeq[Double](0).toArray)
-        (sig, graft.core.KMeans.trainCosine(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(sample),
-            k = kEff, iters = 10, seed = 42L)
-          .map(_.toSeq).toSeq)
-      })._2
+    // training sample stays bounded but scales with k (>= 8 points per
+    // cell; a fixed 512-row sample would be degenerate at auto-k on a
+    // large table) — at warehouse scale this is a TABLESAMPLE either way
+    val sampleN = math.max(512, 8 * kEff)
+    val sample = embs(s, dir)
+      .filter(col("vec_id") < sampleN).orderBy("vec_id")
+      .select(col("embedding").cast("array<double>").as("emb"))
+      .collect().map(_.getSeq[Double](0).toArray)
+    graft.core.KMeans.trainCosine(
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(sample),
+        k = kEff, iters = 10, seed = 42L)
+      .map(_.toSeq).toSeq
   }
 
   /** Minimum assignment margin (best minus second-best centroid cosine)
@@ -333,13 +285,11 @@ object SparkEntry {
     "CASE WHEN doc_id % 11 < 2 THEN 'duplicate cluster ' || " +
       "CAST(doc_id % 3 AS STRING) ELSE text END"
 
-  /** Documents-table row count from the footers, memoized per table
-    * signature — sizes the scale-aware plantings below (and is what a
-    * real deployment reads from table metadata). */
-  def numDocs(s: SparkSession, dir: String): Long = {
-    val io = RootFs(s, dir)
-    parquetFooterStats(io, dir, "documents", tableSig(io, dir, "documents"))._2
-  }
+  /** Documents-table row count from the footers — sizes the scale-aware
+    * plantings below (and is what a real deployment reads from table
+    * metadata). */
+  def numDocs(s: SparkSession, dir: String): Long =
+    parquetFooterStats(s, dir, "documents")._2
 
   /** Near-dup variant count, SCALE-AWARE: every 25th doc becomes a shared
     * base paragraph, and the number of distinct variants grows with the
@@ -441,8 +391,11 @@ object SparkEntry {
       ivf_assign(col("emb"), typedLit(centroids)))
     val qVec = emb.filter(col("vec_id") === 0)
       .select("emb").head().getSeq[Double](0).toArray
+    // the shared VecMath.cosine: the probe ranking, the graft_cosine /
+    // graft_ivf_assign kernels and DuckDB's list_cosine_similarity agree
+    // bit-for-bit
     val probes = centroids.zipWithIndex
-      .map { case (c, i) => (i.toLong, cosLocal(qVec, c.toArray)) }
+      .map { case (c, i) => (i.toLong, VecMath.cosine(qVec, c.toArray)) }
       .sortBy { case (i, sim) => (-sim, i) }
       .take(nprobe).map(_._1)
     // the query vector is already on the driver — ship it as a literal

@@ -25,8 +25,6 @@ import java.util.Locale
   */
 object LangId {
 
-  final val NGramMin = 2
-  final val NGramMax = 4
   final val Buckets = 1 << 15
   private final val BucketMask = Buckets - 1
 

@@ -30,9 +30,6 @@ object PiiType {
     Ssn, RoutingNumber, AccountNumber, CreditScore, CreditScoreRating,
     CreditCardNumber, PhoneNumber, Email, Ipv4)
 
-  /** The reference's active subset (backend/pdf/PIIDetector.py:25-38). */
-  val referenceSet: IndexedSeq[PiiType] = ordered.take(6)
-
   def byName(n: String): PiiType = ordered.find(_.name == n).getOrElse(
     throw new IllegalArgumentException(s"unknown PiiType $n"))
 }

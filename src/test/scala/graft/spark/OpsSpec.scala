@@ -318,6 +318,30 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("IVF codebook is bit-stable: two trainings return the same " +
+      "centroids, for the exhibit k and for auto-k") {
+    // Verify dumps one training and each query plan trains again, so the
+    // oracle holds only if every call returns the identical codebook
+    def bits(cb: Seq[Seq[Double]]) =
+      cb.map(_.map(java.lang.Double.doubleToRawLongBits))
+    Seq(SparkEntry.IvfK, 0).foreach { k =>
+      val first = SparkEntry.ivfCentroids(spark, dir, k)
+      val second = SparkEntry.ivfCentroids(spark, dir, k)
+      assert(first.nonEmpty && bits(first) == bits(second),
+        s"k=$k: two trainings differ")
+    }
+  }
+
+  test("numDocs reads the current footers: a documents table rewritten in " +
+      "place with another row count reports the new count") {
+    val d = java.nio.file.Files.createTempDirectory("numdocs").toString
+    Seq(40L, 25L).foreach { n =>
+      spark.range(n).withColumnRenamed("id", "doc_id")
+        .write.mode("overwrite").parquet(s"$d/documents.parquet")
+      assert(SparkEntry.numDocs(spark, d) == n)
+    }
+  }
+
   test("multimodal: a decoder returning fewer metas than blobs fails " +
       "loudly instead of misaligning metadata (lazyZip truncation)") {
     import spark.implicits._

@@ -63,6 +63,26 @@ class RunJobSpec extends AnyFunSuite {
     }
   }
 
+  test("the status line is JSON even when --output holds a quote and a " +
+      "backslash: it parses, keeps its key order, and its metrics path " +
+      "round-trips") {
+    val a = RunJob.parseArgs(Array("--input", "/i", "--output",
+      "/jobs/x\"y\\z", "--run-id", "r1"))
+    val line = RunJob.statusLine(a,
+      RunJob.JobResult(Seq.empty, tableVersion = 3, tableRows = 10L,
+        committedThisRun = true))
+    assert(line.startsWith("""{"run_id":"r1","partitions_fresh":0,"""),
+      line)
+    assert(line.contains(""""table_rows":10,"""), line)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.fieldNames.asScala.toSeq == Seq("run_id", "partitions_fresh",
+      "partitions_skipped", "table_version", "table_rows",
+      "committed_this_run", "metrics"))
+    assert(json.get("committed_this_run").asBoolean)
+    assert(json.get("metrics").asText ==
+      "/jobs/x\"y\\z/work/_progress/run=r1", line)
+  }
+
   test("a run id that is not a plain name is rejected before anything " +
       "is written") {
     Seq("fresh_p4-s1-warmup", "job_w", "smoke1", "c1", "r.2", "A-b_9")
